@@ -13,9 +13,12 @@ Two input sets, both a pure function of (seed, size):
 
 ``ensure_*`` build into a temporary directory and rename it into place
 only when complete, so an interrupted run never leaves a partial cache.
+The cache directory's name carries a digest of this file, so an edited
+generator never reuses inputs made by an earlier version.
 The manifest written beside the data records the generated row counts
 that the benchmark checks outputs against.
 """
+import hashlib
 import json
 import os
 import shutil
@@ -32,6 +35,8 @@ DATASETS = [
     ("article_categories", 0.10), ("interlanguage_links", 0.08),
     ("geo_coordinates", 0.04), ("skos_categories", 0.03)]
 TTL_PARTS = 4
+with open(__file__, "rb") as _f:
+    VERSION = hashlib.sha256(_f.read()).hexdigest()[:12]
 WORDS = ("query row stream the spark line small fast group customer batch sort "
          "value hash filter big data part column order scan a slow agg key "
          "window table merge vector join").split()
@@ -174,10 +179,10 @@ def _ensure(path, build):
 
 
 def ensure_documents(root, seed, n):
-    path = os.path.join(root, f"documents-s{seed}-{n}")
+    path = os.path.join(root, f"documents-s{seed}-{n}-{VERSION}")
     return path, _ensure(path, lambda d: {"rows": write_documents(seed, n, d)})
 
 
 def ensure_ttl(root, seed, mb):
-    path = os.path.join(root, f"ttl-s{seed}-{mb}mb")
+    path = os.path.join(root, f"ttl-s{seed}-{mb}mb-{VERSION}")
     return path, _ensure(path, lambda d: write_ttl(seed, mb, d))

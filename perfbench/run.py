@@ -54,8 +54,10 @@ def die(msg):
     sys.exit(2)
 
 
-def source_stamp():
-    """Digest of every file the build reads, so an edited tree rebuilds."""
+def source_digest():
+    """Digest of the names and contents of every file the build reads: an
+    edited tree rebuilds, and outputs recorded for one version of the code
+    are never taken as the reference for another."""
     roots = [os.path.join(ROOT, "src", "main"), os.path.join(HERE, "src", "main"),
              os.path.join(HERE, "build.sbt"), os.path.join(HERE, "project", "build.properties")]
     h = hashlib.sha256()
@@ -63,22 +65,25 @@ def source_stamp():
         paths = [r] if os.path.isfile(r) else sorted(
             os.path.join(d, f) for d, _, fs in os.walk(r) for f in fs)
         for p in paths:
-            st = os.stat(p)
-            h.update(f"{p}:{st.st_size}:{st.st_mtime_ns}\n".encode())
+            with open(p, "rb") as f:
+                data = f.read()
+            h.update(f"{os.path.relpath(p, ROOT)}:{len(data)}\n".encode())
+            h.update(data)
     return h.hexdigest()
 
 
 def build():
-    """Compile graft and the driver; returns the runtime classpath."""
+    """Compile graft and the driver; returns the runtime classpath and the
+    sources' digest."""
     if not os.path.isdir(os.path.join(ROOT, "src", "main", "scala", "graft")):
         die(f"graft's sources are not under {ROOT}/src; run from a full checkout")
     cp_file = os.path.join(BUILD, "classpath.txt")
-    stamp = source_stamp()
+    stamp = source_digest()
     if os.path.exists(cp_file):
         with open(cp_file) as f:
             old_stamp, cp = f.read().split("\n", 1)
         if old_stamp == stamp:
-            return cp.strip()
+            return cp.strip(), stamp
     os.makedirs(BUILD, exist_ok=True)
     proc = subprocess.run(
         ["sbt", "--batch", "-Dsbt.log.noformat=true", "compile", "export Runtime/fullClasspath"],
@@ -89,11 +94,11 @@ def build():
         die("sbt build failed")
     with open(cp_file, "w") as f:
         f.write(stamp + "\n" + lines[-1])
-    return lines[-1]
+    return lines[-1], stamp
 
 
 def run_jvm(cp, args, out, deadline):
-    cmd = (["java", "-Xmx3g"] + os.environ.get("PB_JVM", "").split() + [f"-Djava.io.tmpdir={out}/tmp"]
+    cmd = (["java", "-Xmx3g", f"-Djava.io.tmpdir={out}/tmp"]
            + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")]
            + ["-cp", cp, "graftbench.Main"] + args)
     os.makedirs(os.path.join(out, "tmp"))
@@ -119,12 +124,19 @@ def quantile(xs, q):
     return s[lo] + (s[hi] - s[lo]) * (pos - lo)
 
 
-def verify(name, w, out, tables, ttl_dir):
+def oracle_cache(tables, q, sql):
+    """Where the oracle result of query ``q`` on ``tables`` is kept: keyed
+    by the SQL text too, so an edited oracle is run again."""
+    return os.path.join(tables, "expected", f"{q}-{hashlib.sha256(sql.encode()).hexdigest()[:16]}.pkl")
+
+
+def verify(name, w, out, tables, ttl_dir, digest):
     """Names of operations whose kept output is wrong, with reasons."""
     wrong = {}
     if name == "etl":
-        # stage-2 counts must repeat across runs of the same inputs
-        ref = os.path.join(ttl_dir, "stage2.json")
+        # stage-2 counts must repeat across runs of the same inputs and the
+        # same code (``digest``): a change to the code starts a new reference
+        ref = os.path.join(ttl_dir, f"stage2-{digest[:16]}.json")
         seen = w["facts"]["stage2"]
         if seen:
             if os.path.exists(ref):
@@ -137,8 +149,9 @@ def verify(name, w, out, tables, ttl_dir):
                     json.dump(seen, f, sort_keys=True)
     else:
         for q in w["checked"]:
-            err = check.compare(tables, os.path.join(out, "results", q), w["oracle"][q],
-                                os.path.join(tables, "expected", q + ".pkl"))
+            sql = w["oracle"][q]
+            err = check.compare(tables, os.path.join(out, "results", q), sql,
+                                oracle_cache(tables, q, sql))
             if err:
                 wrong[q] = err
     return wrong
@@ -148,18 +161,24 @@ def summarize(name, w, wrong):
     """Per-workload figures: the samples minus wrong or failed ones."""
     ops = [(n, k, s) for n, k, s in w["ops"] if n not in wrong]
     lat = [s for _, _, s in ops]
+    # a round is the sum of its operations' latencies, kept only if every
+    # operation of it passed
+    by_round = {}
+    for _, k, s in ops:
+        by_round.setdefault(k, []).append(s)
+    rounds = [sum(v) for v in by_round.values() if len(v) == len(w["checked"])]
     failed = sum(1 for n, ok in w["runs"] if not ok or n in wrong)
     rep = {"workload": name, "attempted": len(w["runs"]), "failed": failed,
            "fail_frac": failed / max(1, len(w["runs"])), "timed_ops": len(lat),
-           "complete_rounds": len(w["rounds"]), "steal_pct": w["steal_pct"]}
-    if not lat:
+           "complete_rounds": len(rounds), "steal_pct": w["steal_pct"]}
+    if not rounds:
         return rep, None
-    rep.update(round_s=statistics.median(w["rounds"]), op_p50_s=quantile(lat, 0.5),
+    rep.update(round_s=statistics.median(rounds), op_p50_s=quantile(lat, 0.5),
                op_p75_s=quantile(lat, 0.75))
     if name == "etl":
         f = w["facts"]
-        rounds = sorted({k for _, k, _ in ops})
-        ingest = statistics.median(sum(s for n, k, s in ops if k == r and n != "export") for r in rounds)
+        ks = sorted({k for _, k, _ in ops})
+        ingest = statistics.median(sum(s for n, k, s in ops if k == r and n != "export") for r in ks)
         export = statistics.median(s for n, _, s in ops if n == "export")
         mb = f["ttl_bytes"] / 2**20
         rep.update(ttl_mb=mb, triples=f["triples"], ingest_s=ingest, export_s=export,
@@ -180,7 +199,10 @@ def main():
     with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
         spec = json.load(f)
 
-    cp = build()
+    cp, digest = build()
+    # set-up runs from here to the end of the driver's warm-up round: input
+    # generation or cache load, JVM and session start, input load, warm-up
+    set_up_start = time.time()
     t0 = time.monotonic()
     deadline = t0 + RUN_SECONDS
     data = os.path.join(BUILD, "data")
@@ -201,7 +223,7 @@ def main():
             "--trace", str(a.trace), "--tables", tables, "--ttl", ttl_dir,
             "--triples", json.dumps(ttl_info.get("lang_triples", {})), "--out", out], out, deadline)
         w = res["workload"]
-        wrong = verify(name, w, out, tables, ttl_dir)
+        wrong = verify(name, w, out, tables, ttl_dir, digest)
         for q, why in wrong.items():
             print(f"perfbench: wrong output from {q}: {why}", file=sys.stderr)
         rep, lat = summarize(name, w, wrong)
@@ -212,8 +234,8 @@ def main():
             metrics.update(w["layers"])
         elif lat is not None:
             metrics.update(round_s=rep["round_s"], op_p50_s=rep["op_p50_s"], op_p75_s=rep["op_p75_s"])
-            metrics["setup_s"] = statistics.median(res["setup_s"])
-            rep.update(setup_rounds_s=res["setup_s"], input_gen_s=gen_s)
+            metrics["setup_s"] = res["set_up_end_s"] - set_up_start
+            rep.update(setup_s=metrics["setup_s"], input_gen_s=gen_s, warm_up_s=res["warm_up_s"])
 
     wanted = {m["name"]: m["unit"] for m in spec["per_layer" if a.trace else "end_to_end"]}
     if set(metrics) != set(wanted) and failed == 0:

@@ -5,14 +5,16 @@ import com.fasterxml.jackson.module.scala.DefaultScalaModule
 import org.apache.spark.sql.SparkSession
 
 import java.nio.file.{Files, Paths}
+import java.time.Instant
 import scala.collection.mutable
 import scala.jdk.CollectionConverters._
 
 /** The benchmark's JVM side. One client thread runs a closed loop of one
   * workload's operations against a `local[4]` session and writes raw
-  * samples (set-up rounds, per-operation latencies, complete-round walls,
-  * failures, per-layer figures) to `<out>/result.json`; `perfbench/run.py`
-  * checks the outputs and turns the samples into metrics.
+  * samples (the wall-clock end of set-up, the warm-up's length,
+  * per-operation latencies by round, failures, per-layer figures) to
+  * `<out>/result.json`; `perfbench/run.py` checks the outputs and turns
+  * the samples into metrics.
   *
   * Usage: `graftbench.Main --workload etl|curate --seed N --seconds S
   *   --trace 0|1 --tables DIR --ttl DIR --triples JSON --out DIR`
@@ -24,8 +26,8 @@ import scala.jdk.CollectionConverters._
   */
 object Main {
 
-  val SetupRounds = 3
   val Cores = 4
+  private val json = new ObjectMapper().registerModule(DefaultScalaModule)
 
   final case class Args(workload: String, seed: Long, seconds: Double, trace: Boolean,
       tables: String, ttl: String, triples: Map[String, Long], out: String)
@@ -63,11 +65,11 @@ object Main {
     case other => throw new IllegalArgumentException(s"unknown workload '$other'")
   }
 
-  /** Samples of one workload's loop. `runs` records every execution
-    * (warm-up included) and whether it completed. */
+  /** Samples of one workload's loop: `ops` the latency of every timed
+    * operation that passed, with its round; `runs` every execution (warm-up
+    * included) and whether it completed and passed its follow-up's check. */
   final class Loop {
     val ops = mutable.ArrayBuffer.empty[(String, Int, Double)]
-    val rounds = mutable.ArrayBuffer.empty[Double]
     val runs = mutable.ArrayBuffer.empty[(String, Boolean)]
   }
 
@@ -97,22 +99,24 @@ object Main {
   def warmUp(spark: SparkSession, w: Workload, tracer: Tracer, loop: Loop): Unit =
     w.ops(-1).foreach(op => runOp(spark, w, op, check = true, tracer, loop))
 
+  /** Round `k`: its operations in order, each sample kept. */
+  def round(spark: SparkSession, w: Workload, k: Int, tracer: Tracer, loop: Loop): Unit =
+    w.ops(k).foreach(op =>
+      runOp(spark, w, op, check = false, tracer, loop).foreach(s => loop.ops += ((op, k, s))))
+
   /** Timed rounds after the warm-up: a round starts while it is expected
-    * (from the previous round's wall) to end within `seconds`, and at
-    * least one round runs. */
-  def measure(spark: SparkSession, w: Workload, seconds: Double, tracer: Tracer): Loop = {
-    val loop = new Loop
-    warmUp(spark, w, tracer, loop)
+    * (from the previous round's wall, follow-ups included) to end within
+    * `seconds`, and at least one round runs. */
+  def measure(spark: SparkSession, w: Workload, seconds: Double, tracer: Tracer, loop: Loop): Unit = {
     val deadline = System.nanoTime() + (seconds * 1e9).toLong
     var k = 0
-    while (loop.rounds.isEmpty || System.nanoTime() + loop.rounds.last * 1e9 <= deadline) {
+    var last = 0L
+    while (k == 0 || System.nanoTime() + last <= deadline) {
       val r0 = System.nanoTime()
-      w.ops(k).foreach(op =>
-        runOp(spark, w, op, check = false, tracer, loop).foreach(s => loop.ops += ((op, k, s))))
-      loop.rounds += (System.nanoTime() - r0) / 1e9
+      round(spark, w, k, tracer, loop)
+      last = System.nanoTime() - r0
       k += 1
     }
-    loop
   }
 
   /** The loop's samples, plus the oracle SQL of every checked query. */
@@ -120,7 +124,6 @@ object Main {
     val checked = w.ops(-1).distinct
     Map(
       "ops" -> l.ops.map { case (n, k, s) => Seq(n, k, s) },
-      "rounds" -> l.rounds,
       "runs" -> l.runs.map { case (n, ok) => Seq(n, ok) },
       "checked" -> checked,
       "facts" -> w.facts,
@@ -131,25 +134,18 @@ object Main {
   }
 
   /** Per-layer table of one traced round: span self times grouped by
-    * layer, listener counters over the whole round, and the layer
-    * functions timed alone. */
-  def traceWorkload(spark: SparkSession, w: Workload, tracer: Tracer,
-      listener: SpanListener): (Loop, Map[String, Double]) = {
-    val loop = new Loop
-    warmUp(spark, w, tracer, loop)
-    val r0 = System.nanoTime()
-    tracer.span(s"round:${w.name}") {
-      w.ops(0).foreach(op =>
-        runOp(spark, w, op, check = false, tracer, loop).foreach(s => loop.ops += ((op, 0, s))))
-    }
-    val wall = (System.nanoTime() - r0) / 1e9
-    loop.rounds += wall
+    * layer, listener counters over the round's operations, and the layer
+    * functions timed alone. The follow-ups run outside every span, so
+    * their check jobs are not charged to the round. Every span of the
+    * round and of the layer calls is written to `<out>/spans.json`. */
+  def traceRound(spark: SparkSession, w: Workload, tracer: Tracer, listener: SpanListener,
+      loop: Loop, out: String): Map[String, Double] = {
+    val before = tracer.spans.size
+    round(spark, w, 0, tracer, loop)
     listener.drain(spark.sparkContext)
-    val all = tracer.spans
-    val root = all.filter(_.name == s"round:${w.name}").last
-    val inRound = descendants(all, root.id) + root.id
-    val spans = all.filter(s => inRound.contains(s.id))
-    val c = listener.total(inRound)
+    val spans = tracer.spans.drop(before)
+    val wall = loop.ops.map(_._3).sum
+    val c = listener.total(spans.map(_.id))
     val mb = 1024.0 * 1024.0
     val sparkLayer = Map(
       "spark.jobs" -> c.jobs.toDouble, "spark.stages" -> c.stages.toDouble,
@@ -161,41 +157,45 @@ object Main {
       "spark.gc_s" -> c.gcMs / 1e3, "spark.busy_frac" -> c.runMs / 1e3 / (wall * Cores),
       "spark.exec_s" -> c.jobMs / 1e3)
     val layers = w.layers(spark, spans, listener)
-    (loop, (layers ++ sparkLayer + ("bench.round_s" -> wall)).map { case (k, v) => s"${w.name}.$k" -> v })
-  }
-
-  private def descendants(all: Seq[Span], id: Int): Set[Int] = {
-    val kids = all.filter(_.parent == id).map(_.id)
-    kids.toSet ++ kids.flatMap(descendants(all, _))
+    listener.drain(spark.sparkContext)
+    Files.write(Paths.get(out, "spans.json"), json.writeValueAsBytes(tracer.spans.drop(before).map { s =>
+      val c = listener.total(Seq(s.id))
+      Map("id" -> s.id, "parent" -> s.parent, "name" -> s.name, "seconds" -> s.seconds,
+        "self_seconds" -> tracer.selfSeconds(s), "jobs" -> c.jobs, "stages" -> c.stages, "tasks" -> c.tasks)
+    }))
+    (layers ++ sparkLayer + ("bench.round_s" -> wall)).map { case (k, v) => s"${w.name}.$k" -> v }
   }
 
   def main(argv: Array[String]): Unit = {
     val a = parseArgs(argv)
     val tracer = new Tracer
-    // set-up, several times: a fresh session, the inputs read and
-    // verified; the median is the reported set-up time
-    var spark: SparkSession = null
-    var w: Workload = null
-    val setups = (1 to SetupRounds).map { _ =>
-      val t0 = System.nanoTime()
-      if (spark != null) spark.stop()
-      spark = session(a.out)
-      w = workload(a.workload, a, tracer, a.trace)
-      w.load(spark)
-      (System.nanoTime() - t0) / 1e9
+    val spark = session(a.out)
+    val w = workload(a.workload, a, tracer, a.trace)
+    w.load(spark)
+    val listener = if (!a.trace) None else {
+      val l = new SpanListener
+      spark.sparkContext.addSparkListener(l)
+      tracer.sc = Some(spark.sparkContext)
+      Some(l)
     }
+    val loop = new Loop
+    val w0 = System.nanoTime()
+    warmUp(spark, w, tracer, loop)
+    val warmUpS = (System.nanoTime() - w0) / 1e9
+    // wall-clock end of set-up, so run.py can time set-up from its own start
+    val setUpEnd = Instant.now()
     val steal = new graft.core.Steal.Meter
-    val (loop, layers) =
-      if (a.trace) {
-        val listener = new SpanListener
-        spark.sparkContext.addSparkListener(listener)
-        tracer.sc = Some(spark.sparkContext)
-        traceWorkload(spark, w, tracer, listener)
-      } else (measure(spark, w, a.seconds, tracer), Map.empty[String, Double])
-    val result = Map("setup_s" -> setups,
+    val layers = listener match {
+      case Some(l) => traceRound(spark, w, tracer, l, loop, a.out)
+      case None =>
+        measure(spark, w, a.seconds, tracer, loop)
+        Map.empty[String, Double]
+    }
+    val result = Map(
+      "set_up_end_s" -> (setUpEnd.getEpochSecond + setUpEnd.getNano / 1e9),
+      "warm_up_s" -> warmUpS,
       "workload" -> (loopJson(loop, w) ++ Map("steal_pct" -> steal.pct(), "layers" -> layers)))
     spark.stop()
-    val mapper = new ObjectMapper().registerModule(DefaultScalaModule)
-    Files.write(Paths.get(a.out, "result.json"), mapper.writeValueAsBytes(result))
+    Files.write(Paths.get(a.out, "result.json"), json.writeValueAsBytes(result))
   }
 }

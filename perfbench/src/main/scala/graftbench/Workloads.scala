@@ -5,10 +5,13 @@ import graft.io.{Discovery, ParquetIO, Rdf, Ttl}
 import graft.ops.{DataTypes, IdTypes, SchemaGen, TopK}
 import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
 import graft.pipeline.{ParquetToRdf, RdfConfig, TtlToParquet}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.col
 
 import java.io.File
+import java.nio.charset.StandardCharsets
+import java.security.MessageDigest
+import scala.collection.mutable
 import scala.util.Random
 
 /** One benchmark workload: a closed loop of operations, each a call into
@@ -64,13 +67,23 @@ final class CurateWorkload(tables: String, seed: Long, out: String, tracer: Trac
 
   def ops(k: Int): Seq[String] = CurateWorkload.order(seed, k)
 
+  /** Fingerprint of each pass's result in the warm-up round, whose output
+    * is compared with the oracle; every timed run of the pass must
+    * reproduce it, whatever ran before it in the seed's order. */
+  private val checkedResult = mutable.Map.empty[String, String]
+
   def exec(spark: SparkSession, op: String, check: Boolean): () => Unit = {
     val before = spark.sparkContext.getPersistentRDDs.size
     val df = tracer.span("SparkEntry.construct")(SparkEntry.queries(op)(spark, tables))
     if (traced) tracer.span("plans.plan")(df.queryExecution.executedPlan)
     tracer.span("exec")(noop(df))
     () => {
-      if (check) df.coalesce(1).write.mode("overwrite").parquet(s"$out/results/$op")
+      val got = CurateWorkload.fingerprint(df.collect().toSeq)
+      if (check) {
+        df.coalesce(1).write.mode("overwrite").parquet(s"$out/results/$op")
+        checkedResult(op) = got
+      } else require(checkedResult.get(op).contains(got),
+        s"$op: result $got differs from the checked warm-up result ${checkedResult.get(op)}")
       graft.core.Checkpoints.release(df)
       if (traced) maxBlocksAfterRelease = math.max(maxBlocksAfterRelease,
         spark.sparkContext.getPersistentRDDs.size - before)
@@ -114,6 +127,13 @@ object CurateWorkload {
     * round (-1) runs them in the listed order. */
   def order(seed: Long, k: Int): Seq[String] =
     if (k < 0) Passes else new Random(seed * 7919 + k).shuffle(Passes)
+
+  /** Row count and SHA-256 of the rows in result order. */
+  def fingerprint(rows: Seq[Row]): String = {
+    val md = MessageDigest.getInstance("SHA-256")
+    rows.foreach(r => md.update((r.mkString("\u0001") + "\n").getBytes(StandardCharsets.UTF_8)))
+    s"${rows.size}:${md.digest().map(b => f"$b%02x").mkString}"
+  }
 }
 
 /** `etl`: the paper's two-stage batch job. Stage 1 converts each dataset's

@@ -1,5 +1,6 @@
 package graftbench
 
+import org.apache.spark.sql.Row
 import org.scalatest.funsuite.AnyFunSuite
 
 class WorkloadSpec extends AnyFunSuite {
@@ -19,5 +20,15 @@ class WorkloadSpec extends AnyFunSuite {
       assert(graft.SparkEntry.queries.contains(q), q)
       assert(graft.SparkEntry.oracleSql.contains(q), q)
     }
+  }
+
+  test("a pass's fingerprint changes with any row, value or order") {
+    val rows = Seq(Row(1L, "a b", 0.5), Row(2L, null, Double.NaN))
+    val fp = CurateWorkload.fingerprint(rows)
+    assert(fp.startsWith("2:"))
+    assert(fp == CurateWorkload.fingerprint(rows.map(r => Row.fromSeq(r.toSeq))))
+    assert(fp != CurateWorkload.fingerprint(rows.reverse))
+    assert(fp != CurateWorkload.fingerprint(rows.take(1)))
+    assert(fp != CurateWorkload.fingerprint(Seq(Row(1L, "a b", 0.25), rows(1))))
   }
 }

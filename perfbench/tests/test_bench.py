@@ -72,6 +72,11 @@ class Generators(unittest.TestCase):
             self.assertFalse(_differences(cmp))
             self.assertTrue(_differences(filecmp.dircmp(a, c)))
 
+    def test_the_cache_is_keyed_by_the_generator_version(self):
+        with tempfile.TemporaryDirectory() as d:
+            path, _ = gen.ensure_documents(d, 5, 50)
+            self.assertTrue(path.endswith(gen.VERSION))
+
     def test_manifest_counts_match_the_files(self):
         with tempfile.TemporaryDirectory() as d:
             path, info = gen.ensure_ttl(d, 3, 1)
@@ -103,13 +108,33 @@ def _differences(cmp):
 class Summary(unittest.TestCase):
 
     def test_wrong_outputs_count_as_failed_not_as_fast(self):
-        w = {"ops": [["a", 0, 1.0], ["b", 0, 0.1], ["a", 1, 1.2]], "rounds": [1.1, 1.2],
-             "runs": [["a", True], ["b", True], ["c", False], ["a", True], ["b", True], ["a", True]],
+        # b's output was wrong, c threw in round 1: no round is complete
+        w = {"ops": [["a", 0, 1.0], ["b", 0, 0.1], ["c", 0, 0.5], ["a", 1, 1.2], ["b", 1, 0.1]],
+             "runs": [["a", True], ["b", True], ["c", True], ["a", True], ["b", True], ["c", True],
+                      ["a", True], ["b", True], ["c", False]],
              "checked": ["a", "b", "c"], "steal_pct": 0.0}
         rep, lat = run.summarize("curate", w, {"b": "rows 1 != oracle 2"})
-        self.assertEqual(rep["attempted"], 6)
-        self.assertEqual(rep["failed"], 3)  # both runs of b, and the run of c that threw
-        self.assertEqual(sorted(lat), [1.0, 1.2])
+        self.assertEqual(rep["attempted"], 9)
+        self.assertEqual(rep["failed"], 4)  # the three runs of b, and the run of c that threw
+        self.assertEqual(rep["timed_ops"], 3)
+        self.assertEqual(rep["complete_rounds"], 0)
+        self.assertIsNone(lat)
+
+    def test_a_round_is_the_sum_of_its_passed_operations(self):
+        w = {"ops": [["a", 0, 1.0], ["b", 0, 0.5], ["a", 1, 2.0], ["b", 1, 1.0], ["a", 2, 3.0]],
+             "runs": [["a", True], ["b", True]] * 3 + [["a", True], ["b", False]],
+             "checked": ["a", "b"], "steal_pct": 0.0}
+        rep, lat = run.summarize("curate", w, {})
+        self.assertEqual(rep["failed"], 1)
+        self.assertEqual(rep["complete_rounds"], 2)
+        self.assertEqual(rep["round_s"], 2.25)  # median of 1.5 and 3.0
+        self.assertEqual(sorted(lat), [0.5, 1.0, 1.0, 2.0, 3.0])
+
+    def test_an_edited_oracle_is_not_read_from_the_cache(self):
+        a = run.oracle_cache("t", "q1", "SELECT 1")
+        self.assertEqual(a, run.oracle_cache("t", "q1", "SELECT 1"))
+        self.assertNotEqual(a, run.oracle_cache("t", "q1", "SELECT 2"))
+        self.assertNotEqual(a, run.oracle_cache("t", "q2", "SELECT 1"))
 
     def test_quantile_interpolates(self):
         self.assertEqual(run.quantile([1.0, 2.0, 3.0, 4.0], 0.5), 2.5)
