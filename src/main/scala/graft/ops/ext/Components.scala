@@ -1,8 +1,8 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Connected components over a pair graph — the step that turns near-dup
   * PAIRS (LSH/winnowing candidates, [[Dedup]]) into dedup CLUSTERS: a
@@ -26,9 +26,9 @@ import org.apache.spark.storage.StorageLevel
   * much larger singleton population joins back once at the end. LSH candidate graphs are unions of
   * band-bucket cliques, so their diameter is tiny (a clique converges in
   * one round; chains of overlapping buckets add one round per link).
-  * Labels are checkpointed per round and the previous round released —
-  * the eager checkpoint is the ONE action per round, with the convergence
-  * count fused into it as an accumulator (lineage depth constant, no
+  * Labels are checkpointed per round — the eager checkpoint is the ONE
+  * action per round, with the convergence count fused into it as an
+  * accumulator (lineage depth constant, no
   * second per-round job). For adversarially deep graphs (long paths) the
   * round count is `maxIter`-bounded; plug a large-star/small-star variant
   * in if a corpus ever produces diameter beyond it (near-dup graphs do
@@ -103,7 +103,7 @@ object Components {
       srcCol: String = "id_a",
       dstCol: String = "id_b",
       maxIter: Int = 20,
-      driverFinishMaxEdges: Long = DriverFinishMaxEdges): DataFrame = {
+      driverFinishMaxEdges: Long = DriverFinishMaxEdges): DataFrame = Checkpoints.scoped {
     // symmetrize once and CACHE: every propagation round scans the edge
     // list, and its lineage (for near-dup graphs: the signature kernel +
     // LSH band join) must not re-execute per round. Symmetrization is an
@@ -115,13 +115,12 @@ object Components {
     // the per-round sort-merge join re-shuffles only the (small) label
     // side, never the 2|E| edge rows. (At label sizes AQE can broadcast,
     // the join is map-side over the cache either way.)
-    val sym = edges
+    val sym = Checkpoints.persist(edges
       .select(explode(array(
         struct(col(srcCol).as("src"), col(dstCol).as("dst")),
         struct(col(dstCol).as("src"), col(srcCol).as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .repartition(col("src")))
 
     // propagate over edge ENDPOINTS only: in a dedup corpus most vertices
     // are singletons with no edges — they can never change label, so they
@@ -162,15 +161,14 @@ object Components {
       import spark.implicits._
       val labelsLocal = driverUnionFind(pairs).toDF("id", "comp")
         .select(col("id").cast(idType).as("id"), col("comp").cast(idType).as("comp"))
-      sym.unpersist()
       return vertices.select(col(idCol).as("id"))
         .join(broadcast(labelsLocal), Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
     }
 
-    var roundCkpt = sym.groupBy(col("dst")).agg(min(col("src")).as("m"))
-      .select(col("dst").as("id"), least(col("m"), col("dst")).as("comp"))
-      .localCheckpoint(true)
+    var roundCkpt = Checkpoints.checkpoint(
+      sym.groupBy(col("dst")).agg(min(col("src")).as("m"))
+        .select(col("dst").as("id"), least(col("m"), col("dst")).as("comp")))
     var labels = roundCkpt
     var changed = 1L
     var iter = 1 // the fused init above IS round 1
@@ -195,17 +193,15 @@ object Components {
         if (improved) changedAcc.add(1L)
         true
       }).asNondeterministic()
-      val next = labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
-        .select(labels("id"), labels("comp"), col("nbr_comp"))
-        .where(tick(coalesce(col("nbr_comp") < col("comp"), lit(false))))
-        .localCheckpoint(true)
+      val next = Checkpoints.checkpoint(
+        labels.join(nbrMin, labels("id") === nbrMin("dst"), "left")
+          .select(labels("id"), labels("comp"), col("nbr_comp"))
+          .where(tick(coalesce(col("nbr_comp") < col("comp"), lit(false)))))
       changed = changedAcc.sum
-      // round k is materialized (eager checkpoint) and lineage-truncated, so
-      // round k-1's blocks have no remaining reader — release them NOW
-      // rather than waiting for the ContextCleaner to GC the RDD (a
-      // high-round-count graph would otherwise stack one endpoint-sized
-      // block set per round until GC runs)
-      graft.core.Checkpoints.release(roundCkpt)
+      // round k is materialized and lineage-truncated: free round k-1 now
+      // (a high-round-count graph would otherwise stack one endpoint-sized
+      // block set per round until the scope ends)
+      Checkpoints.free(roundCkpt)
       roundCkpt = next
       labels = next.select(col("id"),
         least(col("comp"), coalesce(col("nbr_comp"), col("comp"))).as("comp"))
@@ -218,14 +214,9 @@ object Components {
       System.err.println(s"[components] WARNING: convergence not verified after " +
         s"$maxIter rounds ($changed labels changed in the last round) — results may " +
         "be under-merged; raise maxIter for graphs with diameter beyond it")
-    // labels is a cheap projection over the last round's checkpoint (which
-    // the returned frame keeps referencing — only superseded rounds were
-    // released above); the edge cache gets its explicit release here.
-    val finalLabels = labels
-    sym.unpersist()
     // singletons re-enter with their own id as component
     vertices.select(col(idCol).as("id"))
-      .join(finalLabels, Seq("id"), "left")
+      .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
   }
 
@@ -300,11 +291,9 @@ object Components {
       srcCol: String = "id_a",
       dstCol: String = "id_b",
       maxIter: Int = 25,
-      driverFinishMaxEdges: Long = DriverFinishMaxEdges): DataFrame = {
+      driverFinishMaxEdges: Long = DriverFinishMaxEdges): DataFrame = Checkpoints.scoped {
     // eager localCheckpoint per round (see Scaladoc): materializes to
-    // block storage AND truncates the plan to a leaf. Superseded rounds'
-    // blocks are released deterministically below, right after their last
-    // reader (the convergence anti probe) runs.
+    // block storage AND truncates the plan to a leaf.
     val spark = vertices.sparkSession
     // init count FUSED into the checkpoint's materializing job (round 20 —
     // the loop's own accumulator pattern applied to round 0): a separate
@@ -315,13 +304,12 @@ object Components {
     // set ticks nothing regardless of retries.
     val initAcc = spark.sparkContext.longAccumulator("graft.cc.star.init")
     val initTick = udf((u: Long) => { initAcc.add(1L); true }).asNondeterministic()
-    var e = edges
+    var e = Checkpoints.checkpoint(edges
       .select(greatest(col(srcCol), col(dstCol)).as("u"),
         least(col(srcCol), col(dstCol)).as("v"))
       .where(col("u") =!= col("v"))
       .distinct()
-      .where(initTick(col("u")))
-      .localCheckpoint(true)
+      .where(initTick(col("u"))))
     var count = initAcc.sum
 
     // DRIVER FINISH — same contract and rationale as the hash-to-min
@@ -336,7 +324,6 @@ object Components {
       import spark.implicits._
       val labelsLocal = driverUnionFind(pairs).toDF("id", "comp")
         .select(col("id").cast(idType).as("id"), col("comp").cast(idType).as("comp"))
-      graft.core.Checkpoints.release(e)
       return vertices.select(col(idCol).as("id"))
         .join(broadcast(labelsLocal), Seq("id"), "left")
         .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -349,7 +336,7 @@ object Components {
       // Scaladoc): one job per steady-state round instead of two
       val rowsAcc = spark.sparkContext.longAccumulator("graft.cc.star.rows")
       val tick = udf((u: Long) => { rowsAcc.add(1L); true }).asNondeterministic()
-      val next = smallStar(largeStar(e)).where(tick(col("u"))).localCheckpoint(true)
+      val next = Checkpoints.checkpoint(smallStar(largeStar(e)).where(tick(col("u"))))
       val nextCount = rowsAcc.sum
       // equal-count rounds are CANDIDATE fixpoints; certify with limit-1
       // anti probes in BOTH directions (set equality — sound even if the
@@ -357,9 +344,8 @@ object Components {
       converged = nextCount == count &&
         next.join(e, Seq("u", "v"), "left_anti").limit(1).count() == 0L &&
         e.join(next, Seq("u", "v"), "left_anti").limit(1).count() == 0L
-      // the probes above were round k-1's last readers — release its
-      // blocks now instead of waiting for ContextCleaner GC
-      graft.core.Checkpoints.release(e)
+      // the probes above were round k-1's last readers
+      Checkpoints.free(e)
       e = next
       count = nextCount
       iter += 1
@@ -370,11 +356,8 @@ object Components {
     // at the fixpoint every non-root vertex holds exactly one edge to its
     // component min; min(v) per u also covers the (warned) non-converged
     // case deterministically
-    val labels = e.groupBy(col("u")).agg(min(col("v")).as("comp"))
-      .select(col("u").as("id"), col("comp"))
-      .localCheckpoint(true)
-    // the label fold was the final round's last reader
-    graft.core.Checkpoints.release(e)
+    val labels = Checkpoints.checkpoint(e.groupBy(col("u")).agg(min(col("v")).as("comp"))
+      .select(col("u").as("id"), col("comp")))
     vertices.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -541,8 +524,8 @@ object Components {
     * the |V|-sized rank table to meet them, never the edge list. The
     * per-round contribution fold is a partial-aggregated `groupBy(dst)`
     * (map-side combine collapses fan-in). Rounds are `localCheckpoint`-
-    * truncated with superseded rounds released ([[connectedComponents]]'
-    * lineage discipline). Vertex set = every edge endpoint.
+    * truncated ([[connectedComponents]]' lineage discipline). Vertex
+    * set = every edge endpoint.
     *
     * Output: (`id`, `rank_micro`), BIGINT. Self-loops are dropped;
     * endpoints must be non-null integers. */
@@ -552,7 +535,7 @@ object Components {
       dstCol: String = "dst",
       iterations: Int = 3,
       dampingPpm: Long = 850000L,
-      danglingRedistribute: Boolean = false): DataFrame = {
+      danglingRedistribute: Boolean = false): DataFrame = Checkpoints.scoped {
     require(iterations >= 1, "pageRank: need at least one iteration")
     require(dampingPpm >= 0 && dampingPpm <= 1000000L,
       s"pageRank: dampingPpm must be in [0, 1e6], got $dampingPpm")
@@ -560,38 +543,30 @@ object Components {
     // three consumers read the deduped edge list (degree census, the
     // deg-join's probe side, the vertex set) — checkpoint it or each
     // re-runs the distinct shuffle from the scan
-    val e = edges
+    val e = Checkpoints.checkpoint(edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .where(col("src") =!= col("dst"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // out-degrees ride the edge cache: the per-round join then touches
     // only (src, dst, deg) — the rank division needs no second join
-    val withDeg = e
+    val withDeg = Checkpoints.persist(e
       .join(e.groupBy(col("src")).agg(count(lit(1)).as("deg")), "src")
-      .repartition(col("src"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = e.select(explode(array(col("src"), col("dst"))).as("id"))
-      .distinct()
-      .localCheckpoint(true)
+      .repartition(col("src")))
+    val nodes = Checkpoints.checkpoint(
+      e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
     // the dangling set is edge-determined, so it is computed ONCE (an
     // anti join against the distinct sources), as is |V| — only the
     // per-round dangling TOTAL depends on ranks
     val srcs = e.select(col("src")).distinct()
     val danglingIds =
       if (danglingRedistribute)
-        nodes.join(srcs, nodes("id") === srcs("src"), "left_anti")
-          .localCheckpoint(true)
+        Checkpoints.checkpoint(nodes.join(srcs, nodes("id") === srcs("src"), "left_anti"))
       else null
     val nodeCount = if (danglingRedistribute) nodes.count() else 0L
     // round-0 ranks are a pure projection over the `nodes` checkpoint — a
     // separate eager checkpoint would materialize the same rows a second
-    // time for one whole job of overhead (round 20). The loop must then
-    // NOT release round-0 (its lineage IS `nodes`, which every round's
-    // left join still reads): releases start once `ranks` is a
-    // loop-owned checkpoint.
+    // time for one whole job of overhead (round 20)
     var ranks = nodes.select(col("id"), lit(M).as("r"))
-    var ranksOwned = false
     for (_ <- 1 to iterations) {
       // per-round dangling mass: a one-row aggregate over the |V|-sized
       // rank table — the only driver-side value in the loop, bounded
@@ -604,25 +579,16 @@ object Components {
       val contrib = withDeg.join(ranks, withDeg("src") === ranks("id"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
-      val next = nodes.join(contrib, nodes("id") === contrib("dst"), "left")
-        .select(nodes("id"),
-          (lit(M - dampingPpm) +
-            expr(s"($dampingPpm * (coalesce(s, CAST(0 AS BIGINT)) + $share)) div $M"))
-            .as("r"))
-        .localCheckpoint(true)
-      if (ranksOwned) graft.core.Checkpoints.release(ranks)
+      val next = Checkpoints.checkpoint(
+        nodes.join(contrib, nodes("id") === contrib("dst"), "left")
+          .select(nodes("id"),
+            (lit(M - dampingPpm) +
+              expr(s"($dampingPpm * (coalesce(s, CAST(0 AS BIGINT)) + $share)) div $M"))
+              .as("r")))
+      Checkpoints.free(ranks) // round 0 is a projection over `nodes`: kept
       ranks = next
-      ranksOwned = true
     }
-    withDeg.unpersist()
-    // the final round's checkpoint IS the result — release `nodes`, the
-    // dangling set, and the edge checkpoint, whose last readers ran
-    // inside the loop
-    val out = ranks.select(col("id"), col("r").as("rank_micro"))
-    graft.core.Checkpoints.release(nodes)
-    if (danglingIds != null) graft.core.Checkpoints.release(danglingIds)
-    graft.core.Checkpoints.release(e)
-    out
+    ranks.select(col("id"), col("r").as("rank_micro"))
   }
 
   /** Quality-aware cluster representatives: per dup cluster, keep the

@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -321,17 +322,14 @@ object Contamination {
     * prefilter has no false negatives.
     *
     * The distinct benchmark hash set is checkpoint-materialized once and
-    * read three times (count for sizing, Bloom build, confirm join); the
-    * returned frame keeps referencing it — a caller fully done with the
-    * result can free the blocks via [[graft.core.Checkpoints.release]]. */
+    * read three times (count for sizing, Bloom build, confirm join). */
   def decontaminateBloomJoin(
       corpus: DataFrame, corpusText: Column, idCol: String,
       benchmark: DataFrame, benchmarkText: Column,
-      n: Int = 8): DataFrame = {
-    val bench = benchmark
+      n: Int = 8): DataFrame = Checkpoints.scoped {
+    val bench = Checkpoints.checkpoint(benchmark
       .select(explode(ngramHashes(benchmarkText, n)).as("ngh"))
-      .distinct()
-      .localCheckpoint(true)
+      .distinct())
     // next power of two >= 32 bits/element, clamped to [64, 2^29] — same
     // sizing as decontaminateBloom (~0.4% false positives at k=2 until
     // the cap, degrading gracefully past it: only prefilter selectivity

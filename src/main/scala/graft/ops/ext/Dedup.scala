@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -269,9 +270,9 @@ object Dedup {
     * transform) is planned 2x per band (plan-asserted in CorpusOpsSpec). The flag materializes the (id + band
     * columns) projection ONCE via an eager `localCheckpoint` and every
     * leg reads the checkpointed rows — upstream runs exactly once. The
-    * checkpoint blocks are the result's ONLY data copy: after fully
-    * consuming the result, free them with
-    * `graft.core.Checkpoints.release(result)`. Leave the flag off when
+    * result reads the checkpoint, so it passes to the enclosing
+    * [[graft.core.Checkpoints.scoped]] scope, or to the caller outside
+    * one. Leave the flag off when
     * `signatures` is already a bare scan — a parquet re-read per leg is
     * cheaper than pinning the projection in executor storage. */
   def lshCandidatePairsMultiBand(
@@ -280,13 +281,13 @@ object Dedup {
       bands: Seq[Seq[String]],
       maxBucketSize: Option[Int] = None,
       saltOversized: Boolean = false,
-      persistSignatures: Boolean = false): DataFrame = {
+      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     // single-band callers benefit too: the census + guard semi join +
     // both self-join sides each re-plan `signatures` even with one band
     val src =
       if (persistSignatures)
-        signatures.select((idCol +: bands.flatten).distinct.map(col): _*)
-          .localCheckpoint(true)
+        Checkpoints.checkpoint(
+          signatures.select((idCol +: bands.flatten).distinct.map(col): _*))
       else signatures
     val perBand = bands.map { bandCols =>
       val keyed = guardBuckets(
@@ -327,7 +328,7 @@ object Dedup {
       threshold: Double,
       maxBucketSize: Option[Int] = None,
       saltOversized: Boolean = false,
-      persistSignatures: Boolean = false): DataFrame = {
+      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     // For LONG-hashed sets (the production currency, TokenHashSetExpr)
     // the sets are sorted ONCE PER DOCUMENT below the join and the
     // per-PAIR intersection is the allocation-free merge walk
@@ -350,12 +351,12 @@ object Dedup {
     val setExpr = if (sortedMerge) array_sort(col(setCol)) else col(setCol)
     // the (band, id, sorted set) projection is planned by the census, the
     // guard semi join, and BOTH self-join sides — `persistSignatures`
-    // materializes it once (eager localCheckpoint; free via
-    // `Checkpoints.release(result)`), the editConfirmedPairs pattern
+    // materializes it once (eager localCheckpoint), the
+    // editConfirmedPairs pattern
     val keyedPlan =
       sig.select(bandKey(bandCols).as("band"), col(idCol).as("id"), setExpr.as("set"))
     val keyed = guardBuckets(
-      if (persistSignatures) keyedPlan.localCheckpoint(true) else keyedPlan,
+      if (persistSignatures) Checkpoints.checkpoint(keyedPlan) else keyedPlan,
       maxBucketSize, saltOversized)
     val l = keyed.select(col("band"), col("id").as("id_a"), col("set").as("set_a"))
     val r = keyed.select(col("band"), col("id").as("id_b"), col("set").as("set_b"))
@@ -432,12 +433,12 @@ object Dedup {
       threshold: Double,
       k: Int = 5, w: Int = 8,
       maxBucketSize: Option[Int] = None,
-      persistSignatures: Boolean = false): DataFrame = {
+      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     val cand = winnowCandidatePairs(docs, idCol,
       graft.functions.WinnowFingerprintExpr.winnow(textCol, k, w), maxBucketSize)
     // the sorted-set projection is joined on BOTH pair sides — the
     // token-hash-set kernel + sort re-run per side unless persisted
-    // (eager localCheckpoint; free via `Checkpoints.release(result)`).
+    // (eager localCheckpoint).
     // Measured at sf0.1 (cap 50): the flag LOSES here (~1.6 -> 1.7 s) —
     // few candidates survive the winnow guard, so writing every doc's
     // multi-KB set to block storage costs more than the duplicate
@@ -445,7 +446,7 @@ object Dedup {
     // to the corpus.
     val setsPlan = docs.select(col(idCol).as("_sid"),
       array_sort(graft.functions.TokenHashSetExpr.token_hash_set(textCol)).as("_set"))
-    val sets = if (persistSignatures) setsPlan.localCheckpoint(true) else setsPlan
+    val sets = if (persistSignatures) Checkpoints.checkpoint(setsPlan) else setsPlan
     cand
       .join(sets.select(col("_sid").as("id_a"), col("_set").as("set_a")), Seq("id_a"))
       .join(sets.select(col("_sid").as("id_b"), col("_set").as("set_b")), Seq("id_b"))
@@ -521,7 +522,7 @@ object Dedup {
       maxDist: Int = 3,
       bits: Int = 32,
       maxBucketSize: Option[Int] = None,
-      persistSignatures: Boolean = false): DataFrame = {
+      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     val blocks = maxDist + 1
     require(bits % blocks == 0,
       s"simhashHammingPairs: bits ($bits) must divide into maxDist+1 ($blocks) blocks")
@@ -531,12 +532,11 @@ object Dedup {
     // `df`) is planned 2x per leg — 8 evaluations at d=3.
     // `persistSignatures` materializes the (id, sim) projection ONCE via
     // an eager localCheckpoint — 16 bytes/row — and the legs read the
-    // checkpointed rows; after consuming the result, free the blocks
-    // with `graft.core.Checkpoints.release(result)`. Off by default:
+    // checkpointed rows. Off by default:
     // over a bare parquet scan the per-leg kernel re-run is cheap and
     // needs no executor storage.
     val sigPlan = df.select(col(idCol).as("id"), simhashText(textCol, bits).as("sim"))
-    val sig = if (persistSignatures) sigPlan.localCheckpoint(true) else sigPlan
+    val sig = if (persistSignatures) Checkpoints.checkpoint(sigPlan) else sigPlan
     val perBlock = (0 until blocks).map { j =>
       // block j's value; the literal index in the key keeps block j of one
       // doc from colliding with block i of another
@@ -809,7 +809,7 @@ object Dedup {
       docs: DataFrame, textCol: Column, idCol: String,
       numHashes: Int = 2, prefixLen: Int = 64, maxDist: Int = 16,
       maxBucketSize: Option[Int] = None,
-      persistSignatures: Boolean = false): DataFrame = {
+      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     require(prefixLen >= 1, s"editConfirmedPairs: prefixLen >= 1, got $prefixLen")
     require(maxDist >= 0, s"editConfirmedPairs: maxDist >= 0, got $maxDist")
     // the prefixes ride THROUGH the single band-key shuffle (the
@@ -823,13 +823,12 @@ object Dedup {
     // the (band, id, prefix) projection is planned by the census, the
     // guard semi join, and BOTH self-join sides — the minhash kernel
     // over full text re-runs with each. `persistSignatures` materializes
-    // it once (eager localCheckpoint, ~100 bytes/row); free the blocks
-    // with `Checkpoints.release(result)` after consuming the result.
+    // it once (eager localCheckpoint, ~100 bytes/row).
     val keyedPlan = withMinhashSignature(docs, textCol, numHashes)
       .select(bandKey(bandCols).as("band"), col(idCol).as("id"),
         substring(textCol, 1, prefixLen).as("_pfx"))
     val keyed = guardBuckets(
-      if (persistSignatures) keyedPlan.localCheckpoint(true) else keyedPlan,
+      if (persistSignatures) Checkpoints.checkpoint(keyedPlan) else keyedPlan,
       maxBucketSize)
     val l = keyed.select(col("band"), col("id").as("id_a"), col("_pfx").as("_pa"))
     val r = keyed.select(col("band"), col("id").as("id_b"), col("_pfx").as("_pb"))

@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -68,16 +69,15 @@ object Events {
     * step's events and to carry non-advancing users), so without a cut
     * the lazy plan re-derives stage 1 2^(k−1) times — the iterative-
     * loop lineage rule. Stages are therefore EAGERLY materialized
-    * (`localCheckpoint`, per-user-row-sized frames) and superseded
-    * stages released, the Packing/Curation contract. */
-  def funnel(events: DataFrame, steps: Seq[String]): DataFrame = {
+    * (`localCheckpoint`, per-user-row-sized frames), superseded stages
+    * freed as the loop advances. */
+  def funnel(events: DataFrame, steps: Seq[String]): DataFrame = Checkpoints.scoped {
     require(steps.nonEmpty && steps.distinct == steps,
       s"funnel: steps must be non-empty and distinct, got $steps")
     val e = events.select(col("user_id"), col("event_type"), col("ts"))
-    var reach = e.where(col("event_type") === steps.head)
+    var reach = Checkpoints.checkpoint(e.where(col("event_type") === steps.head)
       .groupBy(col("user_id")).agg(min(col("ts")).as("_t"))
-      .withColumn("_depth", lit(1L))
-      .localCheckpoint(true)
+      .withColumn("_depth", lit(1L)))
     var stage = 1L
     for (s <- steps.tail) {
       // only users exactly AT the previous stage can advance: a user who
@@ -88,12 +88,11 @@ object Events {
         .join(prev, Seq("user_id"))
         .where(col("ts") > col("_prev"))
         .groupBy(col("user_id")).agg(min(col("ts")).as("_tn"))
-      val updated = reach.join(next, Seq("user_id"), "left")
+      val updated = Checkpoints.checkpoint(reach.join(next, Seq("user_id"), "left")
         .select(col("user_id"),
           coalesce(col("_tn"), col("_t")).as("_t"),
-          (col("_depth") + when(col("_tn").isNotNull, 1L).otherwise(0L)).as("_depth"))
-        .localCheckpoint(true)
-      graft.core.Checkpoints.release(reach) // superseded stage's only use is gone
+          (col("_depth") + when(col("_tn").isNotNull, 1L).otherwise(0L)).as("_depth")))
+      Checkpoints.free(reach) // superseded stage's only use is gone
       reach = updated
       stage += 1
     }

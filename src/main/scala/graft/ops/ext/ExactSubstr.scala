@@ -1,9 +1,9 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Exact duplicate-substring detection for training corpora: find, per
   * document, the maximal token spans every position of which is covered by
@@ -54,14 +54,13 @@ object ExactSubstr {
       text: Column,
       idCol: String = "doc_id",
       k: Int = 16,
-      minCount: Long = 2L): DataFrame = {
+      minCount: Long = 2L): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"duplicatedSpans: k must be >= 1, got $k")
     require(minCount >= 2L, s"duplicatedSpans: minCount must be >= 2, got $minCount")
     // one kernel evaluation per document, materialized before either pass
     // reads it (see object Scaladoc for the concurrency rationale)
-    val hashed = docs
-      .select(col(idCol), Contamination.ngramHashes(text, k).as("nghs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val hashed = Checkpoints.persist(docs
+      .select(col(idCol), Contamination.ngramHashes(text, k).as("nghs")))
     hashed.count()
     // pass 1: corpus-wide occurrence count per window hash — no ids, no
     // positions: the narrowest possible shuffle, fully map-side partial
@@ -72,7 +71,7 @@ object ExactSubstr {
       .select(col("ngh"))
     // pass 2: positions of duplicated windows, then per-doc island merge
     val byDoc = Window.partitionBy(col(idCol)).orderBy(col("pos"))
-    val spans = hashed
+    Checkpoints.checkpoint(hashed
       .select(col(idCol), posexplode(col("nghs")))
       .select(col(idCol), (col("pos") + 1).cast("long").as("pos"), col("col").as("ngh"))
       .join(dupHashes, Seq("ngh"))
@@ -83,10 +82,7 @@ object ExactSubstr {
       .groupBy(col(idCol), col("island"))
       .agg(min(col("pos")).as("span_start"),
         (max(col("pos")) + (k - 1)).as("span_end"))
-      .select(col(idCol), col("span_start"), col("span_end"))
-      .localCheckpoint(true)
-    hashed.unpersist()
-    spans
+      .select(col(idCol), col("span_start"), col("span_end")))
   }
 
   /** Cut duplicated spans out of the text — the consumer Lee et al.'s

@@ -1,9 +1,9 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.TaskContext
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Token-budget sharding: pack documents, in a deterministic order, into
   * consecutive shards of ~`budget` tokens each (per stratum — e.g. per
@@ -44,7 +44,7 @@ object Packing {
       df: DataFrame,
       idCol: String, stratumCol: String, nCol: String,
       budget: Long,
-      partitions: Int = 0): DataFrame = {
+      partitions: Int = 0): DataFrame = Checkpoints.scoped {
     require(budget > 0, s"tokenShards: budget must be positive, got $budget")
     val spark = df.sparkSession
     import spark.implicits._
@@ -58,11 +58,10 @@ object Packing {
     // cache the partitioned form: both passes MUST see the identical
     // range boundaries (range sampling is not deterministic across
     // separate executions of the same plan)
-    val parts = typed
+    val parts = Checkpoints.persist(typed
       .repartitionByRange(p, col("stratum"), col("id"))
       .sortWithinPartitions(col("stratum"), col("id"))
-      .as[(Long, String, Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .as[(Long, String, Long)])
 
     // pass 1: per-(partition, stratum) totals, in in-partition order
     val partTotals: Array[(Int, Seq[(String, Long)])] = parts
@@ -91,15 +90,12 @@ object Packing {
     val bcOffsets = spark.sparkContext.broadcast(offsets)
 
     // pass 2: local exclusive cumsum + broadcast offset. The result is
-    // EAGERLY local-checkpointed before the partitioned cache is released:
-    // the offsets are only valid for the exact partitioning pass 1 saw, so
-    // the output must never be recomputed from a re-sampled
-    // repartitionByRange — the checkpoint pins the values (and turns a
-    // lost-block worst case into a loud failure instead of silently wrong
-    // offsets). It also releases the big input cache immediately: only the
-    // (much smaller) result stays in storage, freed by the context cleaner
-    // when the frame is garbage collected.
-    val result = parts
+    // EAGERLY local-checkpointed: the offsets are only valid for the exact
+    // partitioning pass 1 saw, so the output must never be recomputed from
+    // a re-sampled repartitionByRange — the checkpoint pins the values (and
+    // turns a lost-block worst case into a loud failure instead of
+    // silently wrong offsets), and the big input cache goes with the scope.
+    Checkpoints.checkpoint(parts
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val local = scala.collection.mutable.Map.empty[String, Long]
@@ -114,10 +110,7 @@ object Packing {
       // integral division, not double `/` + cast: running exceeds 2^53 on
       // a 100 TB corpus and the double quotient goes inexact right at the
       // shard boundaries
-      .withColumn("shard", expr(s"running div ${budget}L"))
-      .localCheckpoint(true)
-    parts.unpersist()
-    result
+      .withColumn("shard", expr(s"running div ${budget}L")))
   }
 
   /** Reference formulation (window cumsum): identical output, but each
@@ -237,7 +230,7 @@ object Packing {
       df: DataFrame,
       idCol: String, keyCol: Column,
       desc: Boolean = false,
-      partitions: Int = 0): DataFrame = {
+      partitions: Int = 0): DataFrame = Checkpoints.scoped {
     val spark = df.sparkSession
     import spark.implicits._
     val typed = df.select(
@@ -248,11 +241,10 @@ object Packing {
     val ord =
       if (desc) Seq(col("key").desc, col("id").asc)
       else Seq(col("key").asc, col("id").asc)
-    val parts = typed
+    val parts = Checkpoints.persist(typed
       .repartitionByRange(p, ord: _*)
       .sortWithinPartitions(ord: _*)
-      .as[(Long, Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .as[(Long, Long)])
 
     val counts: Array[(Int, Long)] = parts
       .mapPartitions { it =>
@@ -267,16 +259,13 @@ object Packing {
     }
     val bcOffsets = spark.sparkContext.broadcast(offsets)
 
-    val result = parts
+    Checkpoints.checkpoint(parts
       .mapPartitions { it =>
         val base = bcOffsets.value.getOrElse(TaskContext.getPartitionId(), 0L)
         var i = 0L
         it.map { case (id, key) => i += 1; (id, key, base + i) }
       }
-      .toDF("id", "key", "rank")
-      .localCheckpoint(true)
-    parts.unpersist()
-    result
+      .toDF("id", "key", "rank"))
   }
 
   /** Serpentine (boustrophedon) shard balancing — the LPT-flavoured
@@ -350,7 +339,7 @@ object Packing {
       docs: DataFrame,
       idCol: String, nCol: Column,
       bucketWidth: Long, batchSize: Long,
-      partitions: Int = 0): DataFrame = {
+      partitions: Int = 0): DataFrame = Checkpoints.scoped {
     require(bucketWidth >= 1,
       s"lengthBucketBatches: bucketWidth must be >= 1, got $bucketWidth")
     require(batchSize >= 1,
@@ -367,11 +356,10 @@ object Packing {
     // same contract as tokenShards: both passes must see identical range
     // boundaries, hence the cache; partition i holds a contiguous slice
     // of (bucket, id) order so per-partition counts prefix into offsets
-    val parts = typed
+    val parts = Checkpoints.persist(typed
       .repartitionByRange(p, col("bucket"), col("id"))
       .sortWithinPartitions(col("bucket"), col("id"))
-      .as[(Long, Long, Long)]
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .as[(Long, Long, Long)])
 
     val partCounts: Array[(Int, Seq[(Long, Long)])] = parts
       .mapPartitions { it =>
@@ -398,7 +386,7 @@ object Packing {
 
     // per-row dense per-bucket index -> batch id; checkpoint pins the
     // values to the exact range boundaries pass 1 saw (see tokenShards)
-    val assigned = parts
+    val assigned = Checkpoints.checkpoint(parts
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
         val local = scala.collection.mutable.Map.empty[Long, Long]
@@ -409,9 +397,7 @@ object Packing {
           (bucket, idx / batchSize, n)
         }
       }
-      .toDF("bucket", "batch_id", "n")
-      .localCheckpoint(true)
-    parts.unpersist()
+      .toDF("bucket", "batch_id", "n"))
     assigned
       .groupBy(col("bucket"), col("batch_id"))
       .agg(count(lit(1)).as("n_docs"), max(col("n")).as("max_len"),

@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -405,7 +406,8 @@ object Similarity {
     * here, avoiding a second corpus-wide orderBy(md5) collect. */
   private def nswBuildGraphWith(
       vectors: DataFrame, hubs: Array[(Long, Seq[Double], Double)],
-      m: Int, planes: Int, maxRegions: Int, maxBucketSize: Int): DataFrame = {
+      m: Int, planes: Int, maxRegions: Int,
+      maxBucketSize: Int): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     require(m >= 1 && maxRegions >= 1 && maxBucketSize >= 1,
       "nswBuildGraph: m/maxRegions/maxBucketSize must be >= 1")
@@ -434,15 +436,14 @@ object Similarity {
     // forward links: per node, best m PRIOR bucket-mates (both bands);
     // checkpointed — the reverse-cap window below is a second consumer
     // of the expensive bucket self-join
-    val fwdRows = bandPairs(planes)
+    val fwdRows = Checkpoints.checkpoint(bandPairs(planes)
       .unionByName(bandPairs(math.max(2, planes / 2)))
       .dropDuplicates("xid", "yid")
       .withColumn("cos", cosineSafe(col("xvec"), col("yvec")))
       .select(col("xid"), col("yid"), col("cos"))
       .withColumn("rnk", row_number().over(Window
         .partitionBy(col("xid")).orderBy(col("cos").desc, col("yid"))))
-      .where(col("rnk") <= m)
-      .localCheckpoint(true)
+      .where(col("rnk") <= m))
     val local = fwdRows.select(col("xid").as("src"), col("yid").as("dst"))
       .unionByName(fwdRows
         .withColumn("rrnk", row_number().over(Window
@@ -451,15 +452,14 @@ object Similarity {
         .select(col("yid").as("src"), col("xid").as("dst")))
     // checkpointed ONCE: up/down/region would otherwise each re-run the
     // hub-assignment fold over the corpus (the persistSignatures lesson)
-    val assigned = vectors
+    val assigned = Checkpoints.checkpoint(vectors
       .withColumn("_vnorm", norm(col("vec")))
       .withColumn("_sims", centroidSims(col("vec"), col("_vnorm"), hubArr))
       .withColumn("_best", bestCentroid(col("_sims")))
       .select(col("id"), srpBucket(col("vec"), planes).as("bucket"),
         col("_best").getField("cid").as("hub"),
         col("_best").getField("sim").as("sim"))
-      .where(col("id") =!= col("hub"))
-      .localCheckpoint(true)
+      .where(col("id") =!= col("hub")))
     val up = assigned.select(col("id").as("src"), col("hub").as("dst"))
     val byHub = Window.partitionBy(col("hub"))
       .orderBy(col("sim").desc, col("id"))
@@ -487,16 +487,13 @@ object Similarity {
       } yield (a, b)
       vectors.sparkSession.createDataFrame(pairs).toDF("src", "dst")
     }
-    val edges = local.unionByName(up).unionByName(down).unionByName(region)
+    // eager: the build IS a materialization step
+    Checkpoints.checkpoint(local.unionByName(up).unionByName(down).unionByName(region)
       .unionByName(across)
       .select(col("src").cast("long"), col("dst").cast("long")).distinct()
       .join(vectors.select(col("id").as("dst"), col("vec").as("dst_vec")),
         Seq("dst"))
-      .select(col("src"), col("dst"), col("dst_vec"))
-      .localCheckpoint(true) // eager: the build IS a materialization step
-    graft.core.Checkpoints.release(assigned) // edges is now the only reader
-    graft.core.Checkpoints.release(fwdRows)
-    edges
+      .select(col("src"), col("dst"), col("dst_vec")))
   }
 
   /** Graph ANN search over [[nswBuildGraph]]: greedy best-first beam walk,
@@ -520,7 +517,7 @@ object Similarity {
   def nswTopK(vectors: DataFrame, queries: DataFrame, k: Int,
       m: Int = 6, beam: Int = 8, hops: Int = 3,
       planes: Int = 8, numHubs: Int = 16, maxRegions: Int = 32,
-      maxBucketSize: Int = 4096): DataFrame = {
+      maxBucketSize: Int = 4096): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     require(k >= 1 && beam >= 1 && hops >= 0, "nswTopK: k/beam >= 1, hops >= 0")
     // one hub collect serves both the entry scoring and the build
@@ -536,7 +533,7 @@ object Similarity {
         explode(slice(rankedCentroids(col("_sims")), 1, beam)).as("_e"))
       .select(col("q_id"), col("q_vec"),
         col("_e").getField("cid").as("n_id"), col("_e").getField("sim").as("cos"))
-    var visited = entry.withColumn("expanded", lit(false)).localCheckpoint(true)
+    var visited = Checkpoints.checkpoint(entry.withColumn("expanded", lit(false)))
     val byQ = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
     for (_ <- 1 to hops) {
       // best-first: expand the top-beam UNEXPANDED candidates — an
@@ -561,14 +558,10 @@ object Similarity {
           Seq("q_id", "n_id"), "left")
         .withColumn("expanded", col("expanded") || coalesce(col("_e"), lit(false)))
         .drop("_e")
-      val next = marked.unionByName(fresh).localCheckpoint(true)
-      graft.core.Checkpoints.release(visited)
+      val next = Checkpoints.checkpoint(marked.unionByName(fresh))
+      Checkpoints.free(visited)
       visited = next
     }
-    // the walk is over: nothing reads the adjacency again (the result
-    // derives solely from the final visited checkpoint) — release the
-    // corpus-sized vector-embedded blocks now, not at ContextCleaner GC
-    graft.core.Checkpoints.release(edges)
     visited
       .where(col("q_id") =!= col("n_id"))
       .withColumn("rnk", row_number().over(byQ))
@@ -1054,7 +1047,7 @@ object Similarity {
     * frame (broadcast) against the corpus's (id, label) projection, and
     * both aggregates fold it per query. */
   def knnLabelEval(
-      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = {
+      corpus: DataFrame, queries: DataFrame, k: Int): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     val w = dcgWeights(k)
     val idcgFor: Column => Column = n => // ideal DCG: hits at ranks 1..n_rel
@@ -1067,11 +1060,10 @@ object Similarity {
     // (relevance/DCG and the vote table); un-checkpointed, each re-plans
     // the whole cosine ranking + the corpus label join (round-19 explain
     // audit: 8 parquet scans, 4 of them the duplicated ranking lineage)
-    val hits = broadcast(topk)
+    val hits = Checkpoints.checkpoint(broadcast(topk)
       .join(nLab, Seq("n_id"))
       .join(broadcast(qLab), Seq("q_id"))
-      .withColumn("rel", (col("n_label") === col("label")).cast("long"))
-      .localCheckpoint(true)
+      .withColumn("rel", (col("n_label") === col("label")).cast("long")))
     val perQuery = hits.groupBy(col("q_id"), col("label"))
       .agg(sum(col("rel")).as("n_rel"),
         sum(col("rel") *

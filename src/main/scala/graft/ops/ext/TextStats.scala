@@ -1,5 +1,6 @@
 package graft.ops.ext
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -570,7 +571,7 @@ object TextStats {
   private def nbModelFrames(
       docs: DataFrame, textCol: Column,
       isSeed: Column, seedLabel: Column,
-      topV: Int): (DataFrame, DataFrame, DataFrame) = {
+      topV: Int): (DataFrame, DataFrame, DataFrame) = Checkpoints.scoped {
     val seeds = docs.where(isSeed)
       .select(explode(tokens(textCol)).as("w"), seedLabel.as("_pos"))
     // ≤ topV rows by construction — eagerly checkpointed (the round-18
@@ -582,12 +583,11 @@ object TextStats {
     // back against the model — the totals over the restricted vocabulary
     // are just the sum of the model's own counts, the nbClassifyMulti
     // formulation; round-19 explain audit, values identical)
-    val counts = seeds
+    val counts = Checkpoints.checkpoint(seeds
       .groupBy(col("w"))
       .agg(sum(when(col("_pos"), 1L).otherwise(0L)).as("c_pos"),
         sum(when(!col("_pos"), 1L).otherwise(0L)).as("c_neg"))
-      .orderBy((col("c_pos") + col("c_neg")).desc, col("w")).limit(topV)
-      .localCheckpoint(true)
+      .orderBy((col("c_pos") + col("c_neg")).desc, col("w")).limit(topV))
     val model = counts
       .withColumn("w_tok",
         Importance.flog2Col(col("c_pos") + 1L) -
@@ -647,7 +647,7 @@ object TextStats {
   def nbClassifyMulti(
       docs: DataFrame, textCol: Column, idCol: String,
       isSeed: Column, classCol: Column, classes: Seq[String],
-      topV: Int = 1000): DataFrame = {
+      topV: Int = 1000): DataFrame = Checkpoints.scoped {
     require(classes.nonEmpty && classes.distinct == classes,
       s"nbClassifyMulti: classes must be non-empty and distinct, got $classes")
     val ks = classes.indices
@@ -660,11 +660,10 @@ object TextStats {
     // rationale): model feeds BOTH the weight projection (broadcast into
     // the corpus join) and the class-totals aggregate; un-checkpointed,
     // each consumer re-plans the full seed explode + aggregation
-    val model = seeds.groupBy(col("w"))
+    val model = Checkpoints.checkpoint(seeds.groupBy(col("w"))
       .agg(counts.head, counts.tail: _*)
       .orderBy(ks.map(i => col(s"c$i")).reduce(_ + _).desc, col("w"))
-      .limit(topV)
-      .localCheckpoint(true)
+      .limit(topV))
     val weighted = ks.foldLeft(model) { (m, i) =>
         m.withColumn(s"w$i", Importance.flog2Col(col(s"c$i") + 1L))
       }
@@ -708,18 +707,13 @@ object TextStats {
   def trainNb(
       docs: DataFrame, textCol: Column,
       isSeed: Column, seedLabel: Column,
-      topV: Int = 1000): NbModel = {
+      topV: Int = 1000): NbModel = Checkpoints.scoped {
     val (model, totals, prior) =
       nbModelFrames(docs, textCol, isSeed, seedLabel, topV)
-    val m = NbModel(
+    NbModel(
       model.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
       totals.collect().head.getLong(0),
       prior.collect().head.getLong(0))
-    // the literal model is complete — free nbModelFrames' internal
-    // counts checkpoint (nothing reads it again; release walks the
-    // model frame's lineage to find it)
-    graft.core.Checkpoints.release(model)
-    m
   }
 
   /** Score documents under a trained [[NbModel]] — ONE map-side fold
@@ -937,13 +931,12 @@ object TextStats {
     * Output: `(source, n_top_tokens, kl_sum, kl_per_token)`. */
   def sourceDivergence(
       docs: DataFrame, textCol: Column, sourceCol: String,
-      topV: Int = 1000): DataFrame = {
+      topV: Int = 1000): DataFrame = Checkpoints.scoped {
     import org.apache.spark.sql.expressions.Window
     val tok = docs.select(col(sourceCol).as("source"),
       explode(tokens(textCol)).as("w"))
-    val topv = tok.groupBy(col("w")).agg(count(lit(1)).as("c_w"))
-      .orderBy(col("c_w").desc, col("w")).limit(topV)
-      .localCheckpoint(true)
+    val topv = Checkpoints.checkpoint(tok.groupBy(col("w")).agg(count(lit(1)).as("c_w"))
+      .orderBy(col("c_w").desc, col("w")).limit(topV))
     val t = topv.agg(sum(col("c_w")).as("t_all"))
     val sw = tok.join(broadcast(topv), Seq("w"))
       .groupBy(col("source"), col("w"))
@@ -1266,40 +1259,38 @@ object TextStats {
     * both engines identically. Ties break (cnt DESC, pair ASC) — a
     * total order, so the learned merges are engine-exact and the DuckDB
     * oracle unrolls the same k stages. */
-  def bpeTrainMerges(docs: DataFrame, textCol: Column, k: Int): DataFrame = {
+  def bpeTrainMerges(
+      docs: DataFrame, textCol: Column, k: Int): DataFrame = Checkpoints.scoped {
     require(k >= 1, s"bpeTrainMerges: k must be >= 1, got $k")
     val spark = docs.sparkSession
-    val vocab = docs.select(explode(tokens(textCol)).as("w"))
+    val vocab = Checkpoints.persist(docs.select(explode(tokens(textCol)).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy(col("w")).agg(count(lit(1)).as("wc"))
       .select(col("wc"),
         array_join(
           transform(sequence(lit(1), length(col("w"))), i => col("w").substr(i, lit(1))),
-          "  ").as("sym"))
-      .persist()
+          "  ").as("sym")))
     vocab.count() // materialize once; every round reads the cached vocab
     val merges = Seq.newBuilder[(Long, String, String, Long)]
     var cur = vocab
-    try {
-      for (r <- 1 to k) {
-        val syms = split(col("sym"), "  ")
-        val n = greatest(size(syms) - 1, lit(0))
-        val top = cur
-          .select(col("wc"),
-            explode(zip_with(slice(syms, lit(1), n), slice(syms, lit(2), n),
-              (a, b) => concat(a, lit("  "), b))).as("pair"))
-          .groupBy(col("pair")).agg(sum(col("wc")).as("cnt"))
-          .orderBy(col("cnt").desc, col("pair"))
-          .limit(1).collect() // the argmax row — the round's entire driver state
-        if (top.nonEmpty) {
-          val pair = top(0).getString(0)
-          val cnt = top(0).getLong(1)
-          val merged = pair.replace("  ", "")
-          merges += ((r.toLong, pair, merged, cnt))
-          cur = cur.withColumn("sym", replace(col("sym"), lit(pair), lit(merged)))
-        }
+    for (r <- 1 to k) {
+      val syms = split(col("sym"), "  ")
+      val n = greatest(size(syms) - 1, lit(0))
+      val top = cur
+        .select(col("wc"),
+          explode(zip_with(slice(syms, lit(1), n), slice(syms, lit(2), n),
+            (a, b) => concat(a, lit("  "), b))).as("pair"))
+        .groupBy(col("pair")).agg(sum(col("wc")).as("cnt"))
+        .orderBy(col("cnt").desc, col("pair"))
+        .limit(1).collect() // the argmax row — the round's entire driver state
+      if (top.nonEmpty) {
+        val pair = top(0).getString(0)
+        val cnt = top(0).getLong(1)
+        val merged = pair.replace("  ", "")
+        merges += ((r.toLong, pair, merged, cnt))
+        cur = cur.withColumn("sym", replace(col("sym"), lit(pair), lit(merged)))
       }
-    } finally vocab.unpersist()
+    }
     spark.createDataFrame(merges.result())
       .toDF("merge_rank", "pair", "merged", "cnt")
   }
@@ -1394,7 +1385,7 @@ object TextStats {
     * Output: (piece, piece_len, cnt0, cnt1, cnt2, logp_fp, kept) — all
     * counts BIGINT, kept ∈ {0, 1}. */
   def unigramLmVocab(docs: DataFrame, textCol: Column,
-      topBigrams: Int = 64): DataFrame = {
+      topBigrams: Int = 64): DataFrame = Checkpoints.scoped {
     require(topBigrams >= 1, s"unigramLmVocab: topBigrams must be >= 1, got $topBigrams")
     import org.apache.spark.sql.expressions.Window
     val spark = docs.sparkSession
@@ -1405,14 +1396,13 @@ object TextStats {
     // per-word char positions: c at i, the bigram starting at i, and its
     // second char — checkpointed ONCE (feeds both censuses and both
     // segmentation rounds; the q167 multi-consumer discipline)
-    val pos = vocab.select(col("w"), col("wc"),
+    val pos = Checkpoints.checkpoint(vocab.select(col("w"), col("wc"),
         explode(sequence(lit(1), length(col("w")))).as("i"))
       .withColumn("c", col("w").substr(col("i"), lit(1)))
       .withColumn("bg",
         when(col("i") < length(col("w")), col("w").substr(col("i"), lit(2))))
       .withColumn("c2",
-        when(col("i") < length(col("w")), col("w").substr(col("i") + 1, lit(1))))
-      .localCheckpoint(true)
+        when(col("i") < length(col("w")), col("w").substr(col("i") + 1, lit(1)))))
 
     // candidate censuses: every char (alphabet-bounded collect) + the
     // top-`topBigrams` bigrams (TakeOrdered) — the model-bounded state
@@ -1458,9 +1448,6 @@ object TextStats {
 
     val cnt1 = segmentRound(cand0)
     val cnt2 = segmentRound(cand0.map { case (p, _) => p -> cnt1.getOrElse(p, 0L) })
-    // every consumer of the position table has collected — release its
-    // blocks now (Dataset.unpersist is a no-op on checkpoints)
-    graft.core.Checkpoints.release(pos)
 
     val t2 = cnt2.values.sum
     val rows = cand0.toSeq.sortBy(_._1).map { case (p, c0) =>

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.core.Checkpoints
 import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
 
 /** The composed end-to-end curation pass a training-data pipeline runs
@@ -23,8 +24,8 @@ import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
   *
   * Returns the surviving documents (all input columns), EAGERLY
   * materialized (checkpoint-backed): the pipeline runs when `curate`
-  * is called, which lets it release its internal stage-3 cache before
-  * returning — no graft-owned cache entries outlive the call. Stage order
+  * is called, and its [[Checkpoints.scoped]] scope frees every internal
+  * cache and checkpoint before returning (or throwing). Stage order
   * matters and is deliberate: cheap whole-source and per-row gates run
   * before the (shuffling) dedup stages so the pair machinery sees the
   * smallest possible corpus, and decontamination runs LAST so a dropped
@@ -42,7 +43,7 @@ object Curation {
 
   /** Stages 1-3 (source gate → per-doc gate → exact dedup), shared by
     * [[curate]] and [[curateSoft]]. Returns `(exactDeduped, piiFree)`,
-    * BOTH persisted (MEMORY_AND_DISK):
+    * BOTH persisted (MEMORY_AND_DISK) in the caller's scope:
     *
     *  - `exactDeduped` is the reuse point — the signature kernel, the
     *    component vertices, the near-dup semi join, and the
@@ -54,14 +55,10 @@ object Curation {
     *    consumer (round-20 measurement: with the rarity gate on, the
     *    gate plan itself contains four source-gated corpus passes, so
     *    the doubled consumer cost q83 ~0.9 s of an ~3.0 s floor). Its
-    *    cache is short-lived by design: the caller unpersists it as
-    *    soon as its first eager materialization has filled
-    *    `exactDeduped`'s cache (the stage-4 signature checkpoint), so
-    *    the two corpus-sized entries never coexist past stage 4.
-    *
-    * The CALLER owns both unpersists (the public ops release them
-    * deterministically, so repeated calls in one session cannot
-    * accumulate cached corpora). */
+    *    cache is short-lived by design: the caller frees it as soon as
+    *    its first eager materialization has filled `exactDeduped`'s
+    *    cache (the stage-4 signature checkpoint), so the two
+    *    corpus-sized entries never coexist past stage 4. */
   private def gateAndExactDedup(
       docs: DataFrame,
       textCol: Column,
@@ -76,12 +73,11 @@ object Curation {
     // frame FOUR times (scan signals + two rarity explodes + the token
     // total) — checkpoint the ≤#sources survivor list once (the
     // small-by-construction rule) so those re-plans skip the corpus
-    // aggregation behind it; released by the callers' tail releaseExcept.
-    // Without rarity the gate runs once and the checkpoint job would be
-    // pure overhead (measured-per-shape rule).
+    // aggregation behind it. Without rarity the gate runs once and the
+    // checkpoint job would be pure overhead (measured-per-shape rule).
     val gs = TextStats.goodSources(docs, textCol, sourceCol, minDocs, minAlphaBp)
     val gsSide =
-      if (gate.exists(_.maxMeanRarity.isDefined)) gs.localCheckpoint(true) else gs
+      if (gate.exists(_.maxMeanRarity.isDefined)) Checkpoints.checkpoint(gs) else gs
     val gated = docs.join(broadcast(gsSide), Seq(sourceCol), "left_semi")
 
     // 2. per-document gate: PII-only by default; with `gate` set, the
@@ -103,12 +99,10 @@ object Curation {
     // 3. exact dedup: keep the min-id document of each identical-text
     // group. piiFree persisted — see the Scaladoc (two consumers here,
     // re-planning the whole gate each otherwise)
-    val piiFreeCached =
-      piiFree.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val piiFreeCached = Checkpoints.persist(piiFree)
     val keepers = Dedup.exactDupGroups(piiFreeCached, col(idCol), textCol)
       .select(col("keeper").as(idCol))
-    (piiFreeCached.join(keepers, Seq(idCol), "left_semi")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK),
+    (Checkpoints.persist(piiFreeCached.join(keepers, Seq(idCol), "left_semi")),
       piiFreeCached)
   }
 
@@ -124,7 +118,7 @@ object Curation {
       maxBucketSize: Int = 1000,
       n: Int = 8,
       gate: Option[TextStats.QualityThresholds] = None,
-      keepBest: Boolean = false): DataFrame = {
+      keepBest: Boolean = false): DataFrame = Checkpoints.scoped {
 
     val (exactDeduped, piiFree) = gateAndExactDedup(
       docs, textCol, idCol, sourceCol, minDocs, minAlphaBp, gate)
@@ -136,18 +130,18 @@ object Curation {
     val sig = Dedup.withMinhashSignature(exactDeduped, textCol, numHashes)
     // persistSignatures: the census + guard + both self-join sides would
     // otherwise re-run the minhash kernel over the (cached) corpus 3x;
-    // the checkpointed (id, bands) projection is released right after the
-    // cluster build materializes (dedupClusters is eager), so nothing
-    // outlives the stage
-    val pairs = Dedup.lshCandidatePairs(sig, idCol,
-      (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
-      persistSignatures = true)
-    // the eager signature checkpoint above filled exactDeduped's cache —
-    // piiFree has no reader left (stage 3 ran during the fill); release
-    // its corpus-sized entry before the cluster stage allocates
-    piiFree.unpersist(false)
-    val clusters = Components.dedupClusters(exactDeduped, pairs, idCol)
-    graft.core.Checkpoints.release(pairs) // internal sig checkpoint only
+    // the stage's own scope frees the checkpointed (id, bands) projection
+    // once the cluster build materializes (dedupClusters is eager)
+    val clusters = Checkpoints.scoped {
+      val pairs = Dedup.lshCandidatePairs(sig, idCol,
+        (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
+        persistSignatures = true)
+      // the eager signature checkpoint above filled exactDeduped's cache —
+      // piiFree has no reader left (stage 3 ran during the fill); free
+      // its corpus-sized entry before the cluster stage allocates
+      Checkpoints.free(piiFree)
+      Components.dedupClusters(exactDeduped, pairs, idCol)
+    }
     val canonical =
       if (keepBest) {
         val quality = exactDeduped.select(col(idCol),
@@ -164,26 +158,11 @@ object Curation {
 
     // 5. decontaminate against the benchmark.
     // The survivors are materialized eagerly (localCheckpoint — same
-    // treatment Packing/ExactSubstr give their reuse points) so the
-    // stage-3 cache can be released before returning: curate() owns the
-    // persist, so curate() must own the unpersist — leaving it to the
-    // session's next clearCache leaks one corpus-sized cache entry per
-    // call in a long-lived session. The returned frame is checkpoint-
-    // backed (survivor-sized, typically a small fraction of the corpus);
-    // a caller that is fully done with it can free those blocks too via
-    // [[graft.core.Checkpoints.release]].
-    val lazySurvivors = Contamination.decontaminate(nearDeduped, textCol, idCol,
-      benchmark, textCol, n)
-    val survivors = lazySurvivors.localCheckpoint(true)
-    // free the stage-3 cache AND the component loop's final-round
-    // checkpoint (a LogicalRDD leaf inside the lazy plan) — with the
-    // survivors materialized, nothing reads either again. Caller-supplied
-    // frames are excluded: docs/benchmark may themselves be checkpoint-
-    // backed (e.g. a previous curate's output), and those blocks are the
-    // caller's only copy.
-    graft.core.Checkpoints.releaseExcept(lazySurvivors, docs, benchmark)
-    exactDeduped.unpersist(false)
-    survivors
+    // treatment Packing/ExactSubstr give their reuse points) so nothing
+    // the scope frees is read again. The returned frame is checkpoint-
+    // backed (survivor-sized, typically a small fraction of the corpus).
+    Checkpoints.checkpoint(Contamination.decontaminate(nearDeduped, textCol, idCol,
+      benchmark, textCol, n))
   }
 
   /** SOFT curation — [[curate]]'s stages with the near-dup DROP swapped
@@ -200,8 +179,8 @@ object Curation {
     * decontamination removes rows — a near-dup family that loses a member
     * to the benchmark check keeps the weight of its full observed size
     * (the multiplicity signal is about repetition in the wild, not about
-    * what survives this particular filter chain). Same eager
-    * checkpoint-and-release lifecycle as [[curate]].
+    * what survives this particular filter chain). Same eager,
+    * scoped lifecycle as [[curate]].
     *
     * Output: all input columns + `canonical_id`, `cluster_size`,
     * `weight_bp`. */
@@ -216,7 +195,7 @@ object Curation {
       numHashes: Int = 2,
       maxBucketSize: Int = 1000,
       n: Int = 8,
-      gate: Option[TextStats.QualityThresholds] = None): DataFrame = {
+      gate: Option[TextStats.QualityThresholds] = None): DataFrame = Checkpoints.scoped {
 
     val (exactDeduped, piiFree) = gateAndExactDedup(
       docs, textCol, idCol, sourceCol, minDocs, minAlphaBp, gate)
@@ -224,23 +203,21 @@ object Curation {
     // 4. near-dup clusters -> weights (no drop): guarded band pairs,
     // components, partial-aggregated size counts
     val sig = Dedup.withMinhashSignature(exactDeduped, textCol, numHashes)
-    val pairs = Dedup.lshCandidatePairs(sig, idCol,
-      (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
-      persistSignatures = true) // released below (the curate() pattern)
-    piiFree.unpersist(false) // filled exactDeduped above; no reader left
-    val clusters = Components.dedupClusters(exactDeduped, pairs, idCol)
-    graft.core.Checkpoints.release(pairs) // internal sig checkpoint only
+    // the stage's scope frees the signature checkpoint (the curate() pattern)
+    val clusters = Checkpoints.scoped {
+      val pairs = Dedup.lshCandidatePairs(sig, idCol,
+        (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
+        persistSignatures = true)
+      Checkpoints.free(piiFree) // filled exactDeduped above; no reader left
+      Components.dedupClusters(exactDeduped, pairs, idCol)
+    }
     val weights = Components.clusterWeights(clusters, idCol)
 
     // 5. decontaminate, then attach the weights (inner join on the doc
     // id: every clean doc has exactly one weight row by construction)
-    val lazySurvivors = Contamination.decontaminate(exactDeduped, textCol, idCol,
+    Checkpoints.checkpoint(Contamination.decontaminate(exactDeduped, textCol, idCol,
         benchmark, textCol, n)
-      .join(weights, Seq(idCol))
-    val survivors = lazySurvivors.localCheckpoint(true)
-    graft.core.Checkpoints.releaseExcept(lazySurvivors, docs, benchmark)
-    exactDeduped.unpersist(false)
-    survivors
+      .join(weights, Seq(idCol)))
   }
 
   /** INCREMENTAL curation — the daily-ingest shape: curate a NEW BATCH
@@ -264,8 +241,8 @@ object Curation {
     *
     * Scale shape: every corpus-sized frame reduces to short keys before
     * crossing an exchange (md5s, band keys, benchmark n-gram hashes);
-    * batch-side work is batch-sized throughout. Same eager
-    * checkpoint-and-release lifecycle as [[curate]]. Returns surviving
+    * batch-side work is batch-sized throughout. Same eager, scoped
+    * lifecycle as [[curate]]. Returns surviving
     * batch rows with their input columns. */
   def curateIncremental(
       batch: DataFrame,
@@ -286,8 +263,7 @@ object Curation {
       Dedup.corpusBandKeys(
         Dedup.withMinhashSignature(corpus, textCol, numHashes), Seq(mhCols)),
       textCol, idCol, sourceCol, benchmark,
-      minDocs, minAlphaBp, numHashes, maxBucketSize, n,
-      protectedFrames = Seq(corpus))
+      minDocs, minAlphaBp, numHashes, maxBucketSize, n)
   }
 
   /** Names of the persisted standing-corpus signature tables
@@ -390,8 +366,7 @@ object Curation {
       spark.table(corpusTables.hashesTable),
       spark.table(corpusTables.bandsTable),
       textCol, idCol, sourceCol, benchmark,
-      minDocs, minAlphaBp, corpusTables.numHashes, maxBucketSize, n,
-      protectedFrames = Seq.empty)
+      minDocs, minAlphaBp, corpusTables.numHashes, maxBucketSize, n)
   }
 
   /** Shared body of the two [[curateIncremental]] shapes: the corpus
@@ -411,17 +386,14 @@ object Curation {
       minAlphaBp: Int,
       numHashes: Int,
       maxBucketSize: Int,
-      n: Int,
-      protectedFrames: Seq[DataFrame]): DataFrame = {
+      n: Int): DataFrame = Checkpoints.scoped {
 
     // the `_h` exact-hash column and the mh0..mhN signature columns ride
     // the passthrough batch frame through stages 4-6 and are dropped
     // before return — a caller column with one of those names would be
     // silently overwritten and swallowed (the qualityGate/gopherSignals
     // collision-guard class). Checked FIRST — it only inspects
-    // batch.columns, and a late require would fail after stage 3 has
-    // already built and persist-registered work (leaking exactDeduped's
-    // persist marker on the error path).
+    // batch.columns, so a rejected batch costs no stage work.
     val mhCols = (0 until numHashes).map(i => s"mh$i")
     val clash = batch.columns.toSet.intersect(mhCols.toSet + "_h")
     require(clash.isEmpty,
@@ -444,14 +416,13 @@ object Curation {
     // the canonical semi join) would re-execute those corpus legs per
     // consumer — measured as the dominant marginal of q139's floor
     // (S4 +1.25 s of 3.2 s, PLANS round 18). One eager batch-sized
-    // checkpoint runs the corpus legs exactly once; released with the
-    // rest in the tail (releaseExcept below).
+    // checkpoint runs the corpus legs exactly once.
     val sigNew = Dedup.withMinhashSignature(freshExact, textCol, numHashes)
-    val fresh = Dedup.dedupAgainstCorpusKeys(sigNew, corpusBands, idCol, Seq(mhCols))
-      .localCheckpoint(true)
+    val fresh = Checkpoints.checkpoint(
+      Dedup.dedupAgainstCorpusKeys(sigNew, corpusBands, idCol, Seq(mhCols)))
     // the eager checkpoint above filled exactDeduped's cache — piiFree
     // (stage-3's double-consumed input) has no reader left
-    piiFree.unpersist(false)
+    Checkpoints.free(piiFree)
 
     // 6. within-batch clusters over what is left. persistSignatures off:
     // the input is already a materialized checkpoint whose mh columns
@@ -462,21 +433,13 @@ object Curation {
       maxBucketSize = Some(maxBucketSize),
       persistSignatures = false)
     val clusters = Components.dedupClusters(fresh, pairs, idCol)
-    // (no release(pairs) here: persistSignatures is off, so the only
-    // checkpoint in pairs' lineage is `fresh` — still feeding the semi
-    // join and decontamination below; the tail releaseExcept frees it)
     val canonical = clusters
       .where(col(idCol) === col("canonical_id")).select(col(idCol))
     val nearDeduped = fresh.join(canonical, Seq(idCol), "left_semi")
       .drop(mhCols: _*)
 
-    // 7. decontaminate; eager materialize + release (the curate contract)
-    val lazySurvivors = Contamination.decontaminate(nearDeduped, textCol, idCol,
-      benchmark, textCol, n)
-    val survivors = lazySurvivors.localCheckpoint(true)
-    graft.core.Checkpoints.releaseExcept(
-      lazySurvivors, batch +: benchmark +: protectedFrames: _*)
-    exactDeduped.unpersist(false)
-    survivors
+    // 7. decontaminate; eager materialize (the curate contract)
+    Checkpoints.checkpoint(Contamination.decontaminate(nearDeduped, textCol, idCol,
+      benchmark, textCol, n))
   }
 }

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -56,7 +57,7 @@ object Materialize {
   def trainingShards(
       docs: DataFrame, textCol: Column, idCol: String, stratumCol: String,
       seqLen: Long, seqsPerShard: Long, seed: Long,
-      outDir: String, writeManifest: Boolean = true): DataFrame = {
+      outDir: String, writeManifest: Boolean = true): DataFrame = Checkpoints.scoped {
     require(seqsPerShard >= 1,
       s"trainingShards: seqsPerShard must be >= 1, got $seqsPerShard")
     val spark = docs.sparkSession
@@ -86,21 +87,17 @@ object Materialize {
       // returned summary is a metadata-only rollup of the per-file frame
       // — the old shape paid a SECOND scan of the shard tree for the
       // n_tok sums the manifest didn't carry. The summary checkpoint is
-      // ≤ #shards rows (the bounded returned-lineage class,
-      // graft.core.Checkpoints policy); the manifest cache is released
-      // once the summary materializes.
-      val m = Manifest.writeForParquetDirWith(spark, outDir, Seq(
+      // ≤ #shards rows. The manifest comes back already cached: persisting
+      // it again runs no job and hands that cache to the scope.
+      val m = Checkpoints.persist(Manifest.writeForParquetDirWith(spark, outDir, Seq(
         "stratum" -> first(col("stratum")),
         "shard" -> first(col("shard")),
-        "n_tok_sum" -> sum(col("n_tok"))))
-      val summary = m
+        "n_tok_sum" -> sum(col("n_tok")))))
+      Checkpoints.checkpoint(m
         .groupBy(col("stratum"), col("shard"))
         .agg(sum(col("n_rows")).as("n_docs"),
           coalesce(sum(col("n_tok_sum")), lit(0L)).as("n_tokens"))
-        .orderBy(col("stratum"), col("shard"))
-        .localCheckpoint(true)
-      m.unpersist()
-      summary
+        .orderBy(col("stratum"), col("shard")))
     } else spark.read.parquet(outDir)
       .groupBy(col("stratum"), col("shard"))
       .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Checkpoints
 import graft.core.Implicits._
 import graft.io.{ParquetIO, Rdf, Ttl}
 import graft.io.PartitionedWrite._
@@ -152,22 +153,19 @@ object ParquetToRdf {
     // with the types pass re-reading every gzip file it had just written.
     // Output equality with the legacy operators is spec-asserted
     // (IdTypesSpec); when both sinks run, the shared aggregate is cached
-    // across them and released deterministically.
-    if (cfg.writeTypes || cfg.externaliseUris) {
+    // across them for this block's scope.
+    if (cfg.writeTypes || cfg.externaliseUris) Checkpoints.scoped {
       val agg = IdTypes.rolesAggregate(spark, labelTriples, infoboxTriples,
         DataTypes.disambiguate(withTypes, winning),
         interlangTriples, pageLinksTriples, categoryTriples, skosTriples, geoTriples)
       val shared = cfg.writeTypes && cfg.externaliseUris
-      val aggP = if (shared)
-        agg.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else agg
+      val aggP = if (shared) Checkpoints.persist(agg) else agg
       if (cfg.writeTypes) timed("write types") {
         Rdf.write(IdTypes.types(aggP, cfg.externaliseUris), s"$outBase/types.rdf")
       }
       if (cfg.externaliseUris) timed("write external_ids") {
         Rdf.write(IdTypes.xids(aggP), s"$outBase/external_ids.rdf")
       }
-      if (shared) aggP.unpersist(false)
     }
 
     val counts = if (cfg.writeManifests) timed("manifest audit") {

@@ -1,5 +1,6 @@
 package graft.pipeline
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.ext.{Contamination, Dedup}
@@ -43,7 +44,7 @@ object Reports {
       benchmark: DataFrame,
       benchmarkText: Column,
       n: Int = 8,
-      gatePseudoN: Long = 25L): DataFrame = {
+      gatePseudoN: Long = 25L): DataFrame = Checkpoints.scoped {
     val base = docs.select(
       col(sourceCol).as("source"),
       col(idCol).as("_id"),
@@ -57,7 +58,7 @@ object Reports {
     val hits = Contamination
       .contaminationHits(docs, textCol, idCol, benchmark, benchmarkText, n)
       .select(col(idCol).as("_id"), lit(1L).as("_contam"))
-    val per = base.join(firsts, Seq("_h"))
+    val per = Checkpoints.checkpoint(base.join(firsts, Seq("_h"))
       .join(hits, Seq("_id"), "left")
       .groupBy(col("source"))
       .agg(
@@ -66,8 +67,7 @@ object Reports {
         sum((col("_id") =!= col("_keep")).cast("long")).as("_ndup"),
         coalesce(sum(col("_contam")), lit(0L)).as("_ncontam"),
         sum(col("_nchar")).as("_nc"),
-        sum(col("_nalpha")).as("_na"))
-      .localCheckpoint(true)
+        sum(col("_nalpha")).as("_na")))
     val global = per.agg(sum(col("n_docs")).as("_gn"), sum(col("_ncontam")).as("_gx"))
     per.crossJoin(broadcast(global))
       .select(col("source"), col("n_docs"), col("n_tokens"),
@@ -112,7 +112,7 @@ object Reports {
       valueCol: Column,
       groupCol: Column,
       bins: Int = 64,
-      binWidth: Long = 1L): DataFrame = {
+      binWidth: Long = 1L): DataFrame = Checkpoints.scoped {
     require(bins >= 2, s"ksDistance: bins must be >= 2, got $bins")
     require(binWidth >= 1, s"ksDistance: binWidth must be >= 1, got $binWidth")
     // floor division, identical to the oracle's `//` (operands here are
@@ -123,9 +123,7 @@ object Reports {
     // and BOTH pair-join sides — without materialization the corpus scan
     // (with the signal kernel) re-plans FOUR times. The table is bounded
     // at groups x bins rows, so an eager localCheckpoint collapses the
-    // whole operator to ONE corpus pass for negligible pinned storage
-    // (release via `graft.core.Checkpoints.release(result)` after the
-    // result is consumed).
+    // whole operator to ONE corpus pass for negligible pinned storage.
     // Malformed-input policy, unified across the KS family in round 13
     // (batch and stream are advertised as an exact dual — they must
     // agree on bad rows too): null values DROP (an all-null group
@@ -137,13 +135,12 @@ object Reports {
     // SKIP null operands in Spark, so a null value's "bin" would come
     // out as bins-1, not null — silently counting missing data as the
     // top bin.
-    val counts = df
+    val counts = Checkpoints.checkpoint(df
       .where(valueCol.isNotNull)
       .select(groupCol.as("group"),
         greatest(lit(0L),
           least(lit(bins - 1L), idiv(valueCol.cast("long"), lit(binWidth)))).as("bin"))
-      .groupBy(col("group"), col("bin")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+      .groupBy(col("group"), col("bin")).agg(count(lit(1)).as("c")))
     // dense (group x bin) grid: a missing bin still carries the running
     // CDF, and the pair join below needs every bin present on both sides
     val grid = counts.select(col("group")).distinct()
@@ -181,7 +178,8 @@ object Reports {
     * partial aggregation exceeds the group count. Output:
     * `(group, n_docs, raw_ppm, shrunk_ppm)`. */
   def shrunkRates(
-      df: DataFrame, groupCol: Column, flagCol: Column, pseudoN: Long): DataFrame = {
+      df: DataFrame, groupCol: Column, flagCol: Column,
+      pseudoN: Long): DataFrame = Checkpoints.scoped {
     require(pseudoN >= 1, s"shrunkRates: pseudoN must be >= 1, got $pseudoN")
     def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
@@ -189,10 +187,9 @@ object Reports {
     // eagerly checkpoint it or BOTH references re-plan the corpus
     // aggregation from the scan (the q158 multi-consumer discipline —
     // plan-audited: two parquet scans without it, one with)
-    val per = df.groupBy(groupCol.as("group"))
+    val per = Checkpoints.checkpoint(df.groupBy(groupCol.as("group"))
       .agg(count(lit(1)).as("n"),
-        sum(when(flagCol, 1L).otherwise(0L)).as("x"))
-      .localCheckpoint(true)
+        sum(when(flagCol, 1L).otherwise(0L)).as("x")))
     val global = per.agg(sum(col("n")).as("_gn"), sum(col("x")).as("_gx"))
     per.crossJoin(broadcast(global))
       .select(col("group"), col("n").as("n_docs"),
@@ -309,13 +306,12 @@ object Reports {
     * so a fired cap UNDERCOUNTS intersections, never inflates. */
   def sourceOverlap(
       docs: DataFrame, group: Column, contentCol: Column,
-      maxSources: Int = 1024): DataFrame = {
+      maxSources: Int = 1024): DataFrame = Checkpoints.scoped {
     require(maxSources >= 2,
       s"sourceOverlap: maxSources must be >= 2, got $maxSources")
-    val sets = docs.select(group.as("g"), md5(contentCol).as("h"))
+    val sets = Checkpoints.checkpoint(docs.select(group.as("g"), md5(contentCol).as("h"))
       .groupBy(col("h"))
-      .agg(sort_array(collect_set(col("g"))).as("gs"))
-      .localCheckpoint(true)
+      .agg(sort_array(collect_set(col("g"))).as("gs")))
     val sizes = sets.select(explode(col("gs")).as("g"))
       .groupBy(col("g")).agg(count(lit(1)).as("sz"))
     sets

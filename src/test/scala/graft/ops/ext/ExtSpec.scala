@@ -790,6 +790,50 @@ class ComponentsSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
+  test("distributed CC rounds that throw free every cache and checkpoint made") {
+    val spark2 = spark
+    import spark2.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+    import org.apache.spark.sql.execution.LogicalRDD
+    // An edge UDF runs only while round 1 reads the edges into the
+    // symmetrized cache (hashToMin) or the init checkpoint (star); no
+    // later round reads them again, so a UDF cannot fail a later round.
+    // A test-only optimizer rule fails one instead: it throws on the
+    // first plan that reads a checkpoint the call made (hashToMin's
+    // round 2, the star's first loop round), after the edge cache and a
+    // round checkpoint exist.
+    val floor = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
+    object FailLaterRound extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
+      def apply(plan: LogicalPlan): LogicalPlan = {
+        if (plan.collectLeaves().exists {
+          case l: LogicalRDD => l.rdd.id > floor.get
+          case _ => false
+        }) throw new IllegalStateException("round unreadable")
+        plan
+      }
+    }
+    val edges = (0L until 6L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val vertices = (0L to 6L).toDF("id")
+    spark.experimental.extraOptimizations = Seq(FailLaterRound)
+    try {
+      val leaks = Seq[(String, () => Any)](
+          "hashToMin" -> (() => Components.connectedComponents(
+            vertices, edges, driverFinishMaxEdges = 0L)),
+          "star" -> (() => Components.connectedComponentsStar(
+            vertices, edges, driverFinishMaxEdges = 0L))).flatMap { case (name, run) =>
+        val before = materializations
+        floor.set(spark.sparkContext.emptyRDD[Int].id)
+        val e = intercept[Exception](run())
+        floor.set(Int.MaxValue)
+        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+          .exists(_.toString.contains("round unreadable")), s"$name: $e")
+        val after = materializations
+        if (after == before) None else Some((name, before, after))
+      }
+      assert(leaks.isEmpty)
+    } finally spark.experimental.extraOptimizations = Nil
+  }
+
   private def ccStar(vertices: Seq[Long], edges: Seq[(Long, Long)], maxIter: Int = 25,
       driverMax: Long = Components.DriverFinishMaxEdges) = {
     val spark2 = spark

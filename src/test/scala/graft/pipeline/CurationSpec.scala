@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class CurationSpec extends SparkSpec {
@@ -334,5 +335,95 @@ class CurationSpec extends SparkSpec {
     assert(out.toSeq === Seq(
       (1L, 1L, 2L, 5000L),
       (3L, 1L, 2L, 5000L)))
+  }
+
+  // the first test's fixture (one victim per stage) and the second
+  // test's incremental fixture, shared by the lifecycle specs below
+  private def curateFixture = {
+    val spark2 = spark
+    import spark2.implicits._
+    (Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta", "good"),
+      (2L, "alpha beta gamma delta epsilon zeta eta theta", "good"),
+      (3L, "theta eta zeta epsilon delta gamma beta alpha", "good"),
+      (4L, "clean words here but mail me at someone@example.com today", "good"),
+      (5L, "prefix the quick brown fox jumps over the lazy dog suffix", "good"),
+      (6L, "1234 5678 9012 3456 7890 1234 5678 9012", "junk")
+    ).toDF("doc_id", "text", "source"),
+      Seq("the quick brown fox jumps over the lazy dog").toDF("text"))
+  }
+
+  private def incrementalFixture = {
+    val spark2 = spark
+    import spark2.implicits._
+    (Seq(
+      (1L, "alpha beta gamma delta epsilon zeta eta theta", "good"),
+      (2L, "clean words here but mail me at someone@example.com today", "good"),
+      (3L, "alpha beta gamma delta epsilon zeta eta theta", "good"),
+      (4L, "this exact sentence already lives in the corpus", "good"),
+      (5L, "nu mu lambda kappa iota psi chi phi", "good"),
+      (6L, "theta eta zeta epsilon delta gamma beta alpha", "good"),
+      (7L, "prefix the quick brown fox jumps over the lazy dog suffix", "good")
+    ).toDF("doc_id", "text", "source"),
+      Seq(
+        (100L, "this exact sentence already lives in the corpus", "good"),
+        (101L, "phi chi psi iota kappa lambda mu nu", "good")
+      ).toDF("doc_id", "text", "source"))
+  }
+
+  private val curations: Seq[(String, (DataFrame, DataFrame) => DataFrame)] = Seq(
+    "curate" -> { (docs, bench) =>
+      Curation.curate(docs, col("text"), "doc_id", "source", bench,
+        minDocs = 1, minAlphaBp = 5000, numHashes = 2, maxBucketSize = 100, n = 8)
+    },
+    "curateSoft" -> { (docs, bench) =>
+      Curation.curateSoft(docs, col("text"), "doc_id", "source", bench,
+        minDocs = 1, minAlphaBp = 5000, numHashes = 2, maxBucketSize = 100, n = 8)
+    },
+    "curateIncremental" -> { (_, bench) =>
+      val (batch, corpus) = incrementalFixture
+      Curation.curateIncremental(batch, corpus, col("text"), "doc_id",
+        "source", bench, minDocs = 1, minAlphaBp = 5000, numHashes = 2,
+        maxBucketSize = 100, n = 8)
+    })
+
+  test("a curation pass that throws in stage 5 frees every cache and checkpoint it made") {
+    // the benchmark is read only by decontamination, so a benchmark text
+    // column that throws fails the pass after stages 1-4 have persisted
+    // the exact-dedup reuse point and checkpointed the cluster rounds
+    val boom = udf((s: String) => {
+      if (s != null) throw new IllegalStateException("benchmark text unreadable")
+      s
+    })
+    val (docs, bench) = curateFixture
+    val badBench = bench.select(boom(col("text")).as("text"))
+    val leaks = curations.flatMap { case (name, run) =>
+      // a cache entry left by an earlier case would be reused, hiding
+      // this case's own leak of the same plan
+      spark.catalog.clearCache()
+      val before = materializations
+      val e = intercept[Exception](run(docs, badBench))
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.toString.contains("benchmark text unreadable")), s"$name: $e")
+      val after = materializations
+      if (after == before) None else Some((name, before, after))
+    }
+    assert(leaks.isEmpty)
+  }
+
+  test("curation passes run a pinned number of Spark jobs") {
+    // the lifecycle bookkeeping (what is freed, and when) must never add
+    // or remove a job: these are the counts of the eager passes on the
+    // fixture above, with no cached plan left to reuse
+    val (docs, bench) = curateFixture
+    val counts = curations.map { case (name, run) =>
+      spark.catalog.clearCache()
+      var out: DataFrame = null
+      val jobs = jobsOf { out = run(docs, bench) }
+      graft.core.Checkpoints.release(out)
+      name -> jobs
+    }
+    assert(counts === Seq("curate" -> 24, "curateSoft" -> 25,
+      "curateIncremental" -> 30))
   }
 }
