@@ -89,7 +89,20 @@ object SchemaGen {
       infoboxTriples: DataFrame,
       winningTypes: DataFrame,
       langTag: String = "",
-      externaliseUris: Boolean = false): DataFrame = {
+      externaliseUris: Boolean = false): DataFrame =
+    relation(spark, infoboxTriples, winningTypes, langTag, externaliseUris)
+      .cache() // consumed by both schema writes (reference :329-330) —
+      .coalesce(1) // without it the infobox join+distinct runs twice
+
+  /** [[schema]] before its cache and single-partition coalesce, for a
+    * caller that owns the cache: `schema`'s own cache sits under the
+    * coalesce, where `unpersist()` on the result cannot reach it. */
+  def relation(
+      spark: SparkSession,
+      infoboxTriples: DataFrame,
+      winningTypes: DataFrame,
+      langTag: String,
+      externaliseUris: Boolean): DataFrame = {
     import graft.core.Implicits._
     staticPredicates(spark, langTag)
       .unionByName(inferredInfoboxPredicates(infoboxTriples, winningTypes))
@@ -98,8 +111,6 @@ object SchemaGen {
       // explicit columns: the reference's bare .sort() is a no-op Catalyst
       // removes; sort for real so the relation honors the "sorted" contract
       .sort("dataset", "p", "lang", "t", "i")
-      .cache() // consumed by both schema writes (reference :329-330) —
-      .coalesce(1) // without it the infobox join+distinct runs twice
   }
 
   /** Render schema rows to text lines `<p>: t i .` — predicates containing

@@ -303,6 +303,78 @@ object Dedup {
     if (bands.size > 1) all.distinct() else all
   }
 
+  /** Near-dup clusters of ONE LSH band, straight from the guarded
+    * buckets: per row of `signatures`, its `canonical_id` and its
+    * `cluster_size` (BIGINT). This is what
+    * `Components.dedupClusters(docs, lshCandidatePairs(signatures, idCol,
+    * bandCols, Some(maxBucketSize)))` computes (plus
+    * [[Components.clusterWeights]]' size, or with `score`
+    * [[Components.representatives]]' election), without the pair
+    * self-join or the component rounds.
+    *
+    * Why one band needs no connected components: each row has exactly
+    * one band key, so each row sits in exactly one bucket, and the
+    * candidate graph is a disjoint union of bucket cliques. Its components
+    * ARE the guarded buckets. With two or more bands the buckets overlap
+    * (a row pairs in one band with rows it does not share another band
+    * with), and only the transitive closure is correct — use
+    * [[lshCandidatePairsMultiBand]] and [[Components.dedupClusters]].
+    *
+    * Contract (single band, as the pair composition):
+    *  - band key and guard as [[lshCandidatePairs]]: the bucket's ROW
+    *    count must be in `[2, maxBucketSize]`. A row outside a guarded
+    *    bucket is its own cluster: `canonical_id = id`, `cluster_size = 1`.
+    *  - `canonical_id` is the bucket's minimum id; with `score` (an
+    *    integral, non-null column over `signatures`) the highest-scoring
+    *    member, ties to the smaller id.
+    *  - `cluster_size` counts the bucket's rows with a non-null id: its
+    *    distinct ids, as ids are expected to be unique. A repeated id
+    *    counts once per row, as `clusterWeights` counts it; it is a member
+    *    of each bucket it lands in, and clusters do NOT close over it
+    *    across buckets (connected components would).
+    *  - a null id never becomes canonical and counts in no size; its row
+    *    still counts toward the guard (as in the pair self-join) and is
+    *    its own cluster (`canonical_id` null, `cluster_size` 1).
+    *
+    * Shape: one eager checkpoint of the `(id, band key[, score])`
+    * projection (the signature kernel runs once), one partial-aggregated
+    * `groupBy(band)` over it, joined back to the checkpoint. The result
+    * reads the checkpoint, so it passes to the enclosing
+    * [[graft.core.Checkpoints.scoped]] scope, or to the caller outside
+    * one. Output: idCol, canonical_id, cluster_size. */
+  def bandClusters(
+      signatures: DataFrame,
+      idCol: String,
+      bandCols: Seq[String],
+      maxBucketSize: Int,
+      score: Option[Column] = None): DataFrame = Checkpoints.scoped {
+    score.foreach { s =>
+      import org.apache.spark.sql.types.{ByteType, IntegerType, LongType, ShortType}
+      val t = signatures.select(s).schema.head.dataType
+      require(Seq(ByteType, ShortType, IntegerType, LongType).contains(t),
+        s"bandClusters: score must be an integral column, got ${t.simpleString}")
+    }
+    val keyed = Checkpoints.checkpoint(signatures.select(
+      Seq(col(idCol), bandKey(bandCols).as("_band")) ++ score.map(_.as("_score")): _*))
+    // bitwise_not reverses an integral order without overflow, so
+    // min(struct(~score, id)) is (score desc, id asc)
+    val canonical = score match {
+      case Some(_) => min(when(col(idCol).isNotNull,
+        struct(bitwise_not(col("_score")), col(idCol)))).getField(idCol)
+      case None => min(col(idCol))
+    }
+    val buckets = keyed.groupBy(col("_band"))
+      .agg(count(lit(1)).as("_n"), canonical.as("_canon"),
+        count(col(idCol)).as("_size"))
+      .where(col("_n").between(2, maxBucketSize))
+      .drop("_n")
+    val member = col("_canon").isNotNull && col(idCol).isNotNull
+    keyed.join(buckets, Seq("_band"), "left")
+      .select(col(idCol),
+        when(member, col("_canon")).otherwise(col(idCol)).as("canonical_id"),
+        when(member, col("_size")).otherwise(lit(1L)).as("cluster_size"))
+  }
+
   /** LSH-prefiltered Jaccard: exact token-set Jaccard computed ONLY on
     * band-sharing candidate pairs — the composition that replaces the
     * quadratic all-pairs join for near-dup detection.

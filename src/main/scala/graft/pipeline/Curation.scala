@@ -3,7 +3,7 @@ package graft.pipeline
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.core.Checkpoints
-import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
+import graft.ops.ext.{Contamination, Dedup, TextStats}
 
 /** The composed end-to-end curation pass a training-data pipeline runs
   * over a raw corpus — the capstone proving the individual operators
@@ -15,10 +15,10 @@ import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
   *     ([[TextStats]] patterns; count-free early filter)
   *  3. EXACT DEDUP — one keeper (min id) per identical-text group
   *     ([[Dedup.exactDupGroups]])
-  *  4. NEAR-DUP CLUSTERS — MinHash-band candidate pairs under the
-  *     degenerate-bucket guard, closed into components; keep each
-  *     cluster's min-id canonical ([[Dedup.lshCandidatePairs]] +
-  *     [[Components.dedupClusters]])
+  *  4. NEAR-DUP CLUSTERS — documents sharing the one MinHash band
+  *     bucket, under the degenerate-bucket guard; keep each cluster's
+  *     min-id canonical ([[Dedup.bandClusters]]: with one band the
+  *     buckets ARE the components, so no pair join or component rounds)
   *  5. DECONTAMINATE — drop documents sharing any token n-gram with the
   *     benchmark set ([[Contamination.decontaminate]])
   *
@@ -27,17 +27,17 @@ import graft.ops.ext.{Components, Contamination, Dedup, TextStats}
   * is called, and its [[Checkpoints.scoped]] scope frees every internal
   * cache and checkpoint before returning (or throwing). Stage order
   * matters and is deliberate: cheap whole-source and per-row gates run
-  * before the (shuffling) dedup stages so the pair machinery sees the
+  * before the (shuffling) dedup stages so the clustering sees the
   * smallest possible corpus, and decontamination runs LAST so a dropped
   * near-duplicate can't shield its surviving canonical from the
   * benchmark check.
   *
   * Scale shape: stages 1-2 are scan-bound with one source-cardinality
-  * aggregation; stage 3 shuffles 16-byte content hashes; stage 4 is the
-  * guarded band join (pairs linear in corpus under the cap) plus the
-  * endpoint-only component rounds; stage 5 explodes corpus n-grams
-  * map-side into a broadcast. No stage materializes the corpus more than
-  * its own shuffle requires.
+  * aggregation; stage 3 shuffles 16-byte content hashes; stage 4 is one
+  * checkpointed (id, band key) projection and one partial-aggregated
+  * per-bucket aggregate joined back to it, never a pair list; stage 5
+  * explodes corpus n-grams map-side into a broadcast. No stage
+  * materializes the corpus more than its own shuffle requires.
   */
 object Curation {
 
@@ -46,9 +46,8 @@ object Curation {
     * BOTH persisted (MEMORY_AND_DISK) in the caller's scope:
     *
     *  - `exactDeduped` is the reuse point — the signature kernel, the
-    *    component vertices, the near-dup semi join, and the
-    *    decontamination scan all read it; uncached, the stages
-    *    re-execute once per consumer.
+    *    near-dup anti join, and the decontamination scan all read it;
+    *    uncached, the stages re-execute once per consumer.
     *  - `piiFree` exists because stage 3 consumes it TWICE (the keeper
     *    election and the semi join back), and DataFrame plans share no
     *    common subtrees — uncached, the ENTIRE gate re-executes per
@@ -57,7 +56,7 @@ object Curation {
     *    the doubled consumer cost q83 ~0.9 s of an ~3.0 s floor). Its
     *    cache is short-lived by design: the caller frees it as soon as
     *    its first eager materialization has filled `exactDeduped`'s
-    *    cache (the stage-4 signature checkpoint), so the two
+    *    cache (the stage-4 cluster checkpoint), so the two
     *    corpus-sized entries never coexist past stage 4. */
   private def gateAndExactDedup(
       docs: DataFrame,
@@ -106,6 +105,11 @@ object Curation {
       piiFreeCached)
   }
 
+  /** Ids of the [[Dedup.bandClusters]] members that are not their
+    * cluster's canonical — the rows stage 4 drops. */
+  private def nonCanonical(clusters: DataFrame, idCol: String): DataFrame =
+    clusters.where(col(idCol) =!= col("canonical_id")).select(col(idCol))
+
   def curate(
       docs: DataFrame,
       textCol: Column,
@@ -123,38 +127,21 @@ object Curation {
     val (exactDeduped, piiFree) = gateAndExactDedup(
       docs, textCol, idCol, sourceCol, minDocs, minAlphaBp, gate)
 
-    // 4. near-dup clusters: guarded band pairs -> components -> keepers.
-    // Default keeps each cluster's min-id canonical; `keepBest` instead
-    // elects the highest-token-count member ([[Components.representatives]]
-    // — keep the longest/cleanest copy, not whichever crawled first)
-    val sig = Dedup.withMinhashSignature(exactDeduped, textCol, numHashes)
-    // persistSignatures: the census + guard + both self-join sides would
-    // otherwise re-run the minhash kernel over the (cached) corpus 3x;
-    // the stage's own scope frees the checkpointed (id, bands) projection
-    // once the cluster build materializes (dedupClusters is eager)
-    val clusters = Checkpoints.scoped {
-      val pairs = Dedup.lshCandidatePairs(sig, idCol,
-        (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
-        persistSignatures = true)
-      // the eager signature checkpoint above filled exactDeduped's cache —
-      // piiFree has no reader left (stage 3 ran during the fill); free
-      // its corpus-sized entry before the cluster stage allocates
-      Checkpoints.free(piiFree)
-      Components.dedupClusters(exactDeduped, pairs, idCol)
-    }
-    val canonical =
-      if (keepBest) {
-        val quality = exactDeduped.select(col(idCol),
-          TextStats.tokenCount(textCol).cast("long").as("score"))
-        Components.representatives(clusters, quality, idCol)
-          .where(col("kept") === 1L)
-          .select(col(idCol))
-      } else {
-        clusters
-          .where(col(idCol) === col("canonical_id"))
-          .select(col(idCol))
-      }
-    val nearDeduped = exactDeduped.join(canonical, Seq(idCol), "left_semi")
+    // 4. near-dup clusters: one guarded LSH band, so the clusters are the
+    // buckets themselves ([[Dedup.bandClusters]]). Default keeps each
+    // cluster's min-id canonical; `keepBest` instead elects the
+    // highest-token-count member (keep the longest/cleanest copy, not
+    // whichever crawled first). Survivors: everything but the
+    // non-canonical bucket members.
+    val clusters = Dedup.bandClusters(
+      Dedup.withMinhashSignature(exactDeduped, textCol, numHashes), idCol,
+      (0 until numHashes).map(i => s"mh$i"), maxBucketSize,
+      score = Option.when(keepBest)(TextStats.tokenCount(textCol).cast("long")))
+    // the eager cluster checkpoint above filled exactDeduped's cache —
+    // piiFree has no reader left (stage 3 ran during the fill)
+    Checkpoints.free(piiFree)
+    val nearDeduped =
+      exactDeduped.join(nonCanonical(clusters, idCol), Seq(idCol), "left_anti")
 
     // 5. decontaminate against the benchmark.
     // The survivors are materialized eagerly (localCheckpoint — same
@@ -166,9 +153,9 @@ object Curation {
   }
 
   /** SOFT curation — [[curate]]'s stages with the near-dup DROP swapped
-    * for down-weighting ([[Components.clusterWeights]]): every post-gate,
-    * exact-deduped, decontaminated document survives, carrying its dup
-    * cluster's `canonical_id`, `cluster_size`, and the basis-point
+    * for down-weighting by [[Dedup.bandClusters]]' `cluster_size`: every
+    * post-gate, exact-deduped, decontaminated document survives, carrying
+    * its dup cluster's `canonical_id`, `cluster_size`, and the basis-point
     * training-loss weight `10000 div size`. The pipeline to run when
     * duplicates carry signal (popular quotes, licenses, canonical docs)
     * but must not be over-trained on — hard removal (exact dedup of
@@ -200,18 +187,13 @@ object Curation {
     val (exactDeduped, piiFree) = gateAndExactDedup(
       docs, textCol, idCol, sourceCol, minDocs, minAlphaBp, gate)
 
-    // 4. near-dup clusters -> weights (no drop): guarded band pairs,
-    // components, partial-aggregated size counts
-    val sig = Dedup.withMinhashSignature(exactDeduped, textCol, numHashes)
-    // the stage's scope frees the signature checkpoint (the curate() pattern)
-    val clusters = Checkpoints.scoped {
-      val pairs = Dedup.lshCandidatePairs(sig, idCol,
-        (0 until numHashes).map(i => s"mh$i"), maxBucketSize = Some(maxBucketSize),
-        persistSignatures = true)
-      Checkpoints.free(piiFree) // filled exactDeduped above; no reader left
-      Components.dedupClusters(exactDeduped, pairs, idCol)
-    }
-    val weights = Components.clusterWeights(clusters, idCol)
+    // 4. near-dup clusters -> weights (no drop), from the same bucket
+    // aggregate [[curate]] drops by
+    val clusters = Dedup.bandClusters(
+      Dedup.withMinhashSignature(exactDeduped, textCol, numHashes), idCol,
+      (0 until numHashes).map(i => s"mh$i"), maxBucketSize)
+    Checkpoints.free(piiFree) // filled exactDeduped above; no reader left
+    val weights = clusters.withColumn("weight_bp", expr("10000 div cluster_size"))
 
     // 5. decontaminate, then attach the weights (inner join on the doc
     // id: every clean doc has exactly one weight row by construction)
@@ -235,8 +217,8 @@ object Curation {
     *     ships one 32-byte distinct md5 per unique text, never text;
     *  5. near-dup anti join against corpus MinHash band keys
     *     ([[Dedup.dedupAgainstCorpus]] — distinct tagged keys only);
-    *  6. near-dup clusters WITHIN the remaining batch (guarded pairs →
-    *     connected components), min-id canonical survives;
+    *  6. near-dup clusters WITHIN the remaining batch (guarded band
+    *     buckets, [[Dedup.bandClusters]]), min-id canonical survives;
     *  7. benchmark decontamination.
     *
     * Scale shape: every corpus-sized frame reduces to short keys before
@@ -411,12 +393,12 @@ object Curation {
 
     // 5. near-dup against corpus: one tagged band of all hashes.
     // `fresh` is BATCH-sized but its lineage carries the gate and BOTH
-    // corpus-side legs (md5 distinct + corpus band keys); its three
-    // downstream consumers (the pair generator, the cluster vertex set,
-    // the canonical semi join) would re-execute those corpus legs per
-    // consumer — measured as the dominant marginal of q139's floor
-    // (S4 +1.25 s of 3.2 s, PLANS round 18). One eager batch-sized
-    // checkpoint runs the corpus legs exactly once.
+    // corpus-side legs (md5 distinct + corpus band keys); its two
+    // downstream consumers (the cluster checkpoint and the near-dup anti
+    // join) would re-execute those corpus legs per consumer — measured
+    // as the dominant marginal of q139's floor (S4 +1.25 s of 3.2 s,
+    // PLANS round 18). One eager batch-sized checkpoint runs the corpus
+    // legs exactly once.
     val sigNew = Dedup.withMinhashSignature(freshExact, textCol, numHashes)
     val fresh = Checkpoints.checkpoint(
       Dedup.dedupAgainstCorpusKeys(sigNew, corpusBands, idCol, Seq(mhCols)))
@@ -424,18 +406,10 @@ object Curation {
     // (stage-3's double-consumed input) has no reader left
     Checkpoints.free(piiFree)
 
-    // 6. within-batch clusters over what is left. persistSignatures off:
-    // the input is already a materialized checkpoint whose mh columns
-    // are plain stored fields — a second signature checkpoint would cost
-    // a job and save only a column projection (the measure-per-shape
-    // rule; q144 precedent)
-    val pairs = Dedup.lshCandidatePairs(fresh, idCol, mhCols,
-      maxBucketSize = Some(maxBucketSize),
-      persistSignatures = false)
-    val clusters = Components.dedupClusters(fresh, pairs, idCol)
-    val canonical = clusters
-      .where(col(idCol) === col("canonical_id")).select(col(idCol))
-    val nearDeduped = fresh.join(canonical, Seq(idCol), "left_semi")
+    // 6. within-batch clusters over what is left: the guarded buckets of
+    // the one band, min-id canonical survives
+    val clusters = Dedup.bandClusters(fresh, idCol, mhCols, maxBucketSize)
+    val nearDeduped = fresh.join(nonCanonical(clusters, idCol), Seq(idCol), "left_anti")
       .drop(mhCols: _*)
 
     // 7. decontaminate; eager materialize (the curate contract)

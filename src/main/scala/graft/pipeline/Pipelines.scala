@@ -82,7 +82,10 @@ object ParquetToRdf {
   val datasetNames = Seq("labels", "interlanguage_links", "page_links",
     "article_categories", "skos_categories", "geo_coordinates", "infobox_properties")
 
-  def run(spark: SparkSession, parquetBase: String, outBase: String, cfg: RdfConfig): Map[String, Long] = {
+  def run(spark: SparkSession, parquetBase: String, outBase: String,
+      cfg: RdfConfig): Map[String, Long] = Checkpoints.scoped {
+    // the scope frees the caches the ops below make (the top-k and
+    // winning-type tables, the schema relation) when the call ends
     val metrics = graft.core.SpillMetrics.register(spark)
     val langs = cfg.languages
 
@@ -105,14 +108,15 @@ object ParquetToRdf {
     // top-k infobox predicate selection (reference :121-137)
     val infoboxTriples = cfg.topInfoboxPropertiesPerLang match {
       case Some(k) =>
-        TopK.filterToTopK(allInfoboxTriples, TopK.topKPredicatesPerLang(allInfoboxTriples, k))
+        TopK.filterToTopK(allInfoboxTriples,
+          Checkpoints.adopt(TopK.topKPredicatesPerLang(allInfoboxTriples, k)))
       case None => allInfoboxTriples
     }
 
     // cleanup transforms
     val labels = Cleanup.labels(labelTriples, cfg.externaliseUris, cfg.removeLanguageTags)
     val withTypes = DataTypes.withDataTypeExact(infoboxTriples)
-    val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
+    val winning = Checkpoints.adopt(DataTypes.mostFrequentTypePerPredicate(withTypes))
     val infobox = Cleanup.infoboxWith(withTypes, winning, cfg.externaliseUris)
     val interlang = Cleanup.uriPairs(interlangTriples, cfg.externaliseUris)
     val pageLinks = Cleanup.uriPairs(pageLinksTriples, cfg.externaliseUris)
@@ -122,7 +126,9 @@ object ParquetToRdf {
 
     // schema relation + files (reference :263-372)
     val langTag = if (cfg.removeLanguageTags) "" else " @lang"
-    val schema = SchemaGen.schema(spark, infoboxTriples, winning, langTag, cfg.externaliseUris)
+    // SchemaGen.schema's plan, its cache owned here (both writes read it)
+    val schema = Checkpoints.persist(SchemaGen.relation(
+      spark, infoboxTriples, winning, langTag, cfg.externaliseUris)).coalesce(1)
     timed("schema files") {
       writeSchema(SchemaGen.schemaLines(schema, indexed = false), s"$outBase/schema.dgraph")
       writeSchema(SchemaGen.schemaLines(schema, indexed = true), s"$outBase/schema.indexed.dgraph")

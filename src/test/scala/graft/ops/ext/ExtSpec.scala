@@ -1,6 +1,7 @@
 package graft.ops.ext
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class DedupSpec extends SparkSpec {
@@ -263,6 +264,130 @@ class DedupSpec extends SparkSpec {
     val vac = Dedup.lshRecallEval(disjoint, col("text"), "doc_id", thresholdBp = 5000)
       .as[(Long, Long, Long, Long, Long)].head()
     assert(vac === ((0L, 0L, 0L, 10000L, 10000L)))
+  }
+
+  /** The single-band composition [[Dedup.bandClusters]] replaces, next
+    * to it: `(doc_id, canonical_id, cluster_size)` sorted. Canonicals
+    * come from `Components.dedupClusters` over the guarded pairs (or,
+    * with `score`, `Components.representatives`' `rep_id`), sizes from
+    * `Components.clusterWeights`. */
+  private def bandParity(sig: DataFrame, bandCols: Seq[String], cap: Int,
+      score: Option[String] = None): (Seq[(Long, Long, Long)], Seq[(Long, Long, Long)]) = {
+    val spark2 = spark
+    import spark2.implicits._
+    val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bandCols, maxBucketSize = Some(cap))
+    val clusters = Components.dedupClusters(sig, pairs, "doc_id")
+    val weights = Components.clusterWeights(clusters, "doc_id")
+    val old = score match {
+      case Some(s) => Components.representatives(clusters,
+          sig.select(col("doc_id"), col(s).as("score")), "doc_id")
+        .join(weights.select("canonical_id", "cluster_size").distinct(), "canonical_id")
+        .select(col("doc_id"), col("rep_id"), col("cluster_size"))
+      case None => weights.select("doc_id", "canonical_id", "cluster_size")
+    }
+    val expected = old.as[(Long, Long, Long)].collect()
+    val out = Dedup.bandClusters(sig, "doc_id", bandCols, cap, score.map(col))
+    val actual = out.as[(Long, Long, Long)].collect()
+    graft.core.Checkpoints.release(out)
+    (expected.toSeq.sorted, actual.toSeq.sorted)
+  }
+
+  /** Signature rows with `k` band columns, cap 4. `null` values are
+    * null signature entries. */
+  private def bandFixture(k: Int): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    def all(v: String) = Seq.fill(k)(v)
+    val rows: Seq[(Long, Seq[String], Long)] =
+      (1L to 3L).map(i => (i, all(s"single$i"), i)) ++          // singletons
+        (10L to 13L).zip(Seq(1L, 3L, 3L, 2L))                    // exactly cap: tie 11/12
+          .map { case (i, sc) => (i, all("cap"), sc) } ++
+        (20L to 24L).map(i => (i, all("over"), i)) ++            // cap + 1
+        Seq(30L, 31L).map(i => (i, all("pair"), 5L)) ++          // tie on score
+        Seq(40L, 41L).map(i => (i, null +: Seq.fill(k - 1)("n"), i)) ++ // a null entry
+        Seq((45L, Seq(null, "p") ++ Seq.fill(k - 2)("q"), 1L),    // nulls in different
+          (46L, Seq("p", null) ++ Seq.fill(k - 2)("q"), 1L)) ++   // slots: no collision
+        Seq(43L, 44L).map(i => (i, Seq.fill[String](k)(null), 1L)) ++ // all null
+        Seq((50L, all("t"), 7L), (51L, all("t"), 9L), (52L, all("t"), 9L))
+    val schema = StructType(StructField("doc_id", LongType) +:
+      (0 until k).map(i => StructField(s"mh$i", StringType)) :+
+      StructField("score", LongType))
+    spark.createDataFrame(
+      spark.sparkContext.parallelize(rows.map { case (id, mh, sc) => Row(id +: mh :+ sc: _*) }),
+      schema)
+  }
+
+  test("bandClusters equals pairs + connected components on one band") {
+    // checked against the old composition (new == old) for every case in
+    // bandFixture, at 2 and 8 band columns, default and score form:
+    //  - singletons: their own canonical, size 1
+    //  - a bucket of exactly cap rows is clustered (the guard is
+    //    inclusive); cap + 1 rows fall apart into singletons
+    //  - a null band entry keys as a value: 40/41 cluster; 45/46 (nulls in
+    //    different slots) stay apart; all-null 43/44 cluster
+    //  - score ties go to the smaller id (11 over 12, 30 over 31, 51 over 52)
+    for (k <- Seq(2, 8); score <- Seq(None, Some("score"))) {
+      val (expected, actual) = bandParity(bandFixture(k), (0 until k).map(i => s"mh$i"), 4, score)
+      assert(actual === expected, s"k=$k score=$score")
+      val byId = actual.map(r => r._1 -> r).toMap
+      assert(byId(13L)._3 === 4L && byId(20L) === ((20L, 20L, 1L)), s"k=$k")
+      assert(byId(45L)._3 === 1L && byId(43L)._3 === 2L, s"k=$k")
+    }
+    // and on real MinHash signatures: 1/2 share a token set, 3 does not
+    val spark2 = spark
+    import spark2.implicits._
+    val docs = Seq((1L, "a b c d"), (2L, "d c b a a"), (3L, "x y z"), (4L, "a b c d"))
+      .toDF("doc_id", "text").withColumn("score", length(col("text")).cast("long"))
+    for (k <- Seq(2, 8); score <- Seq(None, Some("score"))) {
+      val sig = Dedup.withMinhashSignature(docs, col("text"), k)
+      val (expected, actual) = bandParity(sig, (0 until k).map(i => s"mh$i"), 10, score)
+      assert(actual === expected, s"k=$k score=$score")
+      assert(actual.count(_._3 == 3L) === 3, s"k=$k")
+    }
+  }
+
+  test("bandClusters pins null ids, repeated ids and non-integral scores") {
+    val spark2 = spark
+    import spark2.implicits._
+    def clusters(rows: Seq[(java.lang.Long, String)], cap: Int) = {
+      val out = Dedup.bandClusters(rows.toDF("doc_id", "mh0"), "doc_id", Seq("mh0"), cap)
+      val r = out.as[(Option[Long], Option[Long], Long)].collect().toSeq.sorted
+      graft.core.Checkpoints.release(out)
+      r
+    }
+    // a null id is its own cluster (canonical null, size 1) and is never
+    // canonical or counted in a size; the non-null rows equal the old
+    // composition (the null id forms no pair there either)
+    val withNull = Seq[(java.lang.Long, String)]((null, "b"), (60L, "b"), (61L, "b"))
+    assert(clusters(withNull, 3) === Seq((None, None, 1L),
+      (Some(60L), Some(60L), 2L), (Some(61L), Some(60L), 2L)))
+    val nullDf = withNull.toDF("doc_id", "mh0")
+    val oldNonNull = Components.clusterWeights(Components.dedupClusters(nullDf,
+        Dedup.lshCandidatePairs(nullDf, "doc_id", Seq("mh0"), Some(3)), "doc_id"), "doc_id")
+      .where(col("doc_id").isNotNull)
+      .select("doc_id", "canonical_id", "cluster_size").as[(Long, Long, Long)].collect()
+    assert(oldNonNull.toSeq.sorted === Seq((60L, 60L, 2L), (61L, 60L, 2L)))
+    // ... but its row counts toward the guard, as in the pair self-join:
+    // three rows over a cap of 2 leave every row a singleton
+    assert(clusters(withNull, 2) === Seq((None, None, 1L),
+      (Some(60L), Some(60L), 1L), (Some(61L), Some(61L), 1L)))
+    // a repeated id inside one bucket: equal to the old composition
+    // (clusterWeights counts rows, so size 3)
+    val dupRows = Seq((70L, "d"), (70L, "d"), (71L, "d")).toDF("doc_id", "mh0")
+    val (expected, actual) = bandParity(dupRows, Seq("mh0"), 10)
+    assert(actual === expected)
+    assert(actual === Seq((70L, 70L, 3L), (70L, 70L, 3L), (71L, 70L, 3L)))
+    // a repeated id across two buckets: NOT equal. Components close over
+    // the shared id (every row -> 2); bandClusters keeps each bucket its
+    // own cluster, so the row of 8 in bucket w points to 7
+    val bridged = Seq((7L, "w"), (8L, "w"), (8L, "v"), (2L, "v")).toDF("doc_id", "mh0")
+    val (cc, bands) = bandParity(bridged, Seq("mh0"), 10)
+    assert(cc.map(_._2).distinct === Seq(2L))
+    assert(bands === Seq((2L, 2L, 2L), (7L, 7L, 2L), (8L, 2L, 2L), (8L, 7L, 2L)))
+    // the score must be integral (its order is reversed bitwise)
+    val e = intercept[IllegalArgumentException](Dedup.bandClusters(
+      dupRows, "doc_id", Seq("mh0"), 10, Some(lit(1.5))))
+    assert(e.getMessage.contains("integral"))
   }
 }
 

@@ -111,6 +111,35 @@ class PipelineSpec extends SparkSpec {
     assert(spark.read.textFile(s"$out/labels.rdf").count() === counts("labels"))
   }
 
+  test("ParquetToRdf.run frees its caches, also when it throws") {
+    val tmp = Files.createTempDirectory("graft-e2e-cache")
+    val pq = tmp.resolve("parquet").toString
+    val label = "<http://www.w3.org/2000/01/rdf-schema#label>"
+    val pop = "<http://de.dbpedia.org/property/pop>"
+    def de(r: String) = s"<http://de.dbpedia.org/resource/$r>"
+    Seq(
+      "labels" -> Seq(s"${de("A")} $label " + "\"Ah\"@de"),
+      "infobox_properties" -> Seq(s"${de("A")} $pop " + "\"5\"" + XsdInt,
+        s"${de("B")} $pop " + "\"x\"")
+    ).foreach { case (dataset, lines) =>
+      val d = Files.createDirectories(tmp.resolve(s"ttl/$dataset/de"))
+      TtlToParquet.run(spark, Seq("de" -> Seq(writeTtl(d, s"$dataset.ttl", lines))),
+        s"$pq/$dataset.parquet")
+    }
+    // the top-k table, the winning types and the schema relation are each
+    // cached while the call runs; none may outlive it
+    val cfg = RdfConfig(writeTypes = true)
+    val before = materializations
+    val counts = ParquetToRdf.run(spark, pq, tmp.resolve("rdf").toString, cfg)
+    assert(counts("infobox_properties") === 1)
+    assert(materializations === before)
+    // an output path under a regular file fails the first write, the
+    // schema files, after all three caches were made
+    val blocker = Files.write(tmp.resolve("blocker"), Array[Byte](1))
+    intercept[Exception](ParquetToRdf.run(spark, pq, blocker.resolve("rdf").toString, cfg))
+    assert(materializations === before)
+  }
+
   test("externalised-uris pipeline: blank nodes, xids, stripped lang tags") {
     val tmp = Files.createTempDirectory("graft-e2e-ext")
     val pq = tmp.resolve("parquet").toString
