@@ -1,6 +1,7 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import graft.core.Checkpoints
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -64,13 +65,52 @@ object Multimodal {
     }
   }
 
+  /** The SINGLE P6 header parse shared by [[PpmCodec]] (decode) and
+    * [[PpmProbe]] (dims) — the [[Y4m]] one-parser rule: magic, then
+    * width, height and maxval as whitespace-separated decimals, `#`
+    * comments allowed between them per the Netpbm spec. Numerics are
+    * capped at 9 digits as `Y4m`'s are: a 10+-digit field is malformed,
+    * never wrapped into a plausible small value. */
+  private[multimodal] object Ppm {
+    /** `maxval` is −1 when absent or malformed; the raster starts at
+      * `rasterStart` (exactly one whitespace byte after maxval). */
+    final case class Header(w: Int, h: Int, maxval: Int, rasterStart: Int)
+
+    /** None for a wrong magic or a non-positive / malformed width or
+      * height. */
+    def parseHeader(content: Array[Byte]): Option[Header] = {
+      if (content == null || content.length < 2 ||
+          content(0) != 'P' || content(1) != '6') return None
+      var pos = 2
+      def isWs(b: Byte) = b == ' ' || b == '\n' || b == '\t' || b == '\r'
+      def nextInt(): Int = {
+        while (pos < content.length &&
+            (isWs(content(pos)) || content(pos) == '#')) {
+          if (content(pos) == '#') // comment runs to end of line
+            while (pos < content.length && content(pos) != '\n') pos += 1
+          else pos += 1
+        }
+        val start = pos
+        var v = 0L
+        while (pos < content.length && content(pos) >= '0' && content(pos) <= '9') {
+          if (pos - start < 9) v = v * 10 + (content(pos) - '0')
+          pos += 1
+        }
+        if (pos == start || pos - start > 9) -1 else v.toInt
+      }
+      val w = nextInt(); val h = nextInt()
+      if (w <= 0 || h <= 0) return None
+      val maxval = nextInt()
+      Some(Header(w, h, maxval, pos + 1))
+    }
+  }
+
   /** REAL codec: binary PPM (P6) image decode — an actual production
     * image format that needs no native library, proving a real decoder
     * drops into the [[MediaCodec]] seam without touching any plan around
-    * it. Parses the P6 header (magic, width, height, maxval, `#` comments
-    * allowed per spec), reads the RGB raster, and emits a `dims`-length
-    * feature: mean luminance (BT.601 weights) over `dims` equal pixel
-    * blocks in raster order, scaled to [0, 1].
+    * it. Reads the [[Ppm]] header and the RGB raster, and emits a
+    * `dims`-length feature: mean luminance (BT.601 weights) over `dims`
+    * equal pixel blocks in raster order, scaled to [0, 1].
     *
     * Failure policy: content that is not valid P6 (wrong magic, truncated
     * raster, junk header) decodes to the zero vector instead of throwing —
@@ -79,29 +119,14 @@ object Multimodal {
   object PpmCodec extends MediaCodec {
     def decode(content: Array[Byte], dims: Int): Array[Float] = {
       val zero = new Array[Float](dims)
-      if (content.length < 2 || content(0) != 'P' || content(1) != '6') return zero
-      var pos = 2
-      def isWs(b: Byte) = b == ' ' || b == '\n' || b == '\t' || b == '\r'
-      def nextInt(): Int = {
-        var seen = false
-        while (pos < content.length &&
-            (isWs(content(pos)) || content(pos) == '#')) {
-          if (content(pos) == '#') // comment runs to end of line
-            while (pos < content.length && content(pos) != '\n') pos += 1
-          else pos += 1
-        }
-        var v = 0
-        while (pos < content.length && content(pos) >= '0' && content(pos) <= '9') {
-          v = v * 10 + (content(pos) - '0'); seen = true; pos += 1
-        }
-        if (seen) v else -1
+      val Ppm.Header(w, h, maxval, pos) = Ppm.parseHeader(content) match {
+        case Some(hdr) => hdr
+        case None => return zero
       }
-      val w = nextInt(); val h = nextInt(); val maxval = nextInt()
-      pos += 1 // exactly one whitespace byte separates maxval from the raster
       // maxval > 255 means 2-byte big-endian samples (valid P6 per the
       // Netpbm spec, up to 65535); anything outside (0, 65536) is invalid
       val bps = if (maxval > 255) 2 else 1
-      if (w <= 0 || h <= 0 || maxval <= 0 || maxval > 65535 || dims <= 0 ||
+      if (maxval <= 0 || maxval > 65535 || dims <= 0 ||
           content.length < pos + w.toLong * h * 3 * bps) return zero
       val out = new Array[Float](dims)
       val counts = new Array[Int](dims)
@@ -125,114 +150,78 @@ object Multimodal {
     }
   }
 
-  /** REAL codec #2: JPEG/PNG/GIF/BMP decode via `javax.imageio` (JDK
-    * builtin, fully offline) — the variable-size COMPRESSED formats a real
-    * multimodal corpus actually holds, where [[PpmCodec]] proves the seam
-    * on a fixed-layout raster. Emits the same feature contract: mean BT.601
-    * luminance over `dims` equal pixel blocks in raster order, scaled to
-    * [0, 1] — so swapping PPM inputs for PNG encodings of the same pixels
-    * produces the same embedding (spec-asserted).
-    *
-    * Failure policy identical to [[PpmCodec]]: undecodable content (wrong
-    * magic, truncated stream, unsupported format — `ImageIO.read` returns
-    * null or throws) yields the zero vector, never a task failure.
-    * `init()` disables ImageIO's disk cache: executor decode loops must
-    * not write temp files per image. */
-  object ImageIoCodec extends MediaCodec {
-    override def init(): Unit = javax.imageio.ImageIO.setUseCache(false)
-    def decode(content: Array[Byte], dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || content.length == 0 || dims <= 0) return zero
-      val img =
-        try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(content))
-        catch { case _: Exception => null }
-      if (img == null) return zero
-      val w = img.getWidth
-      val h = img.getHeight
-      if (w <= 0 || h <= 0) return zero
-      val out = new Array[Float](dims)
-      val counts = new Array[Int](dims)
-      val n = w.toLong * h
-      var y = 0
-      var i = 0L
-      while (y < h) {
-        var x = 0
-        while (x < w) {
-          val rgb = img.getRGB(x, y) // sRGB regardless of the stored model
-          val r = (rgb >> 16) & 0xff
-          val g = (rgb >> 8) & 0xff
-          val b = rgb & 0xff
-          val slot = (i * dims / n).toInt
-          out(slot) += (0.299f * r + 0.587f * g + 0.114f * b) / 255f
-          counts(slot) += 1
-          x += 1
-          i += 1
-        }
-        y += 1
-      }
-      var j = 0
-      while (j < dims) { if (counts(j) > 0) out(j) /= counts(j); j += 1 }
-      out
-    }
-  }
+  /** The SINGLE RIFF/WAVE chunk walk shared by [[WavCodec]],
+    * [[WavFrameCodec]] and [[WavProbe]]: `fmt ` before or after other
+    * chunks, word-aligned sizes per the spec, and a truncated chunk
+    * poisons rather than reading partially. Each consumer keeps its own
+    * validity rule over the parsed layout: the codecs decode integer PCM
+    * ([[pcm]]) only, while the probe reports a duration for any format
+    * code and sample width. */
+  private[multimodal] object Wav {
+    /** The `fmt ` fields and the `data` payload span. */
+    final case class Layout(
+        format: Int, channels: Int, rate: Long, bits: Int, dataOff: Int, dataLen: Int)
 
-  /** REAL codec #3 — AUDIO: RIFF/WAVE PCM decode (pure byte-walk, no
-    * library), extending the seam beyond images: the same `decode(bytes,
-    * dims) → Array[Float]` contract holds for a time-domain modality.
-    * Walks the RIFF chunk list (`fmt ` before or after other chunks,
-    * word-aligned sizes per the spec), accepts integer PCM (format 1) at
-    * 8-bit (unsigned, offset-128) or 16-bit (signed little-endian) with
-    * any channel count, and emits `dims` RMS-energy values over equal
-    * frame blocks in time order, channel-averaged, scaled to [0, 1] —
-    * the audio analog of the image codecs' block luminance (an energy
-    * envelope: silence detection, clipping screens, crude AV alignment).
-    *
-    * Failure policy identical to the image codecs: wrong magic, missing
-    * or non-PCM `fmt `, truncated data chunk — zero vector, never a task
-    * failure. */
-  object WavCodec extends MediaCodec {
-    def decode(content: Array[Byte], dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || content.length < 12 || dims <= 0) return zero
+    /** Walk chunks until both a `fmt ` (≥ 16 bytes) and a `data` chunk
+      * are seen. None for a wrong magic, a truncated chunk or a missing
+      * chunk. */
+    def parse(content: Array[Byte]): Option[Layout] = {
+      if (content == null || content.length < 12) return None
       def u16(o: Int): Int = (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8)
       def u32(o: Int): Long = u16(o).toLong | (u16(o + 2).toLong << 16)
       def tag(o: Int, s: String): Boolean =
         (0 until 4).forall(i => content(o + i) == s.charAt(i).toByte)
-      if (!tag(0, "RIFF") || !tag(8, "WAVE")) return zero
+      if (!tag(0, "RIFF") || !tag(8, "WAVE")) return None
       var pos = 12
-      var fmtCode = -1; var channels = 0; var bits = 0
+      var fmt: Option[(Int, Int, Long, Int)] = None
       var dataOff = -1; var dataLen = 0
-      while (pos + 8 <= content.length && (fmtCode < 0 || dataOff < 0)) {
+      while (pos + 8 <= content.length && (fmt.isEmpty || dataOff < 0)) {
         val sz = u32(pos + 4)
         if (sz < 0 || sz > Int.MaxValue - 8 || pos + 8 + sz > content.length)
-          return zero // truncated chunk: poison, not a partial read
-        if (tag(pos, "fmt ") && sz >= 16) {
-          fmtCode = u16(pos + 8); channels = u16(pos + 10); bits = u16(pos + 22)
-        } else if (tag(pos, "data")) { dataOff = pos + 8; dataLen = sz.toInt }
+          return None // truncated chunk: poison, not a partial read
+        if (tag(pos, "fmt ") && sz >= 16)
+          fmt = Some((u16(pos + 8), u16(pos + 10), u32(pos + 12), u16(pos + 22)))
+        else if (tag(pos, "data")) { dataOff = pos + 8; dataLen = sz.toInt }
         pos += 8 + sz.toInt + (sz.toInt & 1) // chunks are word-aligned
       }
-      if (fmtCode != 1 || channels <= 0 || (bits != 8 && bits != 16) ||
-          dataOff < 0) return zero
-      val bytesPerSample = bits / 8
-      val bytesPerFrame = channels * bytesPerSample
-      val nFrames = dataLen / bytesPerFrame
-      if (nFrames <= 0) return zero
+      for ((format, channels, rate, bits) <- fmt if dataOff >= 0)
+        yield Layout(format, channels, rate, bits, dataOff, dataLen)
+    }
+
+    /** Integer PCM (format 1) at 8-bit (unsigned, offset-128) or 16-bit
+      * (signed little-endian) with any channel count: what the codecs
+      * decode. */
+    def pcm(l: Layout): Boolean =
+      l.format == 1 && l.channels > 0 && (l.bits == 8 || l.bits == 16)
+
+    /** Complete sample frames in the data chunk of a [[pcm]] layout. */
+    def frames(l: Layout): Int = l.dataLen / (l.channels * (l.bits / 8))
+
+    /** RMS energy of the channel-averaged samples over frames
+      * `[first, until)` of a [[pcm]] layout, split into `dims` equal
+      * blocks in time order; the zero vector for an empty range. */
+    def envelope(
+        content: Array[Byte], l: Layout, first: Int, until: Int, dims: Int): Array[Float] = {
+      val n = until - first
+      if (n <= 0) return new Array[Float](dims)
+      val bytesPerSample = l.bits / 8
+      val bytesPerFrame = l.channels * bytesPerSample
       val sumSq = new Array[Double](dims)
       val counts = new Array[Int](dims)
       var f = 0
-      while (f < nFrames) {
+      while (f < n) {
         var c = 0
         var acc = 0.0
-        while (c < channels) {
-          val o = dataOff + f * bytesPerFrame + c * bytesPerSample
+        while (c < l.channels) {
+          val o = l.dataOff + (first + f) * bytesPerFrame + c * bytesPerSample
           val s =
-            if (bits == 8) ((content(o) & 0xff) - 128) / 128.0
+            if (l.bits == 8) ((content(o) & 0xff) - 128) / 128.0
             else ((content(o) & 0xff) | (content(o + 1) << 8)).toShort / 32768.0
           acc += s
           c += 1
         }
-        val m = acc / channels
-        val slot = (f.toLong * dims / nFrames).toInt
+        val m = acc / l.channels
+        val slot = (f.toLong * dims / n).toInt
         sumSq(slot) += m * m
         counts(slot) += 1
         f += 1
@@ -241,6 +230,27 @@ object Multimodal {
         if (counts(j) > 0) math.sqrt(sumSq(j) / counts(j)).toFloat else 0f
       }
     }
+  }
+
+  /** REAL codec #2 — AUDIO: RIFF/WAVE PCM decode (pure byte-walk, no
+    * library), extending the seam beyond images: the same `decode(bytes,
+    * dims) → Array[Float]` contract holds for a time-domain modality.
+    * Walks the chunk list with [[Wav]], accepts [[Wav.pcm]] data, and
+    * emits `dims` RMS-energy values over equal frame blocks in time
+    * order, channel-averaged, scaled to [0, 1] — the audio analog of the
+    * image codec's block luminance (an energy envelope: silence
+    * detection, clipping screens, crude AV alignment).
+    *
+    * Failure policy identical to [[PpmCodec]]: wrong magic, missing or
+    * non-PCM `fmt `, truncated data chunk — zero vector, never a task
+    * failure. */
+  object WavCodec extends MediaCodec {
+    def decode(content: Array[Byte], dims: Int): Array[Float] =
+      Wav.parse(content) match {
+        case Some(l) if dims > 0 && Wav.pcm(l) =>
+          Wav.envelope(content, l, 0, Wav.frames(l), dims)
+        case _ => new Array[Float](dims)
+      }
   }
 
   /** Frame-addressable codec: decode features at a TIME OFFSET inside
@@ -267,87 +277,22 @@ object Multimodal {
     * restricted to a time slice, using the `fmt ` chunk's sample rate to
     * map milliseconds to sample frames. Out-of-range or truncated
     * windows clamp to the available samples; everything else (chunk
-    * walking, 8/16-bit paths, poison policy) matches [[WavCodec]]. */
+    * walking, 8/16-bit paths, poison policy) is [[WavCodec]]'s. */
   class WavFrameCodec(windowMs: Long) extends FrameCodec {
     require(windowMs >= 1, s"WavFrameCodec: windowMs must be >= 1, got $windowMs")
     def decode(content: Array[Byte], dims: Int): Array[Float] =
       WavCodec.decode(content, dims)
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || content.length < 12 || dims <= 0 || frameMs < 0)
-        return zero
-      def u16(o: Int): Int = (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8)
-      def u32(o: Int): Long = u16(o).toLong | (u16(o + 2).toLong << 16)
-      def tag(o: Int, s: String): Boolean =
-        (0 until 4).forall(i => content(o + i) == s.charAt(i).toByte)
-      if (!tag(0, "RIFF") || !tag(8, "WAVE")) return zero
-      var pos = 12
-      var fmtCode = -1; var channels = 0; var bits = 0; var rate = 0L
-      var dataOff = -1; var dataLen = 0
-      while (pos + 8 <= content.length && (fmtCode < 0 || dataOff < 0)) {
-        val sz = u32(pos + 4)
-        if (sz < 0 || sz > Int.MaxValue - 8 || pos + 8 + sz > content.length)
-          return zero
-        if (tag(pos, "fmt ") && sz >= 16) {
-          fmtCode = u16(pos + 8); channels = u16(pos + 10)
-          rate = u32(pos + 12); bits = u16(pos + 22)
-        } else if (tag(pos, "data")) { dataOff = pos + 8; dataLen = sz.toInt }
-        pos += 8 + sz.toInt + (sz.toInt & 1)
+    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] =
+      Wav.parse(content) match {
+        case Some(l) if dims > 0 && frameMs >= 0 && Wav.pcm(l) && l.rate > 0 =>
+          val total = Wav.frames(l).toLong
+          val first = math.min(frameMs * l.rate / 1000, total).toInt
+          val until = math.min((frameMs + windowMs) * l.rate / 1000, total).toInt
+          Wav.envelope(content, l, first, until, dims)
+        case _ => new Array[Float](dims)
       }
-      if (fmtCode != 1 || channels <= 0 || rate <= 0 ||
-          (bits != 8 && bits != 16) || dataOff < 0) return zero
-      val bytesPerSample = bits / 8
-      val bytesPerFrame = channels * bytesPerSample
-      val total = dataLen / bytesPerFrame
-      val first = math.min(frameMs * rate / 1000, total.toLong).toInt
-      val until = math.min((frameMs + windowMs) * rate / 1000, total.toLong).toInt
-      val n = until - first
-      if (n <= 0) return zero
-      val sumSq = new Array[Double](dims)
-      val counts = new Array[Int](dims)
-      var f = 0
-      while (f < n) {
-        var c = 0
-        var acc = 0.0
-        while (c < channels) {
-          val o = dataOff + (first + f) * bytesPerFrame + c * bytesPerSample
-          val s =
-            if (bits == 8) ((content(o) & 0xff) - 128) / 128.0
-            else ((content(o) & 0xff) | (content(o + 1) << 8)).toShort / 32768.0
-          acc += s
-          c += 1
-        }
-        val m = acc / channels
-        val slot = (f.toLong * dims / n).toInt
-        sumSq(slot) += m * m
-        counts(slot) += 1
-        f += 1
-      }
-      Array.tabulate(dims) { j =>
-        if (counts(j) > 0) math.sqrt(sumSq(j) / counts(j)).toFloat else 0f
-      }
-    }
   }
 
-  /** REAL video frame codec: YUV4MPEG2 (y4m) — the first MULTI-FRAME
-    * container through the [[FrameCodec]] seam, proving frame SEEKING
-    * (WavFrameCodec time-slices a single sample stream). The format is
-    * public and needs no native library: an ASCII stream header
-    * `YUV4MPEG2 W<w> H<h> F<num>:<den> ...\n` followed by frames, each an
-    * ASCII `FRAME[params]\n` marker and a fixed-size raw planar YCbCr
-    * payload (C420: w*h luma + 2 quarter chroma planes; C422 / C444 /
-    * Cmono scale the chroma planes accordingly).
-    *
-    * Seeking: `frameMs` maps to the NEAREST frame index via the header's
-    * fps (`round(ms * num / (1000 * den))`, clamped to the stream), then
-    * the codec walks frame markers by OFFSET ARITHMETIC — each hop reads
-    * only the marker line, never the payload — and decodes exactly one
-    * frame's luma plane: mean luminance over `dims` equal pixel blocks in
-    * raster order, scaled to [0, 1] (the PpmCodec feature, per frame).
-    *
-    * Failure policy matches the other real codecs: malformed header,
-    * unknown colorspace, or a truncated / out-of-range frame decodes to
-    * the zero vector instead of throwing. */
   /** The SINGLE YUV4MPEG2 header parse + frame-marker walk shared by
     * [[Y4mFrameCodec]] (seek) and [[Y4mProbe]] (count) — one parser, so
     * the probe's `duration_ms` and the codec's seek offsets can never
@@ -453,6 +398,25 @@ object Multimodal {
     }
   }
 
+  /** REAL video frame codec: YUV4MPEG2 (y4m) — the first MULTI-FRAME
+    * container through the [[FrameCodec]] seam, proving frame SEEKING
+    * (WavFrameCodec time-slices a single sample stream). The format is
+    * public and needs no native library: an ASCII stream header
+    * `YUV4MPEG2 W<w> H<h> F<num>:<den> ...\n` followed by frames, each an
+    * ASCII `FRAME[params]\n` marker and a fixed-size raw planar YCbCr
+    * payload (C420: w*h luma + 2 quarter chroma planes; C422 / C444 /
+    * Cmono scale the chroma planes accordingly).
+    *
+    * Seeking: `frameMs` maps to the NEAREST frame index via the header's
+    * fps (`round(ms * num / (1000 * den))`, clamped to the stream), then
+    * the codec walks frame markers by OFFSET ARITHMETIC — each hop reads
+    * only the marker line, never the payload — and decodes exactly one
+    * frame's luma plane: mean luminance over `dims` equal pixel blocks in
+    * raster order, scaled to [0, 1] (the PpmCodec feature, per frame).
+    *
+    * Failure policy matches the other real codecs: malformed header,
+    * unknown colorspace, or a truncated / out-of-range frame decodes to
+    * the zero vector instead of throwing. */
   object Y4mFrameCodec extends FrameCodec {
     def decode(content: Array[Byte], dims: Int): Array[Float] =
       decodeFrame(content, 0L, dims) // whole-content = the first frame
@@ -491,294 +455,41 @@ object Multimodal {
     }
   }
 
-  /** The SINGLE RIFF-AVI parse shared by [[AviFrameCodec]] (seek) and
-    * [[AviProbe]] (duration) — the second multi-frame container through
-    * the [[FrameCodec]] seam, and the first with an INDEX-TABLE seek:
-    * unlike Y4M (fixed-size payloads, markers walked by offset
-    * arithmetic), AVI frames are variable-size (`00dc` RLE8 compresses
-    * each frame differently), so frame k's byte position is unknowable
-    * without either a linear chunk walk or the `idx1` index chunk the
-    * container carries. The codec seeks THROUGH the index: one 16-byte
-    * entry read per frame lookup, payload touched only at the target —
-    * the access pattern a real seekable container (MP4 `stsz`/`stco`,
-    * MKV cues) requires at crawl scale.
-    *
-    * Format is public (OpenDML / Microsoft AVI RIFF): `RIFF <sz> AVI `,
-    * a `LIST hdrl` holding the `avih` main header (µs/frame, total
-    * frames, width, height), a `LIST movi` holding `NNdb` (uncompressed
-    * bottom-up 8-bit rows, 4-byte stride) / `NNdc` (BI_RLE8) video
-    * chunks, and the `idx1` chunk of `{ckid, flags, offset, size}`
-    * entries. Both historical `dwChunkOffset` conventions are handled —
-    * absolute from file start, or relative to the `movi` fourcc — by
-    * validating the fourcc at the resolved position against the entry's
-    * ckid (the detection every real demuxer does).
-    *
-    * Failure policy matches the other codecs: malformed structure, a
-    * missing index, or an out-of-bounds entry decodes to the zero
-    * vector / all-None metadata, never a throw. RLE8 is a decompressor,
-    * so dimensions are additionally capped (4M pixels) against
-    * decompression bombs — a frame can't allocate more than the cap no
-    * matter what the bytes claim. */
-  private[multimodal] object Avi {
-    /** `moviBase` is the offset of the `movi` fourcc; idx1 payload at
-      * `idxOff` for `idxLen` bytes. */
-    final case class Header(
-        w: Int, h: Int, usPerFrame: Long, moviBase: Int, idxOff: Int, idxLen: Int)
-
-    private def u16(c: Array[Byte], o: Int): Int =
-      (c(o) & 0xff) | ((c(o + 1) & 0xff) << 8)
-    private def u32(c: Array[Byte], o: Int): Long =
-      u16(c, o).toLong | (u16(c, o + 2).toLong << 16)
-    private def tag(c: Array[Byte], o: Int, s: String): Boolean =
-      o >= 0 && o + 4 <= c.length &&
-        (0 until 4).forall(i => c(o + i) == s.charAt(i).toByte)
-
-    /** 4M-pixel anti-bomb cap: RLE8 can inflate far past the content
-      * size, and the decode plane allocates `w*h` bytes per frame. */
-    val MaxPixels: Long = 1L << 22
-
-    def parse(content: Array[Byte]): Option[Header] = {
-      if (content == null || content.length < 12 ||
-          !tag(content, 0, "RIFF") || !tag(content, 8, "AVI ")) return None
-      var pos = 12
-      var w = -1; var h = -1; var usPerFrame = -1L
-      var moviBase = -1; var idxOff = -1; var idxLen = 0
-      while (pos + 8 <= content.length) {
-        val sz = u32(content, pos + 4)
-        // truncated final chunk (normal crawl corruption): stop the walk,
-        // keep what parsed — the index bounds-checks every entry anyway
-        if (sz < 0 || sz > Int.MaxValue - 8 || pos + 8 + sz > content.length) {
-          pos = content.length
-        } else {
-          if (tag(content, pos, "LIST") && sz >= 4) {
-            if (tag(content, pos + 8, "hdrl")) {
-              // walk hdrl sub-chunks for avih; strl sub-lists skip by size
-              var p = pos + 12
-              val end = pos + 8 + sz.toInt
-              while (p + 8 <= end && usPerFrame < 0) {
-                val ssz = u32(content, p + 4)
-                if (ssz < 0 || p + 8 + ssz > end) p = end
-                else {
-                  if (tag(content, p, "avih") && ssz >= 40) {
-                    usPerFrame = u32(content, p + 8)
-                    w = u32(content, p + 8 + 32).toInt
-                    h = u32(content, p + 8 + 36).toInt
-                  }
-                  p += 8 + ssz.toInt + (ssz.toInt & 1)
-                }
-              }
-            } else if (tag(content, pos + 8, "movi")) moviBase = pos + 8
-          } else if (tag(content, pos, "idx1")) {
-            idxOff = pos + 8; idxLen = sz.toInt
-          }
-          pos += 8 + sz.toInt + (sz.toInt & 1)
-        }
-      }
-      if (w <= 0 || h <= 0 || usPerFrame <= 0 || moviBase < 0 ||
-          idxOff < 0 || w.toLong * h > MaxPixels) None
-      else Some(Header(w, h, usPerFrame, moviBase, idxOff, idxLen))
-    }
-
-    /** Is index entry `e` (byte offset into idx1) a video chunk —
-      * `NNdb` / `NNdc` for any two-digit stream number. */
-    private def isVideo(c: Array[Byte], e: Int): Boolean = {
-      def digit(b: Byte) = b >= '0' && b <= '9'
-      digit(c(e)) && digit(c(e + 1)) && c(e + 2) == 'd' &&
-        (c(e + 3) == 'b' || c(e + 3) == 'c')
-    }
-
-    /** Count of video entries in idx1 (= seekable frames). */
-    def videoFrames(content: Array[Byte], hdr: Header): Int = {
-      val n = math.min(hdr.idxLen / 16,
-        (content.length - hdr.idxOff).max(0) / 16)
-      var k = 0; var count = 0
-      while (k < n) {
-        if (isVideo(content, hdr.idxOff + k * 16)) count += 1
-        k += 1
-      }
-      count
-    }
-
-    /** Resolve the `target`-th VIDEO frame through the index: returns
-      * `(fourccByte3, payloadOff, payloadLen)` — `fourccByte3` is 'b'
-      * (raw DIB) or 'c' (RLE8) — or null when the entry is absent or
-      * resolves out of bounds under BOTH offset conventions. One pass
-      * over 16-byte entries; payload bytes untouched. */
-    def videoChunk(content: Array[Byte], hdr: Header, target: Int): (Byte, Int, Int) = {
-      val n = math.min(hdr.idxLen / 16,
-        (content.length - hdr.idxOff).max(0) / 16)
-      var k = 0; var seen = 0
-      while (k < n) {
-        val e = hdr.idxOff + k * 16
-        if (isVideo(content, e)) {
-          if (seen == target) {
-            val off = u32(content, e + 8)
-            val len = u32(content, e + 12)
-            if (off > Int.MaxValue - 8 || len > Int.MaxValue - 8) return null
-            // offset convention: absolute from file start, else relative
-            // to the movi fourcc — validated by fourcc match at the
-            // resolved chunk header (its ckid must equal the entry's)
-            val ckid = new String(content, e, 4, "US-ASCII")
-            val abs = off.toInt
-            val rel = hdr.moviBase + off.toInt
-            val base =
-              if (tag(content, abs, ckid)) abs
-              else if (tag(content, rel, ckid)) rel
-              else -1
-            if (base < 0 || base + 8L + len > content.length) return null
-            return (content(e + 3), base + 8, len.toInt)
-          }
-          seen += 1
-        }
-        k += 1
-      }
-      null
-    }
-
-    /** Decode one frame payload into a TOP-DOWN `w*h` luma plane (8-bit
-      * grayscale convention: palette indices are luminance). DIB rows
-      * are stored bottom-up; `raw` rows are padded to 4-byte stride.
-      * Clamps every out-of-range write (poison tolerance). */
-    def decodePlane(
-        content: Array[Byte], kind: Byte, off: Int, len: Int,
-        w: Int, h: Int): Array[Byte] = {
-      val plane = new Array[Byte](w * h)
-      if (kind == 'b') { // raw bottom-up rows, 4-byte stride
-        val stride = (w + 3) & ~3
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val src = off + y * stride + x
-            if (src < off + len && src < content.length)
-              plane((h - 1 - y) * w + x) = content(src)
-            x += 1
-          }
-          y += 1
-        }
-      } else { // BI_RLE8
-        var i = off
-        val end = math.min(off + len, content.length)
-        var x = 0; var yUp = 0
-        var done = false
-        while (!done && i + 2 <= end && yUp < h) {
-          val c = content(i) & 0xff; val v = content(i + 1); i += 2
-          if (c > 0) { // run of c pixels of value v
-            var t = 0
-            while (t < c) {
-              if (x < w) plane((h - 1 - yUp) * w + x) = v
-              x += 1; t += 1
-            }
-          } else (v & 0xff) match {
-            case 0 => x = 0; yUp += 1 // end of line
-            case 1 => done = true     // end of bitmap
-            case 2 => // delta: skip dx right, dy up
-              if (i + 2 <= end) { x += content(i) & 0xff; yUp += content(i + 1) & 0xff; i += 2 }
-              else done = true
-            case n => // absolute: n literal pixels, word-aligned
-              var t = 0
-              while (t < n && i < end) {
-                if (x < w && yUp < h) plane((h - 1 - yUp) * w + x) = content(i)
-                x += 1; i += 1; t += 1
-              }
-              i += (n & 1)
-          }
-        }
-      }
-      plane
-    }
-  }
-
-  object AviFrameCodec extends FrameCodec {
-    def decode(content: Array[Byte], dims: Int): Array[Float] =
-      decodeFrame(content, 0L, dims) // whole-content = the first frame
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || dims <= 0 || frameMs < 0) return zero
-      Avi.parse(content) match {
-        case None => zero
-        case Some(hdr) =>
-          val frames = Avi.videoFrames(content, hdr)
-          if (frames == 0) return zero
-          // nearest frame for frameMs at 1e6/usPerFrame fps, clamped to
-          // the index (a truncated tail drops its entries' chunks, which
-          // then resolve out of bounds — fall back toward the last
-          // resolvable frame, the Y4M clamp policy through an index)
-          val ideal = ((frameMs * 1000L + hdr.usPerFrame / 2) / hdr.usPerFrame)
-            .min(frames - 1L).toInt
-          var target = ideal
-          var chunk: (Byte, Int, Int) = null
-          while (target >= 0 && { chunk = Avi.videoChunk(content, hdr, target); chunk == null })
-            target -= 1
-          if (chunk == null) zero
-          else {
-            val plane = Avi.decodePlane(
-              content, chunk._1, chunk._2, chunk._3, hdr.w, hdr.h)
-            blockMean(plane, hdr.w * hdr.h, dims)
-          }
-      }
-    }
-
-    /** Mean value over `dims` equal raster-order blocks, /255 — the
-      * [[PpmCodec]]/[[Y4mFrameCodec]] feature over a decoded plane. */
-    private def blockMean(plane: Array[Byte], n: Int, dims: Int): Array[Float] = {
-      val sums = new Array[Double](dims)
-      val counts = new Array[Int](dims)
-      var k = 0
-      while (k < n) {
-        val slot = (k.toLong * dims / n).toInt
-        sums(slot) += (plane(k) & 0xff)
-        counts(slot) += 1
-        k += 1
-      }
-      Array.tabulate(dims)(j =>
-        if (counts(j) > 0) (sums(j) / counts(j) / 255.0).toFloat else 0f)
-    }
+  /** The kept formats' magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE (wav) or
+    * P6 (ppm); None for anything else. */
+  private def sniff(c: Array[Byte]): Option[String] = {
+    def starts(s: String, at: Int = 0): Boolean =
+      c != null && c.length >= at + s.length &&
+        (0 until s.length).forall(i => c(at + i) == s.charAt(i).toByte)
+    if (starts("YUV4MPEG2")) Some("y4m")
+    else if (starts("RIFF") && starts("WAVE", 8)) Some("wav")
+    else if (starts("P6")) Some("ppm")
+    else None
   }
 
   /** Magic-byte dispatch to the right FRAME codec — [[SniffProbe]]'s
-    * codec twin, for pipelines whose media column is untagged: Y4M, AVI
-    * (idx1), MP4 (sample tables), MKV (Cues) and FLAC (SEEKTABLE +
-    * CRC-verified frame headers) route to their index-seeking codecs,
-    * WAV to a [[WavFrameCodec]] window, PPM to its single frame via
-    * [[PpmCodec]]; unrecognized bytes decode to the zero vector (the
-    * family's poison rule). Stateless and Serializable like every
-    * codec — ships to executors as a closure constant. */
+    * codec twin, for pipelines whose media column is untagged: Y4M to
+    * [[Y4mFrameCodec]]'s seek, WAV to a [[WavFrameCodec]] window, PPM to
+    * its single frame via [[PpmCodec]]; unrecognized bytes decode to the
+    * zero vector (the family's poison rule). Stateless and Serializable
+    * like every codec — ships to executors as a closure constant. */
   class SniffFrameCodec(wavWindowMs: Long = 1000L) extends FrameCodec {
     private val wav = new WavFrameCodec(wavWindowMs)
-    private def pick(c: Array[Byte]): FrameCodec = {
-      def starts(s: String): Boolean =
-        c != null && c.length >= s.length &&
-          (0 until s.length).forall(i => c(i) == s.charAt(i).toByte)
-      def riffForm(s: String): Boolean = starts("RIFF") && c.length >= 12 &&
-        (8 until 12).forall(i => c(i) == s.charAt(i - 8).toByte)
-      if (starts("YUV4MPEG2")) Y4mFrameCodec
-      else if (riffForm("WAVE")) wav
-      else if (riffForm("AVI ")) AviFrameCodec
-      else if (c != null && c.length >= 12 && Mp4.tag(c, 4, "ftyp")) Mp4FrameCodec
-      else if (c != null && c.length >= 4 && c(0) == 0x1a.toByte &&
-        c(1) == 0x45.toByte && c(2) == 0xdf.toByte && c(3) == 0xa3.toByte)
-        MkvFrameCodec
-      else if (starts("fLaC")) FlacFrameCodec
-      else null
+    def decode(content: Array[Byte], dims: Int): Array[Float] = sniff(content) match {
+      case Some("y4m") => Y4mFrameCodec.decode(content, dims)
+      case Some("wav") => wav.decode(content, dims)
+      case Some("ppm") => PpmCodec.decode(content, dims)
+      case _ => new Array[Float](dims)
     }
-    def decode(content: Array[Byte], dims: Int): Array[Float] = {
-      val c = pick(content)
-      if (c != null) c.decode(content, dims)
-      else if (content != null && content.length >= 2 &&
-        content(0) == 'P' && content(1) == '6') PpmCodec.decode(content, dims)
-      else new Array[Float](dims)
-    }
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val c = pick(content)
-      if (c != null) c.decodeFrame(content, frameMs, dims)
-      else if (content != null && content.length >= 2 &&
-        content(0) == 'P' && content(1) == '6')
+    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] =
+      sniff(content) match {
+        case Some("y4m") => Y4mFrameCodec.decodeFrame(content, frameMs, dims)
+        case Some("wav") => wav.decodeFrame(content, frameMs, dims)
         // a PPM is its own single frame: any frameMs resolves to it, the
         // same way decode() routes whole-image P6
-        PpmCodec.decode(content, dims)
-      else new Array[Float](dims)
-    }
+        case Some("ppm") => PpmCodec.decode(content, dims)
+        case _ => new Array[Float](dims)
+      }
   }
 
   /** One probed-metadata row ([[probeMeta]]'s output): nulls where the
@@ -800,46 +511,15 @@ object Multimodal {
     def probe(content: Array[Byte]): ProbedMeta
   }
 
-  /** Dispatch on magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE (wav),
-    * RIFF/AVI, `ftyp` at offset 4 (mp4), EBML magic (mkv/webm), P6
-    * (ppm), fLaC (flac), ID3/frame-sync (mp3 — LAST: the 2-byte sync is
-    * the weakest magic, and [[Mp3Probe]] itself verifies a second frame
-    * boundary before claiming the format). The real-world entry point —
+  /** Dispatch on magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE (wav), P6
+    * (ppm); anything else probes all-None. The real-world entry point —
     * crawled bytes arrive untagged. */
   object SniffProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      def starts(s: String): Boolean =
-        content != null && content.length >= s.length &&
-          (0 until s.length).forall(i => content(i) == s.charAt(i).toByte)
-      def riffForm(s: String): Boolean = starts("RIFF") && content.length >= 12 &&
-        (8 until 12).forall(i => content(i) == s.charAt(i - 8).toByte)
-      def ebml: Boolean = content != null && content.length >= 4 &&
-        content(0) == 0x1a.toByte && content(1) == 0x45.toByte &&
-        content(2) == 0xdf.toByte && content(3) == 0xa3.toByte
-      def mp3ish: Boolean = content != null && content.length >= 4 &&
-        (starts("ID3") ||
-          ((content(0) & 0xff) == 0xff && (content(1) & 0xe0) == 0xe0))
-      if (starts("YUV4MPEG2")) Y4mProbe.probe(content)
-      else if (riffForm("WAVE")) WavProbe.probe(content)
-      else if (riffForm("AVI ")) AviProbe.probe(content)
-      else if (riffForm("WEBP")) WebpProbe.probe(content)
-      else if (content != null && content.length >= 12 && Mp4.tag(content, 4, "ftyp"))
-        Mp4Probe.probe(content)
-      else if (ebml) MkvProbe.probe(content)
-      else if (starts("P6")) PpmProbe.probe(content)
-      else if (starts("fLaC")) FlacProbe.probe(content)
-      else if (starts("OggS")) OggProbe.probe(content)
-      else if (content != null && content.length >= 4 &&
-        (content(0) & 0xff) == 0x89 && content(1) == 'P' &&
-        content(2) == 'N' && content(3) == 'G') PngProbe.probe(content)
-      else if (starts("GIF8")) GifProbe.probe(content)
-      else if (starts("BM")) BmpProbe.probe(content)
-      else if (starts("II") || starts("MM")) TiffProbe.probe(content)
-      else if (content != null && content.length >= 3 &&
-        (content(0) & 0xff) == 0xff && (content(1) & 0xff) == 0xd8 &&
-        (content(2) & 0xff) == 0xff) JpegProbe.probe(content)
-      else if (mp3ish) Mp3Probe.probe(content)
-      else ProbedMeta(0L, None, None, None, None)
+    def probe(content: Array[Byte]): ProbedMeta = sniff(content) match {
+      case Some("y4m") => Y4mProbe.probe(content)
+      case Some("wav") => WavProbe.probe(content)
+      case Some("ppm") => PpmProbe.probe(content)
+      case _ => ProbedMeta(0L, None, None, None, None)
     }
   }
 
@@ -864,1414 +544,24 @@ object Multimodal {
       }
   }
 
-  /** AVI: width/height/µs-per-frame from `avih`; duration from the
-    * `idx1` VIDEO-entry count × frame duration — the index is the
-    * complete-frame truth the codec seeks by ([[Avi]] is the single
-    * shared parser, so probe and codec cannot disagree), exactly as
-    * [[Y4mProbe]] counts its marker walk. A file with no index probes
-    * all-None: it is not seekable by this codec's contract. */
-  object AviProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta =
-      Avi.parse(content) match {
-        case None => ProbedMeta(0L, None, None, None, None)
-        case Some(hdr) =>
-          val frames = Avi.videoFrames(content, hdr).toLong
-          // frames bounded by content size / 16, usPerFrame by u32:
-          // frames * usPerFrame caps well under Long overflow
-          ProbedMeta(0L, Some("avi"), Some(hdr.w), Some(hdr.h),
-            Some(frames * hdr.usPerFrame / 1000L))
-      }
-  }
-
-  /** ISO-BMFF (MP4) box-walk parser — shared by [[Mp4Probe]] (header-
-    * only metadata) and [[Mp4FrameCodec]] (sample-table seek), the
-    * [[Avi]]/[[Y4m]] one-parser rule. Big-endian sizes, `size==1`
-    * 64-bit largesize and `size==0` to-end-of-enclosure both handled; a
-    * truncated or absurd size stops the walk and keeps what parsed (the
-    * [[Avi]] crawl-corruption policy). The probe never reads payload
-    * (`mdat` is skipped by size); the codec reads exactly the one
-    * sample a lookup resolves. */
-  private[multimodal] object Mp4 {
-    /** Movie timescale+duration from `mvhd`; (w, h) from the first
-      * VIDEO `tkhd` (16.16 fixed) of a seekable track; `seekable` iff
-      * some track carries BOTH a sample-size table (`stsz`/`stz2`) and
-      * a chunk-offset table (`stco`/`co64`) — the tables an
-      * index-seeking codec needs, the MP4 twin of AVI's `idx1`. */
-    final case class Header(timescale: Long, duration: Long, w: Int, h: Int)
-
-    private def u32(c: Array[Byte], o: Int): Long =
-      ((c(o) & 0xffL) << 24) | ((c(o + 1) & 0xffL) << 16) |
-        ((c(o + 2) & 0xffL) << 8) | (c(o + 3) & 0xffL)
-    private def u64(c: Array[Byte], o: Int): Long = (u32(c, o) << 32) | u32(c, o + 4)
-    private[multimodal] def tag(c: Array[Byte], o: Int, s: String): Boolean =
-      o >= 0 && o + 4 <= c.length &&
-        (0 until 4).forall(i => c(o + i) == s.charAt(i).toByte)
-
-    /** Iterate boxes in `[start, end)`: `f(typeOffset, payloadStart,
-      * payloadEnd)`. Malformed sizes (negative 64-bit, overflow, past
-      * the enclosure) end the walk rather than throw. */
-    private def boxes(c: Array[Byte], start: Int, end: Int)(
-        f: (Int, Int, Int) => Unit): Unit = {
-      var pos = start
-      var done = false
-      while (!done && pos + 8 <= end) {
-        val sz = u32(c, pos)
-        var payload = pos + 8
-        val boxEnd: Long =
-          if (sz == 0L) end.toLong // box extends to the enclosure end
-          else if (sz == 1L) {
-            if (pos + 16 > end) return
-            payload = pos + 16
-            pos + u64(c, pos + 8) // largesize counts from the box start
-          } else pos + sz
-        if (boxEnd < payload || boxEnd > end) done = true
-        else {
-          f(pos + 4, payload, boxEnd.toInt)
-          if (boxEnd.toInt <= pos) done = true else pos = boxEnd.toInt
-        }
-      }
-    }
-
-    def parse(c: Array[Byte]): Option[Header] = {
-      if (c == null || c.length < 12 || !tag(c, 4, "ftyp")) return None
-      var timescale = -1L; var duration = -1L
-      var w = -1; var h = -1; var seekable = false
-      boxes(c, 0, c.length) { (t, ps, pe) =>
-        if (tag(c, t, "moov")) boxes(c, ps, pe) { (t2, ps2, pe2) =>
-          if (tag(c, t2, "mvhd") && pe2 - ps2 >= 20) {
-            val ver = c(ps2) & 0xff
-            if (ver == 1 && pe2 - ps2 >= 32) {
-              timescale = u32(c, ps2 + 20); duration = u64(c, ps2 + 24)
-            } else if (ver == 0) {
-              timescale = u32(c, ps2 + 12); duration = u32(c, ps2 + 16)
-            }
-          } else if (tag(c, t2, "trak")) {
-            trakTables(c, ps2, pe2).foreach { tr =>
-              seekable = true
-              if (tr.w > 0 && tr.h > 0 && w < 0) { w = tr.w; h = tr.h }
-            }
-          }
-        }
-      }
-      if (timescale <= 0 || duration < 0 || !seekable) None
-      else Some(Header(timescale, duration, w, h))
-    }
-
-    /** Full sample-table geometry of one seekable track — the tables
-      * [[Mp4FrameCodec]] seeks through. All fields are OFFSETS into the
-      * content (entry counts clamped against the enclosing payload so
-      * every later table read is in-bounds by construction); nothing
-      * proportional to the table size is ever allocated — the resolve
-      * arithmetic walks the raw bytes, the house byte-walk style.
-      * `szFieldBits` is 32 for `stsz` (with `szUniform` > 0 for the
-      * uniform-size form), 4/8/16 for `stz2`; `coBytes` is 4 for `stco`,
-      * 8 for `co64`. `mediaTimescale` comes from `mdhd` (the timescale
-      * `stts` deltas are measured in), patched by [[parseTrack]] with
-      * the `mvhd` movie timescale when absent. */
-    final case class Track(
-        w: Int, h: Int, mediaTimescale: Long, sampleCount: Int,
-        sttsOff: Int, sttsN: Int,
-        stscOff: Int, stscN: Int,
-        szUniform: Long, szOff: Int, szFieldBits: Int,
-        coOff: Int, coN: Int, coBytes: Int)
-
-    private def clampN(declared: Long, fit: Long): Int =
-      math.max(0L, math.min(declared, math.min(fit, Int.MaxValue.toLong))).toInt
-
-    /** Walk ONE `trak` payload for its tkhd dims, mdhd timescale, and
-      * stbl tables; Some iff the track carries both a size table and a
-      * chunk-offset table — the seekability contract [[Mp4Probe]] and
-      * [[Mp4FrameCodec]] share (this is the single parse behind both, so
-      * probe and codec cannot disagree — the [[Avi]]/[[Y4m]] rule). */
-    private def trakTables(c: Array[Byte], start: Int, end: Int): Option[Track] = {
-      var tw = -1; var th = -1; var mediaTs = 0L
-      var sttsOff = -1; var sttsN = 0
-      var stscOff = -1; var stscN = 0
-      var szUniform = 0L; var szOff = -1; var szBits = 0; var sampleCount = 0
-      var hasSz = false; var hasCo = false
-      var coOff = -1; var coN = 0; var coBytes = 4
-      boxes(c, start, end) { (t3, ps3, pe3) =>
-        if (tag(c, t3, "tkhd")) {
-          val ver = c(ps3) & 0xff
-          // widths are 16.16 fixed at the tkhd tail: v0 payload 84
-          // bytes (w @76), v1 96 (w @88)
-          val (need, off) = if (ver == 1) (96, 88) else (84, 76)
-          if (pe3 - ps3 >= need) {
-            tw = (u32(c, ps3 + off) >> 16).toInt
-            th = (u32(c, ps3 + off + 4) >> 16).toInt
-          }
-        } else if (tag(c, t3, "mdia")) boxes(c, ps3, pe3) { (t4, ps4, pe4) =>
-          if (tag(c, t4, "mdhd") && pe4 - ps4 >= 16) {
-            val ver = c(ps4) & 0xff
-            if (ver == 1 && pe4 - ps4 >= 24) mediaTs = u32(c, ps4 + 20)
-            else if (ver == 0) mediaTs = u32(c, ps4 + 12)
-          } else if (tag(c, t4, "minf")) boxes(c, ps4, pe4) { (t5, ps5, pe5) =>
-            if (tag(c, t5, "stbl")) boxes(c, ps5, pe5) { (t6, ps6, pe6) =>
-              if (tag(c, t6, "stts") && pe6 - ps6 >= 8) {
-                sttsOff = ps6 + 8
-                sttsN = clampN(u32(c, ps6 + 4), (pe6 - sttsOff).toLong / 8)
-              } else if (tag(c, t6, "stsc") && pe6 - ps6 >= 8) {
-                stscOff = ps6 + 8
-                stscN = clampN(u32(c, ps6 + 4), (pe6 - stscOff).toLong / 12)
-              } else if (tag(c, t6, "stsz") && pe6 - ps6 >= 12) {
-                hasSz = true
-                szUniform = u32(c, ps6 + 4)
-                szOff = ps6 + 12
-                szBits = 32
-                sampleCount =
-                  if (szUniform > 0) clampN(u32(c, ps6 + 8), Int.MaxValue.toLong)
-                  else clampN(u32(c, ps6 + 8), (pe6 - szOff).toLong / 4)
-              } else if (tag(c, t6, "stz2") && pe6 - ps6 >= 12) {
-                hasSz = true
-                szUniform = 0L
-                szOff = ps6 + 12
-                val bits = c(ps6 + 7) & 0xff // 24-bit reserved, then field_size
-                if (bits == 4 || bits == 8 || bits == 16) {
-                  szBits = bits
-                  sampleCount =
-                    clampN(u32(c, ps6 + 8), (pe6 - szOff).toLong * 8 / bits)
-                } else { szBits = 0; sampleCount = 0 } // malformed field size
-              } else if ((tag(c, t6, "stco") || tag(c, t6, "co64")) &&
-                  pe6 - ps6 >= 8) {
-                hasCo = true
-                coBytes = if (tag(c, t6, "co64")) 8 else 4
-                coOff = ps6 + 8
-                coN = clampN(u32(c, ps6 + 4), (pe6 - coOff).toLong / coBytes)
-              }
-            }
-          }
-        }
-      }
-      if (hasSz && hasCo)
-        Some(Track(tw, th, mediaTs, sampleCount, sttsOff, sttsN,
-          stscOff, stscN, szUniform, szOff, szBits, coOff, coN, coBytes))
-      else None
-    }
-
-    /** The track [[Mp4FrameCodec]] seeks: the first seekable VIDEO track
-      * ([[Mp4Probe]]'s dims rule), else the first seekable track of any
-      * kind (audio-only files keep their single-stream contract, like
-      * [[WavFrameCodec]]). Media timescale falls back to the movie
-      * (`mvhd`) timescale, then to 1000 (ms = media units, neutral). */
-    def parseTrack(c: Array[Byte]): Option[Track] = {
-      if (c == null || c.length < 12 || !tag(c, 4, "ftyp")) return None
-      var mvhdTs = 0L
-      var video: Track = null; var any: Track = null
-      boxes(c, 0, c.length) { (t, ps, pe) =>
-        if (tag(c, t, "moov")) boxes(c, ps, pe) { (t2, ps2, pe2) =>
-          if (tag(c, t2, "mvhd") && pe2 - ps2 >= 20) {
-            val ver = c(ps2) & 0xff
-            if (ver == 1 && pe2 - ps2 >= 32) mvhdTs = u32(c, ps2 + 20)
-            else if (ver == 0) mvhdTs = u32(c, ps2 + 12)
-          } else if (tag(c, t2, "trak")) trakTables(c, ps2, pe2).foreach { tr =>
-            if (tr.w > 0 && tr.h > 0 && video == null) video = tr
-            if (any == null) any = tr
-          }
-        }
-      }
-      val chosen = if (video != null) video else any
-      if (chosen == null) None
-      else if (chosen.mediaTimescale > 0) Some(chosen)
-      else Some(chosen.copy(
-        mediaTimescale = if (mvhdTs > 0) mvhdTs else 1000L))
-    }
-
-    /** Sample k's byte size per the track's size table; -1 on any
-      * out-of-bounds read (tables are pre-clamped, so this only fires on
-      * a k past `sampleCount` — caller bug, poisoned not thrown). */
-    def sampleSize(c: Array[Byte], tr: Track, k: Int): Long =
-      if (tr.szFieldBits == 32) {
-        if (tr.szUniform > 0) tr.szUniform
-        else if (tr.szOff + 4L * k + 4 <= c.length) u32(c, tr.szOff + 4 * k)
-        else -1L
-      } else if (tr.szFieldBits == 16) {
-        val o = tr.szOff + 2 * k
-        if (o + 2 <= c.length) ((c(o) & 0xffL) << 8) | (c(o + 1) & 0xffL)
-        else -1L
-      } else if (tr.szFieldBits == 8) {
-        if (tr.szOff + k < c.length) c(tr.szOff + k) & 0xffL else -1L
-      } else if (tr.szFieldBits == 4) {
-        val o = tr.szOff + k / 2
-        if (o < c.length) {
-          val b = c(o) & 0xff
-          if (k % 2 == 0) (b >>> 4).toLong else (b & 0xf).toLong
-        } else -1L
-      } else -1L
-
-    /** Which chunk holds sample k, and the chunk's first sample — the
-      * `stsc` run walk (O(entries), never O(samples)). An absent/empty
-      * stsc degrades to the one-sample-per-chunk convention (the
-      * minimal-writer shape an stsc of (1,1,1) would encode). Returns
-      * null when the mapping resolves past the chunk-offset table or an
-      * entry is malformed (non-positive counts, non-increasing
-      * first_chunk). */
-    def locateChunk(c: Array[Byte], tr: Track, k: Int): (Int, Long) = {
-      if (tr.stscN <= 0)
-        return if (k < tr.coN) (k, k.toLong) else null
-      var acc = 0L
-      var i = 0
-      while (i < tr.stscN) {
-        val first = u32(c, tr.stscOff + 12 * i) // 1-based
-        val spc = u32(c, tr.stscOff + 12 * i + 4)
-        if (first < 1 || spc < 1) return null
-        val nextFirst =
-          if (i + 1 < tr.stscN) u32(c, tr.stscOff + 12 * (i + 1))
-          else tr.coN + 1L // last run extends through the chunk table
-        if (nextFirst <= first) return null
-        // cap factors so the product can't overflow (both u32; anything
-        // past 2^31 is equivalent for comparison with an Int sample idx)
-        val inRun = math.min(nextFirst - first, Int.MaxValue.toLong) *
-          math.min(spc, Int.MaxValue.toLong)
-        if (k < acc + inRun) {
-          val rel = k - acc
-          val chunk = first - 1 + rel / spc
-          if (chunk >= tr.coN) return null
-          return (chunk.toInt, acc + (rel / spc) * spc)
-        }
-        acc += inRun
-        i += 1
-      }
-      null
-    }
-
-    /** Chunk `ci`'s file offset from stco/co64 (pre-clamped tables). */
-    def chunkOffset(c: Array[Byte], tr: Track, ci: Int): Long =
-      if (tr.coBytes == 4) u32(c, tr.coOff + 4 * ci)
-      else u64(c, tr.coOff + 8 * ci)
-
-    /** Sample index at media time `t` via the `stts` run walk; clamps
-      * past-the-end to the last decoded sample, and degrades to sample 0
-      * when the table is absent (no time base — the probe's duration
-      * would be the mvhd's, not per-sample). */
-    def sampleAtTime(c: Array[Byte], tr: Track, t: Long): Int = {
-      if (tr.sttsN <= 0) return 0
-      var cum = 0L; var si = 0L; var i = 0
-      while (i < tr.sttsN && cum < (1L << 61) && si < Int.MaxValue) {
-        val cnt = math.min(u32(c, tr.sttsOff + 8 * i), Int.MaxValue.toLong)
-        val delta = math.min(u32(c, tr.sttsOff + 8 * i + 4), Int.MaxValue.toLong)
-        if (cnt > 0 && delta > 0) {
-          if (t < cum + cnt * delta)
-            return math.min(si + (t - cum) / delta, Int.MaxValue.toLong).toInt
-          cum += cnt * delta
-          si += cnt
-        }
-        i += 1
-      }
-      math.max(0L, math.min(si - 1, Int.MaxValue.toLong)).toInt
-    }
-
-    /** Per-lookup read cap — mirrors [[Avi.MaxPixels]]: one seek never
-      * feature-folds more than this many bytes no matter what `stsz`
-      * claims (there is no decompressor in this path, so the cap bounds
-      * WORK, not allocation-inflation). */
-    val MaxSampleBytes: Long = Avi.MaxPixels
-
-    /** Resolve sample k through stsc→stco/co64→stsz to its (payloadOff,
-      * len), or null when k is out of range, any table entry is
-      * malformed, the resolved span leaves the content, or the size
-      * exceeds [[MaxSampleBytes]]. Intra-chunk skip sums at most
-      * samples-per-chunk size-table entries — table-bounded, and O(1)
-      * for the uniform-stsz form. */
-    def sampleChunk(c: Array[Byte], tr: Track, k: Int): (Int, Int) = {
-      if (k < 0 || k >= tr.sampleCount) return null
-      val loc = locateChunk(c, tr, k)
-      if (loc == null) return null
-      var off = chunkOffset(c, tr, loc._1)
-      if (off < 0) return null
-      if (tr.szFieldBits == 32 && tr.szUniform > 0) {
-        off += (k - loc._2) * tr.szUniform
-      } else {
-        var j = loc._2
-        while (j < k) {
-          val s = sampleSize(c, tr, j.toInt)
-          if (s < 0) return null
-          off += s
-          j += 1
-        }
-      }
-      val len = sampleSize(c, tr, k)
-      if (len < 0 || len > MaxSampleBytes || off < 0 ||
-          off + len > c.length) null
-      else (off.toInt, len.toInt)
-    }
-  }
-
-  /** MP4/ISO-BMFF: the container the AVI scaladoc names as the real
-    * target — header-only `moov` walk: `mvhd` movie timescale+duration,
-    * first seekable video `tkhd` width/height, and `stsz`/`stco`
-    * presence as the seekability contract. A file with no sample
-    * tables probes all-None, exactly as an index-less AVI: not
-    * seekable, not usable by an index-seeking codec. An audio-only
-    * file (no video track) keeps its duration with null dimensions.
-    * `mdat` is never touched. */
-  object Mp4Probe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta =
-      Mp4.parse(content) match {
-        case None => ProbedMeta(0L, None, None, None, None)
-        case Some(hdr) =>
-          ProbedMeta(0L, Some("mp4"),
-            if (hdr.w > 0) Some(hdr.w) else None,
-            if (hdr.h > 0) Some(hdr.h) else None,
-            // duration is a crafted-input u64: poison an overflowing
-            // *1000 rather than emit a negative duration (the Y4M cap)
-            if (hdr.duration > Long.MaxValue / 1000L) None
-            else Some(hdr.duration * 1000L / hdr.timescale))
-      }
-  }
-
-  /** MP4/ISO-BMFF frame codec — the seek [[Mp4Probe]]'s `seekable` flag
-    * promises: `frameMs` → media time via the track's `mdhd` timescale →
-    * sample index via the `stts` run walk → chunk via the `stsc` mapping
-    * → file position via `stco`/`co64` plus the intra-chunk `stsz`/`stz2`
-    * size skip — ONE bounded read per lookup, `mdat` never scanned
-    * ([[Avi]]'s idx1 access pattern through ISO-BMFF's four-table
-    * geometry; [[Mp4.parseTrack]] is the same parse the probe dispatches
-    * on, so probe and codec cannot disagree about seekability).
-    *
-    * The feature is the house block-mean over the resolved sample's
-    * bytes, /255 — for raw 8-bit luma samples (the testable path: no
-    * native codec libraries exist in this engine by design) that IS the
-    * [[AviFrameCodec]] plane feature; for compressed codecs it is a
-    * deterministic byte-level fingerprint, documented as such. Failure
-    * policy matches the family: malformed tables, out-of-range entries,
-    * or a sample resolving outside the content fall back toward earlier
-    * samples (the [[AviFrameCodec]] truncated-tail clamp) and poison to
-    * the zero vector, never a throw; a single lookup never reads more
-    * than [[Mp4.MaxSampleBytes]]. */
-  object Mp4FrameCodec extends FrameCodec {
-    def decode(content: Array[Byte], dims: Int): Array[Float] =
-      decodeFrame(content, 0L, dims) // whole-content = the first sample
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || dims <= 0 || frameMs < 0) return zero
-      Mp4.parseTrack(content) match {
-        case None => zero
-        case Some(tr) =>
-          if (tr.sampleCount <= 0 || tr.coN <= 0) return zero
-          val ts = tr.mediaTimescale
-          val t =
-            if (ts > 0 && frameMs <= Long.MaxValue / ts) frameMs * ts / 1000L
-            else 0L
-          var target = math.max(0, math.min(
-            Mp4.sampleAtTime(content, tr, t), tr.sampleCount - 1))
-          var res: (Int, Int) = null
-          while (target >= 0 &&
-              { res = Mp4.sampleChunk(content, tr, target); res == null })
-            target -= 1
-          if (res == null) zero
-          else blockMeanBytes(content, res._1, res._2, dims)
-      }
-    }
-
-    /** Mean byte value over `dims` equal blocks of the sample, /255 —
-      * [[AviFrameCodec]]'s plane feature applied in place (no copy: the
-      * sample bytes ARE the plane for raw luma payloads). */
-    private def blockMeanBytes(
-        c: Array[Byte], off: Int, len: Int, dims: Int): Array[Float] = {
-      val sums = new Array[Double](dims)
-      val counts = new Array[Int](dims)
-      var k = 0
-      while (k < len) {
-        val slot = (k.toLong * dims / len).toInt
-        sums(slot) += (c(off + k) & 0xff)
-        counts(slot) += 1
-        k += 1
-      }
-      Array.tabulate(dims)(j =>
-        if (counts(j) > 0) (sums(j) / counts(j) / 255.0).toFloat else 0f)
-    }
-  }
-
-  /** Matroska/WebM header-only parser — the EBML walk [[MkvProbe]]
-    * probes with, completing the pair of real-world seekable containers
-    * the AVI scaladoc names (MP4 `stsz`/`stco`, MKV cues). EBML is the
-    * third index geometry in the seam: where ISO-BMFF has fixed 4-byte
-    * size+fourcc headers, every EBML element is (varint id, varint
-    * size, payload) — the id keeps its length-marker bit, the size
-    * clears it, and an all-ones size means "extends to the enclosure
-    * end" (the streaming-Segment convention). A malformed varint or a
-    * size past the enclosure stops the walk and keeps what parsed (the
-    * [[Avi]]/[[Mp4]] crawl-corruption policy); the probe never reads
-    * Cluster payload — the media — and [[MkvFrameCodec]] reads exactly
-    * the one cued block a lookup resolves. */
-  private[multimodal] object Mkv {
-    /** `tsScaleNs` from Info's TimestampScale (EBML default 1e6 ns when
-      * absent); `durationTs` is Info's Duration FLOAT in scale units;
-      * (w, h) from the first video TrackEntry's PixelWidth/PixelHeight;
-      * `seekable` iff a Cues element exists — the MKV twin of AVI's
-      * `idx1` and MP4's `stsz`+`stco`. */
-    final case class Header(tsScaleNs: Long, durationTs: Double, w: Int, h: Int)
-
-    /** EBML varint at `pos` within `end`: (value, byteLen) or null on
-      * malformed/truncated. `keepMarker` for element IDs (IDs compare
-      * with the marker bit in, per the spec's class encoding); sizes
-      * clear it. An all-ones size returns -1 (unknown size). */
-    private def varint(
-        c: Array[Byte], pos: Int, end: Int, keepMarker: Boolean): (Long, Int) = {
-      if (pos >= end) return null
-      val b0 = c(pos) & 0xff
-      if (b0 == 0) return null // 8+ leading zero bits: reserved/invalid
-      val len = Integer.numberOfLeadingZeros(b0) - 23
-      if (len > 8 || pos + len > end) return null
-      val mask = 0xff >>> len
-      var v = if (keepMarker) b0.toLong else (b0 & mask).toLong
-      var allOnes = !keepMarker && (b0 & mask) == mask
-      var i = 1
-      while (i < len) {
-        val bb = c(pos + i) & 0xff
-        v = (v << 8) | bb
-        allOnes &&= bb == 0xff
-        i += 1
-      }
-      (if (allOnes) -1L else v, len)
-    }
-
-    /** Iterate sibling elements in `[start, end)`: `f(id, payloadStart,
-      * payloadEnd)`. Unknown-size payloads extend to the enclosure end
-      * (and nothing can follow them at this level). */
-    private def elems(c: Array[Byte], start: Int, end: Int)(
-        f: (Long, Int, Int) => Unit): Unit = {
-      var pos = start
-      var done = false
-      while (!done && pos < end) {
-        val id = varint(c, pos, end, keepMarker = true)
-        if (id == null) return
-        val sz = varint(c, pos + id._2, end, keepMarker = false)
-        if (sz == null) return
-        val ps = pos + id._2 + sz._2
-        val pe: Long = if (sz._1 < 0) end.toLong else ps.toLong + sz._1
-        if (pe < ps || pe > end) done = true
-        else {
-          f(id._1, ps, pe.toInt)
-          if (sz._1 < 0 || pe.toInt <= pos) done = true else pos = pe.toInt
-        }
-      }
-    }
-
-    private def uint(c: Array[Byte], ps: Int, pe: Int): Long = {
-      var v = 0L
-      var i = ps
-      while (i < pe && i - ps < 8) { v = (v << 8) | (c(i) & 0xffL); i += 1 }
-      v
-    }
-
-    private def beFloat(c: Array[Byte], ps: Int, pe: Int): Double =
-      if (pe - ps == 4) java.lang.Float.intBitsToFloat(uint(c, ps, pe).toInt).toDouble
-      else if (pe - ps == 8) java.lang.Double.longBitsToDouble(uint(c, ps, pe))
-      else Double.NaN
-
-    def parse(c: Array[Byte]): Option[Header] = {
-      if (c == null || c.length < 8 || uint(c, 0, 4) != 0x1A45DFA3L) return None
-      var tsScale = 1000000L // EBML default: 1 ms per timestamp unit
-      var duration = Double.NaN
-      var w = -1; var h = -1; var seekable = false
-      elems(c, 0, c.length) { (id, ps, pe) =>
-        if (id == 0x18538067L) elems(c, ps, pe) { (id2, ps2, pe2) => // Segment
-          if (id2 == 0x1549A966L) elems(c, ps2, pe2) { (id3, ps3, pe3) => // Info
-            if (id3 == 0x2AD7B1L && pe3 > ps3) tsScale = uint(c, ps3, pe3)
-            else if (id3 == 0x4489L) duration = beFloat(c, ps3, pe3)
-          } else if (id2 == 0x1654AE6BL) elems(c, ps2, pe2) { (id3, ps3, pe3) => // Tracks
-            if (id3 == 0xAEL) { // TrackEntry
-              var isVideo = false; var tw = -1; var th = -1
-              elems(c, ps3, pe3) { (id4, ps4, pe4) =>
-                if (id4 == 0x83L) isVideo = uint(c, ps4, pe4) == 1L
-                else if (id4 == 0xE0L) elems(c, ps4, pe4) { (id5, ps5, pe5) =>
-                  if (id5 == 0xB0L) tw = uint(c, ps5, pe5).toInt
-                  else if (id5 == 0xBAL) th = uint(c, ps5, pe5).toInt
-                }
-              }
-              if (isVideo && tw > 0 && th > 0 && w < 0) { w = tw; h = th }
-            }
-          } else if (id2 == 0x1C53BB6BL) seekable = true // Cues
-        }
-      }
-      if (!seekable || tsScale <= 0 ||
-        java.lang.Double.isNaN(duration) || duration < 0) None
-      else Some(Header(tsScale, duration, w, h))
-    }
-
-    /** Seek geometry for [[MkvFrameCodec]]: the Cues payload range, the
-      * Segment payload start (`CueClusterPosition` values are RELATIVE
-      * to it), the timestamp scale, and the first video track's
-      * TrackNumber (−1 = no numbered video track: match any track, the
-      * audio-only contract). Derived from the SAME `elems` walk the
-      * probe parses with — probe and codec cannot disagree about
-      * whether Cues exist. */
-    final case class Seek(
-        tsScaleNs: Long, segStart: Int, segEnd: Int,
-        cuesOff: Int, cuesEnd: Int, trackNum: Long)
-
-    def parseSeek(c: Array[Byte]): Option[Seek] = {
-      if (c == null || c.length < 8 || uint(c, 0, 4) != 0x1A45DFA3L) return None
-      var tsScale = 1000000L
-      var segS = -1; var segE = -1
-      var cuesS = -1; var cuesE = -1
-      var vTrack = -1L; var firstTrack = -1L
-      elems(c, 0, c.length) { (id, ps, pe) =>
-        if (id == 0x18538067L) {
-          if (segS < 0) { segS = ps; segE = pe }
-          elems(c, ps, pe) { (id2, ps2, pe2) =>
-            if (id2 == 0x1549A966L) elems(c, ps2, pe2) { (id3, ps3, pe3) =>
-              if (id3 == 0x2AD7B1L && pe3 > ps3) tsScale = uint(c, ps3, pe3)
-            } else if (id2 == 0x1654AE6BL) elems(c, ps2, pe2) { (id3, ps3, pe3) =>
-              if (id3 == 0xAEL) {
-                var isVideo = false; var num = -1L
-                elems(c, ps3, pe3) { (id4, ps4, pe4) =>
-                  if (id4 == 0x83L) isVideo = uint(c, ps4, pe4) == 1L
-                  else if (id4 == 0xD7L) num = uint(c, ps4, pe4)
-                }
-                if (num >= 0 && firstTrack < 0) firstTrack = num
-                if (isVideo && num >= 0 && vTrack < 0) vTrack = num
-              }
-            } else if (id2 == 0x1C53BB6BL && cuesS < 0) {
-              cuesS = ps2; cuesE = pe2
-            }
-          }
-        }
-      }
-      if (segS < 0 || cuesS < 0 || tsScale <= 0) None
-      else Some(Seek(tsScale, segS, segE, cuesS, cuesE,
-        if (vTrack >= 0) vTrack else firstTrack))
-    }
-
-    /** Parse the single element at `off`: (id, payloadStart, payloadEnd)
-      * or null on malformed/truncated (unknown size extends to `end`). */
-    private def elemAt(c: Array[Byte], off: Int, end: Int): (Long, Int, Int) = {
-      val id = varint(c, off, end, keepMarker = true)
-      if (id == null) return null
-      val sz = varint(c, off + id._2, end, keepMarker = false)
-      if (sz == null) return null
-      val ps = off + id._2 + sz._2
-      val pe: Long = if (sz._1 < 0) end.toLong else ps.toLong + sz._1
-      if (pe < ps || pe > end) null else (id._1, ps, pe.toInt)
-    }
-
-    /** The cue for target time `t` (scale units): the LAST CuePoint with
-      * CueTime ≤ t — the standard keyframe-seek rule — else the FIRST
-      * cue (a pre-roll seek). Returns (bestClusterPos, firstClusterPos),
-      * −1 where absent; positions are Segment-payload-relative. One walk
-      * over the Cues payload, nothing allocated. */
-    def cueFor(c: Array[Byte], sk: Seek, t: Long): (Long, Long) = {
-      var best = -1L; var bestTime = -1L; var first = -1L
-      elems(c, sk.cuesOff, sk.cuesEnd) { (id, ps, pe) =>
-        if (id == 0xBBL) { // CuePoint
-          var time = -1L; var pos = -1L
-          elems(c, ps, pe) { (id2, ps2, pe2) =>
-            if (id2 == 0xB3L) time = uint(c, ps2, pe2)
-            else if (id2 == 0xB7L) elems(c, ps2, pe2) { (id3, ps3, pe3) =>
-              if (id3 == 0xF1L && pos < 0) pos = uint(c, ps3, pe3)
-            }
-          }
-          if (time >= 0 && pos >= 0) {
-            if (first < 0) first = pos
-            if (time <= t && time > bestTime) { bestTime = time; best = pos }
-          }
-        }
-      }
-      (best, first)
-    }
-
-    /** A (Simple)Block's (trackNum, relTs, frameOff) parsed from its
-      * payload `[ps, pe)`, or null: track varint, 2-byte signed relative
-      * timestamp, 1 flags byte, frame data. Lacing flags are NOT
-      * expanded — laced payloads fingerprint as-is (documented in
-      * [[MkvFrameCodec]]). */
-    private def blockHead(c: Array[Byte], ps: Int, pe: Int): (Long, Long, Int) = {
-      val tn = varint(c, ps, pe, keepMarker = false)
-      if (tn == null) return null
-      val hdr = ps + tn._2
-      if (hdr + 3 > pe) return null
-      val rel = (((c(hdr) & 0xff) << 8) | (c(hdr + 1) & 0xff)).toShort.toLong
-      (tn._1, rel, hdr + 3)
-    }
-
-    /** Resolve the frame for (track, time ≤ t) inside the Cluster at
-      * ABSOLUTE offset `off`: the last matching block with blockTime ≤ t,
-      * else the cluster's first matching block; (frameOff, frameLen) or
-      * null when `off` does not hold a Cluster or no block matches. One
-      * walk over the cluster's children — block payloads are skipped by
-      * size, only the few header bytes of each are read. */
-    def blockAt(c: Array[Byte], sk: Seek, off: Int, t: Long): (Int, Int) = {
-      if (off < 0 || off >= sk.segEnd) return null
-      val cl = elemAt(c, off, sk.segEnd)
-      if (cl == null || cl._1 != 0x1F43B675L) return null
-      var clusterTs = 0L
-      var best: (Int, Int) = null; var bestTime = Long.MinValue
-      var first: (Int, Int) = null
-      def consider(ps: Int, pe: Int): Unit = {
-        val h = blockHead(c, ps, pe)
-        if (h != null && (sk.trackNum < 0 || h._1 == sk.trackNum)) {
-          val bt = clusterTs + h._2
-          val frame = (h._3, pe - h._3)
-          if (first == null) first = frame
-          if (bt <= t && bt > bestTime) { bestTime = bt; best = frame }
-        }
-      }
-      elems(c, cl._2, cl._3) { (id, ps, pe) =>
-        if (id == 0xE7L) clusterTs = uint(c, ps, pe)
-        else if (id == 0xA3L) consider(ps, pe) // SimpleBlock
-        else if (id == 0xA0L) elems(c, ps, pe) { (id2, ps2, pe2) =>
-          if (id2 == 0xA1L) consider(ps2, pe2) // BlockGroup/Block
-        }
-      }
-      if (best != null) best else first
-    }
-  }
-
-  /** Matroska/WebM: the EBML sibling of [[Mp4Probe]] — Info's
-    * TimestampScale + float Duration, first video track's pixel
-    * dimensions, and Cues presence as the seekability contract. No
-    * Cues = all-None (an un-indexed stream dump is not seekable, the
-    * index-less-AVI contract); audio-only keeps duration with null
-    * dimensions; Cluster payload is never read. */
-  object MkvProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta =
-      Mkv.parse(content) match {
-        case None => ProbedMeta(0L, None, None, None, None)
-        case Some(hdr) =>
-          // duration_ms = durationTs × tsScaleNs / 1e6, computed in
-          // double then bounds-checked — a crafted float cannot emit a
-          // negative or overflowed duration (the Y4M/MP4 poison rule)
-          val ms = hdr.durationTs * hdr.tsScaleNs / 1e6
-          ProbedMeta(0L, Some("mkv"),
-            if (hdr.w > 0) Some(hdr.w) else None,
-            if (hdr.h > 0) Some(hdr.h) else None,
-            if (java.lang.Double.isNaN(ms) || ms < 0 || ms > 4e18) None
-            else Some(ms.toLong))
-      }
-  }
-
-  /** Matroska/WebM frame codec — the Cues seek [[MkvProbe]]'s `seekable`
-    * flag promises, completing the seekable-container trio (AVI `idx1`,
-    * MP4 sample tables, MKV Cues): `frameMs` → timestamp-scale units →
-    * the last CuePoint with CueTime ≤ t → its `CueClusterPosition`
-    * (Segment-relative) → one Cluster walked for the target track's
-    * last (Simple)Block with blockTime ≤ t. Cluster payloads other than
-    * the cued one are never read; inside it, block payloads are skipped
-    * by size (only each block's few header bytes are touched) — one
-    * bounded read per lookup, capped at [[Mp4.MaxSampleBytes]].
-    * [[Mkv.parseSeek]] shares the probe's `elems` walk, so probe and
-    * codec cannot disagree about whether Cues exist.
-    *
-    * The feature is the house block-mean over the resolved frame bytes
-    * ([[Mp4FrameCodec]]'s contract: raw luma payloads reproduce the AVI
-    * plane feature; compressed codecs get a deterministic byte
-    * fingerprint — no native codec libraries by design). Laced blocks
-    * are NOT expanded: the lace payload fingerprints as-is. Failure
-    * policy: a cue resolving to garbage retries the FIRST cue (the
-    * pre-roll), then poisons to the zero vector; malformed structures
-    * never throw. */
-  object MkvFrameCodec extends FrameCodec {
-    def decode(content: Array[Byte], dims: Int): Array[Float] =
-      decodeFrame(content, 0L, dims)
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || dims <= 0 || frameMs < 0) return zero
-      Mkv.parseSeek(content) match {
-        case None => zero
-        case Some(sk) =>
-          val t =
-            if (frameMs <= Long.MaxValue / 1000000L)
-              frameMs * 1000000L / sk.tsScaleNs
-            else Long.MaxValue
-          val (best, first) = Mkv.cueFor(content, sk, t)
-          var frame: (Int, Int) = null
-          for (pos <- Seq(best, first) if frame == null && pos >= 0 &&
-              pos <= (sk.segEnd - sk.segStart).toLong)
-            frame = Mkv.blockAt(content, sk, sk.segStart + pos.toInt, t)
-          if (frame == null || frame._2 <= 0 ||
-              frame._2 > Mp4.MaxSampleBytes) zero
-          else {
-            val sums = new Array[Double](dims)
-            val counts = new Array[Int](dims)
-            var k = 0
-            while (k < frame._2) {
-              val slot = (k.toLong * dims / frame._2).toInt
-              sums(slot) += (content(frame._1 + k) & 0xff)
-              counts(slot) += 1
-              k += 1
-            }
-            Array.tabulate(dims)(j =>
-              if (counts(j) > 0) (sums(j) / counts(j) / 255.0).toFloat else 0f)
-          }
-      }
-    }
-  }
-
-  /** MPEG audio (MP3) header-only probe — with [[FlacProbe]] it completes
-    * the crawl-audio family (WAV is the decodable fixture format; real
-    * crawls are MP3/FLAC-heavy). Walk: skip an ID3v2 tag (syncsafe u28
-    * size, footer flag honored), scan a bounded window for the first
-    * 11-bit frame sync, decode version/layer/bitrate/samplerate from the
-    * public tables, and VERIFY the sync by checking the next frame
-    * boundary (the classic false-sync defense — a lone 0xFF in garbage
-    * does not probe as mp3). Duration: exact when the first frame
-    * carries a Xing/Info VBR header with a frame count (frames ×
-    * samples-per-frame / rate); otherwise the CBR estimate
-    * `audioBytes × 8 / bitrate`. Frame payloads are never read beyond
-    * the few header bytes each check touches. */
-  object Mp3Probe extends MediaProbe {
-    // bitrate tables (kbps), index 1-14; [version!=1][layer]
-    private val brV1L1 = Array(0, 32, 64, 96, 128, 160, 192, 224, 256, 288, 320, 352, 384, 416, 448)
-    private val brV1L2 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320, 384)
-    private val brV1L3 = Array(0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224, 256, 320)
-    private val brV2L1 = Array(0, 32, 48, 56, 64, 80, 96, 112, 128, 144, 160, 176, 192, 224, 256)
-    private val brV2L23 = Array(0, 8, 16, 24, 32, 40, 48, 56, 64, 80, 96, 112, 128, 144, 160)
-    private val srV1 = Array(44100, 48000, 32000)
-
-    /** (bitrateBps, sampleRate, frameBytes, samplesPerFrame, xingOff) of
-      * the 4-byte header at `o`, or null if not a valid frame header. */
-    private def frame(c: Array[Byte], o: Int): (Long, Int, Int, Int, Int) = {
-      if (o + 4 > c.length) return null
-      val b1 = c(o) & 0xff; val b2 = c(o + 1) & 0xff
-      val b3 = c(o + 2) & 0xff; val b4 = c(o + 3) & 0xff
-      if (b1 != 0xff || (b2 & 0xe0) != 0xe0) return null
-      val verBits = (b2 >> 3) & 3   // 0=2.5, 2=MPEG2, 3=MPEG1 (1 reserved)
-      val layerBits = (b2 >> 1) & 3 // 1=III, 2=II, 3=I (0 reserved)
-      if (verBits == 1 || layerBits == 0) return null
-      val v1 = verBits == 3
-      val brIdx = (b3 >> 4) & 0xf
-      val srIdx = (b3 >> 2) & 3
-      if (brIdx == 0 || brIdx == 15 || srIdx == 3) return null // free/bad
-      val pad = (b3 >> 1) & 1
-      val kbps = (v1, layerBits) match {
-        case (true, 3) => brV1L1(brIdx)
-        case (true, 2) => brV1L2(brIdx)
-        case (true, _) => brV1L3(brIdx)
-        case (false, 3) => brV2L1(brIdx)
-        case (false, _) => brV2L23(brIdx)
-      }
-      val sr = srV1(srIdx) / (if (v1) 1 else if (verBits == 2) 2 else 4)
-      val bps = kbps * 1000L
-      val (bytes, spf) =
-        if (layerBits == 3) // Layer I
-          (((12 * bps / sr + pad) * 4).toInt, 384)
-        else if (layerBits == 2) // Layer II
-          ((144 * bps / sr + pad).toInt, 1152)
-        else { // Layer III: MPEG1 1152 samples/frame, MPEG2/2.5 576
-          val coef = if (v1) 144 else 72
-          ((coef * bps / sr + pad).toInt, if (v1) 1152 else 576)
-        }
-      if (bytes <= 4) return null
-      // Xing/Info sits after the side info: MPEG1 mono 17 / stereo 32,
-      // MPEG2(.5) mono 9 / stereo 17; mono = channel mode bits 11
-      val mono = ((b4 >> 6) & 3) == 3
-      val side = if (v1) { if (mono) 17 else 32 } else { if (mono) 9 else 17 }
-      (bps, sr, bytes, spf, o + 4 + side)
-    }
-
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 4) return none
-      // skip ID3v2: "ID3" ver(2) flags(1) syncsafe-size(4)
-      var start = 0
-      if (content.length >= 10 && content(0) == 'I' && content(1) == 'D' &&
-          content(2) == '3') {
-        var sz = 0L
-        var i = 6
-        while (i < 10) { sz = (sz << 7) | (content(i) & 0x7f); i += 1 }
-        val footer = if ((content(5) & 0x10) != 0) 10 else 0
-        val skip = 10L + sz + footer
-        if (skip >= content.length) return none
-        start = skip.toInt
-      }
-      // bounded sync scan (garbage tolerance), then next-boundary verify
-      val window = math.min(start + 4096, content.length - 4)
-      var o = start
-      while (o <= window) {
-        val f = frame(content, o)
-        if (f != null) {
-          val next = o + f._3
-          // a frame ending exactly at EOF verifies too (single frame)
-          if (next == content.length || frame(content, next) != null) {
-            // Xing/Info VBR header: flags&1 -> exact frame count
-            val x = f._5
-            var durMs = -1L
-            if (x + 12 <= content.length &&
-                ((content(x) == 'X' && content(x + 1) == 'i' &&
-                  content(x + 2) == 'n' && content(x + 3) == 'g') ||
-                 (content(x) == 'I' && content(x + 1) == 'n' &&
-                  content(x + 2) == 'f' && content(x + 3) == 'o'))) {
-              val flags = ((content(x + 4) & 0xffL) << 24) |
-                ((content(x + 5) & 0xffL) << 16) |
-                ((content(x + 6) & 0xffL) << 8) | (content(x + 7) & 0xffL)
-              if ((flags & 1L) != 0) {
-                val frames = ((content(x + 8) & 0xffL) << 24) |
-                  ((content(x + 9) & 0xffL) << 16) |
-                  ((content(x + 10) & 0xffL) << 8) | (content(x + 11) & 0xffL)
-                durMs = frames * f._4 * 1000L / f._2
-              }
-            }
-            if (durMs < 0) {
-              // a trailing 128-byte ID3v1 'TAG' block is metadata, not
-              // audio — drop it from the CBR byte count
-              val end = if (content.length - 128 >= o &&
-                  content(content.length - 128) == 'T' &&
-                  content(content.length - 127) == 'A' &&
-                  content(content.length - 126) == 'G') content.length - 128
-                else content.length
-              durMs = (end - o).toLong * 8000L / f._1 // CBR estimate
-            }
-            return ProbedMeta(0L, Some("mp3"), None, None, Some(durMs))
-          }
-        }
-        o += 1
-      }
-      none
-    }
-  }
-
-  /** FLAC header-only probe: "fLaC" magic, then the STREAMINFO metadata
-    * block (type 0, 34 bytes) — 20-bit sample rate and 36-bit total
-    * sample count give the EXACT duration, no estimation. Malformed or
-    * truncated blocks probe all-None; audio frames are never read. */
-  object FlacProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 8 ||
-          content(0) != 'f' || content(1) != 'L' ||
-          content(2) != 'a' || content(3) != 'C') return none
-      var pos = 4
-      var guard = 0
-      while (pos + 4 <= content.length && guard < 1024) {
-        val last = (content(pos) & 0x80) != 0
-        val btype = content(pos) & 0x7f
-        val len = ((content(pos + 1) & 0xff) << 16) |
-          ((content(pos + 2) & 0xff) << 8) | (content(pos + 3) & 0xff)
-        val ps = pos + 4
-        if (ps + len > content.length) return none
-        if (btype == 0 && len >= 34) {
-          // STREAMINFO: rate 20 bits @ byte 10, channels 3, bps 5,
-          // total samples 36 bits spanning bytes 13..17
-          val b = (i: Int) => content(ps + i) & 0xffL
-          val rate = ((b(10) << 12) | (b(11) << 4) | (b(12) >> 4)).toInt
-          val total = ((b(13) & 0x0f) << 32) | (b(14) << 24) |
-            (b(15) << 16) | (b(16) << 8) | b(17)
-          if (rate <= 0) return none
-          return ProbedMeta(0L, Some("flac"), None, None,
-            Some(total * 1000L / rate))
-        }
-        if (last) return none // last block and no STREAMINFO seen
-        pos = ps + len
-        guard += 1
-      }
-      none
-    }
-  }
-
-  /** FLAC frame-addressable codec — compressed audio joining the seek
-    * inventory (MP4 `stsz`/`stco`, MKV Cues, AVI `idx1`): STREAMINFO's
-    * sample rate and FIXED blocksize map a time offset to a frame NUMBER
-    * by pure arithmetic, an optional SEEKTABLE block (type 3) jumps the
-    * scan near the target the way MKV Cues do, and every sync candidate
-    * must pass the frame header's own CRC-8 before its UTF-8-coded
-    * frame/sample number is trusted (false-sync rejection, the
-    * [[Mp3Probe]] second-boundary discipline upgraded to the spec's
-    * checksum). Variable-blocksize streams (blocking-strategy bit 1)
-    * code the starting SAMPLE directly — the same last-header-at-or-
-    * before-target walk resolves them. Features are the block-mean
-    * fingerprint over the located frame's byte span ([[Mp4FrameCodec]]'s
-    * feature on the compressed bytes — a PCM decode needs the full LPC
-    * machinery, which the stub contract leaves out; the seek plumbing is
-    * real and exact). Past-the-end times clamp to the last resolvable
-    * frame (the [[AviFrameCodec]] policy); malformed anything → zero
-    * vector, never a throw. The LAST frame's span ends at EOF minus a
-    * trailing 128-byte ID3v1 'TAG' block when present (the [[Mp3Probe]]
-    * rule) — other appended padding, and a CRC-8-passing false sync
-    * inside a payload (~1/256 per candidate byte), can still shift a
-    * span: fingerprints are a best-effort locality signature over
-    * COMPRESSED bytes, not a decode. */
-  object FlacFrameCodec extends FrameCodec {
-    private def crc8(c: Array[Byte], from: Int, until: Int): Int = {
-      var crc = 0
-      var i = from
-      while (i < until) {
-        crc ^= c(i) & 0xff
-        var k = 0
-        while (k < 8) {
-          crc = if ((crc & 0x80) != 0) ((crc << 1) ^ 0x07) & 0xff
-            else (crc << 1) & 0xff
-          k += 1
-        }
-        i += 1
-      }
-      crc
-    }
-
-    /** FLAC's extended-UTF-8 coded number at `pos`: (value, byteLen) or
-      * null (malformed / truncated / over 7 bytes). */
-    private def utf8Num(c: Array[Byte], pos: Int): (Long, Int) = {
-      if (pos >= c.length) return null
-      val b0 = c(pos) & 0xff
-      if ((b0 & 0x80) == 0) return (b0.toLong, 1)
-      val n = Integer.numberOfLeadingZeros(~(b0 << 24)) // leading ones
-      if (n < 2 || n > 7 || pos + n > c.length) return null
-      var v = (b0 & (0x7f >> n)).toLong
-      var i = 1
-      while (i < n) {
-        val bb = c(pos + i) & 0xff
-        if ((bb & 0xc0) != 0x80) return null
-        v = (v << 6) | (bb & 0x3f)
-        i += 1
-      }
-      (v, n)
-    }
-
-    /** Validated frame header at `o`: (startSample, headerLenWithCrc) or
-      * null. `blockSize` converts a fixed-strategy frame number to its
-      * starting sample. */
-    private def header(c: Array[Byte], o: Int, blockSize: Long): (Long, Int) = {
-      if (o + 5 > c.length || c(o) != 0xff.toByte ||
-          (c(o + 1) & 0xfe) != 0xf8) return null
-      val variable = (c(o + 1) & 1) != 0
-      val bsCode = (c(o + 2) >> 4) & 0xf
-      val rateCode = c(o + 2) & 0xf
-      val chanCode = (c(o + 3) >> 4) & 0xf
-      val ssCode = (c(o + 3) >> 1) & 0x7
-      if (bsCode == 0 || rateCode == 15 || chanCode > 10 ||
-          ssCode == 3 || ssCode == 7 || (c(o + 3) & 1) != 0) return null
-      val num = utf8Num(c, o + 4)
-      if (num == null) return null
-      val extra = (if (bsCode == 6) 1 else if (bsCode == 7) 2 else 0) +
-        (if (rateCode == 12) 1 else if (rateCode == 13 || rateCode == 14) 2 else 0)
-      val hlen = 4 + num._2 + extra
-      if (o + hlen + 1 > c.length) return null
-      if (crc8(c, o, o + hlen) != (c(o + hlen) & 0xff)) return null
-      val sample = if (variable) num._1 else num._1 * blockSize
-      if (sample < 0) return null
-      (sample, hlen + 1)
-    }
-
-    def decode(content: Array[Byte], dims: Int): Array[Float] =
-      decodeFrame(content, 0L, dims) // whole-content = the first frame
-
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || dims <= 0 || frameMs < 0 ||
-          content.length < 8 || content(0) != 'f' || content(1) != 'L' ||
-          content(2) != 'a' || content(3) != 'C') return zero
-      // metadata walk (the FlacProbe loop, plus SEEKTABLE collection)
-      var pos = 4
-      var guard = 0
-      var rate = -1L; var blockSize = -1L
-      var seekSample = -1L; var seekOff = -1L // best seekpoint so far
-      var targetSample = -1L
-      var audioStart = -1
-      while (audioStart < 0 && pos + 4 <= content.length && guard < 1024) {
-        val last = (content(pos) & 0x80) != 0
-        val btype = content(pos) & 0x7f
-        val len = ((content(pos + 1) & 0xff) << 16) |
-          ((content(pos + 2) & 0xff) << 8) | (content(pos + 3) & 0xff)
-        val ps = pos + 4
-        if (ps + len > content.length) return zero
-        if (btype == 0 && len >= 34) {
-          val b = (i: Int) => content(ps + i) & 0xffL
-          blockSize = (b(0) << 8) | b(1) // min blocksize; fixed streams
-          rate = (b(10) << 12) | (b(11) << 4) | (b(12) >> 4) // = max
-          if (rate <= 0 || blockSize <= 0) return zero
-          if (frameMs > Long.MaxValue / rate) return zero // crafted time
-          targetSample = frameMs * rate / 1000L
-        } else if (btype == 3 && targetSample >= 0) {
-          // SEEKTABLE: 18-byte points (sample u64, offset u64, u16);
-          // placeholders (all-ones sample) skipped; keep the greatest
-          // point at or before the target — the MKV-Cues jump
-          var e = ps
-          while (e + 18 <= ps + len) {
-            def u64(o: Int): Long = {
-              var v = 0L; var i = 0
-              while (i < 8) { v = (v << 8) | (content(o + i) & 0xffL); i += 1 }
-              v
-            }
-            val sm = u64(e); val off = u64(e + 8)
-            if (sm != -1L && sm >= 0 && sm <= targetSample && sm > seekSample &&
-                off >= 0) { seekSample = sm; seekOff = off }
-            e += 18
-          }
-        }
-        if (last) audioStart = ps + len
-        pos = ps + len
-        guard += 1
-      }
-      if (audioStart < 0 || rate <= 0 || targetSample < 0) return zero
-      // forward header scan from the seekpoint (or the first frame):
-      // last CRC-valid header whose start sample <= target is the frame;
-      // the NEXT valid header bounds its byte span
-      var o = audioStart
-      if (seekOff >= 0 && seekOff < content.length &&
-          audioStart + seekOff < content.length - 4 &&
-          header(content, (audioStart + seekOff).toInt, blockSize) != null)
-        o = (audioStart + seekOff).toInt
-      var frameOff = -1
-      var end = -1
-      while (o < content.length && end < 0) {
-        val h = header(content, o, blockSize)
-        if (h != null) {
-          if (h._1 <= targetSample) { frameOff = o; o += h._2 }
-          else if (frameOff >= 0) end = o // first header past the target
-          else { frameOff = o; o += h._2 } // jumped past: clamp forward
-        } else o += 1
-      }
-      if (frameOff < 0) return zero
-      if (end < 0) {
-        // last frame: clamp to EOF, minus a trailing 128-byte ID3v1
-        // 'TAG' block when present (the Mp3Probe rule) — appended tag
-        // metadata is not audio and must not fold into the last frame's
-        // fingerprint
-        end = content.length
-        if (end - 128 > frameOff &&
-            content(end - 128) == 'T' && content(end - 127) == 'A' &&
-            content(end - 126) == 'G') end -= 128
-      }
-      blockMeanBytes(content, frameOff, end - frameOff, dims)
-    }
-
-    private def blockMeanBytes(
-        c: Array[Byte], off: Int, len: Int, dims: Int): Array[Float] = {
-      val sums = new Array[Double](dims)
-      val counts = new Array[Int](dims)
-      var k = 0
-      while (k < len) {
-        val slot = (k.toLong * dims / len).toInt
-        sums(slot) += (c(off + k) & 0xff)
-        counts(slot) += 1
-        k += 1
-      }
-      Array.tabulate(dims)(j =>
-        if (counts(j) > 0) (sums(j) / counts(j) / 255.0).toFloat else 0f)
-    }
-  }
-
-  /** Ogg container probe (Vorbis + Opus) — the streaming sibling of
-    * [[Mp3Probe]]/[[FlacProbe]]: the BOS page's ID packet names the codec
-    * and its rate (`\\x01vorbis`: PCM rate at packet offset 12 LE;
-    * `OpusHead`: pre-skip u16 + a granule clock FIXED at 48 kHz by
-    * spec), and the duration is the LAST page's granule position — found
-    * by a BOUNDED tail scan (final 64 KB) for valid `OggS` page headers,
-    * the standard probe trick that never walks the middle of a large
-    * stream. Tail granules are FILTERED to the BOS page's bitstream
-    * serial (a multiplexed Ogg — Theora video + Vorbis audio — carries a
-    * second granule clock that would otherwise be read at the audio
-    * rate); when no tail page matches the serial (a CHAINED stream:
-    * a later chain's BOS re-keys it, legal for icecast-style
-    * concatenation), the probe falls back to the max granule of ANY
-    * tail page — chains are same-codec by convention, so the estimate
-    * stays meaningful where the strict filter would return None. Pages
-    * with granule −1 ("no packet ends here") are skipped; a malformed
-    * page header falls back to a byte-step scan, so a corrupt tail
-    * degrades the duration, never throws. */
-  object OggProbe extends MediaProbe {
-    private def u32le(c: Array[Byte], o: Int): Long =
-      (c(o) & 0xffL) | ((c(o + 1) & 0xffL) << 8) |
-        ((c(o + 2) & 0xffL) << 16) | ((c(o + 3) & 0xffL) << 24)
-    private def s64le(c: Array[Byte], o: Int): Long =
-      u32le(c, o) | (u32le(c, o + 4) << 32)
-    private def oggs(c: Array[Byte], o: Int): Boolean =
-      o + 27 <= c.length && c(o) == 'O' && c(o + 1) == 'g' &&
-        c(o + 2) == 'g' && c(o + 3) == 'S' && c(o + 4) == 0
-
-    /** Total page length at `o` (header + lacing + payload), or -1. */
-    private def pageLen(c: Array[Byte], o: Int): Int = {
-      val nsegs = c(o + 26) & 0xff
-      if (o + 27 + nsegs > c.length) return -1
-      var total = 27 + nsegs
-      var i = 0
-      while (i < nsegs) { total += c(o + 27 + i) & 0xff; i += 1 }
-      if (o + total > c.length) -1 else total
-    }
-
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || !oggs(content, 0)) return none
-      val l0 = pageLen(content, 0)
-      if (l0 < 0) return none
-      val nsegs0 = content(26) & 0xff
-      val p = 27 + nsegs0 // first page's payload = the codec ID packet
-      var rate = -1L; var preSkip = 0L; var opus = false
-      if (p + 30 <= content.length && content(p) == 1 &&
-          content(p + 1) == 'v' && content(p + 2) == 'o' &&
-          content(p + 3) == 'r' && content(p + 4) == 'b' &&
-          content(p + 5) == 'i' && content(p + 6) == 's') {
-        rate = u32le(content, p + 12)
-      } else if (p + 19 <= content.length && content(p) == 'O' &&
-          content(p + 1) == 'p' && content(p + 2) == 'u' &&
-          content(p + 3) == 's' && content(p + 4) == 'H' &&
-          content(p + 5) == 'e' && content(p + 6) == 'a' &&
-          content(p + 7) == 'd') {
-        opus = true
-        preSkip = (content(p + 10) & 0xffL) | ((content(p + 11) & 0xffL) << 8)
-        rate = 48000L // Opus granules tick at 48 kHz regardless of input rate
-      }
-      if (rate <= 0) return none
-      // the audio stream's clock: tail pages whose bitstream serial
-      // matches the BOS page are preferred — a multiplexed Ogg (Theora
-      // video + Vorbis audio) carries a second granule clock that would
-      // otherwise be read at the audio rate. If NO tail page matches
-      // (a chained stream: a later chain's BOS re-keys the serial, legal
-      // per spec for icecast-style concatenation), fall back to the max
-      // granule of any tail page — chains are same-codec by convention,
-      // so the estimate stays meaningful where the strict filter would
-      // probe None.
-      val serial = u32le(content, 14)
-      // bounded tail scan for the last valid page's granule position
-      var o = math.max(0, content.length - 65536)
-      var lastGranule = -1L
-      var lastAnySerial = -1L
-      while (o + 27 <= content.length) {
-        if (oggs(content, o)) {
-          val len = pageLen(content, o)
-          val g = s64le(content, o + 6)
-          if (g >= 0) {
-            if (g > lastGranule && u32le(content, o + 14) == serial)
-              lastGranule = g
-            if (g > lastAnySerial) lastAnySerial = g
-          }
-          o += (if (len > 0) len else 1)
-        } else o += 1
-      }
-      if (lastGranule < 0) lastGranule = lastAnySerial
-      if (lastGranule < 0) return none
-      val samples = math.max(0L, lastGranule - (if (opus) preSkip else 0L))
-      if (samples > Long.MaxValue / 1000L) return none // crafted granule
-      ProbedMeta(0L, Some("ogg"), None, None, Some(samples * 1000L / rate))
-    }
-  }
-
-  /** WAV: sample rate + data-chunk length → duration (the fmt-chunk walk
-    * [[WavCodec]] decodes with, headers only). */
+  /** WAV: sample rate + data-chunk length → duration, from the same
+    * [[Wav]] chunk walk the codecs decode with (headers only). Unlike
+    * the codecs it accepts any format code and sample width: a
+    * non-PCM or 24-bit file still has a duration. */
   object WavProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 12) return none
-      def u16(o: Int): Int = (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8)
-      def u32(o: Int): Long = u16(o).toLong | (u16(o + 2).toLong << 16)
-      def tag(o: Int, s: String): Boolean =
-        (0 until 4).forall(i => content(o + i) == s.charAt(i).toByte)
-      if (!tag(0, "RIFF") || !tag(8, "WAVE")) return none
-      var pos = 12
-      var channels = 0; var bits = 0; var rate = 0L; var dataLen = -1L
-      while (pos + 8 <= content.length && (rate <= 0 || dataLen < 0)) {
-        val sz = u32(pos + 4)
-        if (sz < 0 || sz > Int.MaxValue - 8 || pos + 8 + sz > content.length)
-          return none
-        if (tag(pos, "fmt ") && sz >= 16) {
-          channels = u16(pos + 10); rate = u32(pos + 12); bits = u16(pos + 22)
-        } else if (tag(pos, "data")) dataLen = sz
-        pos += 8 + sz.toInt + (sz.toInt & 1)
-      }
-      if (rate <= 0 || channels <= 0 || bits <= 0 || dataLen < 0) return none
-      val frames = dataLen / (channels.toLong * (bits / 8).max(1))
-      ProbedMeta(0L, Some("wav"), None, None, Some(frames * 1000L / rate))
+    def probe(content: Array[Byte]): ProbedMeta = Wav.parse(content) match {
+      case Some(l) if l.rate > 0 && l.channels > 0 && l.bits > 0 =>
+        val frames = l.dataLen / (l.channels.toLong * (l.bits / 8).max(1))
+        ProbedMeta(0L, Some("wav"), None, None, Some(frames * 1000L / l.rate))
+      case _ => ProbedMeta(0L, None, None, None, None)
     }
   }
 
-  /** PNG: width/height from the IHDR chunk — by spec the FIRST chunk
-    * after the 8-byte signature, so the parse is fixed-offset: u32 BE
-    * dims at bytes 16/20 (behind IHDR's length+type at 8..15). No time
-    * axis. Truncated or non-IHDR-first files probe all-None. */
-  object PngProbe extends MediaProbe {
-    private val sig = Array(0x89, 'P', 'N', 'G', 0x0d, 0x0a, 0x1a, 0x0a)
-      .map(_.toByte)
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 24 ||
-          !(0 until 8).forall(i => content(i) == sig(i))) return none
-      def u32(o: Int): Long =
-        ((content(o) & 0xffL) << 24) | ((content(o + 1) & 0xffL) << 16) |
-          ((content(o + 2) & 0xffL) << 8) | (content(o + 3) & 0xffL)
-      if (!(content(12) == 'I' && content(13) == 'H' &&
-          content(14) == 'D' && content(15) == 'R')) return none
-      val w = u32(16); val h = u32(20)
-      if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue) none
-      else ProbedMeta(0L, Some("png"), Some(w.toInt), Some(h.toInt), None)
-    }
-  }
-
-  /** JPEG: marker walk to the first SOF frame header (SOF0–SOF15 minus
-    * the non-frame DHT/DAC/RST codes) for height/width — the standard
-    * dimensions probe. Entropy-coded data is never decoded: every
-    * non-SOF segment is skipped by its declared length; a malformed
-    * length or a truncated segment stops the walk (the crawl-corruption
-    * policy). Standalone markers (RSTn, TEM) and padding FF bytes are
-    * stepped over per the spec. */
-  object JpegProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 4 ||
-          (content(0) & 0xff) != 0xff || (content(1) & 0xff) != 0xd8)
-        return none
-      def u16(o: Int): Int =
-        ((content(o) & 0xff) << 8) | (content(o + 1) & 0xff)
-      var pos = 2
-      while (pos + 4 <= content.length) {
-        if ((content(pos) & 0xff) != 0xff) return none // lost sync
-        // skip fill bytes (FF FF ... marker)
-        var mo = pos
-        while (mo + 1 < content.length && (content(mo + 1) & 0xff) == 0xff)
-          mo += 1
-        val marker = content(mo + 1) & 0xff
-        val segStart = mo + 2
-        marker match {
-          case 0xd8 => pos = segStart // spurious SOI: keep walking
-          case m if m >= 0xd0 && m <= 0xd7 => pos = segStart // RSTn: bare
-          case 0x01 => pos = segStart // TEM: bare
-          case 0xd9 => return none // EOI before any SOF
-          case 0xda => return none // SOS before SOF: malformed
-          case m if (m >= 0xc0 && m <= 0xcf) && m != 0xc4 && m != 0xc8 &&
-              m != 0xcc => // SOFn frame header
-            if (segStart + 7 > content.length) return none
-            val h = u16(segStart + 3); val w = u16(segStart + 5)
-            return if (w <= 0 || h <= 0) none
-            else ProbedMeta(0L, Some("jpeg"), Some(w), Some(h), None)
-          case _ => // any other segment: skip by declared length
-            if (segStart + 2 > content.length) return none
-            val len = u16(segStart)
-            if (len < 2 || segStart + len > content.length) return none
-            pos = segStart + len
-        }
-      }
-      none
-    }
-  }
-
-  /** GIF (87a/89a): width/height from the fixed-offset logical screen
-    * descriptor (u16 LE at bytes 6/8). No time axis probed — per-frame
-    * delays live in extension blocks a header probe has no business
-    * walking. */
-  object GifProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 10) return none
-      val hdr = new String(content, 0, 6, "US-ASCII")
-      if (hdr != "GIF87a" && hdr != "GIF89a") return none
-      def u16le(o: Int): Int =
-        (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8)
-      val w = u16le(6); val h = u16le(8)
-      if (w <= 0 || h <= 0) none
-      else ProbedMeta(0L, Some("gif"), Some(w), Some(h), None)
-    }
-  }
-
-  /** WebP: RIFF/WEBP with three in-the-wild header layouts — `VP8X`
-    * (extended: 24-bit width−1/height−1), `VP8L` (lossless: 14-bit
-    * packed dims), `VP8 ` (lossy: u16 LE dims in the frame tag, 14
-    * significant bits). Header-only; image data never decoded. */
-  object WebpProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 20) return none
-      def tag(o: Int, s: String): Boolean =
-        (0 until 4).forall(i => content(o + i) == s.charAt(i).toByte)
-      if (!tag(0, "RIFF") || !tag(8, "WEBP")) return none
-      def b(o: Int): Int = content(o) & 0xff
-      if (tag(12, "VP8X") && content.length >= 30) {
-        val w = 1 + (b(24) | (b(25) << 8) | (b(26) << 16))
-        val h = 1 + (b(27) | (b(28) << 8) | (b(29) << 16))
-        ProbedMeta(0L, Some("webp"), Some(w), Some(h), None)
-      } else if (tag(12, "VP8L") && content.length >= 25 && b(20) == 0x2f) {
-        val bits = b(21) | (b(22) << 8) | (b(23) << 16) | (b(24) << 24)
-        val w = 1 + (bits & 0x3fff)
-        val h = 1 + ((bits >> 14) & 0x3fff)
-        ProbedMeta(0L, Some("webp"), Some(w), Some(h), None)
-      } else if (tag(12, "VP8 ") && content.length >= 30) {
-        // lossy frame tag: 3-byte frame header, 3-byte start code
-        // 9D 01 2A, then u16 LE width/height (14 bits each)
-        if (b(23) == 0x9d && b(24) == 0x01 && b(25) == 0x2a) {
-          val w = (b(26) | (b(27) << 8)) & 0x3fff
-          val h = (b(28) | (b(29) << 8)) & 0x3fff
-          if (w > 0 && h > 0)
-            ProbedMeta(0L, Some("webp"), Some(w), Some(h), None)
-          else none
-        } else none
-      } else none
-    }
-  }
-
-  /** BMP: 'BM' magic, BITMAPINFOHEADER dims at fixed LE offsets 18/22.
-    * Height may be NEGATIVE (top-down rows) — reported as its magnitude,
-    * the convention every inventory expects. */
-  object BmpProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 26 ||
-          content(0) != 'B' || content(1) != 'M') return none
-      def s32le(o: Int): Int =
-        (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8) |
-          ((content(o + 2) & 0xff) << 16) | ((content(o + 3) & 0xff) << 24)
-      val hdrSize = s32le(14)
-      if (hdrSize < 40) return none // core-header variants: not probed
-      val w = s32le(18); val h = s32le(22)
-      if (w <= 0 || h == 0 || h == Int.MinValue) none
-      else ProbedMeta(0L, Some("bmp"), Some(w), Some(math.abs(h)), None)
-    }
-  }
-
-  /** TIFF: endianness marker (`II`/`MM`) + magic 42, then the FIRST
-    * IFD's entry walk for ImageWidth (256) / ImageLength (257) — each a
-    * SHORT or LONG whose value packs into the entry's inline value
-    * field. Header-only: strips are never read; a malformed IFD offset
-    * or entry count stops the walk (the crawl-corruption policy). */
-  object TiffProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 8) return none
-      val le =
-        if (content(0) == 'I' && content(1) == 'I') true
-        else if (content(0) == 'M' && content(1) == 'M') false
-        else return none
-      def u16(o: Int): Int =
-        if (o + 2 > content.length) -1
-        else if (le) (content(o) & 0xff) | ((content(o + 1) & 0xff) << 8)
-        else ((content(o) & 0xff) << 8) | (content(o + 1) & 0xff)
-      def u32(o: Int): Long =
-        if (o + 4 > content.length) -1L
-        else if (le) (u16(o) & 0xffffL) | ((u16(o + 2) & 0xffffL) << 16)
-        else ((u16(o) & 0xffffL) << 16) | (u16(o + 2) & 0xffffL)
-      if (u16(2) != 42) return none
-      val ifd = u32(4)
-      if (ifd < 8 || ifd > content.length - 2L) return none
-      val n = u16(ifd.toInt)
-      if (n <= 0) return none
-      var w = -1L; var h = -1L
-      var i = 0
-      while (i < n && (w < 0 || h < 0)) {
-        val e = ifd.toInt + 2 + 12 * i
-        if (e + 12 > content.length) return none
-        val tag = u16(e); val typ = u16(e + 2)
-        // SHORT (3) reads 16 bits of the value field, LONG (4) all 32
-        val v = if (typ == 3) u16(e + 8).toLong else if (typ == 4) u32(e + 8) else -1L
-        if (tag == 256) w = v else if (tag == 257) h = v
-        i += 1
-      }
-      if (w <= 0 || h <= 0 || w > Int.MaxValue || h > Int.MaxValue) none
-      else ProbedMeta(0L, Some("tiff"), Some(w.toInt), Some(h.toInt), None)
-    }
-  }
-
-  /** PPM (P6): width/height from the text header; no time axis. */
+  /** PPM (P6): width/height from the [[Ppm]] header; no time axis. */
   object PpmProbe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta = {
-      val none = ProbedMeta(0L, None, None, None, None)
-      if (content == null || content.length < 2 ||
-          content(0) != 'P' || content(1) != '6') return none
-      var pos = 2
-      def isWs(b: Byte) = b == ' ' || b == '\n' || b == '\t' || b == '\r'
-      def nextInt(): Int = {
-        var seen = false
-        while (pos < content.length &&
-            (isWs(content(pos)) || content(pos) == '#')) {
-          if (content(pos) == '#')
-            while (pos < content.length && content(pos) != '\n') pos += 1
-          else pos += 1
-        }
-        var v = 0
-        while (pos < content.length && content(pos) >= '0' && content(pos) <= '9') {
-          v = v * 10 + (content(pos) - '0'); seen = true; pos += 1
-        }
-        if (seen) v else -1
-      }
-      val w = nextInt(); val h = nextInt()
-      if (w <= 0 || h <= 0) return none
-      ProbedMeta(0L, Some("ppm"), Some(w), Some(h), None)
+    def probe(content: Array[Byte]): ProbedMeta = Ppm.parseHeader(content) match {
+      case Some(h) => ProbedMeta(0L, Some("ppm"), Some(h.w), Some(h.h), None)
+      case None => ProbedMeta(0L, None, None, None, None)
     }
   }
 
@@ -2397,14 +687,12 @@ object Multimodal {
     * never shuffles and is never compared pairwise.
     *
     * Scale shape:
-    *  - the decode + SRP signature runs ONCE per media row and is
-    *    `localCheckpoint`ed (`persistFeatures`): the census, the guard
-    *    semi join, and both self-join sides would otherwise each re-run
-    *    the codec over the full corpus (the Dedup `persistSignatures`
-    *    lesson — and a REAL codec decode dwarfs every signature kernel
-    *    that flag was measured on). The checkpoint rows are
-    *    (id, dims floats, bucket) — far under the payload ceiling that
-    *    makes persistence lose;
+    *  - the decode + SRP signature runs ONCE per media row behind an
+    *    eager checkpoint: the census, the guard semi join, and both
+    *    self-join sides would otherwise each re-run the codec over the
+    *    full corpus (and a REAL codec decode dwarfs any signature
+    *    kernel). The checkpoint rows are (id, dims floats, bucket) — far
+    *    under the payload ceiling that makes persistence lose;
     *  - `maxBucketSize` bounds candidate pairs to n·cap per bucket
     *    (buckets above the cap contribute no pairs — boilerplate media
     *    corpora have exact-dup mega-groups, and every member of one
@@ -2418,25 +706,20 @@ object Multimodal {
     *
     * Returns (id_a, id_b), id_a < id_b, cosine ≥ `threshold`. Pairs are
     * unique by construction (one bucket per vector — no cross-band
-    * distinct). The checkpoint blocks back the result; the CALLER
-    * releases them once the result materializes —
-    * `graft.core.Checkpoints.releaseExcept(result, media)` (the
-    * `releaseExcept` form because a caller-supplied `media` frame may
-    * itself be checkpoint-backed). Spec-held by MediaNearDupSpec's
-    * leaked-block accounting. */
+    * distinct). The result reads the feature checkpoint, so it passes
+    * to the enclosing [[graft.core.Checkpoints.scoped]] scope, or to the
+    * caller outside one. */
   def mediaNearDupPairs(
       media: DataFrame, dims: Int = 16, planes: Int = 8,
       threshold: Double = 0.9,
       codec: MediaCodec = StubCodec,
-      maxBucketSize: Option[Int] = None,
-      persistFeatures: Boolean = true): DataFrame = {
+      maxBucketSize: Option[Int] = None): DataFrame = Checkpoints.scoped {
     import graft.ops.ext.Similarity
     require(dims >= 1 && planes >= 1, "mediaNearDupPairs: dims/planes must be >= 1")
     require(maxBucketSize.forall(_ >= 1), "mediaNearDupPairs: maxBucketSize must be >= 1")
-    val sig0 = extractFeatures(media, dims, codec).toDF()
+    val sig = Checkpoints.checkpoint(extractFeatures(media, dims, codec).toDF()
       .select(col("media_id").as("id"), col("embedding").as("vec"))
-      .withColumn("bucket", Similarity.srpBucket(col("vec"), planes))
-    val sig = if (persistFeatures) sig0.localCheckpoint(true) else sig0
+      .withColumn("bucket", Similarity.srpBucket(col("vec"), planes)))
     val kept = maxBucketSize match {
       case Some(cap) =>
         // map-side partial count collapses even a mega-bucket to one
@@ -2456,135 +739,38 @@ object Multimodal {
       .select(col("id_a"), col("id_b"))
   }
 
-  /** Frame-level media near-duplicate pairs — CLIP detection, the video
-    * dual of [[mediaNearDupPairs]]: where whole-content features catch
-    * re-encodes of the same item, shared FRAME fingerprints catch a clip
-    * embedded in a longer recording, a re-edit, or two broadcasts
-    * sharing footage. Each sampled frame ([[extractFrameFeatures]], the
-    * q136 plane) reduces to an 8-byte fingerprint (SRP bucket of its
-    * feature vector — visually-near frames agree on coarse-luma signs);
-    * two media pair when their DISTINCT-fingerprint overlap covers at
-    * least `minSharedPpm` of the SHORTER item's fingerprint set
-    * (containment, the [[graft.ops.ext.Dedup]] winnowing semantics —
-    * a short clip fully inside a long recording scores 1e6 ppm).
-    *
-    * Scale shape: frames collapse to (media_id, fp) longs immediately
-    * after the decode `mapPartitions` (checkpointed once —
-    * `persistFeatures`); the candidate join is fp-keyed
-    * ([[graft.ops.ext.Dedup.winnowCandidatePairs]]'s shape) with
-    * `maxBucketSize` capping degenerate fingerprints (black/silence
-    * frames shared corpus-wide are the boilerplate mega-bucket of the
-    * frame plane — uncapped they are quadratic); the confirm is a
-    * count aggregate on the pair list, never a re-decode. Media bytes
-    * are read once per frame and never shuffle.
-    *
-    * Output: (id_a, id_b, shared, nf_a, nf_b, containment_ppm),
-    * id_a < id_b, all BIGINT (ppm floor division — engine-exact).
-    *
-    * Checkpoint lifecycle (the curate contract): the fingerprint-plane
-    * checkpoint backs the result, so the CALLER releases it after the
-    * result materializes — `graft.core.Checkpoints.releaseExcept(result,
-    * media)` (the `releaseExcept` form because a caller-supplied `media`
-    * frame may itself be checkpoint-backed; a blanket release would free
-    * the caller's only copy). Spec-held by MediaNearDupSpec's
-    * leaked-block accounting. */
-  def mediaFrameNearDupPairs(
-      media: DataFrame, everyMs: Long, dims: Int = 16, planes: Int = 16,
-      minSharedPpm: Long = 500000L,
-      codec: FrameCodec = StubFrameCodec,
-      maxBucketSize: Option[Int] = None,
-      persistFeatures: Boolean = true): DataFrame = {
-    import graft.ops.ext.Similarity
-    require(dims >= 1 && planes >= 1, "mediaFrameNearDupPairs: dims/planes must be >= 1")
-    require(minSharedPpm >= 1 && minSharedPpm <= 1000000L,
-      s"mediaFrameNearDupPairs: minSharedPpm must be in [1, 1e6], got $minSharedPpm")
-    require(maxBucketSize.forall(_ >= 1), "mediaFrameNearDupPairs: maxBucketSize must be >= 1")
-    val fp0 = extractFrameFeatures(media, everyMs, dims, codec).toDF()
-      .select(col("media_id"),
-        Similarity.srpBucket(col("embedding"), planes).as("fp"))
-      .distinct() // containment counts DISTINCT fingerprints
-    val fp = if (persistFeatures) fp0.localCheckpoint(true) else fp0
-    val counts = fp.groupBy(col("media_id")).agg(count(lit(1)).as("nf"))
-    val kept = maxBucketSize match {
-      case Some(cap) =>
-        val ok = fp.groupBy(col("fp")).agg(count(lit(1)).as("_bsz"))
-          .where(col("_bsz") >= 2 && col("_bsz") <= cap)
-          .select(col("fp"))
-        fp.join(ok, Seq("fp"), "left_semi")
-      case None => fp
-    }
-    val shared = kept.select(col("fp"), col("media_id").as("id_a"))
-      .join(kept.select(col("fp"), col("media_id").as("id_b")), Seq("fp"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(counts.select(col("media_id").as("id_a"), col("nf").as("nf_a")), Seq("id_a"))
-      .join(counts.select(col("media_id").as("id_b"), col("nf").as("nf_b")), Seq("id_b"))
-      .withColumn("containment_ppm",
-        expr("shared * 1000000 div least(nf_a, nf_b)"))
-      .where(col("containment_ppm") >= minSharedPpm)
-      .select(col("id_a"), col("id_b"), col("shared"),
-        col("nf_a"), col("nf_b"), col("containment_ppm"))
-  }
-
   /** Cross-corpus media near-dup filter — the media analog of
     * [[graft.ops.ext.Dedup.dedupAgainstCorpus]] (the nightly-ingest
     * shape): keep only incoming media whose features near-duplicate NO
-    * standing-corpus item. Incoming rows are never compared to each
-    * other — dedup WITHIN the batch is [[mediaNearDupPairs]]' job.
+    * corpus item. Incoming rows are never compared to each other —
+    * dedup WITHIN the batch is [[mediaNearDupPairs]]' job.
     *
-    * Scale shape: both sides decode once behind `localCheckpoint`s
-    * (`persistFeatures`; for a STANDING corpus, production should
-    * persist the (id, vec, bucket) feature table to storage and keep it
-    * bucketed on `bucket` — then the nightly match join is
-    * Exchange-free on the corpus side, the
-    * [[graft.io.Bucketing]] pattern, and the corpus is never re-decoded
-    * at all). The join ships (bucket, dims floats) rows, never media
-    * bytes; `maxBucketSize` caps CORPUS buckets — a boilerplate
-    * mega-bucket would otherwise fan every colliding incoming row out
-    * by its size — trading those buckets' recall for linearity,
-    * CONSERVATIVELY (uncheckable incoming rows are KEPT, the novelty
-    * default; run exact-hash dedup upstream for known boilerplate).
+    * Scale shape: both sides decode once behind eager checkpoints. The
+    * join ships (bucket, dims floats) rows, never media bytes;
+    * `maxBucketSize` caps CORPUS buckets — a boilerplate mega-bucket
+    * would otherwise fan every colliding incoming row out by its size —
+    * trading those buckets' recall for linearity, CONSERVATIVELY
+    * (uncheckable incoming rows are KEPT, the novelty default; run
+    * exact-hash dedup upstream for known boilerplate).
     *
     * Returns `incoming` rows (original columns) with near-dup rows
-    * anti-joined away.
-    *
-    * Checkpoint lifecycle (the curate contract): BOTH feature-plane
-    * checkpoints back the result — the caller releases them after the
-    * result materializes with `graft.core.Checkpoints.releaseExcept(
-    * result, incoming, corpus)` (the `releaseExcept` form: the caller's
-    * own frames may be checkpoint-backed, and a blanket release would
-    * free their only copy). Spec-held by MediaNearDupSpec's leaked-block
-    * accounting. */
+    * anti-joined away. The result reads both feature checkpoints, so
+    * they pass to the enclosing [[graft.core.Checkpoints.scoped]] scope,
+    * or to the caller outside one. */
   def mediaNearDupAgainst(
       incoming: DataFrame, corpus: DataFrame,
       dims: Int = 16, planes: Int = 8, threshold: Double = 0.9,
       codec: MediaCodec = StubCodec,
-      maxBucketSize: Option[Int] = None,
-      persistFeatures: Boolean = true): DataFrame = {
+      maxBucketSize: Option[Int] = None): DataFrame = Checkpoints.scoped {
     import graft.ops.ext.Similarity
     require(dims >= 1 && planes >= 1, "mediaNearDupAgainst: dims/planes must be >= 1")
     require(maxBucketSize.forall(_ >= 1), "mediaNearDupAgainst: maxBucketSize must be >= 1")
-    def sig(media: DataFrame, idOut: String, vecOut: String): DataFrame = {
-      val s = extractFeatures(media, dims, codec).toDF()
+    def sig(media: DataFrame, idOut: String, vecOut: String): DataFrame =
+      Checkpoints.checkpoint(extractFeatures(media, dims, codec).toDF()
         .select(col("media_id").as(idOut), col("embedding").as(vecOut))
-        .withColumn("bucket", Similarity.srpBucket(col(vecOut), planes))
-      if (persistFeatures) s.localCheckpoint(true) else s
-    }
+        .withColumn("bucket", Similarity.srpBucket(col(vecOut), planes)))
     val inc = sig(incoming, "media_id", "_vec")
     val corp0 = sig(corpus, "_c_id", "_c_vec")
-    antiJoinNearDups(incoming, inc, corp0, threshold, maxBucketSize)
-  }
-
-  /** The match tail [[mediaNearDupAgainst]] and [[mediaNearDupAgainstTable]]
-    * share: cap CORPUS buckets (conservative — capped buckets drop their
-    * MATCHES, so uncheckable incoming rows are KEPT), bucket-join the
-    * incoming signatures, cosine-confirm, anti-join the dup ids away. */
-  private def antiJoinNearDups(
-      incoming: DataFrame, inc: DataFrame, corp0: DataFrame,
-      threshold: Double, maxBucketSize: Option[Int]): DataFrame = {
-    import graft.ops.ext.Similarity
     val corp = maxBucketSize match {
       case Some(cap) =>
         val ok = corp0.groupBy(col("bucket"))
@@ -2599,174 +785,6 @@ object Multimodal {
       .select(col("media_id"))
       .distinct()
     incoming.join(dupIds, Seq("media_id"), "left_anti")
-  }
-
-  /** Persist a standing corpus's decoded feature plane as a BUCKETED
-    * catalog table — the one-time ingest layout that makes every later
-    * [[mediaNearDupAgainstTable]] run Exchange-free on the corpus side
-    * with ZERO corpus re-decode (the recurring-dedup discipline of
-    * [[graft.io.Bucketing]]; the reference applies the same
-    * partition-once-join-many idea to its label table,
-    * PartitionSparkApp.scala:48-54). Rows are `(_c_id, _c_vec, bucket)`
-    * — the exact corpus-side layout [[mediaNearDupAgainst]] builds
-    * per-run — bucketed AND sorted by `bucket`, so the nightly match
-    * join's sort-merge reads the corpus files in place: no shuffle, no
-    * sort, no decode. The decode runs ONCE, here, at write time.
-    *
-    * `buckets` should match the deployment's shuffle parallelism (both
-    * the writer and every reader must see the same count — it is baked
-    * into the table). `dims`/`planes` are baked in the same way: a
-    * reader matching with different values would get silently-empty
-    * buckets — i.e. a dedup that quietly keeps everything — so the
-    * writer records all three knobs in a `_meta.jsonl` sidecar inside
-    * the table directory (the `_manifest.jsonl` precedent:
-    * underscore-prefixed, invisible to the table's parquet reader) and
-    * [[mediaNearDupAgainstTable]] REQUIRES them to match before joining. */
-  def writeMediaFeatureTable(
-      corpus: DataFrame, table: String,
-      dims: Int = 16, planes: Int = 8,
-      codec: MediaCodec = StubCodec,
-      buckets: Int = 32,
-      writeManifest: Boolean = false): Unit = {
-    import graft.ops.ext.Similarity
-    require(dims >= 1 && planes >= 1, "writeMediaFeatureTable: dims/planes must be >= 1")
-    require(buckets >= 1, "writeMediaFeatureTable: buckets must be >= 1")
-    val sig = extractFeatures(corpus, dims, codec).toDF()
-      .select(col("media_id").as("_c_id"), col("embedding").as("_c_vec"))
-      .withColumn("bucket", Similarity.srpBucket(col("_c_vec"), planes))
-    graft.io.Bucketing.writeBucketed(sig, table, "bucket", buckets)
-    writeFeatureTableMeta(corpus.sparkSession, table, dims, planes, buckets)
-    // the standing feature plane is exactly the artifact a transfer or
-    // restore touches: the optional per-file manifest makes that
-    // boundary auditable (graft.io.Manifest.verifyParquetDir) without
-    // re-decoding anything
-    if (writeManifest) {
-      val spark = corpus.sparkSession
-      graft.io.Manifest
-        .writeForParquetDir(spark, featureTableDir(spark, table).toString)
-        .unpersist()
-    }
-  }
-
-  /** The feature table's storage directory, from the catalog (DESCRIBE
-    * TABLE EXTENDED — public API, no `sessionState` reach-in). A view /
-    * temp view / anything without a Location row fails with a clear
-    * message instead of a bare NoSuchElementException. */
-  private def featureTableDir(
-      spark: SparkSession, table: String): org.apache.hadoop.fs.Path = {
-    val loc = spark.sql(s"DESCRIBE TABLE EXTENDED $table")
-      .where(col("col_name") === "Location")
-      .collect().headOption.getOrElse(throw new IllegalArgumentException(
-        s"featureTableDir: $table has no Location in its catalog entry — " +
-          "not a stored table (views and temp views have no storage " +
-          "directory; feature tables are written by writeMediaFeatureTable)"))
-      .getString(1)
-    new org.apache.hadoop.fs.Path(new java.net.URI(loc))
-  }
-
-  private def writeFeatureTableMeta(
-      spark: SparkSession, table: String,
-      dims: Int, planes: Int, buckets: Int): Unit = {
-    val p = new org.apache.hadoop.fs.Path(
-      featureTableDir(spark, table), "_meta.jsonl")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val os = fs.create(p, true)
-    try os.write(
-      s"""{"dims":$dims,"planes":$planes,"buckets":$buckets}\n"""
-        .getBytes("UTF-8"))
-    finally os.close()
-  }
-
-  /** Read the sidecar back (raw Hadoop FS lines — the underscore prefix
-    * hides it from Spark path readers by design); None when the table
-    * predates the sidecar contract. */
-  private[multimodal] def readFeatureTableMeta(
-      spark: SparkSession, table: String): Option[(Int, Int, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(
-      featureTableDir(spark, table), "_meta.jsonl")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val line =
-        try scala.io.Source.fromInputStream(in, "UTF-8").getLines()
-          .find(_.nonEmpty).getOrElse("")
-        finally in.close()
-      def field(k: String): Option[Int] =
-        ("\"" + k + "\"\\s*:\\s*(\\d+)").r
-          .findFirstMatchIn(line).map(_.group(1).toInt)
-      for (d <- field("dims"); pl <- field("planes"); b <- field("buckets"))
-        yield (d, pl, b)
-    }
-  }
-
-  /** [[mediaNearDupAgainst]] against a [[writeMediaFeatureTable]] corpus:
-    * the nightly-ingest fast path. Only the INCOMING batch decodes; the
-    * corpus side is a bucketed parquet scan whose partitioning already
-    * matches the join key, so the only Exchange in the match join is the
-    * (small) incoming side shuffling into the corpus's bucketing — and
-    * the `maxBucketSize` census + its semi join plan with no Exchange at
-    * all (both legs read the same bucketed layout). Byte-identical
-    * output to [[mediaNearDupAgainst]] on the same corpus
-    * (spec-asserted) — same features, same buckets, same cap semantics.
-    *
-    * `dims`/`planes` MUST equal the values the table was written with —
-    * ENFORCED against the table's `_meta.jsonl` sidecar: a mismatch (or
-    * a missing sidecar) fails loudly instead of silently-empty buckets
-    * quietly keeping every incoming row (see [[writeMediaFeatureTable]]). */
-  def mediaNearDupAgainstTable(
-      incoming: DataFrame, corpusTable: String,
-      dims: Int = 16, planes: Int = 8, threshold: Double = 0.9,
-      codec: MediaCodec = StubCodec,
-      maxBucketSize: Option[Int] = None,
-      persistFeatures: Boolean = true): DataFrame = {
-    import graft.ops.ext.Similarity
-    require(dims >= 1 && planes >= 1, "mediaNearDupAgainstTable: dims/planes must be >= 1")
-    require(maxBucketSize.forall(_ >= 1), "mediaNearDupAgainstTable: maxBucketSize must be >= 1")
-    readFeatureTableMeta(incoming.sparkSession, corpusTable) match {
-      case None => throw new IllegalArgumentException(
-        s"mediaNearDupAgainstTable: $corpusTable has no readable _meta.jsonl " +
-          "sidecar (missing or corrupt) — rewrite the corpus with " +
-          "writeMediaFeatureTable (a feature table without checkable " +
-          "dims/planes metadata risks a silent no-op dedup)")
-      case Some((tDims, tPlanes, tBuckets)) =>
-        require(tDims == dims && tPlanes == planes,
-          s"mediaNearDupAgainstTable: dims/planes ($dims/$planes) do not match " +
-            s"$corpusTable's written values ($tDims/$tPlanes) — a mismatched " +
-            "reader gets silently-empty buckets (no-op dedup); pass the " +
-            "table's values or rewrite it")
-        // cross-check the sidecar's bucket count against the catalog's
-        // bucketing spec: a sidecar copied alongside a re-bucketed table
-        // (or vice versa) is the same silent-mismatch class
-        // an ABSENT row is a legitimate skip (the catalog rendering may
-        // not expose bucketing for every table kind), but a row that is
-        // PRESENT and unparseable must be loud — skipping it would let a
-        // diverged sidecar/table pair pass the cross-check unexamined
-        val catBuckets = incoming.sparkSession
-          .sql(s"DESCRIBE TABLE EXTENDED $corpusTable")
-          .where(col("col_name") === "Num Buckets")
-          .collect().headOption.map(_.getString(1).trim)
-        catBuckets.foreach { raw =>
-          val nb = scala.util.Try(raw.toInt).getOrElse(
-            throw new IllegalArgumentException(
-              s"mediaNearDupAgainstTable: $corpusTable's catalog reports " +
-                s"'Num Buckets' = '$raw', which is unparseable — cannot " +
-                "cross-check the _meta.jsonl bucket count; inspect the " +
-                "catalog entry or rewrite the corpus with " +
-                "writeMediaFeatureTable"))
-          require(nb == tBuckets,
-            s"mediaNearDupAgainstTable: $corpusTable's _meta.jsonl records " +
-              s"$tBuckets buckets but the catalog says $nb — the sidecar and " +
-              "the table have diverged; rewrite the corpus with " +
-              "writeMediaFeatureTable")
-        }
-    }
-    val inc0 = extractFeatures(incoming, dims, codec).toDF()
-      .select(col("media_id"), col("embedding").as("_vec"))
-      .withColumn("bucket", Similarity.srpBucket(col("_vec"), planes))
-    val inc = if (persistFeatures) inc0.localCheckpoint(true) else inc0
-    val corp0 = incoming.sparkSession.table(corpusTable)
-    antiJoinNearDups(incoming, inc, corp0, threshold, maxBucketSize)
   }
 
   /** Synthetic media table for tests/demos (documents bytes as fake

@@ -6,8 +6,8 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators in `ops/ext` and `pipeline` materialize only through
-  * [[graft.core.Checkpoints]]' scope, which owns every free: a raw
+/** Operators in `ops/ext`, `pipeline` and `multimodal` materialize only
+  * through [[graft.core.Checkpoints]]' scope, which owns every free: a raw
   * `localCheckpoint`/`persist` or a hand-written lineage release there
   * would bypass the single owner. */
 class LifecycleLintSpec extends AnyFunSuite {
@@ -26,8 +26,9 @@ class LifecycleLintSpec extends AnyFunSuite {
     if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
   }
 
-  test("ops/ext and pipeline materialize only through the Checkpoints scope") {
-    val files = Seq("src/main/scala/graft/ops/ext", "src/main/scala/graft/pipeline")
+  test("ops/ext, pipeline and multimodal materialize only through the Checkpoints scope") {
+    val files = Seq("src/main/scala/graft/ops/ext", "src/main/scala/graft/pipeline",
+        "src/main/scala/graft/multimodal")
       .flatMap(d => Files.walk(Paths.get(d)).iterator().asScala)
       .filter(_.toString.endsWith(".scala"))
     assert(files.size >= 10, s"found only ${files.size} sources")

@@ -29,20 +29,6 @@ class MediaFuzzSpec extends AnyFunSuite {
     le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
     "data".getBytes("US-ASCII") ++ le32(64) ++ Array.fill(64)(7.toByte)
   private val ppm = ("P6\n4 2\n255\n" + "x" * 24).getBytes("ISO-8859-1")
-  private val avi = AviFixtures.avi(4, 4, 100000, Seq(
-    "dc" -> AviFixtures.rle8(Array.fill(16)(0x10.toByte), 4, 4),
-    "db" -> AviFixtures.rawDb(Array.fill(16)(0xE0.toByte), 4, 4)))
-  private val mp4 = Mp4Fixtures.mp4
-  private val mp4Seek = Mp4Fixtures.seekableFile(4, 2, 10L,
-    Seq(0x10, 0xE0, 0x40).map(v => Array.fill(8)(v.toByte)), Seq(2, 1),
-    Seq((3L, 1L)))
-  private val mkv = MkvFixtures.mkv
-  private val mkvSeek = MkvFixtures.seekableMkv(1000000L,
-    MkvFixtures.el(0x1654AE6BL, MkvFixtures.videoTrackNum(4, 2, 1)), Seq(
-      0L -> MkvFixtures.cluster(0L,
-        MkvFixtures.simpleBlock(1, 0, Array.fill(8)(0x10.toByte))),
-      1L -> MkvFixtures.cluster(1L,
-        MkvFixtures.simpleBlock(1, 0, Array.fill(8)(0xE0.toByte)))))
 
   private val garbage: Gen[Array[Byte]] =
     Gen.choose(0, 200).flatMap(n => Gen.listOfN(n, Gen.choose(-128, 127)))
@@ -66,30 +52,13 @@ class MediaFuzzSpec extends AnyFunSuite {
 
   private val cases: Seq[Array[Byte]] =
     samples(garbage, fuzzN) ++
-      Seq(y4m, wav, ppm, avi, mp4, mp4Seek, mkv, mkvSeek,
-        AudioFixtures.mp3, AudioFixtures.flacTenSec, AudioFixtures.oggVorbis,
-        FlacFixtures.flac5, // framed flac: the frame-walk/CRC/seek path
-        FlacFixtures.flacStream(FlacFixtures.fiveFrames, Seq((768L, 3L * 306L))),
-        // dense seektable + trailing ID3v1 tag: mangles hit the
-        // per-point bounds checks and the last-frame TAG trim
-        FlacFixtures.flacStream(FlacFixtures.fiveFrames,
-          Seq((0L, 0L), (256L, 306L), (512L, 2L * 306L), (768L, 3L * 306L),
-            (1024L, 4L * 306L))),
-        FlacFixtures.flac5 ++ "TAG".getBytes("US-ASCII") ++
-          Array.fill(125)(0x41.toByte),
-        ImageFixtures.pngFx, ImageFixtures.jpegFx, ImageFixtures.gifFx,
-        ImageFixtures.webpFx, ImageFixtures.bmpFx, ImageFixtures.tiffFx)
-        .flatMap(b => samples(mangled(b), fuzzN, seed = 7L)) ++
+      Seq(y4m, wav, ppm).flatMap(b => samples(mangled(b), fuzzN, seed = 7L)) ++
       Seq(Array.emptyByteArray, null)
 
   test("fuzz: probes never throw; fields are sane when present") {
     cases.foreach { bytes =>
       for (p <- Seq(Multimodal.SniffProbe, Multimodal.Y4mProbe,
-          Multimodal.WavProbe, Multimodal.PpmProbe, Multimodal.AviProbe,
-          Multimodal.Mp4Probe, Multimodal.MkvProbe,
-          Multimodal.Mp3Probe, Multimodal.FlacProbe, Multimodal.OggProbe,
-          Multimodal.PngProbe, Multimodal.JpegProbe, Multimodal.GifProbe,
-          Multimodal.WebpProbe, Multimodal.BmpProbe, Multimodal.TiffProbe)) {
+          Multimodal.WavProbe, Multimodal.PpmProbe)) {
         val m = p.probe(bytes) // must not throw
         m.width.foreach(w => assert(w > 0))
         m.height.foreach(h => assert(h > 0))
@@ -103,10 +72,6 @@ class MediaFuzzSpec extends AnyFunSuite {
       for (ms <- Seq(0L, 40L, 999999L)) {
         assert(Multimodal.Y4mFrameCodec.decodeFrame(bytes, ms, 4).length === 4)
         assert(new Multimodal.WavFrameCodec(500L).decodeFrame(bytes, ms, 4).length === 4)
-        assert(Multimodal.AviFrameCodec.decodeFrame(bytes, ms, 4).length === 4)
-        assert(Multimodal.Mp4FrameCodec.decodeFrame(bytes, ms, 4).length === 4)
-        assert(Multimodal.MkvFrameCodec.decodeFrame(bytes, ms, 4).length === 4)
-        assert(Multimodal.FlacFrameCodec.decodeFrame(bytes, ms, 4).length === 4)
         assert(new Multimodal.SniffFrameCodec().decodeFrame(bytes, ms, 4).length === 4)
       }
       assert(Multimodal.PpmCodec.decode(
@@ -156,6 +121,14 @@ class MediaFuzzSpec extends AnyFunSuite {
       frame ++ frame
     assert(Multimodal.Y4mProbe.probe(small).duration_ms ===
       Some(2L * 1000L * denHuge))
+    // a 10-digit PPM width is malformed too: 4294967298 wraps a 32-bit
+    // accumulator to 2, which would make the 6 raster bytes a "valid"
+    // 2x1 image
+    val ppmWrap = "P6\n4294967298 1\n255\n".getBytes("US-ASCII") ++
+      Array.fill(6)(0xff.toByte)
+    assert(Multimodal.PpmProbe.probe(ppmWrap) ===
+      Multimodal.ProbedMeta(0L, None, None, None, None))
+    assert(Multimodal.PpmCodec.decode(ppmWrap, 2).toSeq === Seq(0f, 0f))
   }
 
   test("malformed F tag and truncated final frame: probe poisons, codec clamps") {
@@ -185,6 +158,5 @@ class MediaFuzzSpec extends AnyFunSuite {
     assert(Multimodal.SniffProbe.probe(y4m).format === Some("y4m"))
     assert(Multimodal.SniffProbe.probe(wav).format === Some("wav"))
     assert(Multimodal.SniffProbe.probe(ppm).format === Some("ppm"))
-    assert(Multimodal.SniffProbe.probe(avi).format === Some("avi"))
   }
 }

@@ -1,14 +1,13 @@
 package graft.multimodal
 
 import graft.SparkSpec
-import org.apache.spark.sql.functions._
 
 /** [[Multimodal.mediaNearDupPairs]] — the perceptual-dedup composition
   * (codec decode plane → SRP bucket prefilter → exact-cosine confirm).
   * The oracle gate (q171) pins the stub-codec math against DuckDB; this
   * spec pins what the oracle cannot: the REAL-codec path end to end
-  * (PPM pixels in, near-dup pair out), the bucket-cap guard, and
-  * persistence parity.
+  * (PPM pixels in, near-dup pair out), the bucket-cap guard, and the
+  * feature-plane checkpoint lifecycle.
   */
 class MediaNearDupSpec extends SparkSpec {
   import spark.implicits._
@@ -73,15 +72,6 @@ class MediaNearDupSpec extends SparkSpec {
       s"expected exactly the perceptual near-dup pair, got $pairs")
   }
 
-  test("persistFeatures off produces the identical pair set") {
-    val base = (0L until 6L).map(i => i -> s"media-payload-$i".getBytes("UTF-8"))
-    val media = mediaOf(base :+ (100L -> base.head._2))
-    def run(persist: Boolean) = Multimodal.mediaNearDupPairs(media,
-        dims = 16, planes = 8, threshold = 0.9, persistFeatures = persist)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(run(true) === run(false))
-  }
-
   test("mediaNearDupAgainst: corpus dups drop, novel rows keep, batch-internal dups both keep") {
     val corpus = mediaOf((0L until 5L).map(i =>
       i -> s"corpus-item-$i".getBytes("UTF-8")))
@@ -110,206 +100,55 @@ class MediaNearDupSpec extends SparkSpec {
       "capped-away corpus bucket: the incoming row must be KEPT, not dropped")
   }
 
-  private def mediaWithDuration(rows: Seq[(Long, Array[Byte], Long)]) = {
-    val df = rows.map { case (id, bytes, dur) =>
-      (id, "video", bytes, ("clip", 640, 480, dur))
-    }.toDF("media_id", "modality", "content", "meta")
-    df.withColumn("meta",
-        col("meta").cast(Multimodal.mediaSchema("meta").dataType))
-      .repartition(2)
-  }
-
-  test("mediaFrameNearDupPairs: a clip embedded in a longer item pairs at full containment") {
-    val x = "shared-footage-payload".getBytes("UTF-8")
-    val y = "unrelated-payload".getBytes("UTF-8")
-    val media = mediaWithDuration(Seq(
-      (1L, x, 10000L), // frames at 0, 2500, 5000, 7500, 10000
-      (2L, x, 2500L), // the CLIP: frames 0, 2500 — a prefix of item 1's
-      (3L, y, 10000L))) // same shape, different footage
-    val out = Multimodal.mediaFrameNearDupPairs(media, everyMs = 2500)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-        r.getLong(3), r.getLong(4), r.getLong(5)))
-    assert(out.toSeq === Seq((1L, 2L, 2L, 5L, 2L, 1000000L)),
-      s"expected the clip pair at containment 1e6 ppm, got ${out.toSeq}")
-  }
-
-  test("mediaFrameNearDupPairs: corpus-wide boilerplate frames drop under the cap") {
-    val boiler = "intro-card-every-broadcast".getBytes("UTF-8")
-    val a = "clip-a-footage".getBytes("UTF-8")
-    val media = mediaWithDuration(
-      (0L until 10L).map(i => (i, boiler, 5000L)) ++
-        Seq((50L, a, 5000L), (51L, a, 2500L)))
-    val pairs = Multimodal.mediaFrameNearDupPairs(media, everyMs = 2500,
-        maxBucketSize = Some(5))
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(pairs === Set((50L, 51L)),
-      s"boilerplate frame buckets (10 media) must drop at cap 5, got $pairs")
-  }
-
-  test("mediaFrameNearDupPairs: REAL codec (Y4M) — a shared frame payload pairs two streams") {
-    def y4mFrame(b: Int): Array[Byte] =
-      "FRAME\n".getBytes("US-ASCII") ++ Array.fill(16)(b.toByte) ++
-        Array.fill(8)(0x80.toByte)
-    val hdr = "YUV4MPEG2 W4 H4 F25:1 C420\n".getBytes("US-ASCII")
-    val long = hdr ++ y4mFrame(0x20) ++ y4mFrame(0xE0) // two distinct frames
-    val clip = hdr ++ y4mFrame(0x20) // just the first
-    val media = mediaWithDuration(Seq((1L, long, 40L), (2L, clip, 0L)))
-    val out = Multimodal.mediaFrameNearDupPairs(media, everyMs = 40,
-        codec = Multimodal.Y4mFrameCodec)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(5)))
-    assert(out.toSeq === Seq((1L, 2L, 1000000L)),
-      s"the shared first frame must pair the streams, got ${out.toSeq}")
-  }
-
   test("checkpoint lifecycle: feature-plane blocks release cleanly, caller inputs survive") {
     val sc = spark.sparkContext
     val base = (0L until 6L).map(i => i -> s"media-payload-$i".getBytes("UTF-8"))
 
-    // pair generator: checkpoint exists while the result is live, release
-    // after the consumer materializes leaves NO leaked blocks
+    // pair generator outside any scope: the feature checkpoint backs the
+    // result and passes to the caller, who frees it once the result
+    // materializes — leaving NO blocks behind
     val before = sc.getPersistentRDDs.keySet
     val media = mediaOf(base :+ (100L -> base.head._2))
     val pairs = Multimodal.mediaNearDupPairs(media, dims = 16, planes = 8,
       threshold = 0.9)
     assert(pairs.count() >= 1L)
     assert((sc.getPersistentRDDs.keySet -- before).nonEmpty,
-      "persistFeatures must actually checkpoint the feature plane")
-    graft.core.Checkpoints.releaseExcept(pairs, media)
+      "the feature plane must actually be checkpointed")
+    graft.core.Checkpoints.release(pairs)
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "released feature plane must leave no persistent blocks behind")
 
-    // composed nightly pipeline (against + frame pairs): same accounting
+    // inside a scope that keeps only a count, the scope frees both
+    // against-side feature planes on exit
     val before2 = sc.getPersistentRDDs.keySet
     val corpus = mediaOf((0L until 5L).map(i =>
       i -> s"corpus-item-$i".getBytes("UTF-8")))
     val incoming = mediaOf(Seq(
       100L -> "corpus-item-2".getBytes("UTF-8"),
       101L -> "novel-payload-a".getBytes("UTF-8")))
-    val kept = Multimodal.mediaNearDupAgainst(incoming, corpus,
-      dims = 16, planes = 8, threshold = 0.9)
-    assert(kept.count() === 1L)
-    graft.core.Checkpoints.releaseExcept(kept, incoming, corpus)
+    val kept = graft.core.Checkpoints.scoped {
+      Multimodal.mediaNearDupAgainst(incoming, corpus,
+        dims = 16, planes = 8, threshold = 0.9).count()
+    }
+    assert(kept === 1L)
     assert((sc.getPersistentRDDs.keySet -- before2).isEmpty,
       "both against-side feature planes must release")
 
-    // caller-owned checkpoint-backed input: releaseExcept must NOT free it
+    // caller-owned checkpoint-backed input: the scope never frees it
     val media2 = mediaOf(base).localCheckpoint(true)
     val ckptIds = media2.queryExecution.analyzed.collectLeaves().collect {
       case l: org.apache.spark.sql.execution.LogicalRDD => l.rdd.id
     }.toSet
-    val pairs2 = Multimodal.mediaNearDupPairs(media2, dims = 16, planes = 8)
-    pairs2.count()
-    graft.core.Checkpoints.releaseExcept(pairs2, media2)
+    val before3 = sc.getPersistentRDDs.keySet
+    graft.core.Checkpoints.scoped {
+      Multimodal.mediaNearDupPairs(media2, dims = 16, planes = 8).count()
+    }
+    assert((sc.getPersistentRDDs.keySet -- before3).isEmpty)
     assert(ckptIds.subsetOf(sc.getPersistentRDDs.keySet),
-      "the caller's own checkpoint must survive the scoped release")
+      "the caller's own checkpoint must survive the scope")
     assert(media2.count() === base.size.toLong,
-      "the caller's frame must still be readable after release")
-    media2.unpersist()
+      "the caller's frame must still be readable after the scope")
     graft.core.Checkpoints.release(media2)
-  }
-
-  test("bucketed feature table: byte parity with the direct path, Exchange-free corpus side") {
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1") // force SMJ
-    try {
-      val corpus = mediaOf((0L until 8L).map(i =>
-        i -> s"corpus-item-$i".getBytes("UTF-8")))
-      val incoming = mediaOf(Seq(
-        100L -> "corpus-item-2".getBytes("UTF-8"), // dup -> drops
-        101L -> "novel-payload-a".getBytes("UTF-8"),
-        102L -> "corpus-item-5".getBytes("UTF-8"), // dup -> drops
-        103L -> "novel-payload-b".getBytes("UTF-8")))
-      Multimodal.writeMediaFeatureTable(corpus, "graft_media_feat",
-        dims = 16, planes = 8, buckets = 4)
-
-      def ids(df: org.apache.spark.sql.DataFrame): Set[Long] =
-        df.select("media_id").collect().map(_.getLong(0)).toSet
-      val direct = Multimodal.mediaNearDupAgainst(incoming, corpus,
-        dims = 16, planes = 8, threshold = 0.9)
-      val viaTable = Multimodal.mediaNearDupAgainstTable(incoming, "graft_media_feat",
-        dims = 16, planes = 8, threshold = 0.9)
-      assert(ids(viaTable) === ids(direct))
-      assert(ids(viaTable) === Set(101L, 103L))
-
-      // the corpus side reads the bucketed layout in place: the ONLY
-      // bucket-keyed Exchange in the match plan is the incoming side
-      // shuffling into the corpus's bucketing
-      val plan = viaTable.queryExecution.executedPlan.toString
-      assert("Exchange hashpartitioning\\(bucket".r.findAllMatchIn(plan).length <= 1,
-        plan)
-      assert(plan.contains("SelectedBucketsCount"), plan)
-
-      // cap semantics identical through the table (conservative keep)
-      val boiler = "boilerplate".getBytes("UTF-8")
-      val bCorpus = mediaOf((0L until 20L).map(i => i -> boiler))
-      val bIn = mediaOf(Seq(100L -> boiler))
-      Multimodal.writeMediaFeatureTable(bCorpus, "graft_media_feat_b",
-        dims = 16, planes = 8, buckets = 4)
-      assert(Multimodal.mediaNearDupAgainstTable(bIn, "graft_media_feat_b",
-        threshold = 0.9, maxBucketSize = None).count() === 0L)
-      assert(Multimodal.mediaNearDupAgainstTable(bIn, "graft_media_feat_b",
-        threshold = 0.9, maxBucketSize = Some(10)).count() === 1L)
-      // and the capped census + semi join read the same bucketed layout:
-      // still at most the one incoming-side Exchange
-      val cappedPlan = Multimodal.mediaNearDupAgainstTable(bIn, "graft_media_feat_b",
-          threshold = 0.9, maxBucketSize = Some(10))
-        .queryExecution.executedPlan.toString
-      assert("Exchange hashpartitioning\\(bucket".r.findAllMatchIn(cappedPlan).length <= 1,
-        cappedPlan)
-    } finally {
-      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-      spark.sql("DROP TABLE IF EXISTS graft_media_feat")
-      spark.sql("DROP TABLE IF EXISTS graft_media_feat_b")
-    }
-  }
-
-  test("feature-table metadata guard: mismatch and missing sidecar fail loudly") {
-    val corpus = mediaOf((0L until 6L).map(i =>
-      i -> s"meta-corpus-$i".getBytes("UTF-8")))
-    val incoming = mediaOf(Seq(
-      100L -> "meta-corpus-2".getBytes("UTF-8"),
-      101L -> "meta-novel".getBytes("UTF-8")))
-    try {
-      Multimodal.writeMediaFeatureTable(corpus, "graft_media_feat_m",
-        dims = 16, planes = 8, buckets = 4, writeManifest = true)
-      // the sidecar exists inside the table dir and records the knobs
-      assert(Multimodal.readFeatureTableMeta(spark, "graft_media_feat_m")
-        === Some((16, 8, 4)))
-      // matched reader: works (and still dedups — parity with the
-      // pre-guard behavior held by the byte-parity test above)
-      assert(Multimodal.mediaNearDupAgainstTable(incoming, "graft_media_feat_m",
-        dims = 16, planes = 8, threshold = 0.9)
-        .select("media_id").collect().map(_.getLong(0)).toSet === Set(101L))
-      // mismatched dims/planes: LOUD failure, not a silent no-op dedup
-      val eDims = intercept[IllegalArgumentException] {
-        Multimodal.mediaNearDupAgainstTable(incoming, "graft_media_feat_m",
-          dims = 8, planes = 8)
-      }
-      assert(eDims.getMessage.contains("do not match"))
-      val ePlanes = intercept[IllegalArgumentException] {
-        Multimodal.mediaNearDupAgainstTable(incoming, "graft_media_feat_m",
-          dims = 16, planes = 4)
-      }
-      assert(ePlanes.getMessage.contains("do not match"))
-      // a table without the sidecar (pre-contract writer) also fails loudly
-      val loc = spark.sql("DESCRIBE TABLE EXTENDED graft_media_feat_m")
-        .where(org.apache.spark.sql.functions.col("col_name") === "Location")
-        .head().getString(1)
-      val tableDir = new java.net.URI(loc).getPath
-      // writeManifest = true: the table is audit-ready for transfer/restore
-      assert(new java.io.File(tableDir, "_manifest.jsonl").exists())
-      assert(graft.io.Manifest.verifyParquetDir(spark, tableDir)
-        .where(org.apache.spark.sql.functions.col("status") =!= "ok")
-        .count() === 0L)
-      val metaFile = new java.io.File(tableDir, "_meta.jsonl")
-      assert(metaFile.exists())
-      assert(metaFile.delete())
-      val eNone = intercept[IllegalArgumentException] {
-        Multimodal.mediaNearDupAgainstTable(incoming, "graft_media_feat_m")
-      }
-      assert(eNone.getMessage.contains("_meta.jsonl"))
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS graft_media_feat_m")
-    }
   }
 
   test("guards reject non-positive knobs") {

@@ -71,46 +71,6 @@ class MultimodalSpec extends SparkSpec {
     assert(stub.map(_.n_bytes).toSeq === out.map(_.n_bytes).toSeq)
   }
 
-  test("ImageIO codec decodes PNG and JPEG through the same boundary") {
-    val spark2 = spark
-    import spark2.implicits._
-    def encode(fmt: String, pixels: Array[Int], w: Int, h: Int): Array[Byte] = {
-      val img = new java.awt.image.BufferedImage(
-        w, h, java.awt.image.BufferedImage.TYPE_INT_RGB)
-      for (y <- 0 until h; x <- 0 until w) img.setRGB(x, y, pixels(y * w + x))
-      val bos = new java.io.ByteArrayOutputStream()
-      javax.imageio.ImageIO.write(img, fmt, bos)
-      bos.toByteArray
-    }
-    val whitePng = encode("png", Array.fill(4)(0xffffff), 2, 2)
-    val blackJpg = encode("jpg", Array.fill(4)(0x000000), 2, 2)
-    // left half white, right half black -> block means 1.0 and 0.0
-    val splitPng = encode("png", Array(0xffffff, 0x000000, 0xffffff, 0x000000), 2, 2)
-    val junk = "definitely not an image".getBytes("US-ASCII")
-    val media = Seq(
-      (0L, "image", whitePng), (1L, "image", blackJpg),
-      (2L, "image", splitPng), (3L, "image", junk)
-    ).toDF("media_id", "modality", "content")
-    val out = Multimodal.extractFeatures(media, dims = 2, codec = Multimodal.ImageIoCodec)
-      .collect().sortBy(_.media_id)
-    assert(out(0).embedding.forall(x => math.abs(x - 1.0f) < 1e-6f))
-    // JPEG is lossy: flat black stays black within quantization error
-    assert(out(1).embedding.forall(x => x < 0.02f))
-    // raster order: dims=2 splits the 4 pixels into rows... row 0 is
-    // (white, black), row 1 is (white, black) -> each block mean is 0.5
-    assert(out(2).embedding.forall(x => math.abs(x - 0.5f) < 1e-6f))
-    assert(out(3).embedding.toSeq === Seq(0.0f, 0.0f)) // poison row policy
-    // the same pixels through the PPM codec produce the same embedding:
-    // the feature contract is codec-independent
-    def ppm(pixels: Array[Int]): Array[Byte] =
-      "P6\n2 2\n255\n".getBytes("US-ASCII") ++ pixels.flatMap(p =>
-        Array(((p >> 16) & 0xff).toByte, ((p >> 8) & 0xff).toByte, (p & 0xff).toByte))
-    val viaPpm = Multimodal.PpmCodec.decode(
-      ppm(Array(0xffffff, 0x000000, 0xffffff, 0x000000)), 2)
-    val viaPng = Multimodal.ImageIoCodec.decode(splitPng, 2)
-    assert(viaPpm.toSeq === viaPng.toSeq)
-  }
-
   test("PPM codec handles 2-byte samples (maxval > 255) and rejects maxval > 65535") {
     // valid per the Netpbm spec: maxval in (255, 65536) means 2-byte
     // big-endian samples. 1x1 image, all channels at full scale 65535.
@@ -188,6 +148,25 @@ class MultimodalSpec extends SparkSpec {
     // truncated data chunk (declared longer than the bytes): poison
     val truncated = loud.dropRight(10)
     assert(Multimodal.WavCodec.decode(truncated, 2).toSeq === Seq(0.0f, 0.0f))
+    // the codecs decode integer PCM at 8/16 bits only; the probe shares
+    // their chunk walk but reports any format's duration: 24-bit PCM
+    // and IEEE-float (format 3) decode to zero yet probe 1000 ms
+    def wavOf(format: Int, bits: Int): Array[Byte] = {
+      val data = Array.fill(8000 * bits / 8)(0x40.toByte) // 1 s mono @ 8 kHz
+      "RIFF".getBytes("US-ASCII") ++ le32(4 + 24 + 8 + data.length) ++
+        "WAVE".getBytes("US-ASCII") ++
+        "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(format) ++ le16(1) ++
+        le32(8000) ++ le32(8000 * bits / 8) ++ le16(bits / 8) ++ le16(bits) ++
+        "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
+    }
+    for (bytes <- Seq(wavOf(1, 24), wavOf(3, 32))) {
+      assert(Multimodal.WavCodec.decode(bytes, 2).toSeq === Seq(0.0f, 0.0f))
+      assert(new Multimodal.WavFrameCodec(500L).decodeFrame(bytes, 0L, 2).toSeq ===
+        Seq(0.0f, 0.0f))
+      assert(Multimodal.WavProbe.probe(bytes) ===
+        Multimodal.ProbedMeta(0L, Some("wav"), None, None, Some(1000L)))
+    }
+    assert(Multimodal.WavCodec.decode(wavOf(1, 16), 1)(0) > 0f)
   }
 
   test("frame features generate in-partition; WAV frame codec slices time") {
@@ -286,7 +265,7 @@ class MultimodalSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     // the q136-family fixtures: a 3-frame 4x4 y4m at 25 fps (120 ms), a
-    // 2 s 8 kHz mono PCM16 wav, a 3x2 ppm, and junk
+    // 2 s 8 kHz mono PCM16 wav, a 3x2 ppm, and junk (below)
     def frame(l: Int): Array[Byte] =
       "FRAME\n".getBytes("US-ASCII") ++ Array.fill(16)(l.toByte) ++ Array.fill(8)(0x80.toByte)
     val y4m = "YUV4MPEG2 W4 H4 F25:1 C420\n".getBytes("US-ASCII") ++
@@ -301,14 +280,30 @@ class MultimodalSpec extends SparkSpec {
       le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
       "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
     val ppm = ("P6\n# c\n3 2\n255\n" + "x" * 18).getBytes("ISO-8859-1")
+    // each kept magic with a malformed body poisons through the sniff
+    // dispatch; so do magics no kept probe reads (FLAC, RIFF/AVI)
+    val badY4m = "YUV4MPEG2 W4 F25:1\n".getBytes("US-ASCII") // no H tag
+    val badWav = "RIFF".getBytes("US-ASCII") ++ le32(100) ++
+      "WAVE".getBytes("US-ASCII") ++ "data".getBytes("US-ASCII") ++ le32(999)
+    val badPpm = "P6\n0 2\n255\n".getBytes("US-ASCII")
+    val flac = "fLaC".getBytes("US-ASCII") ++ Array.fill(40)(1.toByte)
+    val avi = "RIFF".getBytes("US-ASCII") ++ le32(4) ++ "AVI ".getBytes("US-ASCII")
     val media = Seq(
-      (1L, y4m), (2L, wav), (3L, ppm), (4L, "garbage".getBytes("US-ASCII")))
+      (1L, y4m), (2L, wav), (3L, ppm), (4L, "garbage".getBytes("US-ASCII")),
+      (5L, badY4m), (6L, badWav), (7L, badPpm), (8L, flac), (9L, avi))
       .toDF("media_id", "content")
     val out = Multimodal.probeMeta(media).collect().sortBy(_.media_id)
     assert(out(0) === Multimodal.ProbedMeta(1L, Some("y4m"), Some(4), Some(4), Some(120L)))
     assert(out(1) === Multimodal.ProbedMeta(2L, Some("wav"), None, None, Some(2000L)))
     assert(out(2) === Multimodal.ProbedMeta(3L, Some("ppm"), Some(3), Some(2), None))
-    assert(out(3) === Multimodal.ProbedMeta(4L, None, None, None, None))
+    for (i <- 3 until 9)
+      assert(out(i) === Multimodal.ProbedMeta(i + 1L, None, None, None, None))
+    // the sniff answers exactly what the format's own probe answers
+    for ((bytes, direct) <- Seq[(Array[Byte], Multimodal.MediaProbe)](
+        (y4m, Multimodal.Y4mProbe), (badY4m, Multimodal.Y4mProbe),
+        (wav, Multimodal.WavProbe), (badWav, Multimodal.WavProbe),
+        (ppm, Multimodal.PpmProbe), (badPpm, Multimodal.PpmProbe)))
+      assert(Multimodal.SniffProbe.probe(bytes) === direct.probe(bytes))
     // the probed duration drives the frame plan end to end: 120 ms at
     // everyMs=40 -> frames 0/40/80/120 (120 clamps to the last frame)
     val probed = Multimodal.probeMeta(media).toDF()
@@ -327,70 +322,46 @@ class MultimodalSpec extends SparkSpec {
     assert(frames(2).embedding(0) === frames(3).embedding(0)) // clamp
   }
 
-  test("probeMeta sniffs the round-14 formats; Mp4FrameCodec drives the frame plan") {
-    val spark2 = spark
-    import spark2.implicits._
-    val mp4 = Mp4Fixtures.seekableFile(4, 2, 10L,
-      Seq(10, 60, 110).map(v => Array.fill(8)(v.toByte)), Seq(2, 1),
-      Seq((3L, 1L)))
-    val media = Seq(
-      (1L, mp4),
-      (2L, MkvFixtures.mkv),
-      (3L, AudioFixtures.mp3),
-      (4L, AudioFixtures.flacTenSec),
-      (5L, AudioFixtures.oggVorbis),
-      (6L, ImageFixtures.pngFx),
-      (7L, ImageFixtures.jpegFx),
-      (8L, ImageFixtures.gifFx),
-      (9L, ImageFixtures.webpFx)
-    ).toDF("media_id", "content").repartition(2)
-    val out = Multimodal.probeMeta(media).collect().sortBy(_.media_id)
-    assert(out.map(_.format) === Array(Some("mp4"), Some("mkv"),
-      Some("mp3"), Some("flac"), Some("ogg"),
-      Some("png"), Some("jpeg"), Some("gif"), Some("webp")))
-    assert(out(3).duration_ms === Some(10000L)) // flac STREAMINFO, exact
-    assert(out(4).duration_ms === Some(10000L)) // ogg last-page granule
-    assert(out(5).width === Some(640) && out(6).width === Some(800))
-    assert(out(7).height === Some(24) && out(8).height === Some(768))
-    // the MP4 probe's duration drives the frame plan through the MP4
-    // codec end to end: 3 samples at 10 units/s timescale = 300 ms
-    val withMeta = media.where(col("media_id") === 1L)
-      .select(col("media_id"), col("content"),
-        struct(lit("mp4").as("format"), lit(4).as("width"), lit(2).as("height"),
-          lit(300L).as("duration_ms")).as("meta"))
-    val frames = Multimodal.extractFrameFeatures(withMeta, everyMs = 100L,
-        dims = 1, codec = Multimodal.Mp4FrameCodec)
-      .collect().sortBy(_.frame_ms)
-    assert(frames.map(_.frame_ms).toSeq === Seq(0L, 100L, 200L, 300L))
-    assert(math.abs(frames(0).embedding(0) - 10 / 255f) < 1e-6f)
-    assert(math.abs(frames(1).embedding(0) - 60 / 255f) < 1e-6f)
-    assert(math.abs(frames(2).embedding(0) - 110 / 255f) < 1e-6f)
-    assert(frames(2).embedding(0) === frames(3).embedding(0)) // clamp
-  }
-
   test("SniffFrameCodec routes untagged bytes to the right container codec") {
-    val mp4 = Mp4Fixtures.seekableFile(4, 2, 10L,
-      Seq(10, 60).map(v => Array.fill(8)(v.toByte)), Seq(2), Seq((2L, 1L)))
-    val mkv = MkvFixtures.seekableMkv(1000000L,
-      MkvFixtures.el(0x1654AE6BL, MkvFixtures.videoTrackNum(4, 2, 1)), Seq(
-        0L -> MkvFixtures.cluster(0L,
-          MkvFixtures.simpleBlock(1, 0, Array.fill(8)(0x30.toByte)))))
-    val avi = AviFixtures.avi(4, 4, 100000, Seq(
-      "db" -> AviFixtures.rawDb(Array.fill(16)(0x70.toByte), 4, 4)))
+    def le16(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte)
+    def le32(v: Int) = Array((v & 0xff).toByte, ((v >> 8) & 0xff).toByte,
+      ((v >> 16) & 0xff).toByte, ((v >> 24) & 0xff).toByte)
     val y4m = ("YUV4MPEG2 W4 H4 F25:1 C420\nFRAME\n").getBytes("US-ASCII") ++
-      Array.fill(16)(0x50.toByte) ++ Array.fill(8)(0x80.toByte)
-    val sniff = new Multimodal.SniffFrameCodec()
-    // each fixture must decode IDENTICALLY to its direct codec
+      Array.fill(16)(0x50.toByte) ++ Array.fill(8)(0x80.toByte) ++
+      "FRAME\n".getBytes("US-ASCII") ++
+      Array.fill(16)(0xD0.toByte) ++ Array.fill(8)(0x80.toByte)
+    // 8000 Hz mono PCM16, 125 ms: 62.5 ms full-scale, then silence
+    val data = Array.tabulate(2000)(i =>
+      if (i < 1000) (if (i % 2 == 0) 0x00 else 0x80).toByte else 0.toByte)
+    val wav = "RIFF".getBytes("US-ASCII") ++ le32(4 + 24 + 8 + data.length) ++
+      "WAVE".getBytes("US-ASCII") ++
+      "fmt ".getBytes("US-ASCII") ++ le32(16) ++ le16(1) ++ le16(1) ++
+      le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
+      "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
+    val ppm = ("P6\n2 2\n255\n" + "\u00ff" * 6 + "\u0000" * 6).getBytes("ISO-8859-1")
+    val sniff = new Multimodal.SniffFrameCodec(wavWindowMs = 100L)
+    val wavDirect = new Multimodal.WavFrameCodec(windowMs = 100L)
+    // each fixture decodes IDENTICALLY to its direct codec, whole and
+    // per frame; a PPM is its own single frame at every offset
     for ((bytes, direct) <- Seq[(Array[Byte], Multimodal.FrameCodec)](
-        (mp4, Multimodal.Mp4FrameCodec), (mkv, Multimodal.MkvFrameCodec),
-        (avi, Multimodal.AviFrameCodec), (y4m, Multimodal.Y4mFrameCodec)))
-      for (ms <- Seq(0L, 100L))
+        (y4m, Multimodal.Y4mFrameCodec), (wav, wavDirect))) {
+      assert(sniff.decode(bytes, 2).toSeq === direct.decode(bytes, 2).toSeq)
+      for (ms <- Seq(0L, 40L, 200L))
         assert(sniff.decodeFrame(bytes, ms, 2).toSeq ===
           direct.decodeFrame(bytes, ms, 2).toSeq)
-    // unrecognized bytes poison to zero; PPM still whole-decodes
-    assert(sniff.decodeFrame("garbage".getBytes, 0L, 3).toSeq === Seq(0f, 0f, 0f))
-    val ppm = ("P6\n2 2\n255\n" + "ÿ" * 12).getBytes("ISO-8859-1")
-    assert(sniff.decode(ppm, 1).toSeq === Multimodal.PpmCodec.decode(ppm, 1).toSeq)
+    }
+    assert(sniff.decodeFrame(y4m, 0L, 1).toSeq !== sniff.decodeFrame(y4m, 40L, 1).toSeq)
+    assert(sniff.decodeFrame(wav, 0L, 1)(0) > 0f && sniff.decodeFrame(wav, 200L, 1)(0) === 0f)
+    val ppmWhole = Multimodal.PpmCodec.decode(ppm, 2)
+    assert(ppmWhole.exists(_ != 0f))
+    assert(sniff.decode(ppm, 2).toSeq === ppmWhole.toSeq)
+    for (ms <- Seq(0L, 40L, 200L))
+      assert(sniff.decodeFrame(ppm, ms, 2).toSeq === ppmWhole.toSeq)
+    // unrecognized bytes poison to zero
+    for (junk <- Seq("garbage".getBytes("US-ASCII"), Array.emptyByteArray, null)) {
+      assert(sniff.decode(junk, 3).toSeq === Seq(0f, 0f, 0f))
+      assert(sniff.decodeFrame(junk, 0L, 3).toSeq === Seq(0f, 0f, 0f))
+    }
   }
 
   test("frame sampling derives rows from metadata only") {
