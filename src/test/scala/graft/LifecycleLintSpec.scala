@@ -26,17 +26,27 @@ class LifecycleLintSpec extends AnyFunSuite {
     if (t.startsWith("*") || t.startsWith("/*")) "" else t.split("//", 2)(0)
   }
 
-  test("ops/ext, pipeline and multimodal materialize only through the Checkpoints scope") {
-    val files = Seq("src/main/scala/graft/ops/ext", "src/main/scala/graft/pipeline",
-        "src/main/scala/graft/multimodal")
+  /** Every banned call under `dirs` (at least `minFiles` sources), as
+    * `file:line: code`. */
+  private def hits(minFiles: Int, dirs: String*): Seq[String] = {
+    val files = dirs
       .flatMap(d => Files.walk(Paths.get(d)).iterator().asScala)
       .filter(_.toString.endsWith(".scala"))
-    assert(files.size >= 10, s"found only ${files.size} sources")
-    val hits = for {
+    assert(files.size >= minFiles, s"found only ${files.size} sources")
+    for {
       f <- files
       (line, n) <- Files.readAllLines(f).asScala.zipWithIndex
       if Banned.exists(_.findFirstIn(code(line)).isDefined)
     } yield s"$f:${n + 1}: ${line.trim}"
-    assert(hits.isEmpty, hits.mkString("\n", "\n", ""))
+  }
+
+  test("ops/ext and pipeline materialize only through the Checkpoints scope") {
+    val h = hits(10, "src/main/scala/graft/ops/ext", "src/main/scala/graft/pipeline")
+    assert(h.isEmpty, h.mkString("\n", "\n", ""))
+  }
+
+  test("multimodal materializes only through the Checkpoints scope") {
+    val h = hits(1, "src/main/scala/graft/multimodal")
+    assert(h.isEmpty, h.mkString("\n", "\n", ""))
   }
 }

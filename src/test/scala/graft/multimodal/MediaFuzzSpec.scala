@@ -29,6 +29,10 @@ class MediaFuzzSpec extends AnyFunSuite {
     le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
     "data".getBytes("US-ASCII") ++ le32(64) ++ Array.fill(64)(7.toByte)
   private val ppm = ("P6\n4 2\n255\n" + "x" * 24).getBytes("ISO-8859-1")
+  private val mp4 = Mp4Fixtures.mp4
+  private val mp4Seek = Mp4Fixtures.seekableFile(4, 2, 10L,
+    Seq(0x10, 0xE0, 0x40).map(v => Array.fill(8)(v.toByte)), Seq(2, 1),
+    Seq((3L, 1L)))
 
   private val garbage: Gen[Array[Byte]] =
     Gen.choose(0, 200).flatMap(n => Gen.listOfN(n, Gen.choose(-128, 127)))
@@ -52,13 +56,13 @@ class MediaFuzzSpec extends AnyFunSuite {
 
   private val cases: Seq[Array[Byte]] =
     samples(garbage, fuzzN) ++
-      Seq(y4m, wav, ppm).flatMap(b => samples(mangled(b), fuzzN, seed = 7L)) ++
+      Seq(y4m, wav, ppm, mp4, mp4Seek).flatMap(b => samples(mangled(b), fuzzN, seed = 7L)) ++
       Seq(Array.emptyByteArray, null)
 
   test("fuzz: probes never throw; fields are sane when present") {
     cases.foreach { bytes =>
       for (p <- Seq(Multimodal.SniffProbe, Multimodal.Y4mProbe,
-          Multimodal.WavProbe, Multimodal.PpmProbe)) {
+          Multimodal.WavProbe, Multimodal.PpmProbe, Multimodal.Mp4Probe)) {
         val m = p.probe(bytes) // must not throw
         m.width.foreach(w => assert(w > 0))
         m.height.foreach(h => assert(h > 0))
@@ -72,6 +76,7 @@ class MediaFuzzSpec extends AnyFunSuite {
       for (ms <- Seq(0L, 40L, 999999L)) {
         assert(Multimodal.Y4mFrameCodec.decodeFrame(bytes, ms, 4).length === 4)
         assert(new Multimodal.WavFrameCodec(500L).decodeFrame(bytes, ms, 4).length === 4)
+        assert(Multimodal.Mp4FrameCodec.decodeFrame(bytes, ms, 4).length === 4)
         assert(new Multimodal.SniffFrameCodec().decodeFrame(bytes, ms, 4).length === 4)
       }
       assert(Multimodal.PpmCodec.decode(

@@ -1,6 +1,7 @@
 package graft.multimodal
 
 import graft.SparkSpec
+import org.apache.spark.sql.functions._
 
 /** [[Multimodal.mediaNearDupPairs]] — the perceptual-dedup composition
   * (codec decode plane → SRP bucket prefilter → exact-cosine confirm).
@@ -100,6 +101,57 @@ class MediaNearDupSpec extends SparkSpec {
       "capped-away corpus bucket: the incoming row must be KEPT, not dropped")
   }
 
+  private def mediaWithDuration(rows: Seq[(Long, Array[Byte], Long)]) = {
+    val df = rows.map { case (id, bytes, dur) =>
+      (id, "video", bytes, ("clip", 640, 480, dur))
+    }.toDF("media_id", "modality", "content", "meta")
+    df.withColumn("meta",
+        col("meta").cast(Multimodal.mediaSchema("meta").dataType))
+      .repartition(2)
+  }
+
+  test("mediaFrameNearDupPairs: a clip embedded in a longer item pairs at full containment") {
+    val x = "shared-footage-payload".getBytes("UTF-8")
+    val y = "unrelated-payload".getBytes("UTF-8")
+    val media = mediaWithDuration(Seq(
+      (1L, x, 10000L), // frames at 0, 2500, 5000, 7500, 10000
+      (2L, x, 2500L), // the CLIP: frames 0, 2500 — a prefix of item 1's
+      (3L, y, 10000L))) // same shape, different footage
+    val out = Multimodal.mediaFrameNearDupPairs(media, everyMs = 2500)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3), r.getLong(4), r.getLong(5)))
+    assert(out.toSeq === Seq((1L, 2L, 2L, 5L, 2L, 1000000L)),
+      s"expected the clip pair at containment 1e6 ppm, got ${out.toSeq}")
+  }
+
+  test("mediaFrameNearDupPairs: corpus-wide boilerplate frames drop under the cap") {
+    val boiler = "intro-card-every-broadcast".getBytes("UTF-8")
+    val a = "clip-a-footage".getBytes("UTF-8")
+    val media = mediaWithDuration(
+      (0L until 10L).map(i => (i, boiler, 5000L)) ++
+        Seq((50L, a, 5000L), (51L, a, 2500L)))
+    val pairs = Multimodal.mediaFrameNearDupPairs(media, everyMs = 2500,
+        maxBucketSize = Some(5))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs === Set((50L, 51L)),
+      s"boilerplate frame buckets (10 media) must drop at cap 5, got $pairs")
+  }
+
+  test("mediaFrameNearDupPairs: REAL codec (Y4M) — a shared frame payload pairs two streams") {
+    def y4mFrame(b: Int): Array[Byte] =
+      "FRAME\n".getBytes("US-ASCII") ++ Array.fill(16)(b.toByte) ++
+        Array.fill(8)(0x80.toByte)
+    val hdr = "YUV4MPEG2 W4 H4 F25:1 C420\n".getBytes("US-ASCII")
+    val long = hdr ++ y4mFrame(0x20) ++ y4mFrame(0xE0) // two distinct frames
+    val clip = hdr ++ y4mFrame(0x20) // just the first
+    val media = mediaWithDuration(Seq((1L, long, 40L), (2L, clip, 0L)))
+    val out = Multimodal.mediaFrameNearDupPairs(media, everyMs = 40,
+        codec = Multimodal.Y4mFrameCodec)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(5)))
+    assert(out.toSeq === Seq((1L, 2L, 1000000L)),
+      s"the shared first frame must pair the streams, got ${out.toSeq}")
+  }
+
   test("checkpoint lifecycle: feature-plane blocks release cleanly, caller inputs survive") {
     val sc = spark.sparkContext
     val base = (0L until 6L).map(i => i -> s"media-payload-$i".getBytes("UTF-8"))
@@ -133,6 +185,17 @@ class MediaNearDupSpec extends SparkSpec {
     assert(kept === 1L)
     assert((sc.getPersistentRDDs.keySet -- before2).isEmpty,
       "both against-side feature planes must release")
+
+    // the frame-fingerprint plane: same scope accounting
+    val clip = "shared-footage-payload".getBytes("UTF-8")
+    val clips = mediaWithDuration(Seq((1L, clip, 5000L), (2L, clip, 2500L)))
+    val before4 = sc.getPersistentRDDs.keySet
+    val framePairs = graft.core.Checkpoints.scoped {
+      Multimodal.mediaFrameNearDupPairs(clips, everyMs = 2500).count()
+    }
+    assert(framePairs === 1L)
+    assert((sc.getPersistentRDDs.keySet -- before4).isEmpty,
+      "the frame-fingerprint plane must release")
 
     // caller-owned checkpoint-backed input: the scope never frees it
     val media2 = mediaOf(base).localCheckpoint(true)

@@ -306,7 +306,7 @@ class Mp4FrameCodecSpec extends AnyFunSuite {
 
   test("corrupt-table fallback: a truncated tail falls back to the last resolvable sample") {
     // drop the final chunk's payload: sample 4 now resolves out of
-    // bounds, so a far seek falls back to sample 3 (the AVI clamp rule)
+    // bounds, so a far seek falls back to sample 3 (the truncated-tail clamp)
     val truncated = five.dropRight(8)
     assert(near(lum(truncated, 999999L), 160))
     // in-range samples are untouched

@@ -280,8 +280,8 @@ class MultimodalSpec extends SparkSpec {
       le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
       "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
     val ppm = ("P6\n# c\n3 2\n255\n" + "x" * 18).getBytes("ISO-8859-1")
-    // each kept magic with a malformed body poisons through the sniff
-    // dispatch; so do magics no kept probe reads (FLAC, RIFF/AVI)
+    // each supported magic with a malformed body poisons through the sniff
+    // dispatch; so do magics no supported probe reads (FLAC, RIFF/AVI)
     val badY4m = "YUV4MPEG2 W4 F25:1\n".getBytes("US-ASCII") // no H tag
     val badWav = "RIFF".getBytes("US-ASCII") ++ le32(100) ++
       "WAVE".getBytes("US-ASCII") ++ "data".getBytes("US-ASCII") ++ le32(999)
@@ -339,12 +339,16 @@ class MultimodalSpec extends SparkSpec {
       le32(8000) ++ le32(16000) ++ le16(2) ++ le16(16) ++
       "data".getBytes("US-ASCII") ++ le32(data.length) ++ data
     val ppm = ("P6\n2 2\n255\n" + "\u00ff" * 6 + "\u0000" * 6).getBytes("ISO-8859-1")
+    val mp4 = Mp4Fixtures.seekableFile(4, 2, 10L,
+      Seq(0x10, 0xE0, 0x40).map(v => Array.fill(8)(v.toByte)), Seq(2, 1),
+      Seq((3L, 1L)))
     val sniff = new Multimodal.SniffFrameCodec(wavWindowMs = 100L)
     val wavDirect = new Multimodal.WavFrameCodec(windowMs = 100L)
     // each fixture decodes IDENTICALLY to its direct codec, whole and
     // per frame; a PPM is its own single frame at every offset
     for ((bytes, direct) <- Seq[(Array[Byte], Multimodal.FrameCodec)](
-        (y4m, Multimodal.Y4mFrameCodec), (wav, wavDirect))) {
+        (y4m, Multimodal.Y4mFrameCodec), (wav, wavDirect),
+        (mp4, Multimodal.Mp4FrameCodec))) {
       assert(sniff.decode(bytes, 2).toSeq === direct.decode(bytes, 2).toSeq)
       for (ms <- Seq(0L, 40L, 200L))
         assert(sniff.decodeFrame(bytes, ms, 2).toSeq ===
@@ -352,6 +356,7 @@ class MultimodalSpec extends SparkSpec {
     }
     assert(sniff.decodeFrame(y4m, 0L, 1).toSeq !== sniff.decodeFrame(y4m, 40L, 1).toSeq)
     assert(sniff.decodeFrame(wav, 0L, 1)(0) > 0f && sniff.decodeFrame(wav, 200L, 1)(0) === 0f)
+    assert(sniff.decode(mp4, 2).exists(_ != 0f))
     val ppmWhole = Multimodal.PpmCodec.decode(ppm, 2)
     assert(ppmWhole.exists(_ != 0f))
     assert(sniff.decode(ppm, 2).toSeq === ppmWhole.toSeq)
