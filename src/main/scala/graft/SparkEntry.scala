@@ -2122,8 +2122,7 @@ object SparkEntry {
     "q155_ivf_assign" -> ((s, dir) => {
       // the q42/q98 assignment as a first-class surface: train the
       // first-8 quantizer once, assign every vector map-side (zero
-      // shuffle before the final ORDER BY) — the batch half of
-      // Streams.ivfAssignStream, same fold on both
+      // shuffle before the final ORDER BY)
       val e = t(s, dir, "embeddings")
         .where(col("vec_id") < 300)
         .select(col("vec_id").as("id"), col("embedding").as("vec"))

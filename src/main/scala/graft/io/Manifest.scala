@@ -184,7 +184,9 @@ object Manifest {
 
   /** Write the manifest as a single JSONL file `<dir>/_manifest.jsonl`
     * (underscore-prefixed: parquet readers of `dir` ignore it). Returns
-    * the manifest frame that was written. */
+    * the manifest that was written, as a local frame over the collected
+    * rows: nothing is cached, so nothing is left to free, even when the
+    * write throws. */
   def writeForParquetDir(spark: SparkSession, dir: String): DataFrame =
     writeManifest(spark, dir, forParquetDir)
 
@@ -203,12 +205,14 @@ object Manifest {
   private def writeManifest(
       spark: SparkSession, dir: String,
       scan: (SparkSession, String) => DataFrame): DataFrame = {
-    val m = scan(spark, dir).cache()
-    val rows = m.toJSON.collect() // per-file metadata: small by contract
+    val scanned = scan(spark, dir)
+    val m = spark.createDataFrame( // per-file metadata: small by contract
+      java.util.Arrays.asList(scanned.collect(): _*), scanned.schema)
+    val lines = m.toJSON.collect()
     val path = new Path(dir, "_manifest.jsonl")
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val os = fs.create(path, true)
-    try os.write((rows.mkString("\n") + "\n").getBytes("UTF-8"))
+    try os.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
     finally os.close()
     m
   }

@@ -1192,54 +1192,6 @@ object Multimodal {
         col("nf_a"), col("nf_b"), col("containment_ppm"))
   }
 
-  /** Cross-corpus media near-dup filter — the media analog of
-    * [[graft.ops.ext.Dedup.dedupAgainstCorpus]] (the nightly-ingest
-    * shape): keep only incoming media whose features near-duplicate NO
-    * corpus item. Incoming rows are never compared to each other —
-    * dedup WITHIN the batch is [[mediaNearDupPairs]]' job.
-    *
-    * Scale shape: both sides decode once behind eager checkpoints. The
-    * join ships (bucket, dims floats) rows, never media bytes;
-    * `maxBucketSize` caps CORPUS buckets — a boilerplate mega-bucket
-    * would otherwise fan every colliding incoming row out by its size —
-    * trading those buckets' recall for linearity, CONSERVATIVELY
-    * (uncheckable incoming rows are KEPT, the novelty default; run
-    * exact-hash dedup upstream for known boilerplate).
-    *
-    * Returns `incoming` rows (original columns) with near-dup rows
-    * anti-joined away. The result reads both feature checkpoints, so
-    * they pass to the enclosing [[graft.core.Checkpoints.scoped]] scope,
-    * or to the caller outside one. */
-  def mediaNearDupAgainst(
-      incoming: DataFrame, corpus: DataFrame,
-      dims: Int = 16, planes: Int = 8, threshold: Double = 0.9,
-      codec: MediaCodec = StubCodec,
-      maxBucketSize: Option[Int] = None): DataFrame = Checkpoints.scoped {
-    import graft.ops.ext.Similarity
-    require(dims >= 1 && planes >= 1, "mediaNearDupAgainst: dims/planes must be >= 1")
-    require(maxBucketSize.forall(_ >= 1), "mediaNearDupAgainst: maxBucketSize must be >= 1")
-    def sig(media: DataFrame, idOut: String, vecOut: String): DataFrame =
-      Checkpoints.checkpoint(extractFeatures(media, dims, codec).toDF()
-        .select(col("media_id").as(idOut), col("embedding").as(vecOut))
-        .withColumn("bucket", Similarity.srpBucket(col(vecOut), planes)))
-    val inc = sig(incoming, "media_id", "_vec")
-    val corp0 = sig(corpus, "_c_id", "_c_vec")
-    val corp = maxBucketSize match {
-      case Some(cap) =>
-        val ok = corp0.groupBy(col("bucket"))
-          .agg(count(lit(1)).as("_bsz"))
-          .where(col("_bsz") <= cap)
-          .select(col("bucket"))
-        corp0.join(ok, Seq("bucket"), "left_semi")
-      case None => corp0
-    }
-    val dupIds = inc.join(corp, Seq("bucket"))
-      .where(Similarity.cosineSafe(col("_vec"), col("_c_vec")) >= threshold)
-      .select(col("media_id"))
-      .distinct()
-    incoming.join(dupIds, Seq("media_id"), "left_anti")
-  }
-
   /** Synthetic media table for tests/demos (documents bytes as fake
     * content). */
   def syntheticMedia(spark: SparkSession, n: Int): DataFrame = {

@@ -52,16 +52,6 @@ object Components {
     * a recompute of the edge lineage. */
   val DriverFinishMaxEdges: Long = 1L << 20
 
-  /** Batch-size bound (edge count) for
-    * [[connectedComponentsIncremental]]'s broadcast fast path. 2^21
-    * edges explode to ≤ 2^22 (ea, eb, end_id) long-triples — roughly
-    * 100-200 MB broadcast-materialized, comfortable on executors at any
-    * profile; past it the label-resolve and relabel joins degrade to
-    * shuffle joins with identical semantics (spec-held parity) rather
-    * than a driver OOM on an unbounded `broadcast()` hint (which
-    * ignores every broadcast ceiling by design). */
-  val IncrementalBroadcastMaxEdges: Long = 1L << 21
-
   /** Driver union-find with the min-id-as-root rule: every union keeps
     * the SMALLER root, so a node's final root IS its component's minimum
     * vertex id — the exact contract of the distributed rounds, order-
@@ -383,115 +373,6 @@ object Components {
         s"dedupClusters: unknown algorithm '$other' (expected hashToMin or star)")
     }
     cc.select(col("id").as(idCol), col("comp").as("canonical_id"))
-  }
-
-  /** Incremental connected components — fold a NEW edge batch into an
-    * existing labeling without touching the standing graph: the nightly
-    * shape ([[graft.ops.ext.Dedup.dedupAgainstCorpus]]'s dual for
-    * CLUSTERS). An old labeling `(id, comp)` is a complete summary of the
-    * old edge set for reachability (components are equivalence classes,
-    * and new edges can only MERGE classes), so
-    * `CC(V ∪ V_new, E_old ∪ E_new)` factors exactly into CC over the
-    * CONTRACTED graph — nodes = old component labels, edges = each new
-    * edge's endpoint labels — composed back through the old assignment.
-    * The contracted graph is bounded by the BATCH (≤ 2 nodes per new
-    * edge), never by the corpus.
-    *
-    * Scale shape: ONE scan of the label table joined against the
-    * exploded batch — broadcast while the batch is under
-    * [[IncrementalBroadcastMaxEdges]] (ENFORCED by a pre-count, not
-    * caller-owned: an over-bound batch falls back to shuffle joins with
-    * identical semantics instead of a driver OOM) — so the corpus-scale
-    * table never shuffles on the nightly path and the standing edges are
-    * never re-read (they no longer
-    * need to exist); the contracted CC runs on a batch-bounded graph
-    * (which [[connectedComponents]]' driver finish typically solves
-    * in-memory); the final compose is a second label-table scan against
-    * the (batch-bounded, broadcast) relabel map. Endpoints absent from
-    * `labels` are NEW vertices — they enter as their own singleton class
-    * (`comp = id`) and appear in the output.
-    *
-    * Output: `(id, comp)` for every id in `labels` plus every new
-    * endpoint, with `comp` = min id reachable through the union graph —
-    * bit-identical to a full [[connectedComponents]] recompute on
-    * `E_old ∪ E_new` (spec-held parity), because the min over a merged
-    * class equals the min over its old classes' mins.
-    *
-    * Regime (measured, PLANS round 17): 4.7–5.3× faster than the full
-    * recompute at 17.3 M standing edges (past the driver-finish bound),
-    * widening linearly with the standing edge count; BELOW the bound the
-    * full recompute is a ~3-job fixed floor and this operator's extra
-    * joins cost more — use it when the standing graph is large or its
-    * edges were never retained (the labeling alone suffices).
-    *
-    * @param labels   existing assignment: columns `id`, `comp` (the
-    *                 [[connectedComponents]] output contract)
-    * @param newEdges the new pair batch, columns `srcCol`, `dstCol`
-    * @param broadcastMaxEdges batch-size bound (edge count) for the
-    *                 broadcast fast path ([[IncrementalBroadcastMaxEdges]]);
-    *                 a larger batch — a backfill folded through the
-    *                 nightly path — runs the SAME joins as shuffle joins
-    *                 (spec-held parity) instead of a driver OOM. The
-    *                 guard costs one `count()` of the batch; persist a
-    *                 batch that is expensive to recompute.
-    */
-  def connectedComponentsIncremental(
-      labels: DataFrame,
-      newEdges: DataFrame,
-      srcCol: String = "id_a",
-      dstCol: String = "id_b",
-      maxIter: Int = 20,
-      driverFinishMaxEdges: Long = DriverFinishMaxEdges,
-      broadcastMaxEdges: Long = IncrementalBroadcastMaxEdges): DataFrame = {
-    // count the batch BEFORE exploding (the DriverFinishMaxEdges
-    // precedent): nothing else enforced the "broadcast-sized" scoping,
-    // and an unconditional broadcast turns a 100 M-edge backfill into a
-    // driver OOM instead of a graceful shuffle-join fallback
-    val smallBatch = newEdges.count() <= broadcastMaxEdges
-    def batchSide(df: DataFrame): DataFrame =
-      if (smallBatch) broadcast(df) else df
-    // each new edge keyed by its own endpoint pair (deterministic — no
-    // synthetic ids), exploded so ONE label scan resolves both ends
-    val ends = newEdges
-      .select(col(srcCol).as("ea"), col(dstCol).as("eb"))
-      .select(col("ea"), col("eb"),
-        explode(array(col("ea"), col("eb"))).as("end_id"))
-    // broadcast the batch side: the corpus-scale label table streams
-    // map-side and never shuffles (above the bound: a shuffle join —
-    // the label table shuffles ONCE, still never the standing edges)
-    val resolved = labels
-      .join(batchSide(ends), labels("id") === ends("end_id"))
-      .select(col("ea"), col("eb"), col("end_id"), col("comp"))
-    // per-edge (comp_a, comp_b): endpoints missing from `labels` are new
-    // vertices — their class is themselves
-    val contracted = ends
-      .join(resolved.withColumnRenamed("comp", "_rc"),
-        Seq("ea", "eb", "end_id"), "left")
-      .withColumn("_cls", coalesce(col("_rc"), col("end_id")))
-      .groupBy(col("ea"), col("eb"))
-      .agg(
-        min(when(col("end_id") === col("ea"), col("_cls"))).as("comp_a"),
-        min(when(col("end_id") === col("eb"), col("_cls"))).as("comp_b"))
-      .where(col("comp_a") =!= col("comp_b"))
-    // CC over the contracted (batch-bounded) graph; vertices = touched
-    // classes only — untouched classes keep their labels via the compose
-    val touched = contracted
-      .select(explode(array(col("comp_a"), col("comp_b"))).as("id"))
-      .distinct()
-    val merged = connectedComponents(touched, contracted,
-        srcCol = "comp_a", dstCol = "comp_b",
-        maxIter = maxIter, driverFinishMaxEdges = driverFinishMaxEdges)
-      .select(col("id").as("_old_comp"), col("comp").as("_new_comp"))
-    // compose: old labels re-map through the (batch-bounded, broadcast)
-    // relabel table; new vertices enter with their own id as base class
-    val newVertices = ends.select(col("end_id").as("id")).distinct()
-      .join(labels.select(col("id")), Seq("id"), "left_anti")
-      .select(col("id"), col("id").as("comp"))
-    labels.select(col("id"), col("comp"))
-      .unionByName(newVertices)
-      .join(batchSide(merged), col("comp") === col("_old_comp"), "left")
-      .select(col("id"),
-        coalesce(col("_new_comp"), col("comp")).as("comp"))
   }
 
   /** Fixed-iteration integer PageRank over a directed edge list — the

@@ -34,35 +34,30 @@ object Contamination {
       lit(1), greatest(count, lit(0)))
   }
 
-  /** 60-bit n-gram hash (15 md5 hex chars — positive in a signed long):
-    * the join/broadcast currency. An 8-gram string averages ~50 bytes;
-    * hashing shrinks the broadcast table and every probe comparison ~6x,
-    * and the post-join distinct shuffles longs instead of text. Collision
-    * odds at benchmark scale (~10^6 n-grams into 2^60) are negligible, and
-    * the md5 arithmetic is engine-portable, so the DuckDB oracle computes
-    * the identical hashes. */
-  private[graft] def ngramHash(ng: Column): Column =
-    conv(substring(md5(ng), 1, 15), 16, 10).cast("long")
-
   /** Per-row n-gram hash array — the map-side per-document form every
-    * pass below explodes. Computed by the codegen'd
+    * pass below explodes. Each element is the 60-bit hash of one n-gram
+    * (15 md5 hex chars — positive in a signed long): the join/broadcast
+    * currency. An 8-gram string averages ~50 bytes; hashing shrinks the
+    * broadcast table and every probe comparison ~6x, and the post-join
+    * distinct shuffles longs instead of text. Collision odds at benchmark
+    * scale (~10^6 n-grams into 2^60) are negligible, and the md5
+    * arithmetic is engine-portable, so the DuckDB oracle computes the
+    * identical hashes. Computed by the codegen'd
     * [[graft.functions.TokenNgramHashExpr]] kernel (digest fed straight
     * from token byte ranges, no n-gram string materialized) —
     * semantically identical to
-    * `transform(tokenNgrams(text, n), ng => ngramHash(ng))` (equivalence
-    * held by TokenHashExprsSpec) except on NULL text, where the kernel
-    * null-propagates while the interpreted composition yields an empty
-    * array. Callers are insensitive to the difference: the batch passes
-    * `explode` (NULL and [] both produce zero rows) and the streaming
-    * dual anti-joins on `array_contains` (NULL and no-match both keep the
-    * row) — a new consumer relying on empty-ARRAY semantics for NULL text
-    * (e.g. `size(...) === 0`) must guard NULLs itself. */
+    * `transform(tokenNgrams(text, n), ng => conv(substring(md5(ng), 1, 15), 16, 10).cast("long"))`
+    * (equivalence held by TokenHashExprsSpec) except on NULL text, where
+    * the kernel null-propagates while the interpreted composition yields
+    * an empty array. Every caller explodes the array (NULL and [] both
+    * produce zero rows) — a new consumer relying on empty-ARRAY semantics
+    * for NULL text (e.g. `size(...) === 0`) must guard NULLs itself. */
   private[graft] def ngramHashes(text: Column, n: Int): Column =
     graft.functions.TokenNgramHashExpr.token_ngram_hashes(text, n)
 
   /** Per-document contamination hits: `(idCol, n_hits)` for every corpus
     * document sharing at least one n-gram with the benchmark, where
-    * `n_hits` counts DISTINCT shared n-grams (via [[ngramHash]]). Clean
+    * `n_hits` counts DISTINCT shared n-grams (via [[ngramHashes]]). Clean
     * documents are absent — a decontamination pass anti-joins the corpus
     * against this result. */
   def contaminationHits(
@@ -113,18 +108,6 @@ object Contamination {
     val bench = benchmark.select(benchVecCol.as("_bvec"))
     corpus.join(broadcast(bench),
       Similarity.cosineSafe(vecCol, col("_bvec")) >= minCos, "left_semi")
-  }
-
-  /** The corpus minus semantically contaminated rows — the anti twin of
-    * [[semanticContaminationHits]], same broadcast short-circuit plan. */
-  def semanticDecontaminate(
-      corpus: DataFrame, vecCol: Column,
-      benchmark: DataFrame, benchVecCol: Column, minCos: Double): DataFrame = {
-    require(minCos >= -1.0 && minCos <= 1.0,
-      s"semanticDecontaminate: minCos must be in [-1, 1], got $minCos")
-    val bench = benchmark.select(benchVecCol.as("_bvec"))
-    corpus.join(broadcast(bench),
-      Similarity.cosineSafe(vecCol, col("_bvec")) >= minCos, "left_anti")
   }
 
   /** [[semanticContaminationHits]] with the SRP-bucket prefilter the
@@ -189,18 +172,18 @@ object Contamination {
     * tests via `element_at` + bitwiseAND against a 64-entry power-of-two
     * mask literal. No UDF: the test stays inside whole-stage codegen.
     * Two probe positions per hash (k=2), drawn from disjoint bit ranges of
-    * the 60-bit [[ngramHash]] (low bits and bits 29+), so `mBits` may be
+    * the 60-bit [[ngramHashes]] (low bits and bits 29+), so `mBits` may be
     * any power of two up to 2^29.
     *
     * All build/probe sites first mask the hash to its low 60 bits
-    * ([[HashMask60]]): [[ngramHash]] is 60-bit non-negative already, but
+    * ([[HashMask60]]): [[ngramHashes]] is 60-bit non-negative already, but
     * an arbitrary negative LONG would otherwise hit the build/probe shift
     * mismatch (local `>>>` vs Column `shiftright`, which is arithmetic)
     * and produce Bloom FALSE NEGATIVES — the one failure mode a Bloom
     * prefilter must never have. Masking makes the sign bit unreachable,
     * so the two shift semantics agree by construction.
     *
-    * @param hashes distinct benchmark n-gram hash values ([[ngramHash]])
+    * @param hashes distinct benchmark n-gram hash values ([[ngramHashes]])
     * @param mBits  filter size in bits (power of two)
     */
   private[graft] val HashMask60: Long = (1L << 60) - 1

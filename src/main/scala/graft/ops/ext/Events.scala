@@ -6,10 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Event-stream analytics in batch form: tumbling-window aggregation and
-  * gap-based sessionization. The streaming equivalents (Structured
-  * Streaming `window()` / `session_window()` with watermarks) live in
-  * [[graft.streaming]]; these batch versions share the same semantics and
-  * are the oracle-checkable path.
+  * gap-based sessionization, oracle-checked against DuckDB.
   *
   * Scale: tumbling aggregation is a plain hash aggregate on (window, key) —
   * partial map-side combine, one shuffle. Sessionization shuffles once on

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * INDEPENDENT stages that the scheduler may run concurrently, each
   * racing to compute the kernel itself). The final span merge is one
   * window per document, bounded by document length. Window content is
-  * hashed with the engine-portable 60-bit md5 ([[Contamination.ngramHash]]),
+  * hashed with the engine-portable 60-bit md5 ([[Contamination.ngramHashes]]),
   * so a SQL oracle computes identical hashes; collisions at 2^60 only
   * ever MERGE a span they would at worst slightly widen.
   */

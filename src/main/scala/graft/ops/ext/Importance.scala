@@ -153,10 +153,8 @@ object Importance {
   }
 
   /** Score rows under a trained model: one map-side fold per row against
-    * the broadcast literal weight table — STATELESS, so it applies to
-    * batch frames and streaming frames alike (the streaming dual is
-    * [[graft.streaming.Streams.dsirScoreStream]]). Buckets the model
-    * never saw fall back to `model.default`. High scores = resembles the
+    * the broadcast literal weight table — no join, no shuffle. Buckets
+    * the model never saw fall back to `model.default`. High scores = resembles the
     * target; selection is a threshold or top-k over `dsir_score`.
     *
     * Output: (idCol, n_feats, dsir_score) for every input row —

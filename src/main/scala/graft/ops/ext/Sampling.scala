@@ -49,6 +49,32 @@ object Sampling {
     df.withColumn("split", labeled)
   }
 
+  /** The integer A-Res key derivation EVERY weighted sampler below
+    * (flat, stratified window, stratified aggregate) shares — one
+    * definition, so no two paths can rank differently. Adds `_w`
+    * (weight, contract >= 1), `_u`/`_f` intermediates, and the ranking
+    * key as `keyName`.
+    *
+    * Rows with a null id or null/invalid weight are EXCLUDED here: the
+    * weights ≥ 1 contract makes them malformed, and without the filter
+    * the paths would diverge on them — a null skey sorts NULLS FIRST
+    * into the window sample and is silently skipped by the typed
+    * aggregate. */
+  private def withAresKey(
+      df: DataFrame, idCol: String, weightCol: Column,
+      seed: Long, keyName: String): DataFrame = {
+    val u = conv(substring(md5(
+      concat_ws("#", lit(seed.toString), col(idCol).cast("string"))), 1, 15), 16, 10)
+      .cast("long")
+    val fMax = Importance.flog2(1L << 46) // u folded into flog2's domain
+    df
+      .withColumn("_w", weightCol.cast("long")) // contract: weights >= 1
+      .where(col(idCol).isNotNull && col("_w").isNotNull)
+      .withColumn("_u", pmod(u, lit(1L << 46)))
+      .withColumn("_f", Importance.flog2Col(col("_u") + 1L))
+      .withColumn(keyName, expr(s"(($fMax - _f) * 1048576) div _w"))
+  }
+
   /** Deterministic WEIGHTED sampling without replacement — the
     * quality-weighted subsample step (keep k documents with inclusion
     * odds ∝ weight: rarity score, curation weight, token count).
@@ -73,31 +99,6 @@ object Sampling {
     * global sort, no shuffle of the corpus. Like [[hashFraction]], the
     * outcome is a function of row identity + seed, reproducible across
     * runs, engines, and partition layouts. */
-  /** The integer A-Res key derivation EVERY weighted sampler (batch
-    * window, batch aggregate, streaming) shares — one definition, so no
-    * two paths can rank differently. Adds `_w` (weight, contract >= 1),
-    * `_u`/`_f` intermediates, and the ranking key as `keyName`.
-    *
-    * Rows with a null id or null/invalid weight are EXCLUDED here: the
-    * weights ≥ 1 contract makes them malformed, and without the filter
-    * the three paths would diverge on them — a null skey sorts NULLS
-    * FIRST into the window sample, is silently skipped by the typed
-    * aggregate, and kills the streaming query's non-nullable encoder. */
-  private[graft] def withAresKey(
-      df: DataFrame, idCol: String, weightCol: Column,
-      seed: Long, keyName: String): DataFrame = {
-    val u = conv(substring(md5(
-      concat_ws("#", lit(seed.toString), col(idCol).cast("string"))), 1, 15), 16, 10)
-      .cast("long")
-    val fMax = Importance.flog2(1L << 46) // u folded into flog2's domain
-    df
-      .withColumn("_w", weightCol.cast("long")) // contract: weights >= 1
-      .where(col(idCol).isNotNull && col("_w").isNotNull)
-      .withColumn("_u", pmod(u, lit(1L << 46)))
-      .withColumn("_f", Importance.flog2Col(col("_u") + 1L))
-      .withColumn(keyName, expr(s"(($fMax - _f) * 1048576) div _w"))
-  }
-
   def weightedSample(
       df: DataFrame, idCol: String, weightCol: Column,
       k: Int, seed: Long): DataFrame = {

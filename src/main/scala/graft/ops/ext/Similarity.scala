@@ -1128,6 +1128,30 @@ object Similarity {
       cosineTopK(queries, corpus, k), k)
   }
 
+  /** Trained coarse-quantizer handle — the K-centroid driver-side bound
+    * every IVF path shares (the same class of model object as
+    * [[Importance.DsirModel]]), made explicit so cells can be assigned
+    * against a model trained once on the standing corpus (q155). Seed =
+    * deterministic first-K (the only oracle-gated configuration;
+    * Lloyd-refined centroids substitute without changing the assignment
+    * shape). */
+  case class IvfModel(centroids: Array[(Long, Seq[Double], Double)])
+
+  def trainIvfSeed(corpus: DataFrame, numCentroids: Int): IvfModel =
+    IvfModel(collectSeedCentroids(corpus, numCentroids, "trainIvfSeed"))
+
+  /** Map-side cell assignment under a trained model: adds `cid` — the
+    * SAME per-row centroid fold `ivfTopK`/[[ivfCellStats]] assign with
+    * (argmax cosine, ties to the smaller cid), against the plan-literal
+    * centroid array. ZERO shuffle, zero driver action (the model is
+    * already collected). */
+  def assignCells(df: DataFrame, model: IvfModel): DataFrame =
+    df.withColumn("_vnorm", norm(col("vec")))
+      .withColumn("_sims", centroidSims(col("vec"), col("_vnorm"),
+        centroidArr(model.centroids)))
+      .withColumn("cid", bestCentroid(col("_sims")).getField("cid"))
+      .drop("_vnorm", "_sims")
+
   /** IVF cell-population diagnostic: per-cell vector counts and integer
     * basis-point shares under the SAME assignment [[ivfTopK]] uses (first-K
     * seed centroids, argmax cosine, ties to the smaller cid). Cell balance
@@ -1143,31 +1167,6 @@ object Similarity {
     * [[graft.ops.ext.TextStats]] crossJoin precedent). Empty cells have no
     * row — their absence IS the starvation signal. `share_bp` is integer
     * division, engine-exact. */
-  /** Trained coarse-quantizer handle for streaming / incremental cell
-    * assignment — the K-centroid driver-side bound every IVF path shares
-    * (the same class of model object as `trainDsir`/`trainNb`), made
-    * explicit so a LIVE stream can assign against a model trained once
-    * on the standing corpus. Seed = deterministic first-K (the only
-    * oracle-gated configuration; Lloyd-refined centroids substitute
-    * without changing the assignment shape). */
-  case class IvfModel(centroids: Array[(Long, Seq[Double], Double)])
-
-  def trainIvfSeed(corpus: DataFrame, numCentroids: Int): IvfModel =
-    IvfModel(collectSeedCentroids(corpus, numCentroids, "trainIvfSeed"))
-
-  /** Map-side cell assignment under a trained model: adds `cid` — the
-    * SAME per-row centroid fold `ivfTopK`/[[ivfCellStats]] assign with
-    * (argmax cosine, ties to the smaller cid), against the plan-literal
-    * centroid array. ZERO shuffle, zero driver action (the model is
-    * already collected) — safe for batch index builds and Structured
-    * Streaming alike ([[graft.streaming.Streams.ivfAssignStream]]). */
-  def assignCells(df: DataFrame, model: IvfModel): DataFrame =
-    df.withColumn("_vnorm", norm(col("vec")))
-      .withColumn("_sims", centroidSims(col("vec"), col("_vnorm"),
-        centroidArr(model.centroids)))
-      .withColumn("cid", bestCentroid(col("_sims")).getField("cid"))
-      .drop("_vnorm", "_sims")
-
   def ivfCellStats(corpus: DataFrame, numCentroids: Int): DataFrame = {
     val counts = assignCells(corpus, trainIvfSeed(corpus, numCentroids))
       .select(col("cid"))

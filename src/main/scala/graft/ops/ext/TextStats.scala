@@ -565,13 +565,10 @@ object TextStats {
     * Both seed classes must be non-empty (flog2 needs args ≥ 1).
     * Output: `(idCol, n_iv, score, pred)` — in-vocab token count, the
     * fixed-point log-odds (BIGINT), and the boolean verdict. */
-  /** The three [[nbClassify]] model frames — `(model(w, w_tok), norm,
-    * prior)` — shared with [[trainNb]] so the collected literal model is
-    * the aggregate model by construction. */
-  private def nbModelFrames(
-      docs: DataFrame, textCol: Column,
+  def nbClassify(
+      docs: DataFrame, textCol: Column, idCol: String,
       isSeed: Column, seedLabel: Column,
-      topV: Int): (DataFrame, DataFrame, DataFrame) = Checkpoints.scoped {
+      topV: Int = 1000): DataFrame = Checkpoints.scoped {
     val seeds = docs.where(isSeed)
       .select(explode(tokens(textCol)).as("w"), seedLabel.as("_pos"))
     // ≤ topV rows by construction — eagerly checkpointed (the round-18
@@ -605,15 +602,6 @@ object TextStats {
         sum(when(!seedLabel, 1L).otherwise(0L)).as("n_neg"))
       .select((Importance.flog2Col(col("n_pos")) -
         Importance.flog2Col(col("n_neg"))).as("prior"))
-    (model, totals, prior)
-  }
-
-  def nbClassify(
-      docs: DataFrame, textCol: Column, idCol: String,
-      isSeed: Column, seedLabel: Column,
-      topV: Int = 1000): DataFrame = {
-    val (model, totals, prior) =
-      nbModelFrames(docs, textCol, isSeed, seedLabel, topV)
     docs.select(col(idCol), explode_outer(tokens(textCol)).as("w"))
       .join(broadcast(model), Seq("w"), "left")
       .groupBy(col(idCol))
@@ -656,7 +644,7 @@ object TextStats {
     val counts = classes.zipWithIndex.map { case (c, i) =>
       sum(when(col("_c") === c, 1L).otherwise(0L)).as(s"c$i")
     }
-    // ≤ topV rows by construction — eager checkpoint (the nbModelFrames
+    // ≤ topV rows by construction — eager checkpoint (the nbClassify
     // rationale): model feeds BOTH the weight projection (broadcast into
     // the corpus join) and the class-totals aggregate; un-checkpointed,
     // each consumer re-plans the full seed explode + aggregation
@@ -694,48 +682,6 @@ object TextStats {
       element_at(typedLit(classes),
         array_position(col("_arr"), array_max(col("_arr"))).cast("int")).as("pred"),
       array_max(col("_arr")).as("score"))
-  }
-
-  /** Trained [[nbClassify]] model in literal form: ≤ `topV` token
-    * weights plus the two scalars — the bounded-driver-state class DSIR
-    * models sit in ([[Importance.DsirModel]]'s ≤4096 buckets). */
-  case class NbModel(weights: Map[String, Long], norm: Long, prior: Long)
-
-  /** Train the NB model once (offline / batch) into an [[NbModel]] —
-    * same frames as [[nbClassify]] by construction, collected under the
-    * `topV` bound. Both seed classes must be non-empty. */
-  def trainNb(
-      docs: DataFrame, textCol: Column,
-      isSeed: Column, seedLabel: Column,
-      topV: Int = 1000): NbModel = Checkpoints.scoped {
-    val (model, totals, prior) =
-      nbModelFrames(docs, textCol, isSeed, seedLabel, topV)
-    NbModel(
-      model.collect().map(r => r.getString(0) -> r.getLong(1)).toMap,
-      totals.collect().head.getLong(0),
-      prior.collect().head.getLong(0))
-  }
-
-  /** Score documents under a trained [[NbModel]] — ONE map-side fold
-    * per row against the literal weight map: no explode, no join, no
-    * shuffle, which is what makes it the stream-safe form
-    * ([[graft.streaming.Streams.nbScoreStream]] delegates here).
-    * Integer sums are order-free, so scores equal [[nbClassify]]'s
-    * aggregate formulation exactly (spec-held). Same output columns. */
-  def applyNb(
-      docs: DataFrame, textCol: Column, idCol: String,
-      model: NbModel): DataFrame = {
-    val m = typedLit(model.weights)
-    docs
-      .withColumn("_hits", filter(
-        transform(tokens(textCol), t => element_at(m, t)),
-        w => w.isNotNull))
-      .select(col("*"),
-        size(col("_hits")).cast("long").as("n_iv"),
-        aggregate(col("_hits"), lit(0L), (acc, w) => acc + w).as("_s"))
-      .select(col(idCol), col("n_iv"),
-        (lit(model.prior) + col("_s") + col("n_iv") * lit(model.norm)).as("score"))
-      .withColumn("pred", col("score") > 0L)
   }
 
   /** Precision/recall curve over binned classifier scores — the
@@ -1022,11 +968,10 @@ object TextStats {
       maxSymbolPpm: Long = 100000L)
 
   /** Adds the per-row signal columns `_len_ok/_alpha_ok/_pii_ok/_rep_ok`
-    * (booleans; temps dropped) — shared by the batch [[qualityGate]] and
-    * the streaming dual, so the two can never score differently. Pure
-    * scan-bound Column math; each interpreted fold lands in its own
-    * column (single evaluation per row). */
-  private[graft] def withScanSignals(
+    * (booleans; temps dropped) — [[qualityGate]]'s scan-bound half. Pure
+    * Column math; each interpreted fold lands in its own column (single
+    * evaluation per row). */
+  private def withScanSignals(
       df: DataFrame, textCol: Column, t: QualityThresholds): DataFrame = {
     val base = df.withColumn("_tstats",
         graft.functions.TokenStatsExpr.token_stats(textCol))
@@ -1051,7 +996,7 @@ object TextStats {
     // (the gate and [[gopherSignals]] can never score differently); its
     // named output columns are folded into one `_shape_ok` signal so the
     // gate's surface stays the quality struct alone. Still pure per-row
-    // scan-bound work — the streaming dual inherits it unchanged.
+    // scan-bound work.
     t.shapeRules.fold(base) { g =>
       // the fold below DROPS gopherSignals' output names — a caller
       // whose frame already carries one would silently lose that column
@@ -1071,12 +1016,13 @@ object TextStats {
   }
 
   /** Folds the `_*_ok` signal columns (plus a rarity verdict) into the
-    * `quality` struct and drops them — the tail both gate forms share.
+    * `quality` struct and drops them — the tail both of [[qualityGate]]'s
+    * rarity branches share.
     * When [[withScanSignals]] added a `_shape_ok` signal (shapeRules set)
     * the struct gains `shape_ok` and `pass` conjoins it; with shapeRules
     * unset the struct shape is EXACTLY the historical five-field form, so
     * every existing oracled gate query is schema-stable. */
-  private[graft] def foldSignals(df: DataFrame, rarityOk: Column): DataFrame = {
+  private def foldSignals(df: DataFrame, rarityOk: Column): DataFrame = {
     val shaped = df.columns.contains("_shape_ok")
     val fixed = Seq(
       col("_len_ok").as("len_ok"),

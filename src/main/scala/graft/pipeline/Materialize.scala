@@ -87,12 +87,11 @@ object Materialize {
       // returned summary is a metadata-only rollup of the per-file frame
       // — the old shape paid a SECOND scan of the shard tree for the
       // n_tok sums the manifest didn't carry. The summary checkpoint is
-      // ≤ #shards rows. The manifest comes back already cached: persisting
-      // it again runs no job and hands that cache to the scope.
-      val m = Checkpoints.persist(Manifest.writeForParquetDirWith(spark, outDir, Seq(
+      // ≤ #shards rows.
+      val m = Manifest.writeForParquetDirWith(spark, outDir, Seq(
         "stratum" -> first(col("stratum")),
         "shard" -> first(col("shard")),
-        "n_tok_sum" -> sum(col("n_tok")))))
+        "n_tok_sum" -> sum(col("n_tok"))))
       Checkpoints.checkpoint(m
         .groupBy(col("stratum"), col("shard"))
         .agg(sum(col("n_rows")).as("n_docs"),

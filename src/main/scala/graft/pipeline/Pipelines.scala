@@ -184,16 +184,14 @@ object ParquetToRdf {
       Seq("schema.dgraph", "schema.indexed.dgraph").foreach { d =>
         val dir = s"$outBase/$d"
         if (dirExists(spark, dir))
-          graft.io.Manifest.writeForTextDir(spark, dir).unpersist()
+          graft.io.Manifest.writeForTextDir(spark, dir)
       }
       written.map { case (name, _) =>
         val dir = s"$outBase/$name.rdf"
         name -> (if (!dirExists(spark, dir)) 0L
         else {
-          val m = graft.io.Manifest.writeForTextDir(spark, dir)
-          val n = m.agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
-          m.unpersist()
-          n
+          graft.io.Manifest.writeForTextDir(spark, dir)
+            .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
         })
       }
     } else timed("count-back audit") {

@@ -87,12 +87,10 @@ object Reports {
     *
     * `valueCol` is an integer signal, non-negative by contract (token
     * count, quality ppm, …); it is binned to `least(bins-1, value div
-    * binWidth)`. Malformed rows follow the family-wide policy (shared
-    * with [[ksBaseline]] and `Streams.ksDriftStream`, so the batch and
-    * streaming halves of the monitor cannot disagree): nulls DROP,
-    * negatives CLAMP to bin 0. The KS statistic `max |CDF_a - CDF_b|`
-    * is EXACT on the binned distributions (binning error is bounded by the largest
-    * single-bin mass — the classic sketch trade, but deterministic and
+    * binWidth)`. Malformed rows: nulls DROP, negatives CLAMP to bin 0.
+    * The KS statistic `max |CDF_a - CDF_b|` is EXACT on the binned
+    * distributions (binning error is bounded by the largest single-bin
+    * mass — the classic sketch trade, but deterministic and
     * engine-exact, unlike a sampled KS). CDFs are integer ppm; division
     * is floor on both engines (pmod form here, `//` in the oracle), all
     * operands non-negative.
@@ -124,13 +122,10 @@ object Reports {
     // (with the signal kernel) re-plans FOUR times. The table is bounded
     // at groups x bins rows, so an eager localCheckpoint collapses the
     // whole operator to ONE corpus pass for negligible pinned storage.
-    // Malformed-input policy, unified across the KS family in round 13
-    // (batch and stream are advertised as an exact dual — they must
-    // agree on bad rows too): null values DROP (an all-null group
+    // Malformed-input policy: null values DROP (an all-null group
     // disappears instead of feeding a 0-denominator ANSI division);
-    // negative values CLAMP to bin 0, exactly as ksDriftStream's
-    // `math.max(0L, ...)` — before this, a negative bin silently missed
-    // the 0..bins-1 grid and shrank the group's CDF denominator.
+    // negative values CLAMP to bin 0 — otherwise a negative bin silently
+    // misses the 0..bins-1 grid and shrinks the group's CDF denominator.
     // NB the null filter must hit the VALUE, not the bin: greatest/least
     // SKIP null operands in Spark, so a null value's "bin" would come
     // out as bins-1, not null — silently counting missing data as the
@@ -204,68 +199,6 @@ object Reports {
     def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
     idiv(x * M + lit(pseudoN) * idiv(gx * M, gn), n + lit(pseudoN))
-  }
-
-  /** A standing corpus's binned CDF as a broadcast-sized model — the
-    * reference distribution [[graft.streaming.Streams.ksDriftStream]]
-    * monitors live ingestion against (the distribution-side sibling of
-    * `DsirModel`/`NbModel`/`IvfModel`: trained once offline, shipped as
-    * plan literals / driver state). `cdfPpm(i)` is the ppm mass at or
-    * below bin `i`, same binning and floor arithmetic as [[ksDistance]]. */
-  final case class KsBaseline(binWidth: Long, cdfPpm: Array[Long]) {
-    def bins: Int = cdfPpm.length
-  }
-
-  /** Train a [[KsBaseline]] from the standing corpus: one map-side
-    * `(bin)` partial count, then a `collect()` bounded by `bins` rows
-    * (driver-metadata scale, like every trained model here). Malformed
-    * values follow the family policy of [[ksDistance]]: nulls drop,
-    * negatives clamp to bin 0. */
-  def ksBaseline(
-      df: DataFrame, valueCol: Column, bins: Int = 64, binWidth: Long = 1L): KsBaseline = {
-    require(bins >= 2, s"ksBaseline: bins must be >= 2, got $bins")
-    require(binWidth >= 1, s"ksBaseline: binWidth must be >= 1, got $binWidth")
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
-    // negatives clamp to bin 0 (the ksDriftStream policy — before round
-    // 13 a negative value was a driver AIOOBE here while the stream
-    // clamped, letting the "exact dual" pair disagree on malformed rows)
-    // null filter on the VALUE, not the bin — greatest/least skip nulls
-    // (see ksDistance)
-    val rows = df
-      .where(valueCol.isNotNull)
-      .select(greatest(lit(0L),
-        least(lit(bins - 1L), idiv(valueCol.cast("long"), lit(binWidth)))).as("bin"))
-      .groupBy(col("bin")).agg(count(lit(1)).as("c"))
-      .collect() // <= bins rows
-    val counts = new Array[Long](bins)
-    rows.foreach(r => counts(r.getLong(0).toInt) = r.getLong(1))
-    val n = counts.sum
-    require(n > 0, "ksBaseline: corpus has no non-null values")
-    val cdf = new Array[Long](bins)
-    var cum = 0L
-    var i = 0
-    while (i < bins) { cum += counts(i); cdf(i) = cum * 1000000L / n; i += 1 }
-    KsBaseline(binWidth, cdf)
-  }
-
-  /** KS statistic of a bin-count histogram against a [[KsBaseline]] —
-    * the ONE fold both the streaming monitor and its batch-parity spec
-    * use, so they cannot diverge. Returns `(n, ks_ppm)`; an empty
-    * histogram scores `(0, 1000000)` (no data = maximal drift, never a
-    * silent 0). */
-  def ksStat(counts: Array[Long], baseline: KsBaseline): (Long, Long) = {
-    require(counts.length == baseline.bins,
-      s"ksStat: ${counts.length} bins vs baseline ${baseline.bins}")
-    val n = counts.sum
-    if (n == 0L) return (0L, 1000000L)
-    var cum = 0L; var ks = 0L; var i = 0
-    while (i < counts.length) {
-      cum += counts(i)
-      val d = math.abs(cum * 1000000L / n - baseline.cdfPpm(i))
-      if (d > ks) ks = d
-      i += 1
-    }
-    (n, ks)
   }
 
   /** Cross-source content-overlap matrix — the companion diagnostic to

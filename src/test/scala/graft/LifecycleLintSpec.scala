@@ -6,15 +6,17 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators in `ops/ext`, `pipeline` and `multimodal` materialize only
-  * through [[graft.core.Checkpoints]]' scope, which owns every free: a raw
-  * `localCheckpoint`/`persist` or a hand-written lineage release there
-  * would bypass the single owner. */
+/** Operators in `ops/ext`, `pipeline`, `multimodal` and `io` materialize
+  * only through [[graft.core.Checkpoints]]' scope, which owns every free:
+  * a raw `localCheckpoint`/`persist`/`cache()`, a hand-written
+  * `unpersist` or a lineage release there would bypass the single owner. */
 class LifecycleLintSpec extends AnyFunSuite {
 
   private val Banned = Seq(
     """\.localCheckpoint\(""".r,
     """(?<!Checkpoints)\.persist\(""".r,
+    """\.cache\(\)""".r,
+    """\.unpersist\(""".r,
     """Checkpoints\.release\(""".r,
     """releaseExcept""".r)
 
@@ -47,6 +49,11 @@ class LifecycleLintSpec extends AnyFunSuite {
 
   test("multimodal materializes only through the Checkpoints scope") {
     val h = hits(1, "src/main/scala/graft/multimodal")
+    assert(h.isEmpty, h.mkString("\n", "\n", ""))
+  }
+
+  test("io materializes only through the Checkpoints scope") {
+    val h = hits(1, "src/main/scala/graft/io")
     assert(h.isEmpty, h.mkString("\n", "\n", ""))
   }
 }

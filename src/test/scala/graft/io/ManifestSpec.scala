@@ -64,7 +64,6 @@ class ManifestSpec extends SparkSpec {
     assert(parsed.columns.sorted === Array("bytes", "content_sum", "file", "n_rows"))
     // an underscore-prefixed file is invisible to the parquet reader
     assert(spark.read.parquet(dir).count() === 20L)
-    m.unpersist()
   }
 
   test("verifyParquetDir flags missing, extra, and tampered files") {
@@ -73,7 +72,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-v").toString
     (1L to 90L).map(i => (i, s"payload $i")).toDF("id", "v")
       .repartition(3).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir).unpersist()
+    Manifest.writeForParquetDir(spark, dir)
     // clean restore: every file ok
     val clean = Manifest.verifyParquetDir(spark, dir)
     assert(clean.where(col("status") =!= "ok").count() === 0L)
@@ -122,7 +121,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-t").toString
     (1L to 60L).map(i => s"line $i").toDF("value")
       .repartition(3).write.mode("overwrite").text(dir)
-    Manifest.writeForTextDir(spark, dir).unpersist()
+    Manifest.writeForTextDir(spark, dir)
     assert(Manifest.verifyTextDir(spark, dir)
       .where(col("status") =!= "ok").count() === 0L)
     import java.nio.file.{Files => JF, Paths}
@@ -157,7 +156,7 @@ class ManifestSpec extends SparkSpec {
     val dir = parent.resolve("with space").toString
     (1L to 30L).map(i => (i, s"row $i")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir).unpersist()
+    Manifest.writeForParquetDir(spark, dir)
     val verdict = Manifest.verifyParquetDir(spark, dir)
     assert(verdict.count() >= 2L)
     assert(verdict.where(col("status") =!= "ok").count() === 0L)
@@ -169,7 +168,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-z").toString
     (1L to 40L).map(i => (i, s"row $i")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir).unpersist()
+    Manifest.writeForParquetDir(spark, dir)
     // a zero-row parquet file (schema only) contributes nothing to the
     // distributed scan — the FS-listing left join must still see it
     val zdir = java.nio.file.Files.createTempDirectory("graft-man-z0").toString
@@ -196,5 +195,21 @@ class ManifestSpec extends SparkSpec {
     assert(verdict(rel(files(1))) === "ok")
     assert(verdict("smuggled0.parquet") === "extra")
     assert(verdict.count(_._2 != "ok") === 2)
+  }
+
+  test("a manifest write that throws leaves nothing cached or persisted") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-man-x").toString
+    (1L to 20L).map(i => s"line $i").toDF("value")
+      .repartition(2).write.mode("overwrite").text(dir)
+    // a non-empty directory where the manifest file goes: the scan runs,
+    // then creating the file fails
+    val blocker = java.nio.file.Files.createDirectories(
+      java.nio.file.Paths.get(dir, "_manifest.jsonl"))
+    java.nio.file.Files.write(blocker.resolve("x"), Array[Byte](1))
+    val before = materializations
+    intercept[java.io.IOException](Manifest.writeForTextDir(spark, dir))
+    assert(materializations === before)
   }
 }

@@ -73,34 +73,6 @@ class MediaNearDupSpec extends SparkSpec {
       s"expected exactly the perceptual near-dup pair, got $pairs")
   }
 
-  test("mediaNearDupAgainst: corpus dups drop, novel rows keep, batch-internal dups both keep") {
-    val corpus = mediaOf((0L until 5L).map(i =>
-      i -> s"corpus-item-$i".getBytes("UTF-8")))
-    val incoming = mediaOf(Seq(
-      100L -> "corpus-item-2".getBytes("UTF-8"), // exact dup of a corpus row
-      101L -> "novel-payload-a".getBytes("UTF-8"),
-      102L -> "novel-payload-b".getBytes("UTF-8"),
-      103L -> "novel-payload-b".getBytes("UTF-8"))) // dup WITHIN the batch only
-    val kept = Multimodal.mediaNearDupAgainst(incoming, corpus,
-        dims = 16, planes = 8, threshold = 0.9)
-      .select("media_id").collect().map(_.getLong(0)).toSet
-    assert(kept === Set(101L, 102L, 103L),
-      s"corpus dup must drop, batch-internal dups must BOTH keep, got $kept")
-  }
-
-  test("mediaNearDupAgainst: a capped corpus mega-bucket keeps incoming (conservative)") {
-    val boiler = "boilerplate".getBytes("UTF-8")
-    val corpus = mediaOf((0L until 20L).map(i => i -> boiler))
-    val incoming = mediaOf(Seq(100L -> boiler))
-    val dropAll = Multimodal.mediaNearDupAgainst(incoming, corpus,
-      threshold = 0.9, maxBucketSize = None)
-    assert(dropAll.count() === 0L, "uncapped: the exact dup must drop")
-    val capped = Multimodal.mediaNearDupAgainst(incoming, corpus,
-      threshold = 0.9, maxBucketSize = Some(10))
-    assert(capped.count() === 1L,
-      "capped-away corpus bucket: the incoming row must be KEPT, not dropped")
-  }
-
   private def mediaWithDuration(rows: Seq[(Long, Array[Byte], Long)]) = {
     val df = rows.map { case (id, bytes, dur) =>
       (id, "video", bytes, ("clip", 640, 480, dur))
@@ -170,23 +142,8 @@ class MediaNearDupSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty,
       "released feature plane must leave no persistent blocks behind")
 
-    // inside a scope that keeps only a count, the scope frees both
-    // against-side feature planes on exit
-    val before2 = sc.getPersistentRDDs.keySet
-    val corpus = mediaOf((0L until 5L).map(i =>
-      i -> s"corpus-item-$i".getBytes("UTF-8")))
-    val incoming = mediaOf(Seq(
-      100L -> "corpus-item-2".getBytes("UTF-8"),
-      101L -> "novel-payload-a".getBytes("UTF-8")))
-    val kept = graft.core.Checkpoints.scoped {
-      Multimodal.mediaNearDupAgainst(incoming, corpus,
-        dims = 16, planes = 8, threshold = 0.9).count()
-    }
-    assert(kept === 1L)
-    assert((sc.getPersistentRDDs.keySet -- before2).isEmpty,
-      "both against-side feature planes must release")
-
-    // the frame-fingerprint plane: same scope accounting
+    // the frame-fingerprint plane: a scope that keeps only a count
+    // frees it on exit
     val clip = "shared-footage-payload".getBytes("UTF-8")
     val clips = mediaWithDuration(Seq((1L, clip, 5000L), (2L, clip, 2500L)))
     val before4 = sc.getPersistentRDDs.keySet

@@ -1000,71 +1000,6 @@ class ComponentsSpec extends SparkSpec {
         Array((5L, 5L), (6L, 6L)), s"driverMax=$dm")
   }
 
-  test("incremental CC matches a full recompute on the union graph") {
-    val spark2 = spark
-    import spark2.implicits._
-    // standing graph: {1,2,3} (comp 1), {10,11} (comp 10), singletons 20, 21
-    val vertices = Seq(1L, 2L, 3L, 10L, 11L, 20L, 21L)
-    val oldEdges = Seq((2L, 1L), (2L, 3L), (10L, 11L))
-    val labels = Components.connectedComponents(
-      vertices.toDF("id"), oldEdges.toDF("id_a", "id_b"))
-    // batch: a cross-component merge (3-10), an old singleton linking a
-    // NEW vertex (20-31), two new vertices linking each other (40-41), a
-    // within-class no-op (11-10), a duplicate edge, and a self-loop
-    val batch = Seq((3L, 10L), (20L, 31L), (40L, 41L), (11L, 10L),
-      (3L, 10L), (21L, 21L))
-    for (dm <- Seq(Components.DriverFinishMaxEdges, 0L)) {
-      val inc = Components.connectedComponentsIncremental(
-          labels, batch.toDF("id_a", "id_b"), driverFinishMaxEdges = dm)
-        .as[(Long, Long)].collect().sortBy(_._1)
-      val full = Components.connectedComponents(
-          (vertices ++ Seq(31L, 40L, 41L)).toDF("id"),
-          (oldEdges ++ batch).toDF("id_a", "id_b"), driverFinishMaxEdges = dm)
-        .as[(Long, Long)].collect().sortBy(_._1)
-      assert(inc === full, s"driverMax=$dm")
-      assert(inc === Array((1L, 1L), (2L, 1L), (3L, 1L), (10L, 1L), (11L, 1L),
-        (20L, 20L), (21L, 21L), (31L, 20L), (40L, 40L), (41L, 40L)),
-        s"driverMax=$dm")
-    }
-    // empty batch: labels pass through unchanged (plus nothing)
-    val noop = Components.connectedComponentsIncremental(
-        labels, Seq.empty[(Long, Long)].toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    assert(noop === labels.as[(Long, Long)].collect().sortBy(_._1))
-    // a chain of batch edges merging THREE old components transitively:
-    // contracted-graph CC must close the chain, not just pairwise-merge
-    val chain = Seq((1L, 10L), (11L, 20L))
-    val incChain = Components.connectedComponentsIncremental(
-        labels, chain.toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val fullChain = Components.connectedComponents(
-        vertices.toDF("id"), (oldEdges ++ chain).toDF("id_a", "id_b"))
-      .as[(Long, Long)].collect().sortBy(_._1)
-    assert(incChain === fullChain)
-    assert(incChain.filter(_._1 <= 20L).forall(_._2 == 1L),
-      "1-10 and 11-20 must chain {1,2,3}+{10,11}+{20} into comp 1")
-    // over-bound batch: the broadcast guard (broadcastMaxEdges = 1 forces
-    // the shuffle-join fallback) must be semantics-identical — no hint in
-    // the plan, same labels bit-for-bit
-    // (driverFinishMaxEdges = 0 keeps the contracted CC's own
-    // driver-finish broadcast out of the plan, and labels re-enter as a
-    // plain local relation — their lineage carries the driver-finish
-    // hint — isolating the guard's own hint in the assertion)
-    val labelsFlat = labels.as[(Long, Long)].collect().toSeq.toDF("id", "comp")
-    val guarded = Components.connectedComponentsIncremental(
-      labelsFlat, batch.toDF("id_a", "id_b"), broadcastMaxEdges = 1L,
-      driverFinishMaxEdges = 0L)
-    assert(!guarded.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "fallback path must not carry a broadcast hint")
-    assert(guarded.as[(Long, Long)].collect().sortBy(_._1) ===
-      Array((1L, 1L), (2L, 1L), (3L, 1L), (10L, 1L), (11L, 1L),
-        (20L, 20L), (21L, 21L), (31L, 20L), (40L, 40L), (41L, 40L)))
-    val hinted = Components.connectedComponentsIncremental(
-      labelsFlat, batch.toDF("id_a", "id_b"), driverFinishMaxEdges = 0L)
-    assert(hinted.queryExecution.analyzed.toString.contains("ResolvedHint"),
-      "under-bound batch must keep the broadcast fast path")
-  }
-
   test("dedupClusters yields the keep-list semantics") {
     val spark2 = spark
     import spark2.implicits._
@@ -1267,8 +1202,7 @@ class WeightedSampleSpec extends SparkSpec {
     import spark2.implicits._
     // one null weight + one null id among valid rows: without the shared
     // withAresKey filter the window path would sample the null-skey row
-    // (NULLS FIRST), the aggregate path would skip it, and the streaming
-    // encoder would crash
+    // (NULLS FIRST) and the aggregate path would skip it
     val df = Seq(
       (Some(1L), "x", Some(5L)), (Some(2L), "x", Some(5L)),
       (Some(3L), "x", None), (None, "x", Some(5L)), (Some(4L), "x", Some(5L)))
@@ -1434,7 +1368,7 @@ class ContaminationSpec extends SparkSpec {
   test("bloom build/probe agree on negative hashes (no false negatives)") {
     val spark2 = spark
     import spark2.implicits._
-    // ngramHash is 60-bit non-negative, but the bloomBuild* contract only
+    // ngramHashes is 60-bit non-negative, but the bloomBuild* contract only
     // says LONG: negative inputs must not hit the arithmetic-vs-logical
     // shiftright mismatch (sign bit is masked off before either shift)
     val hashes = Array.tabulate(200)(i => -1L - i.toLong * 987654321L)
@@ -1522,10 +1456,7 @@ class ContaminationSpec extends SparkSpec {
       df.select("vec_id").as[Long].collect().sorted.toSeq
     val hits = Contamination.semanticContaminationHits(
       corpus, col("embedding"), bench, col("embedding"), minCos = 0.75)
-    val clean = Contamination.semanticDecontaminate(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.75)
     assert(ids(hits) === Seq(1L))
-    assert(ids(clean) === Seq(2L, 3L, 4L))
     // lowering the bar below cos(45deg) pulls in the paraphrase-like 3
     assert(ids(Contamination.semanticContaminationHits(
       corpus, col("embedding"), bench, col("embedding"), minCos = 0.7)) ===

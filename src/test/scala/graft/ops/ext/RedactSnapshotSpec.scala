@@ -335,32 +335,6 @@ class NbClassifySpec extends SparkSpec {
     assert(out.find(_._1 == 10L).get._2 === 0L && pred(10L) === "de")
   }
 
-  test("trainNb + applyNb equals nbClassify exactly (map-side literal form)") {
-    val spark2 = spark
-    import spark2.implicits._
-    val docs = Seq(
-      (1L, "good clean prose text", true, true),
-      (2L, "good useful prose words", true, true),
-      (3L, "spam junk noise click", true, false),
-      (4L, "junk spam garbage click", true, false),
-      (5L, "clean prose and words", false, false),
-      (6L, "click spam now", false, false),
-      (7L, "zzz qqq xxx", false, false)
-    ).toDF("doc_id", "text", "seed", "label")
-    val agg = TextStats.nbClassify(docs, col("text"), "doc_id",
-        col("seed"), col("label"), topV = 100)
-      .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    val model = TextStats.trainNb(docs, col("text"),
-      col("seed"), col("label"), topV = 100)
-    val lit = TextStats.applyNb(docs, col("text"), "doc_id", model)
-      .as[(Long, Long, Long, Boolean)].collect().sortBy(_._1).toSeq
-    assert(lit === agg)
-    // the literal form plans no shuffle at all: scan-bound scoring
-    val plan = TextStats.applyNb(docs, col("text"), "doc_id", model)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"), plan)
-  }
-
   test("nbClassify scoring join broadcasts the model: corpus never shuffles on token") {
     val spark2 = spark
     import spark2.implicits._

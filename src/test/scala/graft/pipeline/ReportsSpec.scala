@@ -87,18 +87,6 @@ class ReportsSpec extends SparkSpec {
     assert(got.toSeq === Seq(
       ("far", "neg", 1000000L), ("far", "pos", 1000000L), ("neg", "pos", 0L)))
     graft.core.Checkpoints.release(out)
-    // ksBaseline applies the SAME policy (a negative used to be a driver
-    // ArrayIndexOutOfBounds here): neg and pos train identical baselines
-    val bNeg = Reports.ksBaseline(
-      df.where(col("src") === "neg"), col("v"), bins = 4, binWidth = 1L)
-    val bPos = Reports.ksBaseline(
-      df.where(col("src") === "pos"), col("v"), bins = 4, binWidth = 1L)
-    assert(bNeg.cdfPpm.toSeq === Seq(666666L, 1000000L, 1000000L, 1000000L))
-    assert(bNeg.cdfPpm.toSeq === bPos.cdfPpm.toSeq)
-    // and the stream-side fold over the clamped histogram agrees: the
-    // neg slice binned under the policy is (2,1,0,0) — zero drift vs
-    // its own baseline, the three-way agreement the dual contract needs
-    assert(Reports.ksStat(Array(2L, 1L, 0L, 0L), bNeg) === ((3L, 0L)))
   }
 
   test("shrunkRates: small groups pull to the global prior, large groups hold") {
