@@ -809,15 +809,15 @@ object SparkEntry {
       // contraction converges in O(log² n) rounds where hash-to-min pays
       // one round per unit of diameter. Same recursive-CTE oracle shape as
       // q58 proves both algorithms compute the same min-label components
-      val docs = t(s, dir, "documents")
-      val sig = Dedup.withMinhashSignature(docs, col("text"), 1)
-      val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0"),
-        maxBucketSize = Some(100), saltOversized = true,
-        persistSignatures = true)
-      val out = Components.dedupClusters(docs, pairs, algorithm = "star")
-        .orderBy(col("doc_id"))
-      graft.core.Checkpoints.release(pairs) // clusters are materialized
-      out
+      graft.core.Checkpoints.scoped {
+        val docs = t(s, dir, "documents")
+        val sig = Dedup.withMinhashSignature(docs, col("text"), 1)
+        val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0"),
+          maxBucketSize = Some(100), saltOversized = true,
+          persistSignatures = true)
+        Components.dedupClusters(docs, pairs, algorithm = "star")
+          .orderBy(col("doc_id"))
+      }
     }),
 
     // ---- LSH salted guard: oversized buckets split, not dropped --------
@@ -1331,13 +1331,12 @@ object SparkEntry {
     "q89_cluster_reps" -> ((s, dir) => {
       // q58's clusters, but each cluster elects its highest-token-count
       // member (ties to smaller id) instead of the arbitrary min-id — the
-      // keep-the-best-copy semantics of a real curation pass
+      // keep-the-best-copy semantics of a real curation pass. One band, so
+      // the clusters are the guarded buckets (Dedup.bandClusters)
       val docs = t(s, dir, "documents")
       val sig = Dedup.withMinhashSignature(docs, col("text"), 2)
-      val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0", "mh1"),
-        maxBucketSize = Some(1000),
-        persistSignatures = true) // kernel once, not census+2 sides (r20 A/B)
-      val clusters = Components.dedupClusters(docs, pairs)
+      val clusters = Dedup.bandClusters(sig, "doc_id", Seq("mh0", "mh1"), 1000)
+        .drop("cluster_size")
       val quality = docs.select(col("doc_id"),
         TextStats.tokenCount(col("text")).cast("long").as("score"))
       Components.representatives(clusters, quality)
@@ -1723,15 +1722,12 @@ object SparkEntry {
 
     // ---- soft dedup: per-copy loss weights from cluster sizes -----------
     "q124_soft_dedup" -> ((s, dir) => {
-      // the q58 cluster machinery (guarded LSH pairs -> hash-to-min CC),
-      // then one partial-aggregated count join — never a per-cluster window
-      val docs = t(s, dir, "documents")
-      val sig = Dedup.withMinhashSignature(docs, col("text"), 2)
-      val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0", "mh1"),
-        maxBucketSize = Some(1000),
-        persistSignatures = true) // kernel once, not census+2 sides (r20 A/B)
-      Components.clusterWeights(
-          Components.dedupClusters(docs, pairs, "doc_id"), "doc_id")
+      // q58's clusters from the guarded buckets of its one band
+      // (Dedup.bandClusters: one partial-aggregated count per bucket,
+      // never a per-cluster window), sizes -> basis-point loss weights
+      val sig = Dedup.withMinhashSignature(t(s, dir, "documents"), col("text"), 2)
+      Dedup.bandClusters(sig, "doc_id", Seq("mh0", "mh1"), 1000)
+        .withColumn("weight_bp", expr("10000 div cluster_size"))
         .orderBy(col("doc_id"))
     }),
 
@@ -1897,15 +1893,12 @@ object SparkEntry {
 
     // ---- leakage-safe train/eval split (near-dups co-travel) ------------
     "q138_cluster_split" -> ((s, dir) => {
-      // q124's cluster machinery, split hashed on the CANONICAL id —
-      // a near-dup pair can never straddle train/eval
-      val docs = t(s, dir, "documents")
-      val sig = Dedup.withMinhashSignature(docs, col("text"), 2)
-      val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0", "mh1"),
-        maxBucketSize = Some(1000),
-        persistSignatures = true) // kernel once, not census+2 sides (r20 A/B)
+      // q124's clusters, split hashed on the CANONICAL id — a near-dup
+      // pair can never straddle train/eval
+      val sig = Dedup.withMinhashSignature(t(s, dir, "documents"), col("text"), 2)
       Sampling.clusterSafeSplit(
-          Components.dedupClusters(docs, pairs, "doc_id"), "canonical_id",
+          Dedup.bandClusters(sig, "doc_id", Seq("mh0", "mh1"), 1000)
+            .drop("cluster_size"), "canonical_id",
           Seq("train" -> 0.8, "val" -> 0.1, "test" -> 0.1))
         .orderBy(col("doc_id"))
     }),

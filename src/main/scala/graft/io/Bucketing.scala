@@ -1,6 +1,6 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 
 /** Bucketed tables for shuffle-free co-located joins.
   *
@@ -46,9 +46,4 @@ object Bucketing {
       .sortBy(key)
       .format("parquet")
       .saveAsTable(table)
-
-  /** Join two bucketed tables on their bucket key — planned without any
-    * Exchange when bucket specs match. */
-  def bucketedJoin(spark: SparkSession, leftTable: String, rightTable: String, key: String): DataFrame =
-    spark.table(leftTable).join(spark.table(rightTable), key)
 }

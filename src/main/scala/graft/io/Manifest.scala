@@ -102,15 +102,22 @@ object Manifest {
   }
 
   /** Recursive data-file listing (driver-side FS metadata only):
-    * (absolute path, bytes); hidden and `_SUCCESS`-style files skipped. */
+    * (absolute path, bytes); hidden and `_SUCCESS`-style files skipped.
+    * Directories are skipped as Spark's file index skips them: a name
+    * starting with `.`, or with `_` and no `=` (`_temporary`,
+    * `.spark-staging-*`; a `_p=1` partition directory is read), so a
+    * stray file under one is no data file. */
   private[graft] def listDataFiles(
       spark: SparkSession, dir: String): Seq[(String, Long)] = {
     val path = new Path(dir)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val out = Seq.newBuilder[(String, Long)]
     def walk(p: Path): Unit = fs.listStatus(p).foreach { st =>
-      if (st.isDirectory) walk(st.getPath)
-      else if (!st.getPath.getName.startsWith("_") && !st.getPath.getName.startsWith("."))
+      val name = st.getPath.getName
+      if (st.isDirectory) {
+        if (!name.startsWith(".") && !(name.startsWith("_") && !name.contains("=")))
+          walk(st.getPath)
+      } else if (!name.startsWith("_") && !name.startsWith("."))
         out += ((st.getPath.toUri.getPath, st.getLen))
     }
     walk(path)

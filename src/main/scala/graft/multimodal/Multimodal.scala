@@ -439,8 +439,7 @@ object Multimodal {
   }
 
   /** Mean byte value over `dims` equal blocks of `c[off, off + len)`,
-    * /255 — the luma-plane feature of [[Y4mFrameCodec]] and
-    * [[Mp4FrameCodec]]. */
+    * /255 — the luma-plane feature of [[Y4mFrameCodec]]. */
   private def blockMean(c: Array[Byte], off: Int, len: Int, dims: Int): Array[Float] = {
     val sums = new Array[Double](dims)
     val counts = new Array[Int](dims)
@@ -455,407 +454,22 @@ object Multimodal {
       if (counts(j) > 0) (sums(j) / counts(j) / 255.0).toFloat else 0f)
   }
 
-  /** ISO-BMFF (MP4) box-walk parser — shared by [[Mp4Probe]] (header-
-    * only metadata) and [[Mp4FrameCodec]] (sample-table seek), the
-    * [[Y4m]] one-parser rule. Big-endian sizes, `size==1` 64-bit
-    * largesize and `size==0` to-end-of-enclosure both handled; a
-    * truncated or absurd size stops the walk and keeps what parsed (a
-    * damaged tail loses only what it holds). The probe never reads
-    * payload (`mdat` is skipped by size); the codec reads exactly the
-    * one sample a lookup resolves. */
-  private[multimodal] object Mp4 {
-    /** Movie timescale+duration from `mvhd`; (w, h) from the first
-      * VIDEO `tkhd` (16.16 fixed) of a seekable track; `seekable` iff
-      * some track carries BOTH a sample-size table (`stsz`/`stz2`) and
-      * a chunk-offset table (`stco`/`co64`) — the tables an
-      * index-seeking codec needs. */
-    final case class Header(timescale: Long, duration: Long, w: Int, h: Int)
-
-    private def u32(c: Array[Byte], o: Int): Long =
-      ((c(o) & 0xffL) << 24) | ((c(o + 1) & 0xffL) << 16) |
-        ((c(o + 2) & 0xffL) << 8) | (c(o + 3) & 0xffL)
-    private def u64(c: Array[Byte], o: Int): Long = (u32(c, o) << 32) | u32(c, o + 4)
-    private[multimodal] def tag(c: Array[Byte], o: Int, s: String): Boolean =
-      o >= 0 && o + 4 <= c.length &&
-        (0 until 4).forall(i => c(o + i) == s.charAt(i).toByte)
-
-    /** Iterate boxes in `[start, end)`: `f(typeOffset, payloadStart,
-      * payloadEnd)`. Malformed sizes (negative 64-bit, overflow, past
-      * the enclosure) end the walk rather than throw. */
-    private def boxes(c: Array[Byte], start: Int, end: Int)(
-        f: (Int, Int, Int) => Unit): Unit = {
-      var pos = start
-      var done = false
-      while (!done && pos + 8 <= end) {
-        val sz = u32(c, pos)
-        var payload = pos + 8
-        val boxEnd: Long =
-          if (sz == 0L) end.toLong // box extends to the enclosure end
-          else if (sz == 1L) {
-            if (pos + 16 > end) return
-            payload = pos + 16
-            pos + u64(c, pos + 8) // largesize counts from the box start
-          } else pos + sz
-        if (boxEnd < payload || boxEnd > end) done = true
-        else {
-          f(pos + 4, payload, boxEnd.toInt)
-          if (boxEnd.toInt <= pos) done = true else pos = boxEnd.toInt
-        }
-      }
-    }
-
-    def parse(c: Array[Byte]): Option[Header] = {
-      if (c == null || c.length < 12 || !tag(c, 4, "ftyp")) return None
-      var timescale = -1L; var duration = -1L
-      var w = -1; var h = -1; var seekable = false
-      boxes(c, 0, c.length) { (t, ps, pe) =>
-        if (tag(c, t, "moov")) boxes(c, ps, pe) { (t2, ps2, pe2) =>
-          if (tag(c, t2, "mvhd") && pe2 - ps2 >= 20) {
-            val ver = c(ps2) & 0xff
-            if (ver == 1 && pe2 - ps2 >= 32) {
-              timescale = u32(c, ps2 + 20); duration = u64(c, ps2 + 24)
-            } else if (ver == 0) {
-              timescale = u32(c, ps2 + 12); duration = u32(c, ps2 + 16)
-            }
-          } else if (tag(c, t2, "trak")) {
-            trakTables(c, ps2, pe2).foreach { tr =>
-              seekable = true
-              if (tr.w > 0 && tr.h > 0 && w < 0) { w = tr.w; h = tr.h }
-            }
-          }
-        }
-      }
-      if (timescale <= 0 || duration < 0 || !seekable) None
-      else Some(Header(timescale, duration, w, h))
-    }
-
-    /** Full sample-table geometry of one seekable track — the tables
-      * [[Mp4FrameCodec]] seeks through. All fields are OFFSETS into the
-      * content (entry counts clamped against the enclosing payload so
-      * every later table read is in-bounds by construction); nothing
-      * proportional to the table size is ever allocated — the resolve
-      * arithmetic walks the raw bytes, the house byte-walk style.
-      * `szFieldBits` is 32 for `stsz` (with `szUniform` > 0 for the
-      * uniform-size form), 4/8/16 for `stz2`; `coBytes` is 4 for `stco`,
-      * 8 for `co64`. `mediaTimescale` comes from `mdhd` (the timescale
-      * `stts` deltas are measured in), patched by [[parseTrack]] with
-      * the `mvhd` movie timescale when absent. */
-    final case class Track(
-        w: Int, h: Int, mediaTimescale: Long, sampleCount: Int,
-        sttsOff: Int, sttsN: Int,
-        stscOff: Int, stscN: Int,
-        szUniform: Long, szOff: Int, szFieldBits: Int,
-        coOff: Int, coN: Int, coBytes: Int)
-
-    private def clampN(declared: Long, fit: Long): Int =
-      math.max(0L, math.min(declared, math.min(fit, Int.MaxValue.toLong))).toInt
-
-    /** Walk ONE `trak` payload for its tkhd dims, mdhd timescale, and
-      * stbl tables; Some iff the track carries both a size table and a
-      * chunk-offset table — the seekability contract [[Mp4Probe]] and
-      * [[Mp4FrameCodec]] share (this is the single parse behind both, so
-      * probe and codec cannot disagree — the [[Y4m]] rule). */
-    private def trakTables(c: Array[Byte], start: Int, end: Int): Option[Track] = {
-      var tw = -1; var th = -1; var mediaTs = 0L
-      var sttsOff = -1; var sttsN = 0
-      var stscOff = -1; var stscN = 0
-      var szUniform = 0L; var szOff = -1; var szBits = 0; var sampleCount = 0
-      var hasSz = false; var hasCo = false
-      var coOff = -1; var coN = 0; var coBytes = 4
-      boxes(c, start, end) { (t3, ps3, pe3) =>
-        if (tag(c, t3, "tkhd")) {
-          val ver = c(ps3) & 0xff
-          // widths are 16.16 fixed at the tkhd tail: v0 payload 84
-          // bytes (w @76), v1 96 (w @88)
-          val (need, off) = if (ver == 1) (96, 88) else (84, 76)
-          if (pe3 - ps3 >= need) {
-            tw = (u32(c, ps3 + off) >> 16).toInt
-            th = (u32(c, ps3 + off + 4) >> 16).toInt
-          }
-        } else if (tag(c, t3, "mdia")) boxes(c, ps3, pe3) { (t4, ps4, pe4) =>
-          if (tag(c, t4, "mdhd") && pe4 - ps4 >= 16) {
-            val ver = c(ps4) & 0xff
-            if (ver == 1 && pe4 - ps4 >= 24) mediaTs = u32(c, ps4 + 20)
-            else if (ver == 0) mediaTs = u32(c, ps4 + 12)
-          } else if (tag(c, t4, "minf")) boxes(c, ps4, pe4) { (t5, ps5, pe5) =>
-            if (tag(c, t5, "stbl")) boxes(c, ps5, pe5) { (t6, ps6, pe6) =>
-              if (tag(c, t6, "stts") && pe6 - ps6 >= 8) {
-                sttsOff = ps6 + 8
-                sttsN = clampN(u32(c, ps6 + 4), (pe6 - sttsOff).toLong / 8)
-              } else if (tag(c, t6, "stsc") && pe6 - ps6 >= 8) {
-                stscOff = ps6 + 8
-                stscN = clampN(u32(c, ps6 + 4), (pe6 - stscOff).toLong / 12)
-              } else if (tag(c, t6, "stsz") && pe6 - ps6 >= 12) {
-                hasSz = true
-                szUniform = u32(c, ps6 + 4)
-                szOff = ps6 + 12
-                szBits = 32
-                sampleCount =
-                  if (szUniform > 0) clampN(u32(c, ps6 + 8), Int.MaxValue.toLong)
-                  else clampN(u32(c, ps6 + 8), (pe6 - szOff).toLong / 4)
-              } else if (tag(c, t6, "stz2") && pe6 - ps6 >= 12) {
-                hasSz = true
-                szUniform = 0L
-                szOff = ps6 + 12
-                val bits = c(ps6 + 7) & 0xff // 24-bit reserved, then field_size
-                if (bits == 4 || bits == 8 || bits == 16) {
-                  szBits = bits
-                  sampleCount =
-                    clampN(u32(c, ps6 + 8), (pe6 - szOff).toLong * 8 / bits)
-                } else { szBits = 0; sampleCount = 0 } // malformed field size
-              } else if ((tag(c, t6, "stco") || tag(c, t6, "co64")) &&
-                  pe6 - ps6 >= 8) {
-                hasCo = true
-                coBytes = if (tag(c, t6, "co64")) 8 else 4
-                coOff = ps6 + 8
-                coN = clampN(u32(c, ps6 + 4), (pe6 - coOff).toLong / coBytes)
-              }
-            }
-          }
-        }
-      }
-      if (hasSz && hasCo)
-        Some(Track(tw, th, mediaTs, sampleCount, sttsOff, sttsN,
-          stscOff, stscN, szUniform, szOff, szBits, coOff, coN, coBytes))
-      else None
-    }
-
-    /** The track [[Mp4FrameCodec]] seeks: the first seekable VIDEO track
-      * ([[Mp4Probe]]'s dims rule), else the first seekable track of any
-      * kind (audio-only files keep their single-stream contract, like
-      * [[WavFrameCodec]]). Media timescale falls back to the movie
-      * (`mvhd`) timescale, then to 1000 (ms = media units, neutral). */
-    def parseTrack(c: Array[Byte]): Option[Track] = {
-      if (c == null || c.length < 12 || !tag(c, 4, "ftyp")) return None
-      var mvhdTs = 0L
-      var video: Track = null; var any: Track = null
-      boxes(c, 0, c.length) { (t, ps, pe) =>
-        if (tag(c, t, "moov")) boxes(c, ps, pe) { (t2, ps2, pe2) =>
-          if (tag(c, t2, "mvhd") && pe2 - ps2 >= 20) {
-            val ver = c(ps2) & 0xff
-            if (ver == 1 && pe2 - ps2 >= 32) mvhdTs = u32(c, ps2 + 20)
-            else if (ver == 0) mvhdTs = u32(c, ps2 + 12)
-          } else if (tag(c, t2, "trak")) trakTables(c, ps2, pe2).foreach { tr =>
-            if (tr.w > 0 && tr.h > 0 && video == null) video = tr
-            if (any == null) any = tr
-          }
-        }
-      }
-      val chosen = if (video != null) video else any
-      if (chosen == null) None
-      else if (chosen.mediaTimescale > 0) Some(chosen)
-      else Some(chosen.copy(
-        mediaTimescale = if (mvhdTs > 0) mvhdTs else 1000L))
-    }
-
-    /** Sample k's byte size per the track's size table; -1 on any
-      * out-of-bounds read (tables are pre-clamped, so this only fires on
-      * a k past `sampleCount` — caller bug, poisoned not thrown). */
-    def sampleSize(c: Array[Byte], tr: Track, k: Int): Long =
-      if (tr.szFieldBits == 32) {
-        if (tr.szUniform > 0) tr.szUniform
-        else if (tr.szOff + 4L * k + 4 <= c.length) u32(c, tr.szOff + 4 * k)
-        else -1L
-      } else if (tr.szFieldBits == 16) {
-        val o = tr.szOff + 2 * k
-        if (o + 2 <= c.length) ((c(o) & 0xffL) << 8) | (c(o + 1) & 0xffL)
-        else -1L
-      } else if (tr.szFieldBits == 8) {
-        if (tr.szOff + k < c.length) c(tr.szOff + k) & 0xffL else -1L
-      } else if (tr.szFieldBits == 4) {
-        val o = tr.szOff + k / 2
-        if (o < c.length) {
-          val b = c(o) & 0xff
-          if (k % 2 == 0) (b >>> 4).toLong else (b & 0xf).toLong
-        } else -1L
-      } else -1L
-
-    /** Which chunk holds sample k, and the chunk's first sample — the
-      * `stsc` run walk (O(entries), never O(samples)). An absent/empty
-      * stsc degrades to the one-sample-per-chunk convention (the
-      * minimal-writer shape an stsc of (1,1,1) would encode). Returns
-      * null when the mapping resolves past the chunk-offset table or an
-      * entry is malformed (non-positive counts, non-increasing
-      * first_chunk). */
-    def locateChunk(c: Array[Byte], tr: Track, k: Int): (Int, Long) = {
-      if (tr.stscN <= 0)
-        return if (k < tr.coN) (k, k.toLong) else null
-      var acc = 0L
-      var i = 0
-      while (i < tr.stscN) {
-        val first = u32(c, tr.stscOff + 12 * i) // 1-based
-        val spc = u32(c, tr.stscOff + 12 * i + 4)
-        if (first < 1 || spc < 1) return null
-        val nextFirst =
-          if (i + 1 < tr.stscN) u32(c, tr.stscOff + 12 * (i + 1))
-          else tr.coN + 1L // last run extends through the chunk table
-        if (nextFirst <= first) return null
-        // cap factors so the product can't overflow (both u32; anything
-        // past 2^31 is equivalent for comparison with an Int sample idx)
-        val inRun = math.min(nextFirst - first, Int.MaxValue.toLong) *
-          math.min(spc, Int.MaxValue.toLong)
-        if (k < acc + inRun) {
-          val rel = k - acc
-          val chunk = first - 1 + rel / spc
-          if (chunk >= tr.coN) return null
-          return (chunk.toInt, acc + (rel / spc) * spc)
-        }
-        acc += inRun
-        i += 1
-      }
-      null
-    }
-
-    /** Chunk `ci`'s file offset from stco/co64 (pre-clamped tables). */
-    def chunkOffset(c: Array[Byte], tr: Track, ci: Int): Long =
-      if (tr.coBytes == 4) u32(c, tr.coOff + 4 * ci)
-      else u64(c, tr.coOff + 8 * ci)
-
-    /** Sample index at media time `t` via the `stts` run walk; clamps
-      * past-the-end to the last decoded sample, and degrades to sample 0
-      * when the table is absent (no time base — the probe's duration
-      * would be the mvhd's, not per-sample). */
-    def sampleAtTime(c: Array[Byte], tr: Track, t: Long): Int = {
-      if (tr.sttsN <= 0) return 0
-      var cum = 0L; var si = 0L; var i = 0
-      while (i < tr.sttsN && cum < (1L << 61) && si < Int.MaxValue) {
-        val cnt = math.min(u32(c, tr.sttsOff + 8 * i), Int.MaxValue.toLong)
-        val delta = math.min(u32(c, tr.sttsOff + 8 * i + 4), Int.MaxValue.toLong)
-        if (cnt > 0 && delta > 0) {
-          if (t < cum + cnt * delta)
-            return math.min(si + (t - cum) / delta, Int.MaxValue.toLong).toInt
-          cum += cnt * delta
-          si += cnt
-        }
-        i += 1
-      }
-      math.max(0L, math.min(si - 1, Int.MaxValue.toLong)).toInt
-    }
-
-    /** Per-lookup read cap (4 Mi bytes): one seek never
-      * feature-folds more than this many bytes no matter what `stsz`
-      * claims (there is no decompressor in this path, so the cap bounds
-      * WORK, not allocation-inflation). */
-    val MaxSampleBytes: Long = 1L << 22
-
-    /** Resolve sample k through stsc→stco/co64→stsz to its (payloadOff,
-      * len), or null when k is out of range, any table entry is
-      * malformed, the resolved span leaves the content, or the size
-      * exceeds [[MaxSampleBytes]]. Intra-chunk skip sums at most
-      * samples-per-chunk size-table entries — table-bounded, and O(1)
-      * for the uniform-stsz form. */
-    def sampleChunk(c: Array[Byte], tr: Track, k: Int): (Int, Int) = {
-      if (k < 0 || k >= tr.sampleCount) return null
-      val loc = locateChunk(c, tr, k)
-      if (loc == null) return null
-      var off = chunkOffset(c, tr, loc._1)
-      if (off < 0) return null
-      if (tr.szFieldBits == 32 && tr.szUniform > 0) {
-        off += (k - loc._2) * tr.szUniform
-      } else {
-        var j = loc._2
-        while (j < k) {
-          val s = sampleSize(c, tr, j.toInt)
-          if (s < 0) return null
-          off += s
-          j += 1
-        }
-      }
-      val len = sampleSize(c, tr, k)
-      if (len < 0 || len > MaxSampleBytes || off < 0 ||
-          off + len > c.length) null
-      else (off.toInt, len.toInt)
-    }
-  }
-
-  /** MP4/ISO-BMFF: the common real-world video container — header-only
-    * `moov` walk: `mvhd` movie timescale+duration,
-    * first seekable video `tkhd` width/height, and `stsz`/`stco`
-    * presence as the seekability contract. A file with no sample
-    * tables probes all-None: not
-    * seekable, not usable by an index-seeking codec. An audio-only
-    * file (no video track) keeps its duration with null dimensions.
-    * `mdat` is never touched. */
-  object Mp4Probe extends MediaProbe {
-    def probe(content: Array[Byte]): ProbedMeta =
-      Mp4.parse(content) match {
-        case None => ProbedMeta(0L, None, None, None, None)
-        case Some(hdr) =>
-          ProbedMeta(0L, Some("mp4"),
-            if (hdr.w > 0) Some(hdr.w) else None,
-            if (hdr.h > 0) Some(hdr.h) else None,
-            // duration is a crafted-input u64: poison an overflowing
-            // *1000 rather than emit a negative duration (the Y4M cap)
-            if (hdr.duration > Long.MaxValue / 1000L) None
-            else Some(hdr.duration * 1000L / hdr.timescale))
-      }
-  }
-
-  /** MP4/ISO-BMFF frame codec — the seek [[Mp4Probe]]'s `seekable` flag
-    * promises: `frameMs` → media time via the track's `mdhd` timescale →
-    * sample index via the `stts` run walk → chunk via the `stsc` mapping
-    * → file position via `stco`/`co64` plus the intra-chunk `stsz`/`stz2`
-    * size skip — ONE bounded read per lookup, `mdat` never scanned
-    * (an index seek through ISO-BMFF's four-table
-    * geometry; [[Mp4.parseTrack]] is the same parse the probe dispatches
-    * on, so probe and codec cannot disagree about seekability).
-    *
-    * The feature is the house block-mean over the resolved sample's
-    * bytes, /255 — for raw 8-bit luma samples (the testable path: no
-    * native codec libraries exist in this engine by design) that IS the
-    * [[Y4mFrameCodec]] luma-plane feature; for compressed codecs it is a
-    * deterministic byte-level fingerprint, documented as such. Failure
-    * policy matches the family: malformed tables, out-of-range entries,
-    * or a sample resolving outside the content fall back toward earlier
-    * samples (the [[Y4mFrameCodec]] truncated-tail clamp) and poison to
-    * the zero vector, never a throw; a single lookup never reads more
-    * than [[Mp4.MaxSampleBytes]]. */
-  object Mp4FrameCodec extends FrameCodec {
-    def decode(content: Array[Byte], dims: Int): Array[Float] =
-      decodeFrame(content, 0L, dims) // whole-content = the first sample
-    def decodeFrame(content: Array[Byte], frameMs: Long, dims: Int): Array[Float] = {
-      val zero = new Array[Float](dims)
-      if (content == null || dims <= 0 || frameMs < 0) return zero
-      Mp4.parseTrack(content) match {
-        case None => zero
-        case Some(tr) =>
-          if (tr.sampleCount <= 0 || tr.coN <= 0) return zero
-          val ts = tr.mediaTimescale
-          val t =
-            if (ts > 0 && frameMs <= Long.MaxValue / ts) frameMs * ts / 1000L
-            else 0L
-          var target = math.max(0, math.min(
-            Mp4.sampleAtTime(content, tr, t), tr.sampleCount - 1))
-          var res: (Int, Int) = null
-          while (target >= 0 &&
-              { res = Mp4.sampleChunk(content, tr, target); res == null })
-            target -= 1
-          if (res == null) zero
-          else blockMean(content, res._1, res._2, dims)
-      }
-    }
-  }
-
-
   /** The supported formats' magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE
-    * (wav), `ftyp` at offset 4 (mp4) or P6 (ppm); None for anything
-    * else. */
+    * (wav) or P6 (ppm); None for anything else. */
   private def sniff(c: Array[Byte]): Option[String] = {
     def starts(s: String, at: Int = 0): Boolean =
       c != null && c.length >= at + s.length &&
         (0 until s.length).forall(i => c(at + i) == s.charAt(i).toByte)
     if (starts("YUV4MPEG2")) Some("y4m")
     else if (starts("RIFF") && starts("WAVE", 8)) Some("wav")
-    else if (starts("ftyp", 4)) Some("mp4")
     else if (starts("P6")) Some("ppm")
     else None
   }
 
   /** Magic-byte dispatch to the right FRAME codec — [[SniffProbe]]'s
     * codec twin, for pipelines whose media column is untagged: Y4M to
-    * [[Y4mFrameCodec]]'s seek, WAV to a [[WavFrameCodec]] window, MP4 to
-    * [[Mp4FrameCodec]]'s sample-table seek, PPM to its single frame via
-    * [[PpmCodec]]; unrecognized bytes decode to the
+    * [[Y4mFrameCodec]]'s seek, WAV to a [[WavFrameCodec]] window, PPM
+    * to its single frame via [[PpmCodec]]; unrecognized bytes decode to the
     * zero vector (the family's poison rule). Stateless and Serializable
     * like every codec — ships to executors as a closure constant. */
   class SniffFrameCodec(wavWindowMs: Long = 1000L) extends FrameCodec {
@@ -863,7 +477,6 @@ object Multimodal {
     def decode(content: Array[Byte], dims: Int): Array[Float] = sniff(content) match {
       case Some("y4m") => Y4mFrameCodec.decode(content, dims)
       case Some("wav") => wav.decode(content, dims)
-      case Some("mp4") => Mp4FrameCodec.decode(content, dims)
       case Some("ppm") => PpmCodec.decode(content, dims)
       case _ => new Array[Float](dims)
     }
@@ -871,7 +484,6 @@ object Multimodal {
       sniff(content) match {
         case Some("y4m") => Y4mFrameCodec.decodeFrame(content, frameMs, dims)
         case Some("wav") => wav.decodeFrame(content, frameMs, dims)
-        case Some("mp4") => Mp4FrameCodec.decodeFrame(content, frameMs, dims)
         // a PPM is its own single frame: any frameMs resolves to it, the
         // same way decode() routes whole-image P6
         case Some("ppm") => PpmCodec.decode(content, dims)
@@ -898,14 +510,13 @@ object Multimodal {
     def probe(content: Array[Byte]): ProbedMeta
   }
 
-  /** Dispatch on magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE (wav), `ftyp`
-    * at offset 4 (mp4), P6 (ppm); anything else probes all-None. The real-world entry point —
+  /** Dispatch on magic bytes: YUV4MPEG2 (y4m), RIFF/WAVE (wav), P6
+    * (ppm); anything else probes all-None. The real-world entry point —
     * crawled bytes arrive untagged. */
   object SniffProbe extends MediaProbe {
     def probe(content: Array[Byte]): ProbedMeta = sniff(content) match {
       case Some("y4m") => Y4mProbe.probe(content)
       case Some("wav") => WavProbe.probe(content)
-      case Some("mp4") => Mp4Probe.probe(content)
       case Some("ppm") => PpmProbe.probe(content)
       case _ => ProbedMeta(0L, None, None, None, None)
     }
@@ -1125,71 +736,6 @@ object Multimodal {
       .where(col("id_a") < col("id_b"))
       .where(Similarity.cosineSafe(col("vec_a"), col("vec_b")) >= threshold)
       .select(col("id_a"), col("id_b"))
-  }
-
-  /** Frame-level media near-duplicate pairs — CLIP detection, the video
-    * dual of [[mediaNearDupPairs]]: where whole-content features catch
-    * re-encodes of the same item, shared FRAME fingerprints catch a clip
-    * embedded in a longer recording, a re-edit, or two broadcasts
-    * sharing footage. Each sampled frame ([[extractFrameFeatures]], the
-    * q136 plane) reduces to an 8-byte fingerprint (SRP bucket of its
-    * feature vector — visually-near frames agree on coarse-luma signs);
-    * two media pair when their DISTINCT-fingerprint overlap covers at
-    * least `minSharedPpm` of the SHORTER item's fingerprint set
-    * (containment, the [[graft.ops.ext.Dedup]] winnowing semantics —
-    * a short clip fully inside a long recording scores 1e6 ppm).
-    *
-    * Scale shape: frames collapse to (media_id, fp) longs immediately
-    * after the decode `mapPartitions`, behind one eager checkpoint; the
-    * candidate join is fp-keyed
-    * ([[graft.ops.ext.Dedup.winnowCandidatePairs]]'s shape) with
-    * `maxBucketSize` capping degenerate fingerprints (black/silence
-    * frames shared corpus-wide are the boilerplate mega-bucket of the
-    * frame plane — uncapped they are quadratic); the confirm is a
-    * count aggregate on the pair list, never a re-decode. Media bytes
-    * are read once per frame and never shuffle.
-    *
-    * Output: (id_a, id_b, shared, nf_a, nf_b, containment_ppm),
-    * id_a < id_b, all BIGINT (ppm floor division — engine-exact). The
-    * result reads the fingerprint checkpoint, so it passes to the
-    * enclosing [[graft.core.Checkpoints.scoped]] scope, or to the
-    * caller outside one. */
-  def mediaFrameNearDupPairs(
-      media: DataFrame, everyMs: Long, dims: Int = 16, planes: Int = 16,
-      minSharedPpm: Long = 500000L,
-      codec: FrameCodec = StubFrameCodec,
-      maxBucketSize: Option[Int] = None): DataFrame = Checkpoints.scoped {
-    import graft.ops.ext.Similarity
-    require(dims >= 1 && planes >= 1, "mediaFrameNearDupPairs: dims/planes must be >= 1")
-    require(minSharedPpm >= 1 && minSharedPpm <= 1000000L,
-      s"mediaFrameNearDupPairs: minSharedPpm must be in [1, 1e6], got $minSharedPpm")
-    require(maxBucketSize.forall(_ >= 1), "mediaFrameNearDupPairs: maxBucketSize must be >= 1")
-    val fp = Checkpoints.checkpoint(extractFrameFeatures(media, everyMs, dims, codec).toDF()
-      .select(col("media_id"),
-        Similarity.srpBucket(col("embedding"), planes).as("fp"))
-      .distinct()) // containment counts DISTINCT fingerprints
-    val counts = fp.groupBy(col("media_id")).agg(count(lit(1)).as("nf"))
-    val kept = maxBucketSize match {
-      case Some(cap) =>
-        val ok = fp.groupBy(col("fp")).agg(count(lit(1)).as("_bsz"))
-          .where(col("_bsz") >= 2 && col("_bsz") <= cap)
-          .select(col("fp"))
-        fp.join(ok, Seq("fp"), "left_semi")
-      case None => fp
-    }
-    val shared = kept.select(col("fp"), col("media_id").as("id_a"))
-      .join(kept.select(col("fp"), col("media_id").as("id_b")), Seq("fp"))
-      .where(col("id_a") < col("id_b"))
-      .groupBy(col("id_a"), col("id_b"))
-      .agg(count(lit(1)).as("shared"))
-    shared
-      .join(counts.select(col("media_id").as("id_a"), col("nf").as("nf_a")), Seq("id_a"))
-      .join(counts.select(col("media_id").as("id_b"), col("nf").as("nf_b")), Seq("id_b"))
-      .withColumn("containment_ppm",
-        expr("shared * 1000000 div least(nf_a, nf_b)"))
-      .where(col("containment_ppm") >= minSharedPpm)
-      .select(col("id_a"), col("id_b"), col("shared"),
-        col("nf_a"), col("nf_b"), col("containment_ppm"))
   }
 
   /** Synthetic media table for tests/demos (documents bytes as fake

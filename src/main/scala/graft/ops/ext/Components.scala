@@ -503,28 +503,4 @@ object Components {
       .select(col(idCol), col("canonical_id"), col("rep_id"),
         (col(idCol) === col("rep_id")).cast("long").as("kept"))
   }
-
-  /** Soft dedup — keep every copy but down-weight it by its duplicate
-    * multiplicity: per document, the size of its dup cluster and the
-    * training-loss weight `10000 div size` in basis points (integer,
-    * engine-exact; a 4-copy cluster trains each copy at quarter weight,
-    * summing to ~one document's worth). The alternative to hard removal
-    * when duplicates carry signal (popular quotes, licenses) but must not
-    * be over-trained on.
-    *
-    * Scale shape: one partial-aggregated count per canonical (combiners
-    * collapse even a 100M-copy boilerplate cluster to one row per task)
-    * joined back on canonical_id — never a `Window.partitionBy(canonical)`
-    * count, which would buffer exactly the mega-clusters the weights
-    * exist to tame.
-    *
-    * Output: per input row — idCol, canonical_id, `cluster_size`,
-    * `weight_bp`, both BIGINT. */
-  def clusterWeights(clusters: DataFrame, idCol: String = "doc_id"): DataFrame = {
-    val sizes = clusters.groupBy(col("canonical_id"))
-      .agg(count(lit(1)).as("cluster_size"))
-    clusters.join(sizes, Seq("canonical_id"))
-      .select(col(idCol), col("canonical_id"), col("cluster_size"),
-        expr("10000 div cluster_size").as("weight_bp"))
-  }
 }

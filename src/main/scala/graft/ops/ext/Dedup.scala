@@ -119,79 +119,6 @@ object Dedup {
     lshCandidatePairsMultiBand(signatures, idCol, Seq(bandCols), maxBucketSize,
       saltOversized, persistSignatures)
 
-  /** Default for the `persistSignatures` flag when the caller has NOT
-    * measured their shape: true iff recomputing `signatures` is
-    * non-trivial — the plan contains (a) any operator beyond
-    * scan/project/filter (joins, aggregates, generates, unions: real
-    * recompute), or (b) an EXPENSIVE expression inside a project/filter
-    * (graft codegen kernels, regex, higher-order folds, UDFs — the
-    * minhash/simhash signature kernels that made persistence a measured
-    * 1.7-1.9x on q22/q24/q119's derived upstreams). A bare
-    * scan+project+filter of cheap columns returns false: a parquet
-    * re-read per band leg is cheaper than pinning the projection in
-    * executor storage.
-    *
-    * Additionally, frames whose estimated row width exceeds
-    * [[MaxAutoPersistRowBytes]] auto-disable even with an expensive
-    * upstream — the payload HALF of the q144 ratio caught statically: a
-    * per-document collection payload (token-hash sets, shingle arrays)
-    * prices pinning at corpus x payload bytes, and when candidates are
-    * few the duplicate kernel runs are cheaper than writing every
-    * document's multi-KB set to block storage. Width is estimated
-    * payload-aware ([[estimatedRowBytes]]): collections are priced at a
-    * nominal 64 elements (Catalyst's defaultSize assumes ONE element and
-    * would call an unbounded set 8 bytes), strings at short-key width.
-    *
-    * This is a HEURISTIC over the plan, not a measurement — callers
-    * with a measured shape keep passing the flag explicitly (q144's
-    * containment shape loses with persistence despite an expensive
-    * upstream because the candidate set is winnow-capped, while q24's
-    * same-payload LSH shape wins on dense candidates; no static test
-    * sees the candidate half of the ratio). Driver-side plan inspection
-    * only; nothing executes. */
-  def autoPersistSignatures(signatures: DataFrame): Boolean = {
-    import org.apache.spark.sql.catalyst.expressions.{
-      Expression, HigherOrderFunction, Like, RLike, RegExpExtract,
-      RegExpExtractAll, RegExpReplace, ScalaUDF}
-    import org.apache.spark.sql.catalyst.plans.logical.{Filter, Project}
-    val plan = signatures.queryExecution.optimizedPlan
-    def expensive(e: Expression): Boolean = e.exists {
-      case _: HigherOrderFunction | _: ScalaUDF => true
-      case _: RegExpExtract | _: RegExpExtractAll | _: RegExpReplace => true
-      case _: Like | _: RLike => true
-      case k => k.getClass.getName.startsWith("graft.functions.")
-    }
-    val worthPersisting = plan.exists {
-      case p @ (_: Project | _: Filter) => p.expressions.exists(expensive)
-      case p => p.children.nonEmpty // any non-leaf beyond project/filter
-    }
-    worthPersisting &&
-      plan.output.map(a => estimatedRowBytes(a.dataType)).sum <= MaxAutoPersistRowBytes
-  }
-
-  /** Estimated-row-width ceiling past which [[autoPersistSignatures]]
-    * refuses: fixed-width signature rows (ids + minhash/simhash columns)
-    * sit far under it; a per-document collection payload sails past. */
-  val MaxAutoPersistRowBytes = 256L
-
-  /** Payload-aware per-row byte estimate of a column for the auto-persist
-    * guard. Deliberately NOT Catalyst's `defaultSize`, which prices an
-    * array at ONE element: collections here are per-document payloads
-    * (token-hash sets, shingles, embeddings) priced at a nominal 64
-    * elements; strings at the short-key/hex width the signature currency
-    * actually uses; binary as media payload. */
-  private[ext] def estimatedRowBytes(dt: org.apache.spark.sql.types.DataType): Long = {
-    import org.apache.spark.sql.types._
-    dt match {
-      case ArrayType(et, _) => 64L * estimatedRowBytes(et)
-      case MapType(kt, vt, _) => 64L * (estimatedRowBytes(kt) + estimatedRowBytes(vt))
-      case st: StructType => st.fields.map(f => estimatedRowBytes(f.dataType)).sum
-      case StringType => 32L
-      case BinaryType => 1024L
-      case other => other.defaultSize.toLong
-    }
-  }
-
   /** LSH band key over signature columns.
     *
     * coalesce: concat_ws silently SKIPS nulls, which would let signatures
@@ -307,10 +234,9 @@ object Dedup {
     * buckets: per row of `signatures`, its `canonical_id` and its
     * `cluster_size` (BIGINT). This is what
     * `Components.dedupClusters(docs, lshCandidatePairs(signatures, idCol,
-    * bandCols, Some(maxBucketSize)))` computes (plus
-    * [[Components.clusterWeights]]' size, or with `score`
-    * [[Components.representatives]]' election), without the pair
-    * self-join or the component rounds.
+    * bandCols, Some(maxBucketSize)))` computes (plus each cluster's
+    * size, or with `score` [[Components.representatives]]' election),
+    * without the pair self-join or the component rounds.
     *
     * Why one band needs no connected components: each row has exactly
     * one band key, so each row sits in exactly one bucket, and the
@@ -329,9 +255,9 @@ object Dedup {
     *    member, ties to the smaller id.
     *  - `cluster_size` counts the bucket's rows with a non-null id: its
     *    distinct ids, as ids are expected to be unique. A repeated id
-    *    counts once per row, as `clusterWeights` counts it; it is a member
-    *    of each bucket it lands in, and clusters do NOT close over it
-    *    across buckets (connected components would).
+    *    counts once per row, as a `groupBy(canonical_id)` count would;
+    *    it is a member of each bucket it lands in, and clusters do NOT
+    *    close over it across buckets (connected components would).
     *  - a null id never becomes canonical and counts in no size; its row
     *    still counts toward the guard (as in the pair self-join) and is
     *    its own cluster (`canonical_id` null, `cluster_size` 1).

@@ -124,19 +124,4 @@ object ExactSubstr {
         graft.functions.TrimSpansExpr.trim_spans(coalesce(text, lit("")), sp))
       .drop("_spans")
   }
-
-  /** Per-document duplication summary over [[duplicatedSpans]]:
-    * `(idCol, n_spans, dup_tokens)` — span count and total tokens covered
-    * by duplicated spans. The filter currency of an ExactSubstr dedup
-    * pass: drop or trim documents whose `dup_tokens` share is high. */
-  def duplicationStats(
-      docs: DataFrame,
-      text: Column,
-      idCol: String = "doc_id",
-      k: Int = 16,
-      minCount: Long = 2L): DataFrame =
-    duplicatedSpans(docs, text, idCol, k, minCount)
-      .groupBy(col(idCol))
-      .agg(count(lit(1)).as("n_spans"),
-        sum(col("span_end") - col("span_start") + 1).as("dup_tokens"))
 }

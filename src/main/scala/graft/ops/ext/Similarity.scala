@@ -12,11 +12,11 @@ import org.apache.spark.sql.functions._
   *    baseline. Query set × corpus, all math in native higher-order
   *    functions (`zip_with` + `aggregate`) inside codegen; the final top-k
   *    is the same `row_number` window shape as [[graft.ops.TopK]].
-  *  - [[srpBucketedTopK]] — signed-random-projection LSH: each vector gets
+  *  - [[srpBucket]] — signed-random-projection LSH: each vector gets
   *    a deterministic bit signature; only vectors sharing a bucket are
-  *    compared. This is the 100 TB scale path: the cross product never
-  *    materializes, the join key is a short int, and bucket sizes are
-  *    tunable via the number of planes.
+  *    compared (q37's bucket table). This is the 100 TB scale path:
+  *    the cross product never materializes, the join key is a short int,
+  *    and bucket sizes are tunable via the number of planes.
   *
   * Scale design: with Q queries and N corpus vectors, brute force shuffles
   * Q×N rows — fine for Q ≲ 10³ (broadcast the queries, stream the corpus),
@@ -204,7 +204,7 @@ object Similarity {
     * Note: building the plan collects the K centroid rows eagerly (a
     * driver action), like any model-fitting step.
     *
-    * vs [[srpBucketedTopK]]: IVF buckets adapt to the data distribution
+    * vs [[srpBucket]]: IVF buckets adapt to the data distribution
     * (centroids sit where vectors are dense) while SRP buckets are
     * data-oblivious; IVF recall tunes by `nprobe` at query time without
     * re-indexing. */
@@ -278,23 +278,6 @@ object Similarity {
       .where(col("q_id") =!= col("n_id"))
       .withColumn("cos", cosineSafe(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(byQuery))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"))
-  }
-
-  /** LSH-bucketed top-k: exact cosine ranking restricted to bucket-sharing
-    * candidates. Returns (q_id, n_id, rnk) like [[cosineTopK]]; recall < 1
-    * by construction. */
-  def srpBucketedTopK(vectors: DataFrame, k: Int, planes: Int = 8): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val sig = vectors.select(col("id"), col("vec"), srpBucket(col("vec"), planes).as("bucket"))
-    val l = sig.select(col("bucket"), col("id").as("q_id"), col("vec").as("q_vec"))
-    val r = sig.select(col("bucket"), col("id").as("n_id"), col("vec").as("n_vec"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    l.join(r, Seq("bucket"))
-      .where(col("q_id") =!= col("n_id"))
-      .withColumn("cos", cosineSafe(col("q_vec"), col("n_vec")))
-      .withColumn("rnk", row_number().over(w))
       .where(col("rnk") <= k)
       .select(col("q_id"), col("n_id"), col("rnk"))
   }

@@ -798,57 +798,6 @@ object TextStats {
         coalesce(expr("sum(n * gap_ppm) div sum(n)"), lit(0L)).as("ece_ppm"),
         coalesce(max(col("gap_ppm")), lit(0L)).as("mce_ppm"))
 
-  /** Murphy (1973) decomposition of the BINNED Brier score over an
-    * already-computed [[calibrationBins]] table — the diagnostic that
-    * separates what [[ece]] conflates: REL (reliability — how far each
-    * bin's confidence sits from its realized rate; lower is better,
-    * ece's squared sibling), RES (resolution — how much the bins
-    * separate the base rate; HIGHER is better: a model can be perfectly
-    * calibrated and useless), UNC (the base rate's irreducible
-    * ȳ(1−ȳ)), with binned Brier = REL − RES + UNC.
-    *
-    *   REL = Σ n_b (conf_b − acc_b)² / N
-    *   RES = Σ n_b (acc_b − ȳ)² / N      (all in ppm, floor division)
-    *
-    * The bins table is model-bounded (≤ bins rows), so the fold runs on
-    * the DRIVER in BigInt — n_b · gap² reaches 10²⁴ at web-corpus bin
-    * counts, past any Long product, the [[Ranking.pavPools]] exactness
-    * rule — and returns a one-row frame:
-    * (n_docs, rel_ppm, res_ppm, unc_ppm, brier_ppm). Zero-row input
-    * returns the all-zeros row (the [[eceFromBins]] policy). Note the
-    * identity is exact in real arithmetic; in ppm floor arithmetic
-    * `brier_ppm` is computed from its OWN definition
-    * (Σ n_b(conf_b² − 2·conf_b·acc_b) / N + ȳ... folded exactly as
-    * REL − RES + UNC over the same integer terms), so the published
-    * four numbers always satisfy brier = rel − res + unc by
-    * construction. */
-  def brierFromBins(binsTable: DataFrame): DataFrame = {
-    val spark = binsTable.sparkSession
-    val rows = binsTable
-      .select(col("n"), col("pos"), col("avg_conf_ppm"), col("acc_ppm"))
-      .collect().map(r => (r.getLong(0), r.getLong(2), r.getLong(3), r.getLong(1)))
-    val nDocs = rows.map(_._1).sum
-    val out =
-      if (nDocs == 0L) (0L, 0L, 0L, 0L, 0L)
-      else {
-        val M = BigInt(1000000)
-        val pos = rows.map(r => BigInt(r._4)).sum // exact positives
-        val ybar = (BigInt(1000000) * pos / nDocs).toLong // ppm
-        def wssq(f: ((Long, Long, Long, Long)) => Long): Long =
-          // Σ n_b · gap² / (N · 1e6), all BigInt — gap is ppm, gap² is
-          // ppm²; dividing by 1e6 returns to ppm
-          (rows.map { r =>
-            val g = BigInt(f(r)); BigInt(r._1) * g * g
-          }.sum / (BigInt(nDocs) * M)).toLong
-        val rel = wssq { case (_, conf, acc, _) => conf - acc }
-        val res = wssq { case (_, _, acc, _) => acc - ybar }
-        val unc = (BigInt(ybar) * (1000000L - ybar) / M).toLong
-        (nDocs, rel, res, unc, rel - res + unc)
-      }
-    spark.createDataFrame(Seq(out))
-      .toDF("n_docs", "rel_ppm", "res_ppm", "unc_ppm", "brier_ppm")
-  }
-
   /** Per-source vocabulary divergence from the corpus-wide token
     * distribution — the mix-health monitor behind "which slice drifted":
     * a KL-style surrogate over the corpus's top-`topV` vocabulary,

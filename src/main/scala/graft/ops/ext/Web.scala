@@ -89,8 +89,8 @@ object Web {
     * fix for the two-label heuristic; `suffixes` is the caller's PSL
     * slice as a plan literal — at the full list's ~10k entries it stays
     * a literal `In` over a short string (or swaps to a broadcast join)
-    * without changing the rollup's shape. Load a snapshot with
-    * [[loadPublicSuffixes]] / [[bundledPublicSuffixes]]. A host that IS
+    * without changing the rollup's shape. A loaded snapshot's
+    * [[PslRules.exact]] rules are such a slice. A host that IS
     * a public suffix (no extra label) falls through the cascade and
     * reports its trailing labels — PSL semantics would say "no
     * registered domain"; crawl URLs virtually never hit it. */
@@ -146,11 +146,6 @@ object Web {
     finally in.close()
   }
 
-  /** [[loadPublicSuffixRules]]' exact rules only — the `Seq` surface the
-    * two-arg [[registeredDomain]] overload takes. */
-  def loadPublicSuffixes(spark: SparkSession, path: String): Seq[String] =
-    loadPublicSuffixRules(spark, path).exact.toSeq.sorted
-
   /** The checked-in snapshot (a small public-list subset including
     * 2- and 3-label exact rules plus the `*.ck` / `!www.ck` pair the
     * specs and q150 exercise), bundled as a classpath resource so every
@@ -162,10 +157,6 @@ object Web {
     try parsePslRules(scala.io.Source.fromInputStream(in, "UTF-8").getLines())
     finally in.close()
   }
-
-  /** [[bundledPublicSuffixRules]]' exact rules only. */
-  def bundledPublicSuffixes(): Seq[String] =
-    bundledPublicSuffixRules().exact.toSeq.sorted
 
   /** [[registeredDomain]] under the FULL rule set — exact, wildcard, and
     * exception rules, the complete publicsuffix.org algorithm bounded at

@@ -79,9 +79,6 @@ object TtlToParquet {
   */
 object ParquetToRdf {
 
-  val datasetNames = Seq("labels", "interlanguage_links", "page_links",
-    "article_categories", "skos_categories", "geo_coordinates", "infobox_properties")
-
   def run(spark: SparkSession, parquetBase: String, outBase: String,
       cfg: RdfConfig): Map[String, Long] = Checkpoints.scoped {
     // the scope frees the caches the ops below make (the top-k and

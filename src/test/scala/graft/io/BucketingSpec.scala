@@ -15,7 +15,7 @@ class BucketingSpec extends SparkSpec {
       val dims = (0 to 9).map(i => (i.toLong, s"d$i")).toDF("k", "name")
       Bucketing.writeBucketed(facts, "graft_facts", "k", 4)
       Bucketing.writeBucketed(dims, "graft_dims", "k", 4)
-      val joined = Bucketing.bucketedJoin(spark, "graft_facts", "graft_dims", "k")
+      val joined = spark.table("graft_facts").join(spark.table("graft_dims"), "k")
       val plan = joined.queryExecution.executedPlan.toString
       assert(!plan.contains("Exchange"), plan)
       assert(joined.count() === 100)

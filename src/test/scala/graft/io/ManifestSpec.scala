@@ -197,6 +197,30 @@ class ManifestSpec extends SparkSpec {
     assert(verdict.count(_._2 != "ok") === 2)
   }
 
+  test("files under directories Spark skips get no manifest row") {
+    val spark2 = spark
+    import spark2.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-man-h").toString
+    (1L to 30L).map(i => (i, s"row $i")).toDF("id", "v")
+      .repartition(2).write.mode("overwrite").parquet(dir)
+    // stray files a failed or concurrent write leaves behind: Spark's
+    // readers skip both directories
+    val strayDirs = Seq("_temporary", ".spark-staging-1").map(new java.io.File(dir, _))
+    strayDirs.foreach { d =>
+      val f = new java.io.File(d, "0/part-00000.parquet")
+      f.getParentFile.mkdirs()
+      java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
+    }
+    val m = Manifest.writeForParquetDir(spark, dir)
+    assert(m.count() === spark.read.parquet(dir).inputFiles.length.toLong)
+    assert(m.where(col("file").startsWith("_") || col("file").startsWith(".")).count() === 0L)
+    // the cleanup that follows: the manifest still verifies clean
+    strayDirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+    val verdict = Manifest.verifyParquetDir(spark, dir)
+      .select("file", "status").as[(String, String)].collect()
+    assert(verdict.nonEmpty && verdict.forall(_._2 == "ok"), verdict.toSeq)
+  }
+
   test("a manifest write that throws leaves nothing cached or persisted") {
     val spark2 = spark
     import spark2.implicits._

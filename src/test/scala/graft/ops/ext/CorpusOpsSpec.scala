@@ -104,57 +104,6 @@ class CorpusOpsSpec extends SparkSpec {
     graft.core.Checkpoints.release(on)
   }
 
-  test("autoPersistSignatures: expensive/derived upstreams on, bare scans off") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-auto-persist").toString
-    Seq((1L, "alpha beta gamma"), (2L, "delta epsilon zeta"))
-      .toDF("doc_id", "text").write.parquet(s"$dir/docs")
-    val scan = spark.read.parquet(s"$dir/docs")
-    // bare scan / cheap project+filter: a parquet re-read per band leg is
-    // cheaper than pinning the projection — OFF
-    assert(!Dedup.autoPersistSignatures(scan))
-    assert(!Dedup.autoPersistSignatures(
-      scan.where(col("doc_id") > 0).select(col("doc_id"), upper(col("text")).as("t"))))
-    // signature kernel in the projection (the measured q22/q24/q119
-    // shape): recompute is a codegen walk per leg — ON
-    assert(Dedup.autoPersistSignatures(
-      Dedup.withMinhashSignature(scan, col("text"), numHashes = 4)))
-    // regex / higher-order folds in a project: ON
-    assert(Dedup.autoPersistSignatures(
-      scan.select(regexp_replace(col("text"), "a+", "b").as("t"))))
-    assert(Dedup.autoPersistSignatures(
-      scan.select(aggregate(split(col("text"), " "), lit(0), (a, _) => a + 1).as("n"))))
-    // any operator beyond scan/project/filter (joins, aggregates): ON
-    assert(Dedup.autoPersistSignatures(
-      scan.groupBy(col("doc_id")).agg(first(col("text")).as("text"))))
-    assert(Dedup.autoPersistSignatures(
-      scan.join(scan.select(col("doc_id")), Seq("doc_id"))))
-    // WIDE-payload frame with an expensive kernel (the q144 containment
-    // shape: per-document token-hash SETS): the size guard auto-disables
-    // — pinning corpus x multi-KB payload is the measured loser when
-    // candidates are few, and auto cannot see candidate density
-    assert(!Dedup.autoPersistSignatures(
-      scan.select(col("doc_id"),
-        array_sort(graft.functions.TokenHashSetExpr.token_hash_set(col("text"))).as("_set"))))
-    // same kernel, scalar-width output (a fold of the set): back ON —
-    // it is the payload width, not the kernel, that disables
-    assert(Dedup.autoPersistSignatures(
-      scan.select(col("doc_id"),
-        size(graft.functions.TokenHashSetExpr.token_hash_set(col("text"))).as("_n"))))
-    // and the flag plumbs through: auto decision drives the same
-    // checkpointed single-kernel plan the explicit flag produces
-    val sig = Dedup.withMinhashSignature(
-      Seq((1L, "alpha beta gamma delta"), (2L, "alpha beta gamma zeta"))
-        .toDF("doc_id", "text").repartition(2),
-      col("text"), numHashes = 4)
-    val auto = Dedup.lshCandidatePairsMultiBand(sig, "doc_id",
-      Seq(Seq("mh0", "mh1"), Seq("mh2", "mh3")),
-      persistSignatures = Dedup.autoPersistSignatures(sig))
-    assert(!auto.queryExecution.optimizedPlan.toString.contains("graft_token_minhash"))
-    graft.core.Checkpoints.release(auto)
-  }
-
   test("heavyHitters returns exactly the frequency-threshold set, any layout") {
     val spark2 = spark
     import spark2.implicits._
@@ -270,18 +219,6 @@ class CorpusOpsSpec extends SparkSpec {
     assert(alloc(500L) === Map("a" -> 100L, "b" -> 200L, "c" -> 200L))
     val total = alloc(799L).values.sum
     assert(total <= 799L, s"allocated $total > budget")
-  }
-
-  test("clusterWeights: size counts and basis-point weights per copy") {
-    val spark2 = spark
-    import spark2.implicits._
-    val clusters = Seq((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L), (5L, 5L), (6L, 5L))
-      .toDF("doc_id", "canonical_id")
-    val out = Components.clusterWeights(clusters)
-      .as[(Long, Long, Long, Long)].collect().sortBy(_._1)
-    assert(out.toSeq === Seq(
-      (1L, 1L, 3L, 3333L), (2L, 1L, 3L, 3333L), (3L, 1L, 3L, 3333L),
-      (4L, 4L, 1L, 10000L), (5L, 5L, 2L, 5000L), (6L, 5L, 2L, 5000L)))
   }
 
   test("ngramNovelty credits first occurrences by id order") {

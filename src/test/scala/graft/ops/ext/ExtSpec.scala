@@ -270,14 +270,14 @@ class DedupSpec extends SparkSpec {
     * to it: `(doc_id, canonical_id, cluster_size)` sorted. Canonicals
     * come from `Components.dedupClusters` over the guarded pairs (or,
     * with `score`, `Components.representatives`' `rep_id`), sizes from
-    * `Components.clusterWeights`. */
+    * [[clusterSizes]]. */
   private def bandParity(sig: DataFrame, bandCols: Seq[String], cap: Int,
       score: Option[String] = None): (Seq[(Long, Long, Long)], Seq[(Long, Long, Long)]) = {
     val spark2 = spark
     import spark2.implicits._
     val pairs = Dedup.lshCandidatePairs(sig, "doc_id", bandCols, maxBucketSize = Some(cap))
     val clusters = Components.dedupClusters(sig, pairs, "doc_id")
-    val weights = Components.clusterWeights(clusters, "doc_id")
+    val weights = clusterSizes(clusters)
     val old = score match {
       case Some(s) => Components.representatives(clusters,
           sig.select(col("doc_id"), col(s).as("score")), "doc_id")
@@ -291,6 +291,13 @@ class DedupSpec extends SparkSpec {
     graft.core.Checkpoints.release(out)
     (expected.toSeq.sorted, actual.toSeq.sorted)
   }
+
+  /** The size reference: per `(doc_id, canonical_id)` row, its
+    * cluster's row count as `cluster_size`. */
+  private def clusterSizes(clusters: DataFrame): DataFrame =
+    clusters.join(
+      clusters.groupBy("canonical_id").agg(count(lit(1)).as("cluster_size")),
+      "canonical_id")
 
   /** Signature rows with `k` band columns, cap 4. `null` values are
     * null signature entries. */
@@ -362,8 +369,8 @@ class DedupSpec extends SparkSpec {
     assert(clusters(withNull, 3) === Seq((None, None, 1L),
       (Some(60L), Some(60L), 2L), (Some(61L), Some(60L), 2L)))
     val nullDf = withNull.toDF("doc_id", "mh0")
-    val oldNonNull = Components.clusterWeights(Components.dedupClusters(nullDf,
-        Dedup.lshCandidatePairs(nullDf, "doc_id", Seq("mh0"), Some(3)), "doc_id"), "doc_id")
+    val oldNonNull = clusterSizes(Components.dedupClusters(nullDf,
+        Dedup.lshCandidatePairs(nullDf, "doc_id", Seq("mh0"), Some(3)), "doc_id"))
       .where(col("doc_id").isNotNull)
       .select("doc_id", "canonical_id", "cluster_size").as[(Long, Long, Long)].collect()
     assert(oldNonNull.toSeq.sorted === Seq((60L, 60L, 2L), (61L, 60L, 2L)))
@@ -372,7 +379,7 @@ class DedupSpec extends SparkSpec {
     assert(clusters(withNull, 2) === Seq((None, None, 1L),
       (Some(60L), Some(60L), 1L), (Some(61L), Some(61L), 1L)))
     // a repeated id inside one bucket: equal to the old composition
-    // (clusterWeights counts rows, so size 3)
+    // (clusterSizes counts rows, so size 3)
     val dupRows = Seq((70L, "d"), (70L, "d"), (71L, "d")).toDF("doc_id", "mh0")
     val (expected, actual) = bandParity(dupRows, Seq("mh0"), 10)
     assert(actual === expected)
@@ -2356,16 +2363,6 @@ class ExactSubstrSpec extends SparkSpec {
   test("documents shorter than k and unique documents are absent") {
     val out = spans(Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "q"), (4L, "r s t u")), k = 3)
     assert(out.map(_._1).distinct === Array(1L, 2L))
-  }
-
-  test("duplicationStats sums covered tokens per document") {
-    val spark2 = spark
-    import spark2.implicits._
-    val docs = Seq((1L, "p q x y z p q"), (2L, "p q")).toDF("doc_id", "text")
-    // "p q" at (1,1), (1,6), (2,1): doc 1 has two islands of 2 tokens each
-    val out = ExactSubstr.duplicationStats(docs, col("text"), k = 2)
-      .as[(Long, Long, Long)].collect().sortBy(_._1)
-    assert(out === Array((1L, 2L, 4L), (2L, 1L, 2L)))
   }
 
   test("trimSpans cuts span tokens and keeps clean documents (normalized)") {

@@ -117,70 +117,6 @@ class IsotonicSpec extends SparkSpec {
     assert(fitted(250000L) === 500000L && fitted(750000L) === 1000000L)
   }
 
-  test("brierFromBins: Murphy decomposition — hand case, identity, and edge rows") {
-    val spark2 = spark
-    import spark2.implicits._
-    // two bins, hand-computable: bin 0 (n=4, pos=1, conf .2), bin 1
-    // (n=4, pos=3, conf .7). ybar = 4/8 = .5
-    val bins = Seq(
-      (0L, 4L, 1L, 200000L, 250000L, 50000L),
-      (1L, 4L, 3L, 700000L, 750000L, 50000L))
-      .toDF("bin", "n", "pos", "avg_conf_ppm", "acc_ppm", "gap_ppm")
-    val r = TextStats.brierFromBins(bins).collect()(0)
-    val (nd, rel, res, unc, brier) =
-      (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4))
-    assert(nd === 8L)
-    // REL = (4·50000² + 4·50000²) / (8·1e6) = 2500 ppm
-    assert(rel === 2500L)
-    // RES = (4·250000² + 4·250000²) / (8·1e6) = 62500 ppm
-    assert(res === 62500L)
-    // UNC = .5·.5 = 250000 ppm
-    assert(unc === 250000L)
-    assert(brier === rel - res + unc, "the Murphy identity holds by construction")
-    // a perfectly calibrated table: REL = 0, brier = UNC - RES
-    val perfect = Seq((0L, 10L, 2L, 200000L, 200000L, 0L),
-        (1L, 10L, 8L, 800000L, 800000L, 0L))
-      .toDF("bin", "n", "pos", "avg_conf_ppm", "acc_ppm", "gap_ppm")
-    val p = TextStats.brierFromBins(perfect).collect()(0)
-    assert(p.getLong(1) === 0L && p.getLong(4) === p.getLong(3) - p.getLong(2))
-    // empty input -> the all-zeros row (the eceFromBins policy)
-    val empty = TextStats.brierFromBins(bins.where(col("n") < 0)).collect()(0)
-    assert((0 to 4).forall(i => empty.getLong(i) === 0L))
-  }
-
-  test("brierFromBins: exact past 2^63 intermediate products") {
-    val spark2 = spark
-    import spark2.implicits._
-    // n = 4e12 per bin: n · gap² ≈ 4e12 · 1e12 = 4e24 — far past Long;
-    // the BigInt fold must produce the exact floor
-    val big = 4_000_000_000_000L
-    val bins = Seq(
-      (0L, big, 0L, 1000000L, 0L, 1000000L)) // worst-case gap 1e6
-      .toDF("bin", "n", "pos", "avg_conf_ppm", "acc_ppm", "gap_ppm")
-    val r = TextStats.brierFromBins(bins).collect()(0)
-    // REL = n·(1e6)² / (n·1e6) = 1e6 exactly
-    assert(r.getLong(1) === 1000000L)
-    assert(r.getLong(3) === 0L) // ybar = 0 -> UNC 0
-  }
-
-  test("ece/brier end-to-end agreement: ece small iff rel small on a fitted stream") {
-    val spark2 = spark
-    import spark2.implicits._
-    val rows = (0 until 400).map { i =>
-      val conf = i * 2500L
-      (conf, if ((i * 2654435761L % 1000) < (i * 1000L / 400)) 1L else 0L)
-    }
-    val df = rows.toDF("conf", "y").repartition(3)
-    val bins = TextStats.calibrationBins(df, col("conf"), col("y"), 10)
-    val e = TextStats.eceFromBins(bins).collect()(0)
-    val b = TextStats.brierFromBins(bins).collect()(0)
-    assert(e.getLong(0) === b.getLong(0), "both read the same N")
-    // REL is ece's squared sibling: REL <= max_gap * ece / 1e6 + 1 slack
-    assert(b.getLong(1) <= e.getLong(3) * e.getLong(2) / 1000000L + 1L,
-      s"rel ${b.getLong(1)} vs mce*ece bound")
-    assert(b.getLong(4) === b.getLong(1) - b.getLong(2) + b.getLong(3))
-  }
-
   test("calibratedFuse: sums per-list probabilities, missing contributes nothing") {
     val spark2 = spark
     import spark2.implicits._

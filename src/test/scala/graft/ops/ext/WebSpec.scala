@@ -103,8 +103,6 @@ class WebSpec extends SparkSpec {
     assert(bundled.wildcardBases === Set("ck"))
     assert(bundled.exceptions === Set("www.ck"))
     assert(!bundled.exact.exists(r => r.contains("*") || r.startsWith("!") || r.startsWith("//")))
-    // the exact-only Seq surface stays available for the 2-arg overload
-    assert(Web.bundledPublicSuffixes().contains("co.uk"))
     // the FS loader parses the same format from any Hadoop path
     val tmp = java.nio.file.Files.createTempFile("psl", ".dat")
     java.nio.file.Files.writeString(tmp,
