@@ -2367,9 +2367,7 @@ object SparkEntry {
       // (same bucket, cosine 1 >= 0.9), so each injected row pairs with
       // its parent by construction at every sf. The oracle replays the
       // md5-seeded stub decode (the q54 byte math, all 16 dims) and the
-      // q40 SRP/cosine pair SQL over the same injected plane; real
-      // codecs ride the identical seam spec-gated (MediaNearDupSpec's
-      // end-to-end PPM pair — the q54 precedent).
+      // q40 SRP/cosine pair SQL over the same injected plane.
       val base = t(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("n_chars"))
       val inj = base.where(col("doc_id") % 37 === 0)

@@ -55,8 +55,8 @@ case class CleanTextExpr(child: Expression)
 }
 
 object CleanTextExpr {
-  /** Column-level entry point: `clean_text($"text")`. Also registered as
-    * SQL function `graft_clean_text` by [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `clean_text($"text")`.
+    * Plans as `graft_clean_text`. */
   def clean_text(c: Column): Column =
     GraftColumnBridge.column(CleanTextExpr(GraftColumnBridge.expression(c)))
 }

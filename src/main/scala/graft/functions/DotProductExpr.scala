@@ -82,8 +82,7 @@ case class DotProductExpr(left: Expression, right: Expression)
 }
 
 object DotProductExpr {
-  /** Column-level entry point; also registered as SQL `graft_dot` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point; plans as `graft_dot`. */
   def dot_product(a: Column, b: Column): Column =
     GraftColumnBridge.column(DotProductExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

@@ -166,8 +166,7 @@ object MisraGriesAgg {
     }
   }
 
-  /** Column-level entry point; registered as SQL `graft_mg_candidates`
-    * by [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point; plans as `graft_mg_candidates`. */
   def mg_candidates(token: Column, k: Int): Column =
     GraftColumnBridge.column(
       MisraGriesAgg(GraftColumnBridge.expression(token), k)

@@ -42,7 +42,7 @@ case class ShingleMinhashExpr(child: Expression, n: Int)
   require(n >= 1, s"shingle size must be >= 1, got $n")
 
   // analysis-time coercion/type error instead of a Janino compile failure
-  // at runtime — the function is exposed to arbitrary SQL
+  // at runtime
   override def inputTypes = Seq(StringType)
 
   override def dataType: DataType = StructType(Seq(
@@ -68,10 +68,8 @@ case class ShingleMinhashExpr(child: Expression, n: Int)
 }
 
 object ShingleMinhashExpr {
-  /** Column-level entry point: `shingle_minhash($"text", 5)`. Builds the
-    * expression directly (works on any session; no extensions config
-    * needed). Also registered as SQL function `graft_shingle_minhash` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `shingle_minhash($"text", 5)`. Plans as
+    * `graft_shingle_minhash`. */
   def shingle_minhash(c: Column, n: Int): Column =
     GraftColumnBridge.column(ShingleMinhashExpr(GraftColumnBridge.expression(c), n))
 }

@@ -44,9 +44,8 @@ case class SortedIntersectCountExpr(left: Expression, right: Expression)
 }
 
 object SortedIntersectCountExpr {
-  /** Column-level entry point: `sorted_intersect_count($"a", $"b")`. Also
-    * registered as SQL function `graft_sorted_intersect_count` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `sorted_intersect_count($"a", $"b")`.
+    * Plans as `graft_sorted_intersect_count`. */
   def sorted_intersect_count(a: Column, b: Column): Column =
     GraftColumnBridge.column(SortedIntersectCountExpr(
       GraftColumnBridge.expression(a), GraftColumnBridge.expression(b)))

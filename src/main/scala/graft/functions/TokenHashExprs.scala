@@ -70,8 +70,7 @@ case class TokenMinhashExpr(child: Expression, numHashes: Int)
 object TokenMinhashExpr {
   /** Column-level entry point: `token_minhash($"text", 4)` — array of
     * `numHashes` 32-hex MinHash values (seeds 0..n-1). Works on any
-    * session; also registered as SQL function `graft_token_minhash` by
-    * [[graft.plans.GraftExtensions]]. */
+    * session; plans as `graft_token_minhash`. */
   def token_minhash(c: Column, numHashes: Int): Column =
     GraftColumnBridge.column(TokenMinhashExpr(GraftColumnBridge.expression(c), numHashes))
 }
@@ -100,8 +99,8 @@ case class SimhashExpr(child: Expression, bits: Int)
 }
 
 object SimhashExpr {
-  /** Column-level entry point: `simhash($"text")`. Also registered as SQL
-    * function `graft_simhash` by [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `simhash($"text")`.
+    * Plans as `graft_simhash`. */
   def simhash(c: Column, bits: Int = 32): Column =
     GraftColumnBridge.column(SimhashExpr(GraftColumnBridge.expression(c), bits))
 }
@@ -145,9 +144,8 @@ case class TokenNgramHashExpr(child: Expression, n: Int)
 }
 
 object TokenNgramHashExpr {
-  /** Column-level entry point: `token_ngram_hashes($"text", 8)`. Also
-    * registered as SQL function `graft_token_ngram_hashes` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `token_ngram_hashes($"text", 8)`.
+    * Plans as `graft_token_ngram_hashes`. */
   def token_ngram_hashes(c: Column, n: Int): Column =
     GraftColumnBridge.column(TokenNgramHashExpr(GraftColumnBridge.expression(c), n))
 }
@@ -176,9 +174,8 @@ case class TokenCountExpr(child: Expression)
 }
 
 object TokenCountExpr {
-  /** Column-level entry point: `token_count($"text")`. Also registered
-    * as SQL function `graft_token_count` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `token_count($"text")`.
+    * Plans as `graft_token_count`. */
   def token_count(c: Column): Column =
     GraftColumnBridge.column(TokenCountExpr(GraftColumnBridge.expression(c)))
 }
@@ -207,9 +204,8 @@ case class AlphaCountExpr(child: Expression)
 }
 
 object AlphaCountExpr {
-  /** Column-level entry point: `alpha_count($"text")`. Also registered
-    * as SQL function `graft_alpha_count` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `alpha_count($"text")`.
+    * Plans as `graft_alpha_count`. */
   def alpha_count(c: Column): Column =
     GraftColumnBridge.column(AlphaCountExpr(GraftColumnBridge.expression(c)))
 }
@@ -326,9 +322,8 @@ case class NgramRepExpr(child: Expression, n: Int)
 }
 
 object NgramRepExpr {
-  /** Column-level entry point: `ngram_rep($"text", n)`. Also registered
-    * as SQL function `graft_ngram_rep` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `ngram_rep($"text", n)`.
+    * Plans as `graft_ngram_rep`. */
   def ngram_rep(c: Column, n: Int): Column =
     GraftColumnBridge.column(NgramRepExpr(GraftColumnBridge.expression(c), n))
 }
@@ -353,9 +348,8 @@ case class TokenHashSetExpr(child: Expression)
 }
 
 object TokenHashSetExpr {
-  /** Column-level entry point: `token_hash_set($"text")`. Also registered
-    * as SQL function `graft_token_hash_set` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `token_hash_set($"text")`.
+    * Plans as `graft_token_hash_set`. */
   def token_hash_set(c: Column): Column =
     GraftColumnBridge.column(TokenHashSetExpr(GraftColumnBridge.expression(c)))
 }
@@ -444,9 +438,8 @@ case class TokenStatsExpr(child: Expression)
 }
 
 object TokenStatsExpr {
-  /** Column-level entry point: `token_stats($"text")`. Also registered
-    * as SQL function `graft_token_stats` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `token_stats($"text")`.
+    * Plans as `graft_token_stats`. */
   def token_stats(c: Column): Column =
     GraftColumnBridge.column(TokenStatsExpr(GraftColumnBridge.expression(c)))
 }

@@ -192,8 +192,7 @@ object TopKByKeyAgg {
     }
   }
 
-  /** Column-level entry point; registered as SQL `graft_topk_by_key` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point; plans as `graft_topk_by_key`. */
   def topKByKey(key: Column, id: Column, payload: Column, k: Int): Column =
     GraftColumnBridge.column(
       TopKByKeyAgg(

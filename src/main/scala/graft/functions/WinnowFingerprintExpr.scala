@@ -60,9 +60,8 @@ case class WinnowFingerprintExpr(child: Expression, k: Int, w: Int)
 }
 
 object WinnowFingerprintExpr {
-  /** Column-level entry point: `winnow($"text", k = 5, w = 8)`. Also
-    * registered as SQL function `graft_winnow` by
-    * [[graft.plans.GraftExtensions]]. */
+  /** Column-level entry point: `winnow($"text", k = 5, w = 8)`.
+    * Plans as `graft_winnow`. */
   def winnow(c: Column, k: Int, w: Int): Column =
     GraftColumnBridge.column(WinnowFingerprintExpr(GraftColumnBridge.expression(c), k, w))
 }

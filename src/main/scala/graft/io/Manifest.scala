@@ -126,7 +126,7 @@ object Manifest {
 
   /** The restore-side half of the audit: verify a parquet directory
     * against its own `_manifest.jsonl` (written by
-    * [[writeForParquetDir]] before the transfer/restore being checked).
+    * [[writeForParquetDirWith]] before the transfer/restore being checked).
     * Returns one row per file union-ed across both sides, `status` one
     * of `ok` / `missing` (in manifest, not on disk) / `extra` (on disk,
     * not in manifest) / `bytes_mismatch` / `rows_mismatch` /
@@ -190,22 +190,18 @@ object Manifest {
   }
 
   /** Write the manifest as a single JSONL file `<dir>/_manifest.jsonl`
-    * (underscore-prefixed: parquet readers of `dir` ignore it). Returns
-    * the manifest that was written, as a local frame over the collected
-    * rows: nothing is cached, so nothing is left to free, even when the
-    * write throws. */
-  def writeForParquetDir(spark: SparkSession, dir: String): DataFrame =
-    writeManifest(spark, dir, forParquetDir)
-
-  /** [[writeForParquetDir]] with [[forParquetDirWith]]'s extra per-file
-    * aggregate columns — one scan yields both the audit artifact and the
-    * sink's summary inputs. */
+    * (underscore-prefixed: parquet readers of `dir` ignore it), with
+    * [[forParquetDirWith]]'s extra per-file aggregate columns — one scan
+    * yields both the audit artifact and the sink's summary inputs
+    * (`Nil` for none). Returns the manifest that was written, as a local
+    * frame over the collected rows: nothing is cached, so nothing is
+    * left to free, even when the write throws. */
   def writeForParquetDirWith(
       spark: SparkSession, dir: String,
       extras: Seq[(String, org.apache.spark.sql.Column)]): DataFrame =
     writeManifest(spark, dir, forParquetDirWith(_, _, extras))
 
-  /** [[writeForParquetDir]] for a TEXT output directory. */
+  /** [[writeForParquetDirWith]] for a TEXT output directory. */
   def writeForTextDir(spark: SparkSession, dir: String): DataFrame =
     writeManifest(spark, dir, forTextDir)
 

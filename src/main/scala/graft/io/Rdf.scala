@@ -110,11 +110,12 @@ object Rdf {
       val src = new org.apache.hadoop.fs.Path(staging, s"dataset=$name")
       // Pre-existing output is renamed ASIDE, not deleted, until the new
       // data is in place: deleting first meant a failed staging rename
-      // destroyed the old output AND stranded the new one (the failure
-      // mode the per-dataset write() path avoids via SaveMode.Overwrite's
-      // commit protocol). rename reports several FS failure modes as
-      // `false`, not an exception — silently reading back an empty or
-      // stale dataset must not pass for success.
+      // destroyed the old output AND stranded the new one. The
+      // per-dataset write() path still has that failure mode: static
+      // SaveMode.Overwrite deletes the target before its job runs, so a
+      // job that fails at commit leaves no old output. rename reports
+      // several FS failure modes as `false`, not an exception — silently
+      // reading back an empty or stale dataset must not pass for success.
       val aside = new org.apache.hadoop.fs.Path(s"$outBase/.rdf_old_$name")
       if (fs.exists(aside)) fs.delete(aside, true) // remnant of a past crash
       val hadOld = fs.exists(target)

@@ -1,20 +1,7 @@
 package graft.ops
 
-/** Language-set handling (reference: DbpediaDgraphSparkApp.scala:96-110,
-  * 457-472). */
+/** Language-set handling (reference: DbpediaDgraphSparkApp.scala:96-110). */
 object Languages {
-
-  /** Parse a comma-separated language list; expand `en-<lang>` dataset names
-    * when `en` is among the requested languages; `None` (or empty) means
-    * "all languages". Reference: getLanguages, DbpediaDgraphSparkApp.scala:457-472. */
-  def expand(langs: String): Option[Seq[String]] = {
-    val languages = Some(langs.split(",").toSeq.filter(_.nonEmpty)).filter(_.nonEmpty)
-    languages.map { ls =>
-      val enExpansion =
-        if (ls.contains("en")) ls.filterNot(_ == "en").map(l => s"en-$l") else Seq.empty
-      (enExpansion ++ ls).sorted
-    }
-  }
 
   /** Object-side language set: the requested languages, or all observed
     * languages, plus the `dbpedia` quirk host when `en` is selected

@@ -627,7 +627,7 @@ object Dedup {
     * under a different split (say two 1-hash bands vs one 2-hash band)
     * produces keys that can never equal the batch side's — the semi
     * join silently matches nothing and every batch row passes as
-    * "novel" (a silent NO-OP dedup, the media `_meta.jsonl` class).
+    * "novel" (a silent NO-OP dedup).
     * Raw frames derived in the same plan cannot diverge; PERSISTED
     * tables can — use the guarded path
     * ([[graft.pipeline.Curation.writeCorpusSigTables]] + the

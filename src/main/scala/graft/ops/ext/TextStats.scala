@@ -775,22 +775,15 @@ object TextStats {
       .withColumn("gap_ppm", abs(col("avg_conf_ppm") - col("acc_ppm")))
   }
 
-  /** Expected calibration error — the bin-weighted mean of
-    * [[calibrationBins]]' gaps (Naeini et al., AAAI 2015), plus the max
-    * gap (MCE): the two numbers a model card quotes. One row:
+  /** Expected calibration error — the bin-weighted mean of a
+    * [[calibrationBins]] table's gaps (Naeini et al., AAAI 2015), plus
+    * the max gap (MCE): the two numbers a model card quotes. One row:
     * (`n_docs`, `bins_used`, `ece_ppm`, `mce_ppm`). Runs entirely on
-    * the ≤ bins-row reliability table; an input that filters to ZERO
-    * rows returns the all-zeros row (not NULLs — a model-card writer
-    * reads `n_docs = 0`, never `NULL`). */
-  def ece(
-      scored: DataFrame, confCol: Column, labelCol: Column,
-      bins: Int = 10): DataFrame =
-    eceFromBins(calibrationBins(scored, confCol, labelCol, bins))
-
-  /** [[ece]]'s fold over an ALREADY-COMPUTED [[calibrationBins]] table —
-    * the seam a caller who needs both the bins AND the scalars should
-    * use (checkpoint the ≤ bins-row table once, aggregate it here) so
-    * the corpus is scanned once, not twice. */
+    * the ≤ bins-row reliability table, so a caller who needs both the
+    * bins AND the scalars checkpoints the table once and scans the
+    * corpus once. An input that filters to ZERO rows returns the
+    * all-zeros row (not NULLs — a model-card writer reads `n_docs = 0`,
+    * never `NULL`). */
   def eceFromBins(binsTable: DataFrame): DataFrame =
     binsTable
       .agg(coalesce(sum(col("n")), lit(0L)).as("n_docs"),

@@ -252,12 +252,12 @@ object Curation {
     * [[writeCorpusSigTables]] lands and the table-backed
     * [[curateIncremental]] overload consumes. `numHashes` is part of the
     * contract: the batch side must derive the SAME signature family the
-    * tables were written with (a mismatch would silently match nothing —
-    * the media `_meta.jsonl` lesson — so the overload takes it from
-    * here, never as a free parameter; the writer additionally STAMPS
-    * numHashes into the bands table's properties — [[SigFamilyProp]] —
-    * and the overload verifies the stamp, so a hand-built instance
-    * that lies about the family fails loudly). `buckets` rides along
+    * tables were written with (a mismatch would silently match nothing,
+    * so the overload takes it from here, never as a free parameter; the
+    * writer additionally STAMPS numHashes into the bands table's
+    * properties — [[SigFamilyProp]] — and the overload verifies the
+    * stamp, so a hand-built instance that lies about the family fails
+    * loudly). `buckets` rides along
     * for the refresh path ([[graft.pipeline.NightlyIngest]]'s appends
     * must match the written bucketing spec). */
   final case class CorpusSigTables(

@@ -7,13 +7,9 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * (`org.apache.spark.sql.classic.ExpressionUtils`). The object lives in
   * this package purely for access; it contains no Spark-internal logic.
   *
-  * Building a `Column` from an `Expression` directly — instead of only
-  * through a function registered by
-  * [[graft.plans.GraftExtensions]] — lets graft's typed helpers
-  * (`shingle_minhash(col, n)`, `extract_datatype(col)`) run on ANY
-  * session, including ones created without the
-  * `spark.sql.extensions=graft.plans.GraftExtensions` config. The SQL
-  * registration remains the surface for `spark.sql(...)` users.
+  * Every graft kernel's `Column` entry builds its expression through
+  * [[column]], so the kernels run on any session with no extension or
+  * function registration.
   */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)

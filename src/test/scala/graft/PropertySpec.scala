@@ -427,7 +427,8 @@ class PropertySpec extends SparkSpec {
       Gen.zip(Gen.choose(-200000L, 1300000L), Gen.oneOf(0L, 1L)))
     samples(rowsGen, 5).foreach { rows =>
       val df = rows.toDF("conf", "y")
-      val e = TextStats.ece(df, col("conf"), col("y"), bins = 10)
+      val e = TextStats.eceFromBins(
+          TextStats.calibrationBins(df, col("conf"), col("y"), bins = 10))
         .as[(Long, Long, Long, Long)].collect().head
       // double-precision reference over the SAME clamped binning
       val clamped = rows.map { case (c, y) =>

@@ -12,7 +12,6 @@ trait SparkSpec extends AnyFunSuite {
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.extensions", "graft.plans.GraftExtensions")
     .getOrCreate()
 
   /** The context's persistent RDD ids and the CacheManager's entry count:

@@ -59,8 +59,7 @@ class DotProductExprSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")
-    df.createOrReplaceTempView("dot_t")
-    assert(spark.sql("SELECT graft_dot(a, b) AS d FROM dot_t")
+    assert(df.select(DotProductExpr.dot_product(col("a"), col("b")).as("d"))
       .as[Double].head() === 11.0)
     // the similarity path now plans the kernel, not the interpreted HOF
     val plan = df.select(graft.ops.ext.Similarity.dot(col("a"), col("b")))
@@ -72,9 +71,9 @@ class DotProductExprSpec extends SparkSpec {
   test("mistyped call fails analysis as AnalysisException, not an internal throw") {
     val spark2 = spark
     import spark2.implicits._
-    Seq((Seq(1, 2), Seq(3, 4))).toDF("a", "b").createOrReplaceTempView("dot_int_t")
+    val df = Seq((Seq(1, 2), Seq(3, 4))).toDF("a", "b")
     val e = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_dot(a, b) FROM dot_int_t").collect()
+      df.select(DotProductExpr.dot_product(col("a"), col("b"))).collect()
     }
     assert(e.getMessage.contains("array<float|double>"), e.getMessage)
   }

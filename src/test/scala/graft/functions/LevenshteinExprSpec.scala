@@ -154,12 +154,12 @@ class LevenshteinExprSpec extends SparkSpec {
       if (!r.isNullAt(1)) assert(r.getInt(1) === r.getInt(3))
     }
     assert(got.count(_.isNullAt(0)) === 3)
-    // SQL surface
-    val viaSql = spark.sql(
-      "SELECT graft_levenshtein('kitten', 'sitting'), " +
-        "graft_levenshtein('kitten', 'sitting', 2)").collect().head
-    assert(viaSql.getInt(0) === 3)
-    assert(viaSql.getInt(1) === -1)
+    // literal inputs
+    val viaLit = spark.range(1).select(
+      graft_levenshtein(lit("kitten"), lit("sitting")),
+      graft_levenshtein(lit("kitten"), lit("sitting"), 2)).collect().head
+    assert(viaLit.getInt(0) === 3)
+    assert(viaLit.getInt(1) === -1)
   }
 
   test("scratch reuse is iteration-safe across rows in one task") {

@@ -58,17 +58,16 @@ class MisraGriesAggSpec extends SparkSpec {
   test("registers as SQL graft_mg_candidates and partial-aggregates (ObjectHashAggregate)") {
     val spark2 = spark
     import spark2.implicits._
-    docs.createOrReplaceTempView("mg_docs")
-    val sql = spark.sql(
-      """SELECT source, graft_mg_candidates(token, 2) AS c
-        |FROM (SELECT source, explode(split(trim(text), '\\s+')) AS token FROM mg_docs)
-        |GROUP BY source""".stripMargin)
-    val byGroup = sql.as[(String, Seq[String])].collect().toMap
+    val agg = docs
+      .select(col("source"), explode(split(trim(col("text")), "\\s+")).as("token"))
+      .groupBy("source")
+      .agg(MisraGriesAgg.mg_candidates(col("token"), 2).as("c"))
+    val byGroup = agg.as[(String, Seq[String])].collect().toMap
     assert(byGroup("A").contains("alpha") && byGroup("B").contains("beta"))
     // the typed aggregate plans as ObjectHashAggregate with a partial
     // stage — per-task sketches fold map-side, only <= k-entry sketches
     // cross the shuffle
-    val plan = sql.queryExecution.executedPlan.toString
+    val plan = agg.queryExecution.executedPlan.toString
     assert(plan.contains("ObjectHashAggregate"), plan)
   }
 

@@ -61,27 +61,6 @@ class ShingleMinhashExprSpec extends SparkSpec {
     assert(got === want)
   }
 
-  test("registered as a SQL function via SparkSessionExtensions") {
-    val row = spark.sql(
-      "SELECT graft_shingle_minhash('abcdef', 5) AS m")
-      .selectExpr("m.a", "m.b").head()
-    // md5(abcde)=ab56b4d92b40713acc5af89985d4b786
-    // md5(bcdef)=0c4337fdf6d3c5f526f577dd63b87da3
-    assert(row.getString(0) === "0c4337fdf6d3c5f5") // min of the two front halves
-    assert(row.getString(1) === "26f577dd63b87da3") // min of the two back halves
-  }
-
-  test("rejects a non-foldable shingle size in SQL") {
-    // a foldable call like length('xy') is fine (constant-folds to a
-    // literal); rand() can never fold and must be rejected at build time
-    val e = intercept[Exception] {
-      spark.sql("SELECT graft_shingle_minhash('abc', CAST(rand() * 5 AS INT))").collect()
-    }
-    def messages(t: Throwable): String =
-      if (t == null) "" else t.getMessage + "\n" + messages(t.getCause)
-    assert(messages(e).contains("integer literal"), messages(e))
-  }
-
   test("stays inside whole-stage codegen") {
     val df = spark.read.parquet("/root/testdata/sf0.001/nation.parquet")
       .select(ShingleMinhashExpr.shingle_minhash(col("n_name"), 3).as("m"))

@@ -68,12 +68,11 @@ class SrpBucketExprSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq(Seq(0.5f, -0.25f, 1.0f)).toDF("vec")
-    df.createOrReplaceTempView("srp_t")
-    val viaSql = spark.sql("SELECT graft_srp_bucket(vec, 8) AS b FROM srp_t")
+    val viaKernel = df.select(SrpBucketExpr.srp_bucket(col("vec"), 8).as("b"))
       .as[Long].head()
-    val viaCol = df.select(Similarity.srpBucket(col("vec"), 8).as("b"))
+    val viaTree = df.select(Similarity.srpBucketInterpreted(col("vec"), 8).as("b"))
       .as[Long].head()
-    assert(viaSql === viaCol)
+    assert(viaKernel === viaTree)
     // the similarity path plans the kernel, not the interpreted HOF tree
     val plan = df.select(Similarity.srpBucket(col("vec"), 8))
       .queryExecution.executedPlan.toString

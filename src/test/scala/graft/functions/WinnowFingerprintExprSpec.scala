@@ -95,11 +95,4 @@ class WinnowFingerprintExprSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSeq
     assert(pairs === Seq((1L, 2L))) // several shared fps -> ONE pair row
   }
-
-  test("registered as SQL function graft_winnow") {
-    val got = spark.sql(
-      "SELECT graft_winnow('a long enough piece of text for winnowing', 5, 8) AS fp")
-      .collect().head.getSeq[Long](0)
-    assert(got.nonEmpty && got === got.sorted && got.distinct.length === got.length)
-  }
 }

@@ -51,7 +51,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-w").toString
     (1L to 20L).map(i => (i, s"p$i")).toDF("id", "v")
       .write.mode("overwrite").parquet(dir)
-    val m = Manifest.writeForParquetDir(spark, dir)
+    val m = Manifest.writeForParquetDirWith(spark, dir, Nil)
     assert(m.count() >= 1)
     // the manifest file exists and each line round-trips as JSON (read as
     // raw lines: the underscore prefix hides it from Spark's file readers,
@@ -72,7 +72,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-v").toString
     (1L to 90L).map(i => (i, s"payload $i")).toDF("id", "v")
       .repartition(3).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir)
+    Manifest.writeForParquetDirWith(spark, dir, Nil)
     // clean restore: every file ok
     val clean = Manifest.verifyParquetDir(spark, dir)
     assert(clean.where(col("status") =!= "ok").count() === 0L)
@@ -156,7 +156,7 @@ class ManifestSpec extends SparkSpec {
     val dir = parent.resolve("with space").toString
     (1L to 30L).map(i => (i, s"row $i")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir)
+    Manifest.writeForParquetDirWith(spark, dir, Nil)
     val verdict = Manifest.verifyParquetDir(spark, dir)
     assert(verdict.count() >= 2L)
     assert(verdict.where(col("status") =!= "ok").count() === 0L)
@@ -168,7 +168,7 @@ class ManifestSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("graft-man-z").toString
     (1L to 40L).map(i => (i, s"row $i")).toDF("id", "v")
       .repartition(2).write.mode("overwrite").parquet(dir)
-    Manifest.writeForParquetDir(spark, dir)
+    Manifest.writeForParquetDirWith(spark, dir, Nil)
     // a zero-row parquet file (schema only) contributes nothing to the
     // distributed scan — the FS-listing left join must still see it
     val zdir = java.nio.file.Files.createTempDirectory("graft-man-z0").toString
@@ -211,7 +211,7 @@ class ManifestSpec extends SparkSpec {
       f.getParentFile.mkdirs()
       java.nio.file.Files.write(f.toPath, Array[Byte](1, 2, 3))
     }
-    val m = Manifest.writeForParquetDir(spark, dir)
+    val m = Manifest.writeForParquetDirWith(spark, dir, Nil)
     assert(m.count() === spark.read.parquet(dir).inputFiles.length.toLong)
     assert(m.where(col("file").startsWith("_") || col("file").startsWith(".")).count() === 0L)
     // the cleanup that follows: the manifest still verifies clean

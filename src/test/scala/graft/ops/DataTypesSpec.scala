@@ -32,6 +32,30 @@ class DataTypesSpec extends SparkSpec {
     }
   }
 
+  test("withDataTypeExact matches the scala path on the split edge cases") {
+    val spark2 = spark
+    import spark2.implicits._
+    // embedded `^` and a trailing `^^` are where extractDataTypeNative
+    // diverges; the plain literal exercises `get` on a 1-element array
+    val inputs = Seq(
+      "<http://x>",
+      "\"5\"^^<http://www.w3.org/2001/XMLSchema#integer>",
+      "\"plain\"",
+      "\"x^^y^z\"",
+      "\"a\"^^",
+      "\"a@b\"@en")
+    val exact = DataTypes.withDataTypeExact(
+      inputs.map(o => ("<s>", "<p>", o, "en")).toDF("s", "p", "o", "lang"))
+      .select(col("v"), col("t")).as[(String, String)].collect()
+    inputs.zip(exact).foreach { case (in, (v, t)) =>
+      val ref = DataTypes.extractDataType(in)
+      val refT = ref.lift(1).filter(DataTypes.supportedDataTypes.contains)
+        .getOrElse(DataTypes.XsdString)
+      assert(v === ref(0), s"value for $in")
+      assert(t === refT, s"type for $in")
+    }
+  }
+
   test("coerce: unsupported and missing datatypes become xsd:string") {
     val spark2 = spark
     import spark2.implicits._

@@ -4,14 +4,6 @@ import graft.SparkSpec
 
 class LanguagesSpec extends SparkSpec {
 
-  test("expand: en among languages adds en-<lang> dataset names") {
-    assert(Languages.expand("de,en,fr") === Some(Seq("de", "en", "en-de", "en-fr", "fr")))
-  }
-
-  test("expand: empty means all languages") {
-    assert(Languages.expand("") === None)
-  }
-
   test("objectLanguages adds the dbpedia quirk host when en is selected") {
     assert(Languages.objectLanguages(Some(Seq("de", "en")), Seq.empty) === Seq("de", "en", "dbpedia"))
     assert(Languages.objectLanguages(Some(Seq("de")), Seq.empty) === Seq("de"))

@@ -1253,13 +1253,13 @@ class WeightedSampleSpec extends SparkSpec {
   test("graft_topk_by_key: exact k smallest under merge, SQL-callable, typed errors") {
     val spark2 = spark
     import spark2.implicits._
+    import graft.functions.TopKByKeyAgg.topKByKey
     // many partitions force partial heaps + merges; duplicate keys check
     // the (key, id) tie-break inside the heap
     val df = (0L until 500L).map(i => (i % 50, i, i * 2)).toDF("k", "id", "p")
       .repartition(7)
-    df.createOrReplaceTempView("tkk_in")
-    val out = spark.sql(
-      "SELECT explode(graft_topk_by_key(k, id, p, 5)) AS e FROM tkk_in")
+    val out = df
+      .select(explode(topKByKey(col("k"), col("id"), col("p"), 5)).as("e"))
       .select("e.skey", "e.id", "e.weight")
       .as[(Long, Long, Long)].collect().toSeq
     val exp = (0L until 500L).map(i => (i % 50, i, i * 2))
@@ -1267,8 +1267,7 @@ class WeightedSampleSpec extends SparkSpec {
     assert(out === exp)
     // mistyped call fails analysis with the aggregate's own message
     val err = intercept[org.apache.spark.sql.AnalysisException] {
-      spark.sql("SELECT graft_topk_by_key(CAST(k AS STRING), id, p, 5) FROM tkk_in")
-        .collect()
+      df.select(topKByKey(col("k").cast("string"), col("id"), col("p"), 5)).collect()
     }
     assert(err.getMessage.contains("graft_topk_by_key"), err.getMessage)
   }

@@ -484,7 +484,7 @@ class EvalOpsSpec extends SparkSpec {
     assert(bins === Seq(
       (2L, 4L, 1L, 250000L, 250000L, 0L),
       (9L, 3L, 0L, 900000L, 0L, 900000L)))
-    val e = TextStats.ece(rows, col("conf"), col("y"))
+    val e = TextStats.eceFromBins(TextStats.calibrationBins(rows, col("conf"), col("y")))
       .as[(Long, Long, Long, Long)].collect().head
     // ece = (4*0 + 3*900000) div 7, mce = 900000
     assert(e === ((7L, 2L, 2700000L / 7L, 900000L)))
@@ -510,7 +510,7 @@ class EvalOpsSpec extends SparkSpec {
     val spark2 = spark
     import spark2.implicits._
     val rows = Seq((250000L, 1L)).toDF("conf", "y").where(col("y") === 99L)
-    val e = TextStats.ece(rows, col("conf"), col("y"))
+    val e = TextStats.eceFromBins(TextStats.calibrationBins(rows, col("conf"), col("y")))
       .as[(Long, Long, Long, Long)].collect().head
     assert(e === ((0L, 0L, 0L, 0L)))
   }
