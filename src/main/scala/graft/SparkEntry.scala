@@ -801,21 +801,20 @@ object SparkEntry {
         .orderBy(col("doc_id"))
     }),
 
-    // ---- dedup clusters via large-star/small-star contraction ----------
+    // ---- dedup clusters over the salted single-band pair graph --------
     "q64_cc_star" -> ((s, dir) => {
-      // the diameter-independent CC path (Kiveris et al. 2014) over the
-      // SALTED single-band pair graph (q55's edge set — sub-bucket cliques
-      // chained through shared docs make a deeper graph than q58's): star
-      // contraction converges in O(log² n) rounds where hash-to-min pays
-      // one round per unit of diameter. Same recursive-CTE oracle shape as
-      // q58 proves both algorithms compute the same min-label components
+      // hash-to-min CC (`Components.dedupClusters`) over the SALTED
+      // single-band pair graph (q55's edge set — sub-bucket cliques
+      // chained through shared docs make a deeper graph than q58's), under
+      // q58's recursive-CTE oracle shape. The roster name predates the
+      // deletion of the large-star/small-star engine
       graft.core.Checkpoints.scoped {
         val docs = t(s, dir, "documents")
         val sig = Dedup.withMinhashSignature(docs, col("text"), 1)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0"),
           maxBucketSize = Some(100), saltOversized = true,
           persistSignatures = true)
-        Components.dedupClusters(docs, pairs, algorithm = "star")
+        Components.dedupClusters(docs, pairs)
           .orderBy(col("doc_id"))
       }
     }),

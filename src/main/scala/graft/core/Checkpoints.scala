@@ -23,8 +23,7 @@ import org.apache.spark.storage.StorageLevel
   *
   * Operators materialize through [[checkpoint]] (`localCheckpoint(true)`)
   * and [[persist]] (`persist(MEMORY_AND_DISK)`) inside
-  * [[scoped]]` { … }`, and hand a frame some other operator cached to
-  * the scope with [[adopt]]. Each call registers the frame with the
+  * [[scoped]]` { … }`. Each call registers the frame with the
   * innermost scope open on the calling thread (a plain, non-inheritable
   * `ThreadLocal`: a thread started inside a scope does not see it).
   *
@@ -108,11 +107,6 @@ object Checkpoints {
   /** `ds.persist(MEMORY_AND_DISK)`, owned by the innermost open scope. */
   def persist[T](ds: Dataset[T]): Dataset[T] =
     own(ds.persist(StorageLevel.MEMORY_AND_DISK), None)
-
-  /** Register `ds`, which the operator that built it has already cached
-    * (`.cache()`), with the innermost open scope, which frees it as it
-    * frees a [[persist]]. */
-  def adopt[T](ds: Dataset[T]): Dataset[T] = own(ds, None)
 
   /** Free `ds` now if an open scope on this thread registered this very
     * frame; anything else — a projection over a registered frame, a

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -93,7 +94,7 @@ object DataTypes {
 
   /** Most frequent datatype per predicate (reference :206-212). */
   def mostFrequentTypePerPredicate(withTypes: DataFrame): DataFrame =
-    TopK.argMaxPerGroup(withTypes, col("p"), col("t")).cache()
+    Checkpoints.persist(TopK.argMaxPerGroup(withTypes, col("p"), col("t")))
 
   /** Keep only rows matching their predicate's winning datatype, drop
     * negative dates, and render the object back to RDF text

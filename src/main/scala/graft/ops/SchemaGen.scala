@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,34 +84,28 @@ object SchemaGen {
       .distinct()
 
   /** Full schema relation: static ++ inferred (++ xid), distinct, sorted
-    * (reference :290-330). Small (≤ ~#predicates rows) — single file. */
+    * (reference :290-330). Small (≤ ~#predicates rows) — single file.
+    *
+    * The relation is persisted ([[Checkpoints.persist]]) under the
+    * single-partition coalesce: both schema writes consume it (reference
+    * :329-330), and without the cache the infobox join+distinct runs
+    * twice. An open scope owns the cache; with none open it stays, since
+    * `unpersist()` on the coalesced result cannot reach it. */
   def schema(
       spark: SparkSession,
       infoboxTriples: DataFrame,
       winningTypes: DataFrame,
       langTag: String = "",
-      externaliseUris: Boolean = false): DataFrame =
-    relation(spark, infoboxTriples, winningTypes, langTag, externaliseUris)
-      .cache() // consumed by both schema writes (reference :329-330) —
-      .coalesce(1) // without it the infobox join+distinct runs twice
-
-  /** [[schema]] before its cache and single-partition coalesce, for a
-    * caller that owns the cache: `schema`'s own cache sits under the
-    * coalesce, where `unpersist()` on the result cannot reach it. */
-  def relation(
-      spark: SparkSession,
-      infoboxTriples: DataFrame,
-      winningTypes: DataFrame,
-      langTag: String,
-      externaliseUris: Boolean): DataFrame = {
+      externaliseUris: Boolean = false): DataFrame = {
     import graft.core.Implicits._
-    staticPredicates(spark, langTag)
+    Checkpoints.persist(staticPredicates(spark, langTag)
       .unionByName(inferredInfoboxPredicates(infoboxTriples, winningTypes))
       .distinct()
       .when(externaliseUris).call(_.unionByName(xidPredicate(spark)))
       // explicit columns: the reference's bare .sort() is a no-op Catalyst
       // removes; sort for real so the relation honors the "sorted" contract
-      .sort("dataset", "p", "lang", "t", "i")
+      .sort("dataset", "p", "lang", "t", "i"))
+      .coalesce(1)
   }
 
   /** Render schema rows to text lines `<p>: t i .` — predicates containing

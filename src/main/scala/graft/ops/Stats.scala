@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -54,7 +55,7 @@ object Stats {
   def withEnRollup(langStats: DataFrame): DataFrame = {
     // both union branches consume the (N-aggregation, N-join) input plan —
     // cache it like the reference (:158) so it computes once
-    val cached = langStats.cache()
+    val cached = Checkpoints.persist(langStats)
     cached
       .where(!col("lang").startsWith("en-"))
       .union(
@@ -147,14 +148,12 @@ object Stats {
       value: Column,
       threshMilli: Long = 3500L): DataFrame = {
     val rows = df.select(group.as("_g"), value.cast("long").as("_v"))
-    val med = groupQuantiles(rows, col("_g"), col("_v"), Seq(0.5))
-      .select(col("group").as("_g"), col("p50").as("med"))
-      .localCheckpoint(true)
+    val med = Checkpoints.checkpoint(groupQuantiles(rows, col("_g"), col("_v"), Seq(0.5))
+      .select(col("group").as("_g"), col("p50").as("med")))
     val dev = rows.join(broadcast(med), "_g")
       .withColumn("_dev", abs(col("_v") - col("med")))
-    val mad = groupQuantiles(dev, col("_g"), col("_dev"), Seq(0.5))
-      .select(col("group").as("_g"), col("p50").as("mad"))
-      .localCheckpoint(true)
+    val mad = Checkpoints.checkpoint(groupQuantiles(dev, col("_g"), col("_dev"), Seq(0.5))
+      .select(col("group").as("_g"), col("p50").as("mad")))
     dev.join(broadcast(mad), "_g")
       .groupBy(col("_g"))
       .agg(max(col("med")).as("med"), max(col("mad")).as("mad"),

@@ -1,5 +1,6 @@
 package graft.ops
 
+import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -20,8 +21,9 @@ import org.apache.spark.sql.functions._
   *  - the semi-join back is planned as a *broadcast* hash semi-join because
   *    the top-k side is tiny (k × #groups rows); AQE converts at runtime if
   *    static stats are missing. No shuffle touches the fact table.
-  *  - `.cache()` on the top-k side mirrors the reference and avoids
-  *    recomputation across the multiple actions that consume it.
+  *  - persisting the top-k side ([[Checkpoints.persist]]) mirrors the
+  *    reference's `.cache()` and avoids recomputation across the multiple
+  *    actions that consume it.
   */
 object TopK {
 
@@ -44,13 +46,12 @@ object TopK {
     * (reference: DbpediaDgraphSparkApp.scala:123-129). `en-*` languages are
     * excluded from the ranking. */
   def topKPredicatesPerLang(triples: DataFrame, k: Int): DataFrame =
-    topKPerGroup(
+    Checkpoints.persist(topKPerGroup(
       triples.where(!col("lang").contains("-")),
       groupCols = Seq(col("lang")),
       valueCols = Seq(col("p")),
       k = k)
-      .select(col("p"), col("lang"))
-      .cache()
+      .select(col("p"), col("lang")))
 
   /** Keep only triples whose `(p, predicate-lang)` is in the top-k set;
     * `en-xx` rows match against the `en` ranking (reference:

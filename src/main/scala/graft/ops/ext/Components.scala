@@ -30,13 +30,15 @@ import org.apache.spark.sql.functions._
   * action per round, with the convergence count fused into it as an
   * accumulator (lineage depth constant, no
   * second per-round job). For adversarially deep graphs (long paths) the
-  * round count is `maxIter`-bounded; plug a large-star/small-star variant
-  * in if a corpus ever produces diameter beyond it (near-dup graphs do
-  * not).
+  * round count is `maxIter`-bounded, and a run that has not verified
+  * convergence by then THROWS rather than return under-merged labels;
+  * a diameter-independent variant (large-star/small-star, Kiveris et
+  * al. 2014) is the answer if a corpus ever produces diameter beyond it
+  * (near-dup graphs do not).
   */
 object Components {
 
-  /** Edge-count bound under which the iterative engines hand the
+  /** Edge-count bound under which the propagation rounds hand the
     * ALREADY-MATERIALIZED edge set to a driver-side union-find instead of
     * running further distributed rounds — the standard "finish small
     * graphs centrally" endgame (Kiveris et al. 2014 §6 finish their
@@ -85,6 +87,8 @@ object Components {
     * @param driverFinishMaxEdges edge-count bound for the driver-side
     *                 finish ([[DriverFinishMaxEdges]]); 0 forces the
     *                 distributed rounds at every size (the spec's lever)
+    * @throws IllegalStateException when the rounds have not verified
+    *                 convergence after `maxIter` (labels may be under-merged)
     */
   def connectedComponents(
       vertices: DataFrame,
@@ -125,10 +129,10 @@ object Components {
     // logical plan per round — caching short-circuits execution but
     // analysis, cache lookup, and plan rendering still walk the full tree,
     // which turns round ~6 into tens of seconds of pure driver-side plan
-    // work (measured 37 s on a 149-edge graph; 0.3 s truncated). Same
-    // treatment the star variant's Scaladoc prescribes. The checkpoint
-    // materializes the (endpoint-sized) label table once per round — the
-    // convergence count was already doing exactly that materialization.
+    // work (measured 37 s on a 149-edge graph; 0.3 s truncated). The
+    // checkpoint materializes the (endpoint-sized) label table once per
+    // round — the convergence count was already doing exactly that
+    // materialization.
     val spark = vertices.sparkSession
 
     // DRIVER FINISH (round-17, the q83/q58 fixed-floor audit): the count
@@ -200,154 +204,12 @@ object Components {
     if (changed > 0)
       // `changed` counts the updates the FINAL round then applied, so the
       // result may in fact be converged (a diameter-of-exactly-maxIter
-      // graph finishes on that round) — but it was not verified
-      System.err.println(s"[components] WARNING: convergence not verified after " +
-        s"$maxIter rounds ($changed labels changed in the last round) — results may " +
-        "be under-merged; raise maxIter for graphs with diameter beyond it")
+      // graph finishes on that round) — but it was not verified, and an
+      // under-merged label table is silently wrong output
+      throw new IllegalStateException(s"connectedComponents: convergence not verified " +
+        s"after maxIter = $maxIter rounds ($changed labels changed in the last round); " +
+        "raise maxIter for graphs with diameter beyond it")
     // singletons re-enter with their own id as component
-    vertices.select(col(idCol).as("id"))
-      .join(labels, Seq("id"), "left")
-      .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-  }
-
-  /** Large-star step (Kiveris et al., "Connected Components in MapReduce
-    * and Beyond", SoCC 2014): every vertex connects its strictly-LARGER
-    * neighbors to the minimum of its closed neighborhood. Input and output
-    * edges are canonically oriented larger→smaller (`u` > `v`); the
-    * emitted target `m = min(N(u) ∪ u)` is below every emitted source, so
-    * orientation is preserved without a re-sort. */
-  private def largeStar(e: DataFrame): DataFrame = {
-    val sym = e
-      .select(explode(array(
-        struct(col("u").as("a"), col("v").as("b")),
-        struct(col("v").as("a"), col("u").as("b")))).as("x"))
-      .select(col("x.a").as("a"), col("x.b").as("b"))
-    val mins = sym.groupBy(col("a")).agg(min(col("b")).as("mn"))
-      .select(col("a"), least(col("a"), col("mn")).as("m"))
-    sym.where(col("b") > col("a"))
-      .join(mins, "a")
-      .select(col("b").as("u"), col("m").as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-  }
-
-  /** Small-star step: every vertex connects its smaller-or-equal
-    * neighborhood (which, under the canonical orientation, is exactly its
-    * outgoing edge targets) plus itself to that set's minimum. */
-  private def smallStar(e: DataFrame): DataFrame = {
-    val mins = e.groupBy(col("u")).agg(min(col("v")).as("m"))
-    e.join(mins, "u")
-      .select(col("v").as("s"), col("m").as("t"))
-      .where(col("s") =!= col("t"))
-      .union(mins.select(col("u").as("s"), col("m").as("t")))
-      .distinct()
-      .select(col("s").as("u"), col("t").as("v"))
-  }
-
-  /** (id, comp) via alternating large-star/small-star rounds — the
-    * DIAMETER-INDEPENDENT alternative to [[connectedComponents]]'s
-    * min-label propagation. Hash-to-min pays one round per unit of graph
-    * diameter; star contraction converges in O(log² n) rounds regardless
-    * of diameter (Kiveris et al. 2014, Thm 2), which is the scale path for
-    * adversarial graphs — long chains of overlapping LSH buckets, link
-    * graphs — where diameter is not a small constant. Identical output
-    * contract: `comp` = minimum reachable vertex id (the fixpoint of
-    * alternation is a star per component rooted at its min).
-    *
-    * Scale shape per round: two `groupBy(min)` + join passes over the edge
-    * list (both partial-aggregate map-side; edge rows carry two longs) and
-    * one distinct. Edges never grow beyond the symmetrized input (both
-    * steps emit ≤ one edge per input edge), and every round strictly
-    * shrinks star-internal structure. Convergence is a set-equality check:
-    * an accumulator row count FUSED into each round's materializing
-    * checkpoint job (one job per steady-state round — the separate
-    * `.count()` cost a second full job every round) gates a pair of
-    * limit-1 anti-join probes (both directions — accumulator counts can
-    * over-tick under task retry, so equality is certified by the probes
-    * alone, never by the counts; the count gate only decides when probing
-    * is worth a job, and a spuriously-failed gate just defers the probe
-    * one round). Each round is `localCheckpoint`ed, not merely persisted: the
-    * two star steps reference their input several times each, so a plan
-    * built on the previous round's PLAN (even a cached one) multiplies
-    * node count ~10× per round — exponential in rounds when rendered (the
-    * SQL listener renders every action's plan) and unbounded recovery
-    * lineage. Checkpointing truncates each round to a materialized leaf:
-    * plan size and recovery cost stay constant per round.
-    */
-  def connectedComponentsStar(
-      vertices: DataFrame,
-      edges: DataFrame,
-      idCol: String = "id",
-      srcCol: String = "id_a",
-      dstCol: String = "id_b",
-      maxIter: Int = 25,
-      driverFinishMaxEdges: Long = DriverFinishMaxEdges): DataFrame = Checkpoints.scoped {
-    // eager localCheckpoint per round (see Scaladoc): materializes to
-    // block storage AND truncates the plan to a leaf.
-    val spark = vertices.sparkSession
-    // init count FUSED into the checkpoint's materializing job (round 20 —
-    // the loop's own accumulator pattern applied to round 0): a separate
-    // e.count() was one whole job over the fresh blocks. Over-tick under
-    // task retry is safe here exactly as in the loop: it can only
-    // overstate the count, which at worst skips the driver finish for a
-    // graph that was eligible (slower, never wrong) — and an empty edge
-    // set ticks nothing regardless of retries.
-    val initAcc = spark.sparkContext.longAccumulator("graft.cc.star.init")
-    val initTick = udf((u: Long) => { initAcc.add(1L); true }).asNondeterministic()
-    var e = Checkpoints.checkpoint(edges
-      .select(greatest(col(srcCol), col(dstCol)).as("u"),
-        least(col(srcCol), col(dstCol)).as("v"))
-      .where(col("u") =!= col("v"))
-      .distinct()
-      .where(initTick(col("u"))))
-    var count = initAcc.sum
-
-    // DRIVER FINISH — same contract and rationale as the hash-to-min
-    // variant's (see [[connectedComponents]]): the init checkpoint above
-    // already materialized and counted the canonical edge set, so the
-    // bound check is free here; under it, every star round is replaced
-    // by the union-find over the checkpoint's blocks.
-    if (driverFinishMaxEdges > 0 && count > 0 && count <= driverFinishMaxEdges) {
-      val idType = e.schema("u").dataType
-      val pairs = e.select(col("u").cast("long"), col("v").cast("long"))
-        .collect().map(r => (r.getLong(0), r.getLong(1)))
-      import spark.implicits._
-      val labelsLocal = driverUnionFind(pairs).toDF("id", "comp")
-        .select(col("id").cast(idType).as("id"), col("comp").cast(idType).as("comp"))
-      return vertices.select(col(idCol).as("id"))
-        .join(broadcast(labelsLocal), Seq("id"), "left")
-        .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
-    }
-
-    var converged = count == 0L
-    var iter = 0
-    while (!converged && iter < maxIter) {
-      // row count fused into the checkpoint's materializing job (see the
-      // Scaladoc): one job per steady-state round instead of two
-      val rowsAcc = spark.sparkContext.longAccumulator("graft.cc.star.rows")
-      val tick = udf((u: Long) => { rowsAcc.add(1L); true }).asNondeterministic()
-      val next = Checkpoints.checkpoint(smallStar(largeStar(e)).where(tick(col("u"))))
-      val nextCount = rowsAcc.sum
-      // equal-count rounds are CANDIDATE fixpoints; certify with limit-1
-      // anti probes in BOTH directions (set equality — sound even if the
-      // accumulator over-ticked under a task retry, see the Scaladoc)
-      converged = nextCount == count &&
-        next.join(e, Seq("u", "v"), "left_anti").limit(1).count() == 0L &&
-        e.join(next, Seq("u", "v"), "left_anti").limit(1).count() == 0L
-      // the probes above were round k-1's last readers
-      Checkpoints.free(e)
-      e = next
-      count = nextCount
-      iter += 1
-    }
-    if (!converged)
-      System.err.println(s"[components] WARNING: star contraction not verified " +
-        s"converged after $maxIter rounds — results may be under-merged")
-    // at the fixpoint every non-root vertex holds exactly one edge to its
-    // component min; min(v) per u also covers the (warned) non-converged
-    // case deterministically
-    val labels = Checkpoints.checkpoint(e.groupBy(col("u")).agg(min(col("v")).as("comp"))
-      .select(col("u").as("id"), col("comp")))
     vertices.select(col(idCol).as("id"))
       .join(labels, Seq("id"), "left")
       .select(col("id"), coalesce(col("comp"), col("id")).as("comp"))
@@ -356,24 +218,10 @@ object Components {
   /** Canonical-document assignment from near-dup pairs: every document
     * mapped to the minimum doc id of its near-dup component (documents
     * with no near-dup map to themselves). The cluster-collapse step of a
-    * dedup pipeline: keep `WHERE id = comp`, drop the rest.
-    *
-    * `algorithm`: `"hashToMin"` (default — rounds = diameter, fewer jobs
-    * per round, right for shallow near-dup graphs) or `"star"`
-    * (diameter-independent O(log² n) rounds, right for deep graphs). */
-  def dedupClusters(
-      docs: DataFrame,
-      pairs: DataFrame,
-      idCol: String = "doc_id",
-      algorithm: String = "hashToMin"): DataFrame = {
-    val cc = algorithm match {
-      case "hashToMin" => connectedComponents(docs.select(col(idCol)), pairs, idCol)
-      case "star" => connectedComponentsStar(docs.select(col(idCol)), pairs, idCol)
-      case other => throw new IllegalArgumentException(
-        s"dedupClusters: unknown algorithm '$other' (expected hashToMin or star)")
-    }
-    cc.select(col("id").as(idCol), col("comp").as("canonical_id"))
-  }
+    * dedup pipeline: keep `WHERE id = comp`, drop the rest. */
+  def dedupClusters(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id"): DataFrame =
+    connectedComponents(docs.select(col(idCol)), pairs, idCol)
+      .select(col("id").as(idCol), col("comp").as("canonical_id"))
 
   /** Fixed-iteration integer PageRank over a directed edge list — the
     * link-centrality signal of web-corpus curation (domain authority for
@@ -385,15 +233,9 @@ object Components {
     * Every division has non-negative operands, so Spark `div` and DuckDB
     * `//` agree bit-for-bit — an unrolled-CTE oracle can replay the
     * exact same iterations. Floor truncation loses < 1 micro-unit per
-    * edge per round. Dangling nodes (no out-edges) follow one of TWO
-    * documented contracts: the default (`danglingRedistribute = false`)
-    * ABSORBS their rank — the simplified formulation q165's oracle
-    * replays; `danglingRedistribute = true` is canonical MASS-CONSERVING
-    * PageRank — each round the dangling total `D = Σ_{outdeg(v)=0} r(v)`
-    * (one scalar aggregate, a bounded driver collect) is split evenly
-    * (`D div |V|`, floor) into every node's incoming sum before the
-    * damping fold, so total mass stays ≈ |V|·1e6 within floor error —
-    * the contract consumers comparing ranks ACROSS graphs expect.
+    * edge per round. Dangling nodes (no out-edges) ABSORB their rank —
+    * the simplified formulation q165's oracle replays — so total mass is
+    * not conserved on graphs with sinks.
     *
     * Iteration count is a PARAMETER, not a convergence test: rank
     * consumers (crawl schedulers, quality priors) want a deterministic
@@ -415,8 +257,7 @@ object Components {
       srcCol: String = "src",
       dstCol: String = "dst",
       iterations: Int = 3,
-      dampingPpm: Long = 850000L,
-      danglingRedistribute: Boolean = false): DataFrame = Checkpoints.scoped {
+      dampingPpm: Long = 850000L): DataFrame = Checkpoints.scoped {
     require(iterations >= 1, "pageRank: need at least one iteration")
     require(dampingPpm >= 0 && dampingPpm <= 1000000L,
       s"pageRank: dampingPpm must be in [0, 1e6], got $dampingPpm")
@@ -435,28 +276,11 @@ object Components {
       .repartition(col("src")))
     val nodes = Checkpoints.checkpoint(
       e.select(explode(array(col("src"), col("dst"))).as("id")).distinct())
-    // the dangling set is edge-determined, so it is computed ONCE (an
-    // anti join against the distinct sources), as is |V| — only the
-    // per-round dangling TOTAL depends on ranks
-    val srcs = e.select(col("src")).distinct()
-    val danglingIds =
-      if (danglingRedistribute)
-        Checkpoints.checkpoint(nodes.join(srcs, nodes("id") === srcs("src"), "left_anti"))
-      else null
-    val nodeCount = if (danglingRedistribute) nodes.count() else 0L
     // round-0 ranks are a pure projection over the `nodes` checkpoint — a
     // separate eager checkpoint would materialize the same rows a second
     // time for one whole job of overhead (round 20)
     var ranks = nodes.select(col("id"), lit(M).as("r"))
     for (_ <- 1 to iterations) {
-      // per-round dangling mass: a one-row aggregate over the |V|-sized
-      // rank table — the only driver-side value in the loop, bounded
-      val share =
-        if (danglingRedistribute && nodeCount > 0L)
-          ranks.join(danglingIds, Seq("id"), "left_semi")
-            .agg(coalesce(sum(col("r")), lit(0L)))
-            .collect()(0).getLong(0) / nodeCount
-        else 0L
       val contrib = withDeg.join(ranks, withDeg("src") === ranks("id"))
         .select(col("dst"), expr("r div deg").as("c"))
         .groupBy(col("dst")).agg(sum(col("c")).as("s"))
@@ -464,7 +288,7 @@ object Components {
         nodes.join(contrib, nodes("id") === contrib("dst"), "left")
           .select(nodes("id"),
             (lit(M - dampingPpm) +
-              expr(s"($dampingPpm * (coalesce(s, CAST(0 AS BIGINT)) + $share)) div $M"))
+              expr(s"($dampingPpm * coalesce(s, CAST(0 AS BIGINT))) div $M"))
               .as("r")))
       Checkpoints.free(ranks) // round 0 is a projection over `nodes`: kept
       ranks = next

@@ -430,21 +430,17 @@ object Dedup {
       docs: DataFrame, textCol: Column, idCol: String,
       threshold: Double,
       k: Int = 5, w: Int = 8,
-      maxBucketSize: Option[Int] = None,
-      persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
+      maxBucketSize: Option[Int] = None): DataFrame = {
     val cand = winnowCandidatePairs(docs, idCol,
       graft.functions.WinnowFingerprintExpr.winnow(textCol, k, w), maxBucketSize)
-    // the sorted-set projection is joined on BOTH pair sides — the
-    // token-hash-set kernel + sort re-run per side unless persisted
-    // (eager localCheckpoint).
-    // Measured at sf0.1 (cap 50): the flag LOSES here (~1.6 -> 1.7 s) —
-    // few candidates survive the winnow guard, so writing every doc's
-    // multi-KB set to block storage costs more than the duplicate
-    // kernel runs. Turn it on only when candidates are dense relative
-    // to the corpus.
-    val setsPlan = docs.select(col(idCol).as("_sid"),
+    // the sorted-set projection is joined on BOTH pair sides, so the
+    // token-hash-set kernel + sort run once per side. Materializing it
+    // once (an eager checkpoint) was measured at sf0.1 (cap 50) and LOST
+    // (~1.6 -> 1.7 s): few candidates survive the winnow guard, so
+    // writing every doc's multi-KB set to block storage costs more than
+    // the duplicate kernel runs.
+    val sets = docs.select(col(idCol).as("_sid"),
       array_sort(graft.functions.TokenHashSetExpr.token_hash_set(textCol)).as("_set"))
-    val sets = if (persistSignatures) Checkpoints.checkpoint(setsPlan) else setsPlan
     cand
       .join(sets.select(col("_sid").as("id_a"), col("_set").as("set_a")), Seq("id_a"))
       .join(sets.select(col("_sid").as("id_b"), col("_set").as("set_b")), Seq("id_b"))

@@ -141,10 +141,10 @@ object Ranking {
     * oracle embeds the SAME constants, so no engine ever evaluates a
     * float log and the result hashes exactly. `DCG = Σ disc(rnk)` over
     * relevant hits; `IDCG = Σ disc(1..min(R,k))` where `R` = the query's
-    * corpus-wide relevant count (its label's population, minus itself
-    * when `excludeSelf` — the `cosineTopK` contract, which never ranks
-    * the query); `ndcg_ppm = floor(1e6·DCG/IDCG)`, NULL when R = 0 (no
-    * relevant documents exist — the metric's undefined case).
+    * corpus-wide relevant count (its label's population minus the query
+    * itself — the `cosineTopK` contract, which never ranks the query);
+    * `ndcg_ppm = floor(1e6·DCG/IDCG)`, NULL when R = 0 (no relevant
+    * documents exist — the metric's undefined case).
     *
     * Scale shape: `ranking` is queries×k rows. The only corpus-sized
     * input is `labels`; it contributes one equi join onto the ranking's
@@ -156,14 +156,13 @@ object Ranking {
     * @return one row per query: (q_id, dcg_s, idcg_s, ndcg_ppm) */
   def ndcgAtK(
       ranking: DataFrame, labels: DataFrame, k: Int,
-      excludeSelf: Boolean = true, scale: Long = 1000000000L): DataFrame = {
+      scale: Long = 1000000000L): DataFrame = {
     val discs = ndcgDiscounts(k, scale)
     val prefix = discs.scanLeft(0L)(_ + _).tail // prefix(i) = Σ disc(1..i)
     val nLab = labels.select(col("id").as("n_id"), col("label").as("_n_lab"))
     val qLab = labels.select(col("id").as("q_id"), col("label").as("_q_lab"))
     val census = labels.groupBy(col("label").as("_q_lab"))
       .agg(count(lit(1)).as("_lab_n"))
-    val self = if (excludeSelf) 1L else 0L
     ranking
       // truncate to depth k FIRST: a deeper list (nDCG@5 over a top-10
       // ranking) must not feed rnk > k into the k-entry discount lookup
@@ -177,7 +176,7 @@ object Ranking {
         element_at(typedLit(discs), col("rnk").cast("int")))
         .otherwise(0L)).as("dcg_s"))
       .join(broadcast(census), "_q_lab")
-      .withColumn("_r", col("_lab_n") - self)
+      .withColumn("_r", col("_lab_n") - 1L)
       .select(col("q_id"), col("dcg_s"),
         when(col("_r") > 0,
           element_at(typedLit(prefix), least(col("_r"), lit(k.toLong)).cast("int")))

@@ -208,12 +208,11 @@ object Similarity {
     * (centroids sit where vectors are dense) while SRP buckets are
     * data-oblivious; IVF recall tunes by `nprobe` at query time without
     * re-indexing. */
-  /** @param broadcastProbes hint the (queries × nprobe) probe side as the
-    *   broadcast build side — correct for the documented Q ≲ 10³ query-set
-    *   contract (zero shuffle before the probe join). Set false for
-    *   corpus-scale query sets (e.g. corpus-vs-corpus ANN), where a forced
-    *   broadcast would hit the broadcast size limit — AQE then picks the
-    *   join strategy from real sizes.
+  /** The (queries × nprobe) probe side is hinted as the broadcast build
+    * side — correct for the documented Q ≲ 10³ query-set contract (zero
+    * shuffle before the probe join); corpus-scale query sets are out of
+    * that contract.
+    *
     * @param lloydIters optional k-means refinement of the first-K seed
     *   (spherical Lloyd): each round assigns every corpus vector to its
     *   best current centroid with the SAME map-side fold the final
@@ -235,7 +234,6 @@ object Similarity {
   def ivfTopK(
       corpus: DataFrame, queries: DataFrame,
       numCentroids: Int, k: Int, nprobe: Int,
-      broadcastProbes: Boolean = true,
       lloydIters: Int = 0): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     var centroids = collectSeedCentroids(corpus, numCentroids, "ivfTopK")
@@ -274,7 +272,7 @@ object Similarity {
       .select(col("_pc").getField("cid").as("cid"), col("q_id"), col("q_vec"))
 
     val byQuery = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    (if (broadcastProbes) broadcast(probes) else probes).join(assigned, Seq("cid"))
+    broadcast(probes).join(assigned, Seq("cid"))
       .where(col("q_id") =!= col("n_id"))
       .withColumn("cos", cosineSafe(col("q_vec"), col("n_vec")))
       .withColumn("rnk", row_number().over(byQuery))

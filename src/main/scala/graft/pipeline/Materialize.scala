@@ -44,10 +44,10 @@ object Materialize {
     * own token stream (the [[Packing.sequenceLayout]] contract), so a
     * multilingual corpus yields per-language shard sequences.
     *
-    * `writeManifest` (default ON — the shards ARE the artifact a
-    * transfer or restore touches) lands a `_manifest.jsonl` with
-    * per-file row counts, order-insensitive content checksums, and
-    * per-file token sums + partition values as extra fields;
+    * The shards ARE the artifact a transfer or restore touches, so the
+    * write always lands a `_manifest.jsonl` with per-file row counts,
+    * order-insensitive content checksums, and per-file token sums +
+    * partition values as extra fields;
     * [[Manifest.verifyParquetDir]] later audits a restored shard tree
     * per-file without re-reading row data. The manifest's per-shard-dir
     * row counts equal the returned summary's `n_docs` — spec-held
@@ -57,10 +57,9 @@ object Materialize {
   def trainingShards(
       docs: DataFrame, textCol: Column, idCol: String, stratumCol: String,
       seqLen: Long, seqsPerShard: Long, seed: Long,
-      outDir: String, writeManifest: Boolean = true): DataFrame = Checkpoints.scoped {
+      outDir: String): DataFrame = Checkpoints.scoped {
     require(seqsPerShard >= 1,
       s"trainingShards: seqsPerShard must be >= 1, got $seqsPerShard")
-    val spark = docs.sparkSession
     val base = docs
       .withColumn("_text", textCol)
       .withColumn("_n", TextStats.tokenCount(textCol).cast("long"))
@@ -79,27 +78,21 @@ object Materialize {
       .repartition(col("stratum"), col("shard"))
       .sortWithinPartitions(col("stratum"), col("shard"), col("ord"))
       .write.mode("overwrite").partitionBy("stratum", "shard").parquet(outDir)
-    if (writeManifest) {
-      // ONE scan of the written shards yields both the audit artifact
-      // and the summary: the manifest's extra per-file columns carry the
-      // file's partition values and token sum (a file lives in exactly
-      // one (stratum, shard) dir, so first() is deterministic), and the
-      // returned summary is a metadata-only rollup of the per-file frame
-      // — the old shape paid a SECOND scan of the shard tree for the
-      // n_tok sums the manifest didn't carry. The summary checkpoint is
-      // ≤ #shards rows.
-      val m = Manifest.writeForParquetDirWith(spark, outDir, Seq(
-        "stratum" -> first(col("stratum")),
-        "shard" -> first(col("shard")),
-        "n_tok_sum" -> sum(col("n_tok"))))
-      Checkpoints.checkpoint(m
-        .groupBy(col("stratum"), col("shard"))
-        .agg(sum(col("n_rows")).as("n_docs"),
-          coalesce(sum(col("n_tok_sum")), lit(0L)).as("n_tokens"))
-        .orderBy(col("stratum"), col("shard")))
-    } else spark.read.parquet(outDir)
+    // ONE scan of the written shards yields both the audit artifact and
+    // the summary: the manifest's extra per-file columns carry the file's
+    // partition values and token sum (a file lives in exactly one
+    // (stratum, shard) dir, so first() is deterministic), and the returned
+    // summary is a metadata-only rollup of the per-file frame — the old
+    // shape paid a SECOND scan of the shard tree for the n_tok sums the
+    // manifest didn't carry. The summary checkpoint is ≤ #shards rows.
+    val m = Manifest.writeForParquetDirWith(docs.sparkSession, outDir, Seq(
+      "stratum" -> first(col("stratum")),
+      "shard" -> first(col("shard")),
+      "n_tok_sum" -> sum(col("n_tok"))))
+    Checkpoints.checkpoint(m
       .groupBy(col("stratum"), col("shard"))
-      .agg(count(lit(1)).as("n_docs"), sum(col("n_tok")).as("n_tokens"))
-      .orderBy(col("stratum"), col("shard"))
+      .agg(sum(col("n_rows")).as("n_docs"),
+        coalesce(sum(col("n_tok_sum")), lit(0L)).as("n_tokens"))
+      .orderBy(col("stratum"), col("shard")))
   }
 }

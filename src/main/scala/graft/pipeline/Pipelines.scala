@@ -22,7 +22,6 @@ case class RdfConfig(
     externaliseUris: Boolean = false,
     removeLanguageTags: Boolean = false,
     writeTypes: Boolean = false,
-    printStats: Boolean = false,
     writeManifests: Boolean = false)
 
 /** Stage 1 — ttl -> language-partitioned parquet
@@ -105,15 +104,14 @@ object ParquetToRdf {
     // top-k infobox predicate selection (reference :121-137)
     val infoboxTriples = cfg.topInfoboxPropertiesPerLang match {
       case Some(k) =>
-        TopK.filterToTopK(allInfoboxTriples,
-          Checkpoints.adopt(TopK.topKPredicatesPerLang(allInfoboxTriples, k)))
+        TopK.filterToTopK(allInfoboxTriples, TopK.topKPredicatesPerLang(allInfoboxTriples, k))
       case None => allInfoboxTriples
     }
 
     // cleanup transforms
     val labels = Cleanup.labels(labelTriples, cfg.externaliseUris, cfg.removeLanguageTags)
     val withTypes = DataTypes.withDataTypeExact(infoboxTriples)
-    val winning = Checkpoints.adopt(DataTypes.mostFrequentTypePerPredicate(withTypes))
+    val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
     val infobox = Cleanup.infoboxWith(withTypes, winning, cfg.externaliseUris)
     val interlang = Cleanup.uriPairs(interlangTriples, cfg.externaliseUris)
     val pageLinks = Cleanup.uriPairs(pageLinksTriples, cfg.externaliseUris)
@@ -123,9 +121,7 @@ object ParquetToRdf {
 
     // schema relation + files (reference :263-372)
     val langTag = if (cfg.removeLanguageTags) "" else " @lang"
-    // SchemaGen.schema's plan, its cache owned here (both writes read it)
-    val schema = Checkpoints.persist(SchemaGen.relation(
-      spark, infoboxTriples, winning, langTag, cfg.externaliseUris)).coalesce(1)
+    val schema = SchemaGen.schema(spark, infoboxTriples, winning, langTag, cfg.externaliseUris)
     timed("schema files") {
       writeSchema(SchemaGen.schemaLines(schema, indexed = false), s"$outBase/schema.dgraph")
       writeSchema(SchemaGen.schemaLines(schema, indexed = true), s"$outBase/schema.indexed.dgraph")

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators in `ops/ext`, `pipeline`, `multimodal` and `io` materialize
-  * only through [[graft.core.Checkpoints]]' scope, which owns every free:
-  * a raw `localCheckpoint`/`persist`/`cache()`, a hand-written
+/** Operators in `ops` (with `ops/ext`), `pipeline`, `multimodal` and `io`
+  * materialize only through [[graft.core.Checkpoints]]' scope, which owns
+  * every free: a raw `localCheckpoint`/`persist`/`cache()`, a hand-written
   * `unpersist` or a lineage release there would bypass the single owner. */
 class LifecycleLintSpec extends AnyFunSuite {
 
@@ -43,7 +43,7 @@ class LifecycleLintSpec extends AnyFunSuite {
   }
 
   test("ops/ext and pipeline materialize only through the Checkpoints scope") {
-    val h = hits(10, "src/main/scala/graft/ops/ext", "src/main/scala/graft/pipeline")
+    val h = hits(10, "src/main/scala/graft/ops", "src/main/scala/graft/pipeline")
     assert(h.isEmpty, h.mkString("\n", "\n", ""))
   }
 

@@ -254,30 +254,6 @@ class PropertySpec extends SparkSpec {
     }
   }
 
-  test("property: star contraction agrees with hash-to-min CC on random graphs") {
-    val spark2 = spark
-    import spark2.implicits._
-    val n = 20
-    val edgesGen = Gen.listOfN(15, Gen.zip(Gen.choose(0L, n - 1L), Gen.choose(0L, n - 1L)))
-      .map(_.filter { case (a, b) => a != b })
-    samples(edgesGen, 4).foreach { edges =>
-      val parent = Array.tabulate(n.toInt)(identity)
-      def find(x: Int): Int = { var r = x; while (parent(r) != r) r = parent(r); r }
-      edges.foreach { case (a, b) =>
-        val (ra, rb) = (find(a.toInt), find(b.toInt))
-        if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
-      }
-      val expected = (0 until n.toInt).map(i => (i.toLong, find(i).toLong))
-      for (dm <- Seq(graft.ops.ext.Components.DriverFinishMaxEdges, 0L)) {
-        val got = graft.ops.ext.Components.connectedComponentsStar(
-            (0L until n).toDF("id"), edges.toDF("id_a", "id_b"),
-            driverFinishMaxEdges = dm)
-          .as[(Long, Long)].collect().sortBy(_._1)
-        assert(got.toSeq === expected, s"for edges $edges, driverMax=$dm")
-      }
-    }
-  }
-
   test("property: exact-substring spans match the brute-force oracle") {
     val spark2 = spark
     import spark2.implicits._

@@ -46,7 +46,7 @@ class CleanTextSpec extends SparkSpec {
     assert(out.toString === "a�b")
   }
 
-  test("DataFrame path: codegen'd expression, null passthrough, SQL registration") {
+  test("DataFrame path: codegen'd expression, null passthrough") {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq(

@@ -55,7 +55,7 @@ class DotProductExprSpec extends SparkSpec {
       (None, None), (None, None), (None, None), (Some(8.0), Some(8.0))))
   }
 
-  test("kernel registers as SQL graft_dot and survives codegen") {
+  test("dot_product is exact; Similarity.dot plans it, not zip_with") {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))).toDF("a", "b")

@@ -131,7 +131,7 @@ class LevenshteinExprSpec extends SparkSpec {
     assert(d1 >= 0 && d1 <= 2)
   }
 
-  test("expression: nulls propagate, codegen survives, SQL registration") {
+  test("expression: nulls propagate, matches Spark, literal inputs") {
     val spark2 = spark
     import spark2.implicits._
     import LevenshteinBoundedExpr.graft_levenshtein

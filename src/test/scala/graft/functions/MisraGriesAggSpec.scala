@@ -55,7 +55,7 @@ class MisraGriesAggSpec extends SparkSpec {
     assert(cands.length <= 3)
   }
 
-  test("registers as SQL graft_mg_candidates and partial-aggregates (ObjectHashAggregate)") {
+  test("mg_candidates partial-aggregates (ObjectHashAggregate)") {
     val spark2 = spark
     import spark2.implicits._
     val agg = docs

@@ -64,7 +64,7 @@ class SrpBucketExprSpec extends SparkSpec {
     compare(DoubleType, Seq(Seq(1.0, -2.0)), planes = 2)
   }
 
-  test("kernel registers as SQL graft_srp_bucket and survives codegen") {
+  test("srp_bucket matches the interpreted tree and plans as a kernel") {
     val spark2 = spark
     import spark2.implicits._
     val df = Seq(Seq(0.5f, -0.25f, 1.0f)).toDF("vec")

@@ -294,7 +294,7 @@ class TokenHashExprsSpec extends SparkSpec {
     assert("graft_token_minhash".r.findAllMatchIn(plan).length === 1, plan)
   }
 
-  test("registered SQL functions coerce castable input, reject the rest at analysis time") {
+  test("kernels coerce castable input, reject the rest at analysis time") {
     val got = spark.range(1).select(
         TokenMinhashExpr.token_minhash(lit("a b"), 2).as("mhs"),
         SimhashExpr.simhash(lit("a b")).as("sh"),

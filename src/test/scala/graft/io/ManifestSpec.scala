@@ -45,7 +45,7 @@ class ManifestSpec extends SparkSpec {
     assert(sum(d1) !== sum(d3)) // one changed row flips it
   }
 
-  test("writeForParquetDir lands _manifest.jsonl without breaking readers") {
+  test("writeForParquetDirWith lands _manifest.jsonl without breaking readers") {
     val spark2 = spark
     import spark2.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-man-w").toString

@@ -42,7 +42,7 @@ class MultimodalSpec extends SparkSpec {
     assert(initCount.value === 2) // once per partition, not per row
   }
 
-  test("frame features generate in-partition; WAV frame codec slices time") {
+  test("frame features generate in-partition; custom codec replaces stub") {
     val spark2 = spark
     import spark2.implicits._
     // extractFrameFeatures: frames derive from duration metadata, one

@@ -876,7 +876,7 @@ class ComponentsSpec extends SparkSpec {
   }
 
   test("driver finish and distributed rounds agree on a mixed clique/chain/isolate graph") {
-    // the parity fixture both engines must label identically: a clique,
+    // the parity fixture both paths must label identically: a clique,
     // a chain deep enough to need propagation, reversed/duplicate edges,
     // and isolates
     val vertices = 0L to 30L
@@ -886,10 +886,6 @@ class ComponentsSpec extends SparkSpec {
     val fast = cc(vertices, edges)
     val loop = cc(vertices, edges, driverMax = 0L)
     assert(fast === loop)
-    val star = ccStar(vertices, edges)
-    val starLoop = ccStar(vertices, edges, driverMax = 0L)
-    assert(star === fast)
-    assert(starLoop === fast)
   }
 
   test("superseded round checkpoints are released, not left for the ContextCleaner") {
@@ -915,10 +911,8 @@ class ComponentsSpec extends SparkSpec {
     val before = sc.getPersistentRDDs.keySet
     val out = cc(0L to 6L, (0L until 6L).map(i => (i, i + 1)))
     assert(out.forall(_._2 === 0L))
-    val outStar = ccStar(0L to 6L, (0L until 6L).map(i => (i, i + 1)))
-    assert(outStar.forall(_._2 === 0L))
-    // the fast path unpersists its edge cache / releases its init
-    // checkpoint before returning; the label table is a local relation
+    // the fast path unpersists its edge cache before returning; the
+    // label table is a local relation
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
@@ -928,12 +922,10 @@ class ComponentsSpec extends SparkSpec {
     import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
     import org.apache.spark.sql.execution.LogicalRDD
     // An edge UDF runs only while round 1 reads the edges into the
-    // symmetrized cache (hashToMin) or the init checkpoint (star); no
-    // later round reads them again, so a UDF cannot fail a later round.
-    // A test-only optimizer rule fails one instead: it throws on the
-    // first plan that reads a checkpoint the call made (hashToMin's
-    // round 2, the star's first loop round), after the edge cache and a
-    // round checkpoint exist.
+    // symmetrized cache; no later round reads them again, so a UDF cannot
+    // fail a later round. A test-only optimizer rule fails one instead:
+    // it throws on the first plan that reads a checkpoint the call made
+    // (round 2), after the edge cache and a round checkpoint exist.
     val floor = new java.util.concurrent.atomic.AtomicInteger(Int.MaxValue)
     object FailLaterRound extends org.apache.spark.sql.catalyst.rules.Rule[LogicalPlan] {
       def apply(plan: LogicalPlan): LogicalPlan = {
@@ -948,63 +940,24 @@ class ComponentsSpec extends SparkSpec {
     val vertices = (0L to 6L).toDF("id")
     spark.experimental.extraOptimizations = Seq(FailLaterRound)
     try {
-      val leaks = Seq[(String, () => Any)](
-          "hashToMin" -> (() => Components.connectedComponents(
-            vertices, edges, driverFinishMaxEdges = 0L)),
-          "star" -> (() => Components.connectedComponentsStar(
-            vertices, edges, driverFinishMaxEdges = 0L))).flatMap { case (name, run) =>
-        val before = materializations
-        floor.set(spark.sparkContext.emptyRDD[Int].id)
-        val e = intercept[Exception](run())
-        floor.set(Int.MaxValue)
-        assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
-          .exists(_.toString.contains("round unreadable")), s"$name: $e")
-        val after = materializations
-        if (after == before) None else Some((name, before, after))
-      }
-      assert(leaks.isEmpty)
+      val before = materializations
+      floor.set(spark.sparkContext.emptyRDD[Int].id)
+      val e = intercept[Exception](
+        Components.connectedComponents(vertices, edges, driverFinishMaxEdges = 0L))
+      floor.set(Int.MaxValue)
+      assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .exists(_.toString.contains("round unreadable")), e.toString)
+      assert(materializations === before)
     } finally spark.experimental.extraOptimizations = Nil
   }
 
-  private def ccStar(vertices: Seq[Long], edges: Seq[(Long, Long)], maxIter: Int = 25,
-      driverMax: Long = Components.DriverFinishMaxEdges) = {
-    val spark2 = spark
-    import spark2.implicits._
-    Components.connectedComponentsStar(
-        vertices.toDF("id"), edges.toDF("id_a", "id_b"), maxIter = maxIter,
-        driverFinishMaxEdges = driverMax)
-      .as[(Long, Long)].collect().sortBy(_._1)
-  }
-
-  test("star contraction matches hash-to-min on transitive pairs + isolates") {
-    for (dm <- Seq(Components.DriverFinishMaxEdges, 0L)) {
-      val out = ccStar(Seq(1L, 2L, 3L, 4L), Seq((2L, 1L), (2L, 3L)), driverMax = dm)
-      assert(out === Array((1L, 1L), (2L, 1L), (3L, 1L), (4L, 4L)), s"driverMax=$dm")
-    }
-  }
-
-  test("star contraction converges on a deep path within O(log² n) rounds") {
-    // diameter 40: hash-to-min would need 40 rounds; star contraction is
-    // diameter-independent — maxIter 10 suffices where hash-to-min's
-    // per-diameter bound would be exceeded (driverMax 0 pins the rounds)
+  test("rounds that do not verify convergence by maxIter throw, naming maxIter") {
+    // diameter 40 with the loop pinned (driverMax 0): 10 hash-to-min
+    // rounds cannot carry label 0 to the far end, so the call must fail
+    // loudly instead of returning under-merged labels
     val path = (0L until 40L).map(i => (i, i + 1))
-    val out = ccStar(0L to 40L, path, maxIter = 10, driverMax = 0L)
-    assert(out.forall(_._2 === 0L))
-  }
-
-  test("star contraction: duplicate and reversed edges, multiple components") {
-    for (dm <- Seq(Components.DriverFinishMaxEdges, 0L)) {
-      val out = ccStar(Seq(1L, 2L, 10L, 11L, 12L),
-        Seq((1L, 2L), (2L, 1L), (10L, 11L), (12L, 11L), (11L, 12L)), driverMax = dm)
-      assert(out === Array((1L, 1L), (2L, 1L), (10L, 10L), (11L, 10L), (12L, 10L)),
-        s"driverMax=$dm")
-    }
-  }
-
-  test("star contraction: no edges is a no-op") {
-    for (dm <- Seq(Components.DriverFinishMaxEdges, 0L))
-      assert(ccStar(Seq(5L, 6L), Seq.empty, driverMax = dm) ===
-        Array((5L, 5L), (6L, 6L)), s"driverMax=$dm")
+    val e = intercept[IllegalStateException](cc(0L to 40L, path, maxIter = 10, driverMax = 0L))
+    assert(e.getMessage.contains("maxIter = 10"), e.getMessage)
   }
 
   test("dedupClusters yields the keep-list semantics") {
@@ -1049,39 +1002,6 @@ class ComponentsSpec extends SparkSpec {
     val re = Components.pageRank(edges.repartition(7), iterations = 2)
       .as[(Long, Long)].collect().sortBy(_._1)
     assert(re === out)
-  }
-
-  test("pageRank danglingRedistribute: mass conserved on a sink-heavy graph") {
-    val spark2 = spark
-    import spark2.implicits._
-    // 1 -> 2 -> 3 with 3 a pure sink: the absorb default bleeds 0.85 of
-    // the sink's rank every round; the canonical variant folds the
-    // dangling total back in (D div |V| each) and total mass stays
-    // ~|V|*1e6 within floor error
-    val edges = Seq((1L, 2L), (2L, 3L)).toDF("src", "dst").repartition(2)
-    val cons = Components.pageRank(edges, iterations = 3,
-      danglingRedistribute = true).as[(Long, Long)].collect()
-    val total = cons.map(_._2).sum
-    // per round the floor losses are <= 1 per share, per node, per edge:
-    // 3 rounds x (1 + 3 + 2) well under 20 micro-units on 3e6
-    assert(math.abs(total - 3000000L) <= 20L,
-      s"mass not conserved: $total vs 3000000")
-    // hand-checked round 1: share = 1e6/3; r1 = (433333, 1283333, 1283333)
-    val r1 = Components.pageRank(edges, iterations = 1,
-      danglingRedistribute = true).as[(Long, Long)].collect().sortBy(_._1)
-    assert(r1 === Array((1L, 433333L), (2L, 1283333L), (3L, 1283333L)))
-    // the absorb default on the same fixture LOSES mass (the contrast
-    // that makes the flag worth shipping)
-    val absorbed = Components.pageRank(edges, iterations = 3)
-      .as[(Long, Long)].collect().map(_._2).sum
-    assert(absorbed < 2500000L, s"absorb variant should bleed: $absorbed")
-    // no dangling nodes -> the two contracts agree exactly
-    val cycle = Seq((1L, 2L), (2L, 3L), (3L, 1L)).toDF("src", "dst")
-    val a = Components.pageRank(cycle, iterations = 3)
-      .as[(Long, Long)].collect().sortBy(_._1)
-    val b = Components.pageRank(cycle, iterations = 3,
-      danglingRedistribute = true).as[(Long, Long)].collect().sortBy(_._1)
-    assert(a === b)
   }
 }
 
@@ -1250,7 +1170,7 @@ class WeightedSampleSpec extends SparkSpec {
     assert(!plan.contains("Window"), plan)
   }
 
-  test("graft_topk_by_key: exact k smallest under merge, SQL-callable, typed errors") {
+  test("topKByKey: exact k smallest under merge, typed errors") {
     val spark2 = spark
     import spark2.implicits._
     import graft.functions.TopKByKeyAgg.topKByKey

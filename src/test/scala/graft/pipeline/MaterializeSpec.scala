@@ -137,15 +137,4 @@ class MaterializeSpec extends SparkSpec {
     val man = readManifest(dir)
     assert(man.columns.toSet.intersect(Set("stratum", "shard", "n_tok_sum")).size === 3)
   }
-
-  test("trainingShards: writeManifest=false lands no manifest file") {
-    val spark2 = spark
-    import spark2.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-shards-nm").toString
-    Materialize.trainingShards(fixture(20), col("text"), "doc_id", "lang",
-      seqLen = 16L, seqsPerShard = 2L, seed = 7L, outDir = dir,
-      writeManifest = false)
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(dir, "_manifest.jsonl")))
-  }
 }
