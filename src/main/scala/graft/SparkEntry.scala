@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.DecimalType
 import graft.functions.ShingleMinhashExpr
 import graft.io.Ttl
 import graft.multimodal.Multimodal
-import graft.ops.{Columns, DataTypes, SchemaGen, Stats, TopK}
+import graft.ops.{Columns, DataTypes, IdTypes, SchemaGen, Stats, TopK}
 import graft.ops.ext.{Components, Contamination, Dedup, Events, ExactSubstr, Importance, Packing, Ranking, Sampling, Similarity, Snapshots, TextStats, Web}
 
 /** Driver contract — one query per implemented operator of SURVEY.md §2,
@@ -52,11 +52,12 @@ object SparkEntry {
   private def uriCol(prefix: String, k: Column): Column =
     concat(lit(prefix), k.cast("string"), lit(">"))
 
-  /** Shared q16/q17 object synthesis (mirrors the oracle's `mkO`): four RDF
-    * object shapes keyed on doc_id — uri / int-typed / custom-typed /
-    * plain literal. */
-  private def mkObject: Column =
-    when(col("doc_id") % 4 === 0,
+  /** Shared q16/q17 triples: `(doc_id, o, o, "")` as `(s, p, o, lang)`,
+    * the object synthesis mirroring the oracle's `mkO` — four RDF object
+    * shapes keyed on doc_id: uri / int-typed / custom-typed / plain
+    * literal. */
+  private def datatypeTriples(s: SparkSession, dir: String): DataFrame = {
+    val o = when(col("doc_id") % 4 === 0,
       concat(lit("<http://ex/doc/"), col("doc_id").cast("string"), lit(">")))
       .when(col("doc_id") % 4 === 1,
         concat(lit("\""), col("n_chars").cast("string"),
@@ -64,6 +65,9 @@ object SparkEntry {
       .when(col("doc_id") % 4 === 2,
         concat(lit("\""), col("source"), lit("\"^^<http://ex/custom>")))
       .otherwise(concat(lit("\""), col("lang"), lit("\"")))
+    t(s, dir, "documents")
+      .select(col("doc_id").as("s"), o.as("p"), o.as("o"), lit("").as("lang"))
+  }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
@@ -230,23 +234,17 @@ object SparkEntry {
 
     // ---- D2: datatype extraction + coercion ---------------------------
     "q16_datatype" -> ((s, dir) => {
-      val o = mkObject
-      t(s, dir, "documents")
-        .select(col("doc_id"), o.as("o"))
-        .withColumn("vt", DataTypes.extractDataTypeNative(col("o")))
-        .select(col("doc_id"), col("o"),
-          col("vt.v").as("v"), DataTypes.coerce(col("vt.t")).as("t"))
+      // the pipeline's datatype step over the triple shape: doc_id rides
+      // as `s`, the object also as `p`, so both survive the projection
+      DataTypes.withDataTypeExact(datatypeTriples(s, dir))
+        .select(col("s").as("doc_id"), col("p").as("o"), col("v"), col("t"))
         .orderBy(col("doc_id"))
     }),
 
     // ---- D3/D4: native map lookup (schema type + index inference) ------
     "q17_typemap" -> ((s, dir) => {
-      val o = mkObject
-      t(s, dir, "documents")
-        .select(col("doc_id"), o.as("o"))
-        .withColumn("vt", DataTypes.extractDataTypeNative(col("o")))
-        .withColumn("t", DataTypes.coerce(col("vt.t")))
-        .select(col("doc_id"),
+      DataTypes.withDataTypeExact(datatypeTriples(s, dir))
+        .select(col("s").as("doc_id"),
           SchemaGen.dgraphDataType(col("t")).as("dtype"))
         .withColumn("dindex", SchemaGen.dgraphIndex(col("dtype")))
         .orderBy(col("doc_id"))
@@ -300,7 +298,7 @@ object SparkEntry {
       // semi join — one extraction pass instead of two (at cluster scale
       // with an unbounded fact table you'd recompute like the reference;
       // here the disambiguation input is bounded)
-      val withTypes = DataTypes.withDataType(triples).cache()
+      val withTypes = DataTypes.withDataTypeExact(triples).cache()
       val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
       DataTypes.disambiguate(withTypes, winning)
         .select(col("s"), col("p"),
@@ -361,7 +359,7 @@ object SparkEntry {
           .otherwise(concat(lit("<http://o/"), col("p_partkey").cast("string"), lit(">")))
           .as("o"),
         element_at(langs, (col("p_partkey") % 3).cast("int") + 1).as("lang"))
-      val withTypes = DataTypes.withDataType(triples)
+      val withTypes = DataTypes.withDataTypeExact(triples)
       val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
       SchemaGen.schema(s, triples, winning, langTag = " @lang", externaliseUris = true)
         .orderBy(col("dataset"), col("p"), col("lang"), col("t"), col("i"))
@@ -522,44 +520,49 @@ object SparkEntry {
     "q48_external_ids" -> ((s, dir) => {
       val n = t(s, dir, "nation")
       val sup = t(s, dir, "supplier")
+      // rolesAggregate's type flags read `p`: frames without one get a
+      // constant valid predicate (the xids do not depend on it)
+      val p = lit("<p>").as("p")
       val labels = n.select(uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("s"),
-        lit("de").as("lang"))
+        p, lit("de").as("lang"))
       val infobox = n.where(col("n_nationkey") % 2 === 0)
         .select(uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("s"),
-          lit("de").as("lang"))
+          p, lit("de").as("lang"))
       val interlang = sup.select(
         uriCol("<http://de.dbpedia.org/resource/R", col("s_suppkey") % 10).as("s"),
-        uriCol("<http://fr.dbpedia.org/resource/Q", col("s_suppkey")).as("o"),
+        p, uriCol("<http://fr.dbpedia.org/resource/Q", col("s_suppkey")).as("o"),
         lit("de").as("lang"))
       val pageLinks = sup.select(
         uriCol("<http://de.dbpedia.org/resource/R", col("s_suppkey")).as("s"),
-        uriCol("<http://de.dbpedia.org/resource/R", col("s_suppkey") % 3).as("o"),
+        p, uriCol("<http://de.dbpedia.org/resource/R", col("s_suppkey") % 3).as("o"),
         lit("de").as("lang"))
       val categories = n.where(col("n_nationkey") % 3 === 0).select(
         uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("s"),
-        uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey")).as("o"),
+        p, uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey")).as("o"),
         lit("de").as("lang"))
       val skos = n.select(
         uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey")).as("s"),
-        when(col("n_nationkey") % 2 === 0, graft.ops.ExternalIds.SkosRelated)
+        when(col("n_nationkey") % 2 === 0, IdTypes.SkosRelated)
           .otherwise(graft.ops.Cleanup.SkosPrefLabel).as("p"),
         uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 7).as("o"),
         lit("de").as("lang"))
       val geo = n.where(col("n_nationkey") % 5 === 0)
         .select(uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("s"),
-          lit("de").as("lang"))
-      graft.ops.ExternalIds.xidTriples(
-          graft.ops.ExternalIds.uriOccurrences(s, labels, infobox, interlang,
-            pageLinks, categories, skos, geo))
+          p, lit("de").as("lang"))
+      // no disambiguation here: every infobox row survives
+      IdTypes.xids(IdTypes.rolesAggregate(s, labels, infobox, infobox, interlang,
+          pageLinks, categories, skos, geo))
         .orderBy(col("s"), col("o"), col("lang"))
     }),
 
     // ---- dgraph.type triple generation ---------------------------------
     "q49_types" -> ((s, dir) => {
       val n = t(s, dir, "nation")
+      // constant valid `p` for the type flags (see q48)
+      val p = lit("<p>").as("p")
       def frame(pred: Column => Column) = n.select(
         uriCol("<http://de.dbpedia.org/resource/R", pred(col("n_nationkey"))).as("s"),
-        uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("o"),
+        p, uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("o"),
         lit("de").as("lang"))
       val labels = frame(k => k)
       val infobox = frame(k => k % 7)
@@ -567,15 +570,15 @@ object SparkEntry {
       val pageLinks = frame(k => k % 3)
       val categories = n.select(
         uriCol("<http://de.dbpedia.org/resource/R", col("n_nationkey")).as("s"),
-        uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 4).as("o"),
+        p, uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 4).as("o"),
         lit("de").as("lang"))
       val skos = n.where(col("n_nationkey") % 2 === 0).select(
         uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 4).as("s"),
-        uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 2).as("o"),
+        p, uriCol("<http://de.dbpedia.org/resource/Cat", col("n_nationkey") % 2).as("o"),
         lit("de").as("lang"))
       val geo = frame(k => k % 11)
-      graft.ops.TypesGen.types(labels, infobox, interlang, pageLinks,
-          categories, skos, geo)
+      IdTypes.types(IdTypes.rolesAggregate(s, labels, infobox, infobox, interlang,
+          pageLinks, categories, skos, geo), externaliseUris = false)
         .orderBy(col("s"), col("o"))
     }),
 
@@ -586,7 +589,7 @@ object SparkEntry {
         concat(lit("<http://de.dbpedia.org/resource/Cat"),
           col("n_nationkey").cast("string"), lit(">")).as("s"),
         when(col("n_nationkey") % 2 === 0, prefLabel)
-          .otherwise(graft.ops.ExternalIds.SkosBroader).as("p"),
+          .otherwise(IdTypes.SkosBroader).as("p"),
         when(col("n_nationkey") % 2 === 0,
           concat(lit("\""), col("n_name"), lit("\"@de")))
           .otherwise(concat(lit("<http://de.dbpedia.org/resource/Cat"),

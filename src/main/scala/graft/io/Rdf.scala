@@ -12,13 +12,13 @@ import PartitionedWrite._
   * containing `@`/`~` (not allowed by Dgraph), range-partition by
   * `(lang, p, s)` so each part file holds a contiguous predicate/subject
   * range, sort files by `p, s, o`, project to the single text line, gzip.
-  * `write` returns the *read-back* of the files just written, so downstream
-  * consumers (type generation, coverage stats) read materialized data
+  * [[writeAll]] returns the *read-back* of the files just written, so
+  * downstream consumers (the count-back audit) read materialized data
   * instead of recomputing the whole lineage — a deliberate
   * common-subexpression boundary that we keep: at 100 TB, re-running the
-  * cleanup DAG for each of the 4 downstream consumers would quadruple the
-  * work, while the re-read is a cheap columnar-less text scan of the
-  * (much smaller, gzip'd) output.
+  * cleanup DAG for each downstream consumer would multiply the work, while
+  * the re-read is a cheap columnar-less text scan of the (much smaller,
+  * gzip'd) output.
   */
 object Rdf {
 
@@ -27,7 +27,7 @@ object Rdf {
     df.where(!col("p").contains("@") && !col("p").contains("~"))
 
   /** The `"s p o ."` line projection — single definition shared by
-    * [[line]] and [[write]] so the format cannot diverge. */
+    * [[line]] and [[writeAll]] so the format cannot diverge. */
   private def lineColumns: Seq[org.apache.spark.sql.Column] = Seq(
     concat(col("s"), lit(" "), col("p"), lit(" "), col("o"), lit(" .")).as("value"),
     col("lang"))
@@ -35,48 +35,25 @@ object Rdf {
   /** Render one RDF line per triple: `s p o .` */
   def line(df: DataFrame): DataFrame = df.select(lineColumns: _*)
 
-  /** Write triples as RDF text; returns the read-back of the written files.
-    *
-    * Empty input deletes any existing output at `path` (divergence from the
-    * reference, which skips the write and would silently read back a
-    * PREVIOUS run's files from the same path). */
-  def write(df: DataFrame, path: String): DataFrame = {
-    val spark = df.sparkSession
-    val empty = df.isEmpty // one limit-1 job, not two
-    if (empty) {
-      val p = new org.apache.hadoop.fs.Path(path)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (fs.exists(p)) fs.delete(p, true)
-    } else {
-      validPredicates(df)
-        .writePartitionedBy(
-          Seq(col("lang")),          // lang=<code> subdirectory per language
-          Seq(col("p"), col("s")),   // one file per (p, s) range
-          Seq(col("o")),             // files sorted by p, s, o
-          None,
-          Some(lineColumns))
-        .option("compression", "gzip")
-        .mode(SaveMode.Overwrite)
-        .text(path)
-    }
-    read(spark, path)
-  }
-
-  /** [[write]] for MANY datasets in ONE Spark job — the stage-2 sink
-    * fusion: the per-dataset form pays one job boundary + one
-    * range-shuffle per dataset (seven of each in the reference program),
+  /** Write datasets as RDF text in ONE Spark job — the stage-2 sink, one
+    * range-shuffle and one publish for every dataset `ParquetToRdf.run`
+    * writes (the seven cleaned datasets plus `types` and `external_ids`).
+    * The reference pays one job boundary + one range-shuffle per dataset,
     * and small datasets underfill their tasks. Here every dataset's
     * cleaned triples union into a single range-shuffle on
     * `(dataset, lang, p, s)` (file sizes track the DATA distribution
     * across all datasets at once), gzip text lands under a staging dir
     * partitioned `dataset=<name>/lang=<code>`, and each `dataset=` dir is
-    * FS-renamed (a metadata-only move) to the same `<name>.rdf` layout
-    * [[write]] produces — per-file sort `(p, s, o)` and read-back
-    * contract identical, equality spec-gated (RdfSpec).
+    * FS-renamed (a metadata-only move) to `<name>.rdf/lang=<code>`, files
+    * sorted by `(p, s, o)` (ParquetIOSpec).
     *
-    * Per-dataset empty inputs mirror [[write]]: an absent staging dir
-    * (no surviving rows) deletes any existing output for that name.
-    * Returns the read-back per dataset. */
+    * Publish is set-aside/restore: existing output is renamed aside until
+    * the new data is in place, so a failed job or rename leaves the old
+    * output readable (RdfFailureSpec). A dataset with no surviving rows
+    * gets no staging dir, and its existing output is deleted — a rerun
+    * never reads back a PREVIOUS run's files from the same path (the
+    * reference skips the write and would). Returns the read-back per
+    * dataset. */
   def writeAll(
       named: Seq[(String, DataFrame)], outBase: String): Map[String, DataFrame] = {
     require(named.nonEmpty, "writeAll: no datasets given")
@@ -109,11 +86,10 @@ object Rdf {
       val target = new org.apache.hadoop.fs.Path(s"$outBase/$name.rdf")
       val src = new org.apache.hadoop.fs.Path(staging, s"dataset=$name")
       // Pre-existing output is renamed ASIDE, not deleted, until the new
-      // data is in place: deleting first meant a failed staging rename
-      // destroyed the old output AND stranded the new one. The
-      // per-dataset write() path still has that failure mode: static
-      // SaveMode.Overwrite deletes the target before its job runs, so a
-      // job that fails at commit leaves no old output. rename reports
+      // data is in place: deleting first would destroy the old output AND
+      // strand the new one on a failed staging rename (a static
+      // SaveMode.Overwrite straight onto the target deletes it before the
+      // job runs, so a commit failure leaves no old output). rename reports
       // several FS failure modes as `false`, not an exception — silently
       // reading back an empty or stale dataset must not pass for success.
       val aside = new org.apache.hadoop.fs.Path(s"$outBase/.rdf_old_$name")

@@ -22,21 +22,14 @@ object Cleanup {
     df.when(externaliseUris).call(_.withColumn("s", Columns.blank("s")))
       .when(removeLanguageTags).call(_.withColumn("o", Columns.removeLangTag(col("o"))))
 
-  /** infobox: datatype extraction, winning-type disambiguation, negative
-    * date filter, object re-rendering, optional blank nodes
-    * (reference :199-222). Returns `(s, p, o, lang)`.
+  /** infobox: winning-type disambiguation, negative date filter, object
+    * re-rendering, optional blank nodes (reference :199-222), over the
+    * [[DataTypes.withDataTypeExact]] rows and their winning types, which
+    * the caller computes once and shares with schema inference. Returns
+    * `(s, p, o, lang)`.
     *
     * Scale: the winning-type relation is one row per predicate — broadcast
     * into the semi join; the fact table is never shuffled. */
-  def infobox(df: DataFrame, externaliseUris: Boolean): DataFrame = {
-    val withTypes = DataTypes.withDataType(df)
-    val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
-    infoboxWith(withTypes, winning, externaliseUris)
-  }
-
-  /** [[infobox]] with precomputed datatype extraction and winning types —
-    * lets callers (the pipeline) share `winning` with schema inference
-    * instead of recomputing the aggregation. */
   def infoboxWith(withTypes: DataFrame, winning: DataFrame, externaliseUris: Boolean): DataFrame = {
     DataTypes.disambiguate(withTypes, winning)
       .when(externaliseUris).call(_.withColumn("s", Columns.blank("s")))

@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
   *
   * The object of a triple is split into a value `v` and a datatype `t`:
   *  - `<uri>` objects        -> (`<uri>`, `"<uri>"`)
-  *  - `"v"^^<type>` literals -> (`"v"`, `<type>`)   (split at the LAST `^^`,
-  *                              embedded `^` characters stay in the value)
+  *  - `"v"^^<type>` literals -> (`"v"`, `<type>`)   (the reference's split
+  *                              on `^`: the type is the last field, the
+  *                              value all but the last two, re-joined)
   *  - plain literals         -> (`"v"`, null)
   *
   * Datatypes outside the supported set are coerced to xsd:string, and null
@@ -32,8 +33,9 @@ object DataTypes {
     "<http://www.w3.org/2001/XMLSchema#integer>",
     XsdString)
 
-  /** Reference-exact extraction as a Scala function (parity path, incl.
-    * Java `split` edge cases on pathological values like a trailing `^^`).
+  /** Reference-exact extraction as a Scala function, incl. the Java
+    * `split` edge cases on pathological values like a trailing `^^` — the
+    * kernel of [[withDataTypeExact]].
     * Reference: extractDataType, DbpediaDgraphSparkApp.scala:544-553. */
   def extractDataType(value: String): Array[String] =
     if (value.startsWith("<")) Array(value, Uri)
@@ -42,44 +44,18 @@ object DataTypes {
       Array(fields.dropRight(2).mkString("^"), fields.last)
     } else Array(value)
 
-  /** Native-expression extraction: returns a `struct<v, t>` column.
-    *
-    * Spark-first replacement for the reference's Scala UDF (which it has to
-    * mark non-deterministic to stop Catalyst from double-evaluating it,
-    * reference :195-196). A native expression stays in whole-stage codegen
-    * and needs no such trick. Splits at the last `^^` so embedded `^` stays
-    * in the value, like the reference's split/mkString dance. */
-  def extractDataTypeNative(o: Column): Column = {
-    val typed = o.rlike("\\^\\^[^^]*$") // has a ^^ separator (last one wins)
-    when(o.startsWith("<"), struct(o.as("v"), lit(Uri).as("t")))
-      .when(typed, struct(
-        regexp_extract(o, "^(.*)\\^\\^[^^]*$", 1).as("v"),
-        regexp_extract(o, "\\^\\^([^^]*)$", 1).as("t")))
-      .otherwise(struct(o.as("v"), lit(null.asInstanceOf[String]).as("t")))
-  }
-
   /** Coerce unsupported datatypes (including null = no datatype) to
     * xsd:string (reference: DbpediaDgraphSparkApp.scala:203). */
   def coerce(t: Column): Column =
     when(t.isin(supportedDataTypes: _*), t).otherwise(XsdString)
 
   /** `(s, p, o, lang)` -> `(s, p, v, t, lang)` with coerced datatype
-    * (reference: DbpediaDgraphSparkApp.scala:199-203). Native-expression
-    * extraction — exact on real-world objects; see [[withDataTypeExact]]
-    * for the path that also reproduces the reference's pathological-input
-    * behavior. */
-  def withDataType(triples: DataFrame): DataFrame =
-    triples
-      .withColumn("o+t", extractDataTypeNative(col("o")))
-      .select(col("s"), col("p"), col("o+t.v").as("v"), col("o+t.t").as("t"), col("lang"))
-      .withColumn("t", coerce(col("t")))
-
-  /** Reference-exact variant used by the parity pipeline: a Scala UDF with
-    * the reference's own split semantics (including embedded-`^` and
-    * trailing-`^^` edge cases) marked non-deterministic exactly like the
-    * reference so Catalyst evaluates it once per row (reference :195-196).
-    * Queries under the SQL-oracle gate use [[withDataType]], whose
-    * semantics the oracle replicates. */
+    * (reference: DbpediaDgraphSparkApp.scala:195-203): [[extractDataType]]
+    * as a Scala UDF, so the reference's own split semantics (including the
+    * embedded-`^` and trailing-`^^` edge cases) hold, marked
+    * non-deterministic exactly like the reference so Catalyst evaluates it
+    * once per row (reference :195-196). The one datatype step: the
+    * pipeline, the oracled queries and perfbench all run it. */
   def withDataTypeExact(triples: DataFrame): DataFrame = {
     val extractUdf = org.apache.spark.sql.functions.udf(extractDataType _).asNondeterministic()
     triples

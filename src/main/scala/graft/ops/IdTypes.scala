@@ -3,36 +3,41 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Fused external-id + `<dgraph.type>` synthesis — ONE aggregation pass
-  * over the pipeline's in-memory dataset frames, replacing the stage-2
-  * global-distinct consumers ([[ExternalIds]] over the raw triples and
-  * [[TypesGen]] over the written files' read-back; reference:
-  * DbpediaDgraphSparkApp.scala:374-442).
+/** External-id (xid) and `<dgraph.type>` triple synthesis — ONE
+  * aggregation pass over the pipeline's in-memory dataset frames
+  * (reference: DbpediaDgraphSparkApp.scala:374-442).
   *
-  * Why fuse: the two legacy passes re-aggregate overlapping `(s, lang)`
-  * domains — every types source is also an xid source; the differences are
-  * per-source ROLE (Article/Category/Concept vs xid-only), the infobox
-  * disambiguation drops, and the writer's predicate-validity filter
-  * ([[graft.io.Rdf.validPredicates]]) that the read-back frames carry
-  * implicitly. So: union every source ONCE with its role flags (the
-  * validity condition applied to the type flags exactly where the legacy
-  * path read post-write files — predicates are unchanged by cleanup, so
-  * raw-p validity equals written-p validity), collapse the flags with one
-  * `groupBy(s, lang)` Exchange, and derive both outputs from the
-  * aggregate. vs the legacy shape this removes one of the two `(s, lang)`
-  * shuffles AND the full gzip re-read of all seven just-written datasets.
-  * Spark's partial HashAggregate still dedups every source map-side before
-  * the one Exchange (same rationale as [[ExternalIds]]' single-distinct
-  * reshape).
+  * The reference runs two global-distinct consumers: xids over the raw
+  * triples, and types over the written files' read-back. Both aggregate
+  * overlapping `(s, lang)` domains — every types source is also an xid
+  * source; the differences are per-source ROLE (Article/Category/Concept
+  * vs xid-only), the infobox disambiguation drops, and the writer's
+  * predicate-validity filter ([[graft.io.Rdf.validPredicates]]) that the
+  * read-back frames carry implicitly. So: union every source ONCE with its
+  * role flags (the validity condition applied to the type flags exactly
+  * where the reference reads post-write files — predicates are unchanged
+  * by cleanup, so raw-p validity equals written-p validity), collapse the
+  * flags with one `groupBy(s, lang)` Exchange, and derive both outputs
+  * from the aggregate. This removes one of the two `(s, lang)` shuffles
+  * AND the full gzip re-read of all seven just-written datasets. Spark's
+  * partial HashAggregate still dedups every source map-side before the
+  * one Exchange, so no source needs its own distinct (the reference's
+  * per-source `def uris` shape, :374-385, would add an Exchange per
+  * source).
   *
-  * Semantics preserved exactly (spec-asserted frame equality against the
-  * legacy operators at both `externaliseUris` settings): [[types]] blanks
-  * `s` AFTER the aggregate — distinct-then-blank equals the legacy
-  * blank-then-distinct because the md5 rewrite is injective on the URI
-  * domain — and [[xids]] emits raw URIs unfiltered by predicate validity,
-  * like the legacy raw-frame pass.
+  * Semantics are the reference's (spec-asserted frame equality against
+  * test-local copies of the two-pass form at both `externaliseUris`
+  * settings, IdTypesSpec): [[types]] blanks `s` AFTER the aggregate —
+  * distinct-then-blank equals blank-then-distinct because the md5 rewrite
+  * is injective on the URI domain — and [[xids]] emits raw URIs unfiltered
+  * by predicate validity, like the reference's raw-frame pass. Every
+  * source frame needs a `p` column: the type flags read it.
   */
 object IdTypes {
+
+  val SkosRelated = "<http://www.w3.org/2004/02/skos/core#related>"
+  val SkosBroader = "<http://www.w3.org/2004/02/skos/core#broader>"
+  val SkosConcept = "<http://www.w3.org/2004/02/skos/core#Concept>"
 
   /** Distinct `(s, lang)` occurrences with collapsed role flags
     * (`art`/`cat`/`con`, 0 or 1). One Exchange; every downstream output
@@ -54,8 +59,8 @@ object IdTypes {
       geo: DataFrame): DataFrame = {
     import spark.implicits._
     // the writer's validity filter, applied per source row to the TYPE
-    // flags only (legacy types read the post-write files; legacy xids
-    // read the raw frames, so the xid membership itself is unfiltered)
+    // flags only (the reference's types read the post-write files, its
+    // xids the raw frames, so the xid membership itself is unfiltered)
     val validP = !col("p").contains("@") && !col("p").contains("~")
     def flag(on: Boolean): Column = if (on) validP.cast("int") else lit(0)
     def src(df: DataFrame, v: Column,
@@ -74,21 +79,30 @@ object IdTypes {
       src(categories, col("o"), cat = true),
       src(skos, col("s"), con = true),
       src(skos.where(col("p").isin(
-        ExternalIds.SkosRelated, ExternalIds.SkosBroader)), col("o")),
-      Seq((ExternalIds.SkosConcept, "any", 0, 0, 0)).toDF("s", "lang", "art", "cat", "con"),
+        SkosRelated, SkosBroader)), col("o")),
+      Seq((SkosConcept, "any", 0, 0, 0)).toDF("s", "lang", "art", "cat", "con"),
       src(geo, col("s"), art = true))
     sources.reduce(_.unionByName(_))
       .groupBy(col("s"), col("lang"))
       .agg(max(col("art")).as("art"), max(col("cat")).as("cat"), max(col("con")).as("con"))
   }
 
-  /** Xid triples from the aggregate — same output as
-    * [[ExternalIds.xidTriples]] over [[ExternalIds.uriOccurrences]]. */
+  /** Xid triples from the aggregate: one
+    * `(_:md5(uri), <xid>, "uri-without-brackets", lang)` row per distinct
+    * `(s, lang)`, so the original identity survives URI-to-blank-node
+    * rewriting. */
   def xids(agg: DataFrame): DataFrame =
-    ExternalIds.xidTriples(agg.select(col("s"), col("lang")))
+    xidTriples(agg.select(col("s"), col("lang")))
 
-  /** Type triples from the aggregate — same output as [[TypesGen.types]]
-    * over the written files' read-back. Each `(s, lang)` emits one row per
+  /** Project `(s, lang)` URI occurrences to xid triples. */
+  def xidTriples(uris: DataFrame): DataFrame =
+    uris.select(
+      Columns.blank("s"),
+      lit("<xid>").as("p"),
+      Columns.xidLiteral(col("s")).as("o"),
+      col("lang"))
+
+  /** Type triples from the aggregate. Each `(s, lang)` emits one row per
     * set flag, so the union is distinct by construction. */
   def types(agg: DataFrame, externaliseUris: Boolean): DataFrame = {
     val subject = if (externaliseUris) Columns.blank(col("s")) else col("s")

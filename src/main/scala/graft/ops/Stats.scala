@@ -14,27 +14,11 @@ import org.apache.spark.sql.functions._
   *
   * Scale note (the dominant cost of the whole reference pipeline, SURVEY
   * §2.4): exact `select(c).distinct().count` is two full shuffles per
-  * metric. [[summary]] therefore takes an `exact` flag — `false` uses
-  * `approx_count_distinct` (HyperLogLog++, one map-side-combinable
-  * aggregation, no shuffle of distinct values) which is the only sane
-  * setting at 100 TB; `true` reproduces the reference's exact semantics
-  * for parity checks at test scale.
+  * metric; `approx_count_distinct` (HyperLogLog++, one
+  * map-side-combinable aggregation, no shuffle of distinct values) is the
+  * only sane distinct count at 100 TB — q33 calls it directly.
   */
 object Stats {
-
-  /** (triples, nodes, predicates) of one dataset, in a single job: count +
-    * two (approx) count-distincts fused into one aggregate instead of the
-    * reference's three separate actions. */
-  def summary(df: DataFrame, exact: Boolean = false): DataFrame = {
-    val nodes =
-      if (exact) count_distinct(col("s")) else approx_count_distinct(col("s"))
-    val predicates =
-      if (exact) count_distinct(col("p")) else approx_count_distinct(col("p"))
-    df.agg(
-      count(lit(1)).as("triples"),
-      nodes.as("nodes"),
-      predicates.as("predicates"))
-  }
 
   /** Wide per-language stats: one row per lang, one column per dataset
     * (full-outer-join fold on `lang`, reference :154-158). All inputs are

@@ -84,89 +84,6 @@ object Contamination {
     corpus.join(broadcast(hits), Seq(idCol), "left_anti")
   }
 
-  /** SEMANTIC contamination: corpus rows whose embedding reaches cosine
-    * `minCos` against ANY benchmark vector — the paraphrase-robust
-    * sibling of the n-gram family above. A reworded benchmark question
-    * shares no 8-gram with the original but keeps its embedding; modern
-    * eval-leakage audits run this embedding-level check alongside the
-    * lexical one.
-    *
-    * Scale shape: benchmark embeddings are eval-set sized, so they
-    * BROADCAST; the corpus streams through a broadcast LEFT-SEMI
-    * nested-loop join whose condition is the codegen'd dot-product
-    * kernel ([[Similarity.cosineSafe]]). The semi join short-circuits at
-    * the FIRST matching benchmark vector per corpus row, no per-pair
-    * rows ever materialize, and the corpus side plans ZERO Exchanges
-    * (spec-asserted) — scan-bound at any corpus size. For benchmark
-    * sets too large to broadcast, prefilter candidates with SRP buckets
-    * ([[Similarity]]'s LSH path) before the exact check. */
-  def semanticContaminationHits(
-      corpus: DataFrame, vecCol: Column,
-      benchmark: DataFrame, benchVecCol: Column, minCos: Double): DataFrame = {
-    require(minCos >= -1.0 && minCos <= 1.0,
-      s"semanticContaminationHits: minCos must be in [-1, 1], got $minCos")
-    val bench = benchmark.select(benchVecCol.as("_bvec"))
-    corpus.join(broadcast(bench),
-      Similarity.cosineSafe(vecCol, col("_bvec")) >= minCos, "left_semi")
-  }
-
-  /** [[semanticContaminationHits]] with the SRP-bucket prefilter the
-    * exact form's scaladoc prescribes for LARGE benchmarks: both sides
-    * get a [[Similarity.srpBucket]] signature, the semi join becomes a
-    * broadcast HASH join keyed on the bucket (each corpus row probes
-    * hash slots instead of scanning every benchmark vector), and the
-    * exact cosine runs only on bucket-sharing pairs. Still zero corpus
-    * Exchanges (spec-asserted).
-    *
-    * Recall trade (the [[Similarity.embeddingNearDupPairs]] contract):
-    * only pairs agreeing on the probed sign bits are compared, so
-    * borderline paraphrases on the other side of a hyperplane can be
-    * missed — but an EXACT embedding copy always shares its own bucket,
-    * so verbatim leakage recall is 1 by construction. `multiProbe`
-    * (default ON, the standard recall lever for hyperplane-straddling
-    * paraphrases) probes the exact bucket plus each one-bit-flip
-    * neighbor — `planes+1` probes, implemented by exploding the
-    * BENCHMARK side to its probe set before the broadcast, so the
-    * corpus still computes one bucket per row and ships nowhere: a
-    * perturbed copy whose projection crosses exactly one hyperplane
-    * (the dominant near-miss at high cosine, since each additional
-    * straddle is another independently unlikely sign flip) is
-    * recovered at the cost of a `(planes+1)×` larger broadcast —
-    * eval-set sized either way. Use the exact form when the benchmark
-    * broadcast is affordable; this one when the per-row benchmark scan
-    * is the bottleneck.
-    *
-    * Working columns are `_graft_srp_`-prefixed and RESERVED: a corpus
-    * already carrying one would be silently overwritten (the round-12
-    * ADVICE bug), so the operator refuses loudly instead. */
-  def semanticContaminationHitsSrp(
-      corpus: DataFrame, vecCol: Column,
-      benchmark: DataFrame, benchVecCol: Column, minCos: Double,
-      planes: Int = 8, multiProbe: Boolean = true): DataFrame = {
-    require(minCos >= -1.0 && minCos <= 1.0,
-      s"semanticContaminationHitsSrp: minCos must be in [-1, 1], got $minCos")
-    require(planes >= 1 && planes <= 62,
-      s"semanticContaminationHitsSrp: planes must be in [1, 62], got $planes")
-    val Bkt = "_graft_srp_bkt"; val BVec = "_graft_srp_bvec"; val Probe = "_graft_srp_probe"
-    val reserved = corpus.columns.toSet.intersect(Set(Bkt, BVec, Probe))
-    require(reserved.isEmpty,
-      s"semanticContaminationHitsSrp: corpus carries reserved working column(s) " +
-        s"${reserved.toSeq.sorted.mkString(", ")} — rename them before calling")
-    val bench0 = benchmark.select(benchVecCol.as(BVec))
-      .withColumn(Bkt, Similarity.srpBucket(col(BVec), planes))
-    val bench =
-      if (multiProbe) {
-        val probes = col(Bkt) +: (0 until planes).map(p => col(Bkt).bitwiseXOR(lit(1L << p)))
-        bench0.select(col(BVec), explode(array(probes: _*)).as(Probe))
-      } else bench0.withColumnRenamed(Bkt, Probe)
-    corpus.withColumn(Bkt, Similarity.srpBucket(vecCol, planes))
-      .join(broadcast(bench),
-        col(Bkt) === col(Probe) &&
-          Similarity.cosineSafe(vecCol, col(BVec)) >= minCos,
-        "left_semi")
-      .drop(Bkt)
-  }
-
   /** A Bloom filter over the benchmark's n-gram hashes as a PLAIN COLUMN
     * predicate — packed `Array[Long]` bit words shipped as a literal, bit
     * tests via `element_at` + bitwiseAND against a 64-entry power-of-two

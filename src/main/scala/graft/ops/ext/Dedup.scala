@@ -325,7 +325,6 @@ object Dedup {
       setCol: String,
       threshold: Double,
       maxBucketSize: Option[Int] = None,
-      saltOversized: Boolean = false,
       persistSignatures: Boolean = false): DataFrame = Checkpoints.scoped {
     // For LONG-hashed sets (the production currency, TokenHashSetExpr)
     // the sets are sorted ONCE PER DOCUMENT below the join and the
@@ -355,7 +354,7 @@ object Dedup {
       sig.select(bandKey(bandCols).as("band"), col(idCol).as("id"), setExpr.as("set"))
     val keyed = guardBuckets(
       if (persistSignatures) Checkpoints.checkpoint(keyedPlan) else keyedPlan,
-      maxBucketSize, saltOversized)
+      maxBucketSize)
     val l = keyed.select(col("band"), col("id").as("id_a"), col("set").as("set_a"))
     val r = keyed.select(col("band"), col("id").as("id_b"), col("set").as("set_b"))
     val joined = l.join(r, Seq("band")).where(col("id_a") < col("id_b"))

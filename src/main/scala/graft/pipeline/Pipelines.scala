@@ -127,68 +127,62 @@ object ParquetToRdf {
       writeSchema(SchemaGen.schemaLines(schema, indexed = true), s"$outBase/schema.indexed.dgraph")
     }
 
-    // RDF writes with read-back (reference :401-407), FUSED: all seven
-    // dataset sinks run as ONE job over a single range-shuffle (each
-    // dataset's cleanup plan is a branch of the union — still evaluated
-    // exactly once, inside this job) and land via metadata-only renames
-    // (Rdf.writeAll). The per-dataset form paid seven job boundaries +
-    // seven shuffles, with small datasets underfilling their tasks —
-    // measured 22.0 s -> fused at the 2 GB protocol point (PLANS.md).
-    // The trade: per-dataset wall-clock attribution collapses into one
-    // phase line (per-dataset ROW counts survive in the audit below).
-    val written = timed("write datasets (fused)") {
-      Rdf.writeAll(Seq(
-        "labels" -> labels,
-        "infobox_properties" -> infobox,
-        "interlanguage_links" -> interlang,
-        "page_links" -> pageLinks,
-        "article_categories" -> categories,
-        "skos_categories" -> skosCategories,
-        "geo_coordinates" -> geoCoordinates), outBase)
-    }
-
-    // types + xids derive from ONE fused (s, lang) aggregation (IdTypes):
-    // the legacy shape ran two global distincts over ~the same domain,
-    // with the types pass re-reading every gzip file it had just written.
-    // Output equality with the legacy operators is spec-asserted
-    // (IdTypesSpec); when both sinks run, the shared aggregate is cached
-    // across them for this block's scope.
-    if (cfg.writeTypes || cfg.externaliseUris) Checkpoints.scoped {
+    // types + xids derive from ONE fused (s, lang) aggregation over the
+    // in-memory frames (IdTypes), not from a re-read of the written files.
+    // Column pruning gives each consumer (one branch per type flag, plus
+    // the xids) its own aggregate Exchange, so nothing reuses the
+    // aggregate within the write's plan; the types alone read it three
+    // times, so it is cached for the call (run's scope frees it).
+    val idTypes = if (cfg.writeTypes || cfg.externaliseUris) {
       val agg = IdTypes.rolesAggregate(spark, labelTriples, infoboxTriples,
         DataTypes.disambiguate(withTypes, winning),
         interlangTriples, pageLinksTriples, categoryTriples, skosTriples, geoTriples)
-      val shared = cfg.writeTypes && cfg.externaliseUris
-      val aggP = if (shared) Checkpoints.persist(agg) else agg
-      if (cfg.writeTypes) timed("write types") {
-        Rdf.write(IdTypes.types(aggP, cfg.externaliseUris), s"$outBase/types.rdf")
-      }
-      if (cfg.externaliseUris) timed("write external_ids") {
-        Rdf.write(IdTypes.xids(aggP), s"$outBase/external_ids.rdf")
-      }
+      val aggP = if (cfg.writeTypes) Checkpoints.persist(agg) else agg
+      (if (cfg.writeTypes) Seq("types" -> IdTypes.types(aggP, cfg.externaliseUris)) else Nil) ++
+        (if (cfg.externaliseUris) Seq("external_ids" -> IdTypes.xids(aggP)) else Nil)
+    } else Nil
+
+    // RDF writes with read-back (reference :401-442), FUSED: every sink
+    // runs as ONE job over a single range-shuffle (each dataset's plan is
+    // a branch of the union — still evaluated exactly once, inside this
+    // job) and lands via metadata-only renames with set-aside/restore
+    // (Rdf.writeAll). The per-dataset form paid a job boundary + a shuffle
+    // per sink, with small datasets underfilling their tasks — measured
+    // 22.0 s -> fused at the 2 GB protocol point (PLANS.md). The trade:
+    // per-dataset wall-clock attribution collapses into one phase line
+    // (per-dataset ROW counts survive in the audit below).
+    val datasets = Seq(
+      "labels" -> labels,
+      "infobox_properties" -> infobox,
+      "interlanguage_links" -> interlang,
+      "page_links" -> pageLinks,
+      "article_categories" -> categories,
+      "skos_categories" -> skosCategories,
+      "geo_coordinates" -> geoCoordinates)
+    val written = timed("write datasets (fused)") {
+      Rdf.writeAll(datasets ++ idTypes, outBase)
     }
 
+    // the audit counts the seven cleaned datasets; types and xids are
+    // written, and manifested, but not counted
     val counts = if (cfg.writeManifests) timed("manifest audit") {
-      // one distributed scan per sink writes the per-file manifest AND
-      // yields the dataset count (sum of per-file n_rows) — same audit
+      // one distributed scan per sink dir writes the per-file manifest
+      // AND yields the dataset count (sum of per-file n_rows) — same audit
       // read the count-back does, but the artifact persists: a later
       // transfer/restore verifies per-file (Manifest.verifyTextDir)
-      // without re-counting. An empty dataset deleted its dir (Rdf.write
+      // without re-counting. An empty dataset deleted its dir (writeAll
       // contract) — it counts 0 and gets no manifest.
-      Seq("schema.dgraph", "schema.indexed.dgraph").foreach { d =>
-        val dir = s"$outBase/$d"
-        if (dirExists(spark, dir))
-          graft.io.Manifest.writeForTextDir(spark, dir)
-      }
-      written.map { case (name, _) =>
-        val dir = s"$outBase/$name.rdf"
-        name -> (if (!dirExists(spark, dir)) 0L
-        else {
-          graft.io.Manifest.writeForTextDir(spark, dir)
-            .agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0)
-        })
-      }
+      val manifests = (Seq("schema.dgraph", "schema.indexed.dgraph") ++
+          written.keys.toSeq.map(_ + ".rdf"))
+        .filter(d => dirExists(spark, s"$outBase/$d"))
+        .map(d => d -> graft.io.Manifest.writeForTextDir(spark, s"$outBase/$d"))
+        .toMap
+      datasets.map { case (name, _) =>
+        name -> manifests.get(s"$name.rdf").fold(0L)(
+          _.agg(coalesce(sum(col("n_rows")), lit(0L))).head().getLong(0))
+      }.toMap
     } else timed("count-back audit") {
-      written.map { case (name, df) => name -> df.count() }
+      datasets.map { case (name, _) => name -> written(name).count() }.toMap
     }
     println(metrics.summary) // the reference's operational perf gauge
     counts

@@ -5,6 +5,10 @@ import java.nio.file.Files
 
 class ParquetIOSpec extends SparkSpec {
 
+  /** One dataset through the RDF sink: `dir/<name>.rdf`, read back. */
+  private def writeOne(df: org.apache.spark.sql.DataFrame, dir: String, name: String) =
+    Rdf.writeAll(Seq(name -> df), dir)(name)
+
   test("missing input falls back to an empty triple relation with schema") {
     val df = ParquetIO.readTriples(spark, "/tmp/graft-does-not-exist-xyz")
     assert(df.columns.toSeq === Seq("s", "p", "o", "lang"))
@@ -45,9 +49,9 @@ class ParquetIOSpec extends SparkSpec {
     import spark2.implicits._
     val dir = Files.createTempDirectory("graft-rdf-stale").toString
     val df = Seq(("<s1>", "<p>", "<o>", "de")).toDF("s", "p", "o", "lang")
-    assert(Rdf.write(df, s"$dir/out.rdf").count() === 1)
+    assert(writeOne(df, dir, "out").count() === 1)
     val empty = df.where($"s" === "<nope>")
-    assert(Rdf.write(empty, s"$dir/out.rdf").count() === 0) // not stale rows
+    assert(writeOne(empty, dir, "out").count() === 0) // not stale rows
   }
 
   test("rdf write/read round-trip preserves triples and lang partitioning") {
@@ -58,7 +62,7 @@ class ParquetIOSpec extends SparkSpec {
       ("<s1>", "<p>", "\"a b\"", "de"),
       ("<s2>", "<bad@pred>", "<o>", "de"), // dropped: invalid predicate
       ("<s3>", "<q>", "<o>", "fr")).toDF("s", "p", "o", "lang")
-    val back = Rdf.write(df, s"$dir/out.rdf")
+    val back = writeOne(df, dir, "out")
     val rows = back.orderBy("s").as[(String, String, String, String)].collect()
     assert(rows === Array(
       ("<s1>", "<p>", "\"a b\"", "de"),
@@ -78,18 +82,19 @@ class ParquetIOSpec extends SparkSpec {
 
     val dirFused = Files.createTempDirectory("graft-rdf-fused").toString
     val dirSolo = Files.createTempDirectory("graft-rdf-solo").toString
-    // pre-existing output for the EMPTY dataset must be cleared, like write()
-    assert(Rdf.write(b, s"$dirFused/cc.rdf").count() === 1)
+    // pre-existing output for the EMPTY dataset must be cleared, like a
+    // one-dataset write
+    assert(writeOne(b, dirFused, "cc").count() === 1)
     val fused = Rdf.writeAll(
       Seq("aa" -> a, "bb" -> b, "cc" -> none), dirFused)
     val solo = Seq("aa" -> a, "bb" -> b, "cc" -> none)
-      .map { case (n, df) => n -> Rdf.write(df, s"$dirSolo/$n.rdf") }.toMap
+      .map { case (n, df) => n -> writeOne(df, dirSolo, n) }.toMap
     for (n <- Seq("aa", "bb", "cc")) {
       val f = fused(n).orderBy("s", "p", "o")
         .as[(String, String, String, String)].collect().toSeq
       val s = solo(n).orderBy("s", "p", "o")
         .as[(String, String, String, String)].collect().toSeq
-      assert(f === s, s"dataset $n: fused read-back diverges from write()")
+      assert(f === s, s"dataset $n: fused read-back diverges from the one-dataset write")
     }
     assert(fused("cc").isEmpty) // the stale cc.rdf was cleared
     // identical directory layout: <name>.rdf/lang=<code>, gzip text files,
@@ -102,7 +107,7 @@ class ParquetIOSpec extends SparkSpec {
     val gzFiles = new java.io.File(s"$dirFused/aa.rdf/lang=de").listFiles()
       .map(_.getName).filter(_.endsWith(".txt.gz"))
     assert(gzFiles.nonEmpty)
-    // within-file sort: lines ordered by (p, s, o) like write()
+    // within-file sort: lines ordered by (p, s, o)
     val src = scala.io.Source.fromInputStream(
       new java.util.zip.GZIPInputStream(new java.io.FileInputStream(
         s"$dirFused/aa.rdf/lang=de/${gzFiles.head}")))

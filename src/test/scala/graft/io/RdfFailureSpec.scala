@@ -63,7 +63,7 @@ class RdfFailureSpec extends SparkSpec {
   test("writeAll publish-rename failure restores the OLD output and keeps staging") {
     val base = faultyBase()
     val old = triples(("<old>", "<p>", "<o>", "de"))
-    assert(Rdf.write(old, s"$base/aa.rdf").count() === 1)
+    assert(Rdf.writeAll(Seq("aa" -> old), base)("aa").count() === 1)
     FaultyRenameFileSystem.arm("/aa.rdf", 1) // publish fails once; restore succeeds
     try {
       val e = intercept[IllegalArgumentException] {
@@ -83,7 +83,7 @@ class RdfFailureSpec extends SparkSpec {
   test("writeAll names the stranded aside path when the restore ALSO fails") {
     val base = faultyBase()
     val old = triples(("<old>", "<q>", "<o>", "fr"))
-    assert(Rdf.write(old, s"$base/bb.rdf").count() === 1)
+    assert(Rdf.writeAll(Seq("bb" -> old), base)("bb").count() === 1)
     FaultyRenameFileSystem.arm("/bb.rdf", 2) // publish AND restore fail
     try {
       val e = intercept[IllegalArgumentException] {
@@ -100,10 +100,15 @@ class RdfFailureSpec extends SparkSpec {
   test("writeAll cleans a crash-remnant aside dir and publishes normally") {
     val base = faultyBase()
     // remnant of a hypothetical past crash: stale aside + live old output
-    assert(Rdf.write(triples(("<stale>", "<p>", "<x>", "de")), s"$base/cc.rdf").count() === 1)
+    // (both laid down in one call: a later writeAll of cc would already
+    // clean the remnant)
+    val laid = Rdf.writeAll(Seq(
+      "stale" -> triples(("<stale>", "<p>", "<x>", "de")),
+      "cc" -> triples(("<old>", "<p>", "<y>", "de"))), base)
+    assert(laid("stale").count() === 1)
     val fs = new Path(base).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    assert(fs.rename(new Path(s"$base/cc.rdf"), new Path(s"$base/.rdf_old_cc")))
-    assert(Rdf.write(triples(("<old>", "<p>", "<y>", "de")), s"$base/cc.rdf").count() === 1)
+    assert(fs.rename(new Path(s"$base/stale.rdf"), new Path(s"$base/.rdf_old_cc")))
+    assert(laid("cc").count() === 1)
 
     val out = Rdf.writeAll(Seq("cc" -> triples(("<new>", "<p>", "<z>", "de"))), base)
     assert(lines(out("cc")) === Seq(("<new>", "<p>", "<z>", "de")))

@@ -18,25 +18,11 @@ class DataTypesSpec extends SparkSpec {
     assert(DataTypes.extractDataType("\"x\"").toSeq === Seq("\"x\""))
   }
 
-  test("native extraction agrees with the scala path on clean inputs") {
-    val spark2 = spark
-    import spark2.implicits._
-    val inputs = Seq("<http://x>", "\"5\"^^<http://t>", "\"plain\"", "\"a@b\"@en")
-    val native = inputs.toDF("o")
-      .select(DataTypes.extractDataTypeNative(col("o")).as("vt"))
-      .select(col("vt.v"), col("vt.t")).as[(String, Option[String])].collect()
-    inputs.zip(native).foreach { case (in, (v, t)) =>
-      val ref = DataTypes.extractDataType(in)
-      assert(v === ref(0), s"value for $in")
-      assert(t === (if (ref.length > 1) Some(ref(1)) else None), s"type for $in")
-    }
-  }
-
   test("withDataTypeExact matches the scala path on the split edge cases") {
     val spark2 = spark
     import spark2.implicits._
-    // embedded `^` and a trailing `^^` are where extractDataTypeNative
-    // diverges; the plain literal exercises `get` on a 1-element array
+    // embedded `^` and a trailing `^^` are where a split at the last `^^`
+    // would diverge; the plain literal exercises `get` on a 1-element array
     val inputs = Seq(
       "<http://x>",
       "\"5\"^^<http://www.w3.org/2001/XMLSchema#integer>",
@@ -75,7 +61,7 @@ class DataTypesSpec extends SparkSpec {
       ("<e>", "<p2>", "\"2001\"^^<http://www.w3.org/2001/XMLSchema#date>", "en"),
       ("<f>", "<p2>", "\"2002\"^^<http://www.w3.org/2001/XMLSchema#date>", "en")
     ).toDF("s", "p", "o", "lang")
-    val withTypes = DataTypes.withDataType(triples)
+    val withTypes = DataTypes.withDataTypeExact(triples)
     val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
     val out = DataTypes.disambiguate(withTypes, winning).select("s").as[String].collect().sorted
     assert(out === Array("<a>", "<b>", "<e>", "<f>"))

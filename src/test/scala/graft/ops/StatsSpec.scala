@@ -6,27 +6,6 @@ import graft.SparkSpec
 
 class StatsSpec extends SparkSpec {
 
-  test("summary: exact mode returns precise distinct counts") {
-    val spark2 = spark
-    import spark2.implicits._
-    val df = Seq(
-      ("<a>", "<p1>", "<o>", "de"), ("<a>", "<p2>", "<o>", "de"),
-      ("<b>", "<p1>", "<o>", "fr")).toDF("s", "p", "o", "lang")
-    val row = Stats.summary(df, exact = true).head()
-    assert((row.getLong(0), row.getLong(1), row.getLong(2)) === ((3L, 2L, 2L)))
-  }
-
-  test("summary: approx mode is within HLL error on small input") {
-    val spark2 = spark
-    import spark2.implicits._
-    val df = (1 to 100).map(i => (s"<s$i>", s"<p${i % 10}>", "<o>", "de"))
-      .toDF("s", "p", "o", "lang")
-    val row = Stats.summary(df, exact = false).head()
-    assert(row.getLong(0) === 100L)
-    assert(math.abs(row.getLong(1) - 100L) <= 5) // default rsd is 5%
-    assert(math.abs(row.getLong(2) - 10L) <= 1)
-  }
-
   test("perLanguage + withEnRollup folds datasets into a wide rollup table") {
     val spark2 = spark
     import spark2.implicits._

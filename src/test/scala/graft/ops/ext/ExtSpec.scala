@@ -1365,140 +1365,6 @@ class ContaminationSpec extends SparkSpec {
     assert(out.forall(_._2 === 3L))
     assert(out.map(_._1).sorted === out.map(_._1)) // ties ordered by hash asc
   }
-
-  test("semantic decontamination: cosine-threshold hits match brute force, corpus never shuffles") {
-    val spark2 = spark
-    import spark2.implicits._
-    val corpus = Seq(
-      (1L, Seq(1f, 0f, 0f, 0f)),   // exact benchmark copy: cos 1
-      (2L, Seq(0f, 1f, 0f, 0f)),   // orthogonal to both: cos 0
-      (3L, Seq(1f, 1f, 0f, 0f)),   // cos 1/sqrt(2) ~ 0.707 to b1
-      (4L, Seq(0f, 0f, 0f, 0f)))   // zero vector: cosineSafe pins to -1
-      .toDF("vec_id", "embedding").repartition(2)
-    val bench = Seq(
-      Seq(1f, 0f, 0f, 0f), Seq(0f, 0f, 1f, 0f)).toDF("embedding")
-
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select("vec_id").as[Long].collect().sorted.toSeq
-    val hits = Contamination.semanticContaminationHits(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.75)
-    assert(ids(hits) === Seq(1L))
-    // lowering the bar below cos(45deg) pulls in the paraphrase-like 3
-    assert(ids(Contamination.semanticContaminationHits(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.7)) ===
-      Seq(1L, 3L))
-    // brute-force reference: max cosine per corpus row, any threshold
-    val brute = corpus.crossJoin(bench.select(col("embedding").as("b")))
-      .groupBy(col("vec_id"))
-      .agg(max(graft.ops.ext.Similarity.cosineSafe(col("embedding"), col("b"))).as("mx"))
-      .where(col("mx") >= 0.75)
-    assert(ids(brute.select(col("vec_id"))) === ids(hits))
-    // plan: benchmark broadcast, semi short-circuit, ZERO corpus Exchange
-    val plan = hits.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastNestedLoopJoin") && plan.contains("LeftSemi"), plan)
-    assert(!plan.contains("ShuffleExchange") && !plan.contains("Exchange hashpartitioning"), plan)
-
-    // the SRP-prefiltered form: an EXACT embedding copy always shares
-    // its own bucket (recall 1 on verbatim leakage), results are a
-    // subset of the exact form's, and the join becomes a broadcast HASH
-    // join on the bucket — still zero corpus Exchanges
-    val srp = Contamination.semanticContaminationHitsSrp(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.75)
-    assert(ids(srp) === Seq(1L)) // the verbatim copy
-    assert(ids(srp).toSet.subsetOf(ids(hits).toSet))
-    assert(srp.columns.toSeq === corpus.columns.toSeq) // working cols dropped
-    val srpPlan = srp.queryExecution.executedPlan.toString
-    assert(srpPlan.contains("BroadcastHashJoin") && srpPlan.contains("LeftSemi"), srpPlan)
-    assert(!srpPlan.contains("Exchange hashpartitioning"), srpPlan)
-  }
-
-  test("SRP contamination multi-probe: one-bit straddlers recovered, corpus still never shuffles") {
-    val spark2 = spark
-    import spark2.implicits._
-    // Scala replica of Similarity.planeSign (md5 of "p<plane>:<dim>",
-    // first 4 hex chars, parity) so the fixture can be CONSTRUCTED at a
-    // known Hamming distance instead of hoping one straddles
-    def md5hex(s: String): String = java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-    def sign(p: Int, i: Int): Double =
-      if (java.lang.Long.parseLong(md5hex(s"p$p:$i").substring(0, 4), 16) % 2 == 0) 1.0 else -1.0
-    val planes = 4; val dims = 64
-    // dims (a, c) such that plane 0's projection of e_a + e_c is exactly 0
-    // (bucket bit 1 by the >=0 convention) while planes 1..3 project to
-    // ±2 — so a small bump on c flips plane 0's bit and ONLY plane 0's
-    val (da, dc) = (for {
-      a <- 0 until dims; c <- 0 until dims if a != c
-      if sign(0, a) == 1.0 && sign(0, c) == -1.0
-      if (1 until planes).forall(p => sign(p, a) == sign(p, c))
-    } yield (a, c)).head
-    def vec(bump: Float): Seq[Float] = {
-      val v = Array.fill(dims)(0.0f); v(da) = 1.0f; v(dc) = 1.0f + bump; v.toSeq
-    }
-    val b = vec(0.0f)
-    // cos(b, perturbed) = 2.05/(sqrt(2)*sqrt(1+1.05^2)) ~ 0.9997 >= 0.999,
-    // but plane 0's projection crosses zero: Hamming distance exactly 1
-    val corpus = Seq(
-      (1L, b), // verbatim benchmark copy
-      (2L, vec(0.05f)), // one-bit straddler
-      (3L, { val v = Array.fill(dims)(0.0f); v((da + 7) % dims) = 1.0f; v.toSeq })) // clean
-      .toDF("vec_id", "embedding").repartition(2)
-    val bench = Seq(Tuple1(b)).toDF("embedding")
-    def ids(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-      df.select("vec_id").as[Long].collect().sorted.toSeq
-    val exact = Contamination.semanticContaminationHits(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.999)
-    assert(ids(exact) === Seq(1L, 2L))
-    val single = Contamination.semanticContaminationHitsSrp(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.999,
-      planes = planes, multiProbe = false)
-    assert(ids(single) === Seq(1L)) // the straddler is single-probe's documented miss
-    val multi = Contamination.semanticContaminationHitsSrp(
-      corpus, col("embedding"), bench, col("embedding"), minCos = 0.999,
-      planes = planes)
-    assert(ids(multi) === Seq(1L, 2L)) // recovered; recall >= single-probe
-    assert(ids(multi).toSet.subsetOf(ids(exact).toSet))
-    // corpus side still plans ZERO Exchanges: the probe explosion lives
-    // on the broadcast benchmark side
-    val plan = multi.queryExecution.executedPlan.toString
-    assert(plan.contains("BroadcastHashJoin") && plan.contains("LeftSemi"), plan)
-    assert(!plan.contains("Exchange hashpartitioning"), plan)
-
-    // measured recall on the 10-family fixture (bench = family bases,
-    // corpus = 50 perturbed members + 50 singletons): multi >= single,
-    // both sound vs exact
-    def family(f: Int, k: Int): Seq[Float] = {
-      val v = Array.fill(dims)(0.0f); v(f) = 1.0f; v(f + 1 + k) += 0.01f; v.toSeq
-    }
-    val fams = for (f <- 0 until 10; k <- 0 until 5) yield ((f * 5 + k).toLong, family(f, k))
-    val singles = for (i <- 0 until 50) yield {
-      val v = Array.fill(dims)(0.0f); v(i % dims) = 1.0f; v((i * 7 + 3) % dims) = -1.0f
-      (1000L + i, v.toSeq)
-    }
-    val corpus2 = (fams ++ singles).toDF("vec_id", "embedding").repartition(3)
-    val bench2 = (0 until 10).map { f =>
-      val v = Array.fill(dims)(0.0f); v(f) = 1.0f; Tuple1(v.toSeq)
-    }.toDF("embedding")
-    val exact2 = ids(Contamination.semanticContaminationHits(
-      corpus2, col("embedding"), bench2, col("embedding"), minCos = 0.999)).toSet
-    assert(exact2 === fams.map(_._1).toSet) // all members, no singletons
-    val single2 = ids(Contamination.semanticContaminationHitsSrp(
-      corpus2, col("embedding"), bench2, col("embedding"), minCos = 0.999,
-      planes = planes, multiProbe = false)).toSet
-    val multi2 = ids(Contamination.semanticContaminationHitsSrp(
-      corpus2, col("embedding"), bench2, col("embedding"), minCos = 0.999,
-      planes = planes)).toSet
-    assert(single2.subsetOf(multi2) && multi2.subsetOf(exact2))
-    info(f"family recall: single=${single2.size / 50.0}%.2f multi=${multi2.size / 50.0}%.2f")
-
-    // reserved working names refuse loudly instead of silently
-    // overwriting (the round-12 ADVICE bug)
-    val clash = corpus.withColumn("_graft_srp_bkt", lit(1))
-    val e = intercept[IllegalArgumentException] {
-      Contamination.semanticContaminationHitsSrp(
-        clash, col("embedding"), bench, col("embedding"), minCos = 0.999)
-    }
-    assert(e.getMessage.contains("_graft_srp_bkt"))
-  }
 }
 
 class SamplingSpec extends SparkSpec {

@@ -100,7 +100,8 @@ class PipelineSpec extends SparkSpec {
       RdfConfig(languages = Some(Seq("de", "fr")), writeTypes = true,
         writeManifests = true))
     assert(counts2 === counts)
-    for (d <- Seq("labels.rdf", "geo_coordinates.rdf", "schema.dgraph",
+    assert(counts.size === 7, counts.keySet) // types.rdf is written, not counted
+    for (d <- Seq("labels.rdf", "geo_coordinates.rdf", "types.rdf", "schema.dgraph",
         "schema.indexed.dgraph")) {
       assert(new java.io.File(s"$out/$d/_manifest.jsonl").exists(), d)
       val bad = graft.io.Manifest.verifyTextDir(spark, s"$out/$d")
