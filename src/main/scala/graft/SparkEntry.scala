@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 
+import graft.core.Checkpoints
 import graft.functions.ShingleMinhashExpr
 import graft.io.Ttl
 import graft.multimodal.Multimodal
@@ -264,11 +265,10 @@ object SparkEntry {
       // Equivalence is group-level (node-lang is a function of lang
       // alone) and oracle-verified; the cached cnt table is
       // #langs × #predicates rows.
-      val cnt = t(s, dir, "lineitem").select(
+      val cnt = Checkpoints.persist(t(s, dir, "lineitem").select(
           concat(lit("<http://p/"), (col("l_suppkey") % 20).cast("string"), lit(">")).as("p"),
           lower(concat(col("l_returnflag"), col("l_linestatus"))).as("lang"))
-        .groupBy(col("lang"), col("p")).agg(count(lit(1)).as("cnt"))
-        .cache()
+        .groupBy(col("lang"), col("p")).agg(count(lit(1)).as("cnt")))
       // the same (count desc, p asc) row_number ranking topKPredicatesPerLang
       // runs — fed by the pre-aggregated counts instead of re-counting
       val w = Window.partitionBy(col("lang"))
@@ -298,7 +298,7 @@ object SparkEntry {
       // semi join — one extraction pass instead of two (at cluster scale
       // with an unbounded fact table you'd recompute like the reference;
       // here the disambiguation input is bounded)
-      val withTypes = DataTypes.withDataTypeExact(triples).cache()
+      val withTypes = Checkpoints.persist(DataTypes.withDataTypeExact(triples))
       val winning = DataTypes.mostFrequentTypePerPredicate(withTypes)
       DataTypes.disambiguate(withTypes, winning)
         .select(col("s"), col("p"),
@@ -695,10 +695,9 @@ object SparkEntry {
       // its own (later, caller-driven) materialization, so release is the
       // harness's job — Verify/Bench clearCache() before every query, and
       // library callers own the returned plan's caches the same way.
-      val fps = t(s, dir, "documents")
+      val fps = Checkpoints.persist(t(s, dir, "documents")
         .select(col("doc_id"),
-          TextStats.winnowFingerprint(col("text"), k = 5, w = 8).as("_fp"))
-        .cache()
+          TextStats.winnowFingerprint(col("text"), k = 5, w = 8).as("_fp")))
       Dedup.winnowCandidatePairs(fps, "doc_id", col("_fp"), maxBucketSize = Some(50))
         .orderBy(col("id_a"), col("id_b"))
     }),
@@ -811,7 +810,7 @@ object SparkEntry {
       // chained through shared docs make a deeper graph than q58's), under
       // q58's recursive-CTE oracle shape. The roster name predates the
       // deletion of the large-star/small-star engine
-      graft.core.Checkpoints.scoped {
+      Checkpoints.scoped {
         val docs = t(s, dir, "documents")
         val sig = Dedup.withMinhashSignature(docs, col("text"), 1)
         val pairs = Dedup.lshCandidatePairs(sig, "doc_id", Seq("mh0"),
@@ -2289,19 +2288,19 @@ object SparkEntry {
       val docs = t(s, dir, "documents")
       val qs = Seq((1L, "hash join"), (2L, "window agg stream"),
         (3L, "vector scan table"))
-      val lex = TextStats.bm25TopK(docs, col("text"), "doc_id", qs, k = 10)
-        .select(col("query_id"), col("doc_id"), col("rnk"))
-        .localCheckpoint(true)
-      val cov = Ranking.coverageTopK(docs, col("text"), "doc_id", qs, k = 10)
-        .select(col("query_id"), col("doc_id"), col("rnk"))
-        .localCheckpoint(true)
+      val lex = Checkpoints.checkpoint(
+        TextStats.bm25TopK(docs, col("text"), "doc_id", qs, k = 10)
+          .select(col("query_id"), col("doc_id"), col("rnk")))
+      val cov = Checkpoints.checkpoint(
+        Ranking.coverageTopK(docs, col("text"), "doc_id", qs, k = 10)
+          .select(col("query_id"), col("doc_id"), col("rnk")))
       // fused IS checkpointed like its inputs: the un-checkpointed form
       // (both consumers re-deriving the 30-row fold) measured 1.7x
       // SLOWER on the isolated bench (8.6 vs 5.0 s) — the barrier is
       // cheaper than re-planning the fold under two consumers
-      val fused = Ranking.rrfFuse(Seq(lex, cov), "doc_id", topK = 10)
-        .select(col("query_id"), col("doc_id"), col("rnk"))
-        .localCheckpoint(true)
+      val fused = Checkpoints.checkpoint(
+        Ranking.rrfFuse(Seq(lex, cov), "doc_id", topK = 10)
+          .select(col("query_id"), col("doc_id"), col("rnk")))
       Ranking.kendallTau(lex, fused, "doc_id")
         .join(Ranking.rboAtK(lex, fused, "doc_id", k = 10), "query_id")
         .orderBy(col("query_id"))
@@ -2319,8 +2318,8 @@ object SparkEntry {
           col("n_chars").isNotNull)
       val conf = col("n_chars") * 500L
       val label = TextStats.tokenCount(col("text")).cast("long") >= 40L
-      val bins = TextStats.calibrationBins(docs, conf, label, bins = 10)
-        .localCheckpoint(true)
+      val bins = Checkpoints.checkpoint(
+        TextStats.calibrationBins(docs, conf, label, bins = 10))
       bins.crossJoin(broadcast(TextStats.eceFromBins(bins)))
         .orderBy(col("bin"))
     }),

@@ -121,13 +121,6 @@ object Checkpoints {
     * analyzed plan (non-blocking). No-op for frames that were never
     * checkpointed. For callers outside operators that are done with a
     * checkpoint-backed result: it walks the WHOLE lineage. */
-  def release(df: DataFrame): Unit = releaseExcept(df)
-
-  /** [[release]] restricted to checkpoints the walked plan OWNS: any
-    * [[LogicalRDD]] leaf that also appears in one of the `keep` frames'
-    * plans is left persisted. */
-  def releaseExcept(df: DataFrame, keep: DataFrame*): Unit = {
-    val keepIds = keep.flatMap(leafRdds).map(_.id).toSet
-    leafRdds(df).filterNot(r => keepIds(r.id)).foreach(_.unpersist(blocking = false))
-  }
+  def release(df: DataFrame): Unit =
+    leafRdds(df).foreach(_.unpersist(blocking = false))
 }

@@ -9,8 +9,7 @@ import org.apache.spark.sql.types._
 /** Signed-random-projection bucket id as ONE codegen'd loop — the
   * candidate-generation key of the whole embedding near-dup / bucketed
   * ANN family ([[graft.ops.ext.Similarity.srpBucket]] call sites: q37's
-  * bucket table, q40/q66/q171's near-dup prefilters, q142's semantic
-  * contamination probes, the NSW band build).
+  * bucket table, q40/q66/q171's near-dup prefilters).
   *
   * The interpreted form evaluates, PER ROW, `planes` zip_with+aggregate
   * folds — and inside them an md5 expression tree per (plane, dim) just

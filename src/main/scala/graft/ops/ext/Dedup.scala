@@ -22,9 +22,6 @@ import org.apache.spark.sql.functions._
   *    drops them before any join (see [[lshCandidatePairsMultiBand]]).
   *  - exact dedup hashes the text (fixed-width key) instead of grouping by
   *    the full text column, so the shuffle moves 32-byte keys, not bodies.
-  *  - recurring dedup runs: persist the signature table bucketed+sorted by
-  *    band ([[graft.io.Bucketing]]) — the nightly candidate self-join then
-  *    plans with ZERO Exchange (proven in BucketingSpec).
   */
 object Dedup {
 
@@ -582,62 +579,19 @@ object Dedup {
     * keys (33-byte md5-derived strings — partial-agged map-side, never
     * document text), the new batch explodes to |bands| keyed rows per doc,
     * and the match is a semi join on those short keys followed by an anti
-    * join on ids — the corpus documents themselves are never shuffled. On
-    * a standing corpus the band-key table is exactly what
-    * [[graft.io.Bucketing]]'s bucketed signature tables persist, making
-    * the nightly run's semi join Exchange-free on the corpus side. */
+    * join on ids — the corpus documents themselves are never shuffled. */
   def dedupAgainstCorpus(
       newSigs: DataFrame,
       corpusSigs: DataFrame,
       idCol: String,
-      bands: Seq[Seq[String]]): DataFrame =
-    dedupAgainstCorpusKeys(
-      newSigs, corpusBandKeys(corpusSigs, bands), idCol, bands)
-
-  /** The standing-corpus side of [[dedupAgainstCorpus]] as its own
-    * frame: the DISTINCT tagged band keys (33-byte strings, one column
-    * `_band`). This is exactly the table a nightly pipeline should
-    * PERSIST — written bucketed on `_band` ([[graft.io.Bucketing]]),
-    * the nightly semi join plans with no Exchange and no re-derivation
-    * on the corpus side (see
-    * [[graft.pipeline.Curation.writeCorpusSigTables]]). */
-  def corpusBandKeys(
-      corpusSigs: DataFrame, bands: Seq[Seq[String]]): DataFrame = {
-    require(bands.nonEmpty, "corpusBandKeys: at least one band required")
-    corpusSigs
+      bands: Seq[Seq[String]]): DataFrame = {
+    require(bands.nonEmpty, "dedupAgainstCorpus: at least one band required")
+    val corpusKeys = corpusSigs
       .select(explode(array(taggedBandKeys(bands): _*)).as("_band"))
       .distinct()
-  }
-
-  /** [[dedupAgainstCorpus]] with the corpus side ALREADY reduced to its
-    * distinct tagged band keys (a [[corpusBandKeys]] frame or a
-    * persisted bucketed table of one). `corpusKeys` must carry the
-    * single `_band` column and be distinct — a duplicated key would not
-    * change the semi-join semantics, only its cost.
-    *
-    * BAND-STRUCTURE CONTRACT: `corpusKeys` must have been derived with
-    * the SAME `bands` split (same band count, same signature columns per
-    * band) as the `bands` argument here. The tag carries only the band
-    * INDEX plus the md5 of that band's values, so a table persisted
-    * under a different split (say two 1-hash bands vs one 2-hash band)
-    * produces keys that can never equal the batch side's — the semi
-    * join silently matches nothing and every batch row passes as
-    * "novel" (a silent NO-OP dedup).
-    * Raw frames derived in the same plan cannot diverge; PERSISTED
-    * tables can — use the guarded path
-    * ([[graft.pipeline.Curation.writeCorpusSigTables]] + the
-    * table-backed `curateIncremental`, which stamps the signature
-    * family into the table's properties and verifies it at read) rather
-    * than hand-persisting a [[corpusBandKeys]] frame. */
-  def dedupAgainstCorpusKeys(
-      newSigs: DataFrame,
-      corpusKeys: DataFrame,
-      idCol: String,
-      bands: Seq[Seq[String]]): DataFrame = {
-    require(bands.nonEmpty, "dedupAgainstCorpusKeys: at least one band required")
     val dupIds = newSigs
       .select(col(idCol), explode(array(taggedBandKeys(bands): _*)).as("_band"))
-      .join(corpusKeys.select(col("_band")), Seq("_band"), "left_semi")
+      .join(corpusKeys, Seq("_band"), "left_semi")
       .select(col(idCol))
       .distinct()
     newSigs.join(dupIds, Seq(idCol), "left_anti")

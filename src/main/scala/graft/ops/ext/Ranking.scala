@@ -308,121 +308,4 @@ object Ranking {
       math.floor(scale * (1.0 - p) * math.pow(p, d - 1.0) / d).toLong)
     w.indices.map(i => w.drop(i).sum)
   }
-
-  /** One isotonic-regression pool: bins [bin_lo, bin_hi] merged to the
-    * common positive rate `p_ppm = floor(1e6 · pos / n)`. */
-  case class IsoPool(bin_lo: Long, bin_hi: Long, n: Long, pos: Long, p_ppm: Long)
-
-  /** Exact pool-adjacent-violators (Ayer et al. 1955 — the isotonic
-    * regression behind score calibration) over an ALREADY-AGGREGATED
-    * reliability table ([[graft.ops.ext.TextStats.calibrationBins]]'s
-    * output contract: `bin`, `n`, `pos` — model-bounded, ≤ bins rows).
-    * Adjacent bins whose empirical positive rate DECREASES are pooled
-    * until the sequence is monotone non-decreasing; the driver-side pass
-    * is the same trained-model bound as every quantizer collect, and all
-    * rate comparisons cross-multiply in BigInt so the fit stays exact
-    * past 2^63-sized products (pos·n at web-corpus counts overflows a
-    * Long multiply).
-    *
-    * Pools conserve (n, pos) exactly; `p_ppm` is floor division of
-    * non-negative operands, and floors of a monotone rational sequence
-    * stay monotone — the published table can never invert. */
-  def pavPools(bins: Seq[(Long, Long, Long)]): Seq[IsoPool] = {
-    bins.foreach { case (b, n, pos) =>
-      require(n >= 1 && pos >= 0 && pos <= n,
-        s"pavPools: bin $b needs 0 <= pos <= n with n >= 1, got (n=$n, pos=$pos)")
-    }
-    val st = collection.mutable.Stack.empty[(Long, Long, Long, Long)] // lo, hi, n, pos
-    bins.sortBy(_._1).foreach { case (b, n, pos) =>
-      st.push((b, b, n, pos))
-      // merge while the previous pool's rate strictly exceeds this one's
-      while (st.length >= 2 && {
-        val (_, _, n2, p2) = st(0); val (_, _, n1, p1) = st(1)
-        BigInt(p1) * n2 > BigInt(p2) * n1
-      }) {
-        val (_, hi2, n2, p2) = st.pop(); val (lo1, _, n1, p1) = st.pop()
-        st.push((lo1, hi2, n1 + n2, p1 + p2))
-      }
-    }
-    st.toSeq.reverse.map { case (lo, hi, n, pos) =>
-      IsoPool(lo, hi, n, pos, ((BigInt(1000000) * pos) / n).toLong)
-    }
-  }
-
-  /** Isotonic score calibration — the score-fusion complement of
-    * [[rrfFuse]]: where RRF sidesteps incomparable scores by using only
-    * RANKS, this maps each ranker's raw score to an empirical
-    * probability (monotone by construction), so scores from different
-    * rankers become directly summable. Fit = ONE partial-aggregated
-    * corpus pass into the ≤ `bins`-row reliability table
-    * ([[graft.ops.ext.TextStats.calibrationBins]]), PAV'd exactly on
-    * the driver ([[pavPools]]); serve = the pooled bin → p_ppm table
-    * embedded as a map LITERAL (the q170 model-bounded rule: no join,
-    * no broadcast build — the corpus never shuffles to be calibrated).
-    *
-    * `confCol` is a ppm-scaled BIGINT confidence/score in [0, 1e6]
-    * (clamped like calibrationBins). Adds `calib_ppm`. `fitOn` is the
-    * LABELED frame the reliability table aggregates over — it defaults
-    * to `scored` itself (in-sample calibration), and a held-out labeled
-    * frame is the production shape (fit once, serve everything; only
-    * the fit frame needs `labelCol`). Two scans total (fit + serve) —
-    * the irreducible train/apply shape. */
-  def isotonicCalibrate(
-      scored: DataFrame, confCol: Column, labelCol: Column,
-      bins: Int = 10, fitOn: Option[DataFrame] = None): DataFrame = {
-    require(bins >= 1, s"isotonicCalibrate: bins must be >= 1, got $bins")
-    val M = 1000000L
-    val bw = M / bins
-    val binRows = TextStats.calibrationBins(fitOn.getOrElse(scored),
-        confCol, labelCol, bins)
-      .select(col("bin"), col("n"), col("pos")).collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    require(binRows.nonEmpty, "isotonicCalibrate: no labeled rows to fit on")
-    val pools = pavPools(binRows)
-    // full bin -> pooled p_ppm table (exactly `bins` entries): a bin the
-    // fit never observed serves the nearest pooled bin AT OR BELOW it
-    // (step-function semantics); bins below the first pool serve the
-    // first pool's rate. Monotone because the pool rates are.
-    val byBin: Map[Long, Long] = {
-      val perBin = pools.flatMap(p => (p.bin_lo to p.bin_hi).map(_ -> p.p_ppm)).toMap
-      (0L until bins.toLong).map { b =>
-        b -> perBin.filter(_._1 <= b).maxByOption(_._1).map(_._2)
-          .getOrElse(pools.head.p_ppm)
-      }.toMap
-    }
-    val binMap = typedLit(byBin)
-    scored
-      .withColumn("_cc", least(greatest(confCol.cast("long"), lit(0L)), lit(M)))
-      .withColumn("calib_ppm",
-        try_element_at(binMap, least(expr(s"_cc div ${bw}L"), lit(bins - 1L))))
-      .drop("_cc")
-  }
-
-  /** Calibrated-score fusion: sum each list's calibrated probability per
-    * (query, doc) — a document missing from a list contributes nothing —
-    * then rank. Inputs carry (`query_id`, idCol, `calib_ppm`), the
-    * [[isotonicCalibrate]] output over a top-k frame (queries×k rows,
-    * never corpus-sized). The fold partial-aggregates; the window's
-    * literal `rnk <= topK` lets InferWindowGroupLimit prune map-side.
-    * Output: (`query_id`, idCol, `fused_ppm`, `n_lists`, `rnk`). */
-  def calibratedFuse(
-      rankings: Seq[DataFrame], idCol: String, topK: Int): DataFrame = {
-    require(rankings.nonEmpty, "calibratedFuse: need at least one ranking")
-    val slim = rankings.zipWithIndex.map { case (df, i) =>
-      df.select(col("query_id"), col(idCol),
-        col("calib_ppm").cast("long").as("calib_ppm"), lit(i).as("_li"))
-    }
-    val fused = slim.reduce(_ union _)
-      .groupBy(col("query_id"), col(idCol), col("_li"))
-      .agg(max(col("calib_ppm")).as("calib_ppm")) // duplicate-row guard
-      .groupBy(col("query_id"), col(idCol))
-      .agg(sum(col("calib_ppm")).as("fused_ppm"), count(lit(1)).as("n_lists"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("fused_ppm").desc, col(idCol))
-    fused
-      .withColumn("rnk", row_number().over(w).cast("long"))
-      .where(col("rnk") <= topK)
-      .select(col("query_id"), col(idCol), col("fused_ppm"),
-        col("n_lists"), col("rnk"))
-  }
 }

@@ -280,276 +280,6 @@ object Similarity {
       .select(col("q_id"), col("n_id"), col("rnk"))
   }
 
-  /** NSW insertion-order key: md5 of the id string, tie-broken by the id
-    * STRING appended to it — one expression, one total order. Shared by
-    * [[collectHubs]] (hubs = the `numHubs` earliest-inserted nodes) and
-    * the build's prior-order rule, so "hub" and "earliest inserted" are
-    * definitionally the same ordering even on an md5 collision (a
-    * separate numeric tie-break column would break lexicographically
-    * where this breaks on the string — silently violating the
-    * hubs-are-earliest invariant). */
-  private def nswOrderKey(c: Column): Column =
-    concat(md5(c.cast("string")), c.cast("string"))
-
-  /** md5-ordered hub sample with precomputed norms — the deterministic
-    * stand-in for NSW's random insertion order, collected ONCE (numHubs
-    * rows, the same driver-side bound as any quantizer model).
-    *
-    * `numHubs` is capped at 256: the `across` edge family is a
-    * driver-built hub CLIQUE (numHubs² pairs — ≤ 65k rows at the cap,
-    * still model-bounded state), and search out-degree grows by
-    * numHubs − 1. Thousands of hubs would silently turn both quadratic;
-    * past a few hundred entry points the right scaling lever is `planes`
-    * / `maxRegions`, not more hubs. */
-  private def collectHubs(
-      vectors: DataFrame, numHubs: Int): Array[(Long, Seq[Double], Double)] = {
-    require(numHubs >= 1 && numHubs <= 256,
-      s"nsw: numHubs must be in [1, 256] (the across clique is numHubs^2 " +
-        s"driver-side pairs and out-degree grows by numHubs - 1), got $numHubs")
-    val rows = vectors
-      .select(col("id"), col("vec"))
-      .orderBy(nswOrderKey(col("id"))).limit(numHubs)
-      .collect()
-      .map { r =>
-        val hid = r.getAs[Number](0).longValue
-        val hvec = r.getSeq[Number](1).map(_.doubleValue)
-        (hid, hvec, math.sqrt(hvec.foldLeft(0.0)((a, x) => a + x * x)))
-      }
-    require(rows.nonEmpty, "nsw: empty corpus")
-    rows
-  }
-
-  /** Navigable-small-world-lite neighbor graph (Malkov et al. 2014's NSW
-    * made deterministic and batch-buildable): four bounded edge families
-    * give every greedy walk both LOCAL precision and LONG-RANGE reach —
-    *
-    *  - `local`: NSW's actual insertion-order construction, batched —
-    *    each node links its `m` nearest SRP-bucket-mates (fine band plus
-    *    a coarse band at half the planes — the band union crosses
-    *    fine-bucket boundaries) among nodes EARLIER in md5(id) order,
-    *    and each linked prior links BACK (reverse edges, capped at `m`
-    *    per node, best-first). Plain same-bucket top-m was measured to
-    *    fragment into mutually-nearest cliques with zero outside
-    *    in-edges (near-duplicate clumps — every real embedding corpus
-    *    has them); prior-ordering forces each clump's earliest member
-    *    to link OUT to pre-existing nodes, and the capped reverse edges
-    *    percolate entry back through the clump with fanout ≥ 2;
-    *  - `up`: each node → its best hub (argmax cosine, ties to the
-    *    smaller id — the IVF assignment fold, zero corpus Exchange);
-    *  - `across`: each hub → every other hub (driver-side K² on the
-    *    collected hub array — the model-bounded state every IVF path
-    *    already accepts);
-    *  - `down`: each hub → the top-`m` nodes assigned to it (one window
-    *    whose literal `rnk <= m` bound lets InferWindowGroupLimit push a
-    *    partial top-m below the K-key Exchange — the skew guard);
-    *  - `region`: every populated SRP bucket elects ONE representative
-    *    (its member most similar to its own hub), and that member's hub
-    *    links to it — the deterministic surrogate for NSW's long-range
-    *    links, and the navigability guarantee: directed `local` edges
-    *    cannot ENTER a bucket from outside, so without a per-bucket
-    *    in-edge whole neighborhoods are unreachable (a per-hub
-    *    farthest-first cap was measured to drop exactly the hub's
-    *    own-cluster buckets — the bimodal-recall failure). Expected
-    *    region out-degree is #buckets/#hubs; `maxRegions` (farthest
-    *    kept first) only bounds pathological assignment skew. Any
-    *    greedy walk reaches any populated bucket within three hops of
-    *    any hub: across → the bucket's hub → its representative.
-    *
-    * Hubs are the `numHubs` smallest nodes in md5(id) order — a
-    * deterministic pseudo-random sample standing in for NSW's random
-    * insertion order, so builds are bit-reproducible. Out-degree is
-    * structurally ≤ 3m + 1 + (numHubs−1) + maxRegions (2m local
-    * forward+reverse, m down, 1 up, the hub clique, the region cap).
-    *
-    * Candidate-pair boundedness: within each band bucket only the first
-    * `maxBucketSize` members in md5(id) order are linkable TARGETS, so
-    * the self-join emits ≤ N·maxBucketSize pairs per band — linear in N
-    * (the `Dedup.maxBucketSize` rule; an uncapped 2^(planes/2)-bucket
-    * coarse band is Θ(N²/2^(planes/2)) even on uniform data). Because
-    * the cap keeps the md5-order PREFIX, it composes with the prior-
-    * order rule exactly: capped-out members are simply "inserted later
-    * than the window", still reachable via their own forward links and
-    * the hub scaffolding.
-    *
-    * Returns `(src, dst, dst_vec)` — the destination vector EMBEDDED, so
-    * each search hop is ONE broadcast-probe join (expansion and scoring
-    * together) and the corpus itself is never rescanned after the build.
-    * The m-way payload duplication is the classic graph-with-attributes
-    * trade; at serving scale the same graph ships to an online store. */
-  def nswBuildGraph(vectors: DataFrame, m: Int = 6,
-      planes: Int = 8, numHubs: Int = 16, maxRegions: Int = 32,
-      maxBucketSize: Int = 4096): DataFrame =
-    nswBuildGraphWith(vectors, collectHubs(vectors, numHubs),
-      m, planes, maxRegions, maxBucketSize)
-
-  /** [[nswBuildGraph]] against an already-collected hub model —
-    * [[nswTopK]] collects hubs once for entry scoring and reuses them
-    * here, avoiding a second corpus-wide orderBy(md5) collect. */
-  private def nswBuildGraphWith(
-      vectors: DataFrame, hubs: Array[(Long, Seq[Double], Double)],
-      m: Int, planes: Int, maxRegions: Int,
-      maxBucketSize: Int): DataFrame = Checkpoints.scoped {
-    import org.apache.spark.sql.expressions.Window
-    require(m >= 1 && maxRegions >= 1 && maxBucketSize >= 1,
-      "nswBuildGraph: m/maxRegions/maxBucketSize must be >= 1")
-    val hubArr = centroidArr(hubs)
-
-    // insertion-order key, computed ONCE PER NODE (never per pair) —
-    // the SAME expression collectHubs orders by (nswOrderKey), so the
-    // hubs are definitionally the earliest-inserted nodes
-    def orderKey(c: Column): Column = nswOrderKey(c)
-    def bandPairs(planesN: Int): DataFrame = {
-      val sig = vectors.select(col("id"), col("vec"),
-        srpBucket(col("vec"), planesN).as("bucket"),
-        orderKey(col("id")).as("ord"))
-      // target side capped to the bucket's earliest-inserted prefix
-      val targets = sig
-        .withColumn("_bn", row_number().over(Window
-          .partitionBy(col("bucket")).orderBy(col("ord"))))
-        .where(col("_bn") <= maxBucketSize)
-      sig.select(col("bucket"), col("id").as("xid"), col("vec").as("xvec"),
-          col("ord").as("xord"))
-        .join(targets.select(col("bucket"), col("id").as("yid"),
-          col("vec").as("yvec"), col("ord").as("yord")), Seq("bucket"))
-        .where(col("yord") < col("xord"))
-        .select(col("xid"), col("yid"), col("xvec"), col("yvec"))
-    }
-    // forward links: per node, best m PRIOR bucket-mates (both bands);
-    // checkpointed — the reverse-cap window below is a second consumer
-    // of the expensive bucket self-join
-    val fwdRows = Checkpoints.checkpoint(bandPairs(planes)
-      .unionByName(bandPairs(math.max(2, planes / 2)))
-      .dropDuplicates("xid", "yid")
-      .withColumn("cos", cosineSafe(col("xvec"), col("yvec")))
-      .select(col("xid"), col("yid"), col("cos"))
-      .withColumn("rnk", row_number().over(Window
-        .partitionBy(col("xid")).orderBy(col("cos").desc, col("yid"))))
-      .where(col("rnk") <= m))
-    val local = fwdRows.select(col("xid").as("src"), col("yid").as("dst"))
-      .unionByName(fwdRows
-        .withColumn("rrnk", row_number().over(Window
-          .partitionBy(col("yid")).orderBy(col("cos").desc, col("xid"))))
-        .where(col("rrnk") <= m)
-        .select(col("yid").as("src"), col("xid").as("dst")))
-    // checkpointed ONCE: up/down/region would otherwise each re-run the
-    // hub-assignment fold over the corpus (the persistSignatures lesson)
-    val assigned = Checkpoints.checkpoint(vectors
-      .withColumn("_vnorm", norm(col("vec")))
-      .withColumn("_sims", centroidSims(col("vec"), col("_vnorm"), hubArr))
-      .withColumn("_best", bestCentroid(col("_sims")))
-      .select(col("id"), srpBucket(col("vec"), planes).as("bucket"),
-        col("_best").getField("cid").as("hub"),
-        col("_best").getField("sim").as("sim"))
-      .where(col("id") =!= col("hub")))
-    val up = assigned.select(col("id").as("src"), col("hub").as("dst"))
-    val byHub = Window.partitionBy(col("hub"))
-      .orderBy(col("sim").desc, col("id"))
-    val down = assigned
-      .withColumn("rnk", row_number().over(byHub))
-      .where(col("rnk") <= m) // literal bound: partial top-m pre-Exchange
-      .select(col("hub").as("src"), col("id").as("dst"))
-    // one representative per (hub, bucket): the hub's best assignee in
-    // that bucket. Keyed on the PAIR, not the bucket alone — SRP buckets
-    // span metric regions, and a global per-bucket rep lets a foreign
-    // region's member steal the bucket's only in-edge (measured: q0's
-    // neighborhood bucket repped by a far cluster's hub, recall 0)
-    val region = assigned
-      .withColumn("rb", row_number().over(Window
-        .partitionBy(col("hub"), col("bucket"))
-        .orderBy(col("sim").desc, col("id"))))
-      .where(col("rb") === 1)
-      .withColumn("rk", row_number().over(Window
-        .partitionBy(col("hub")).orderBy(col("sim").asc, col("id"))))
-      .where(col("rk") <= maxRegions)
-      .select(col("hub").as("src"), col("id").as("dst"))
-    val across = {
-      val pairs = for {
-        (a, _, _) <- hubs.toSeq; (b, _, _) <- hubs.toSeq if a != b
-      } yield (a, b)
-      vectors.sparkSession.createDataFrame(pairs).toDF("src", "dst")
-    }
-    // eager: the build IS a materialization step
-    Checkpoints.checkpoint(local.unionByName(up).unionByName(down).unionByName(region)
-      .unionByName(across)
-      .select(col("src").cast("long"), col("dst").cast("long")).distinct()
-      .join(vectors.select(col("id").as("dst"), col("vec").as("dst_vec")),
-        Seq("dst"))
-      .select(col("src"), col("dst"), col("dst_vec")))
-  }
-
-  /** Graph ANN search over [[nswBuildGraph]]: greedy best-first beam walk,
-    * the production recall/latency frontier IVF/PQ trade against — made
-    * deterministic (every tie breaks on id) and batch-shaped.
-    *
-    * Entry: each query scores the hub array map-side (the IVF probe fold)
-    * and opens its `beam` best hubs. Each of the `hops` rounds then
-    * (1) takes the per-query best-`beam` of everything scored so far,
-    * (2) expands it through the adjacency in ONE broadcast-probe join —
-    * the frontier (queries × beam rows) is the broadcast side, the
-    * adjacency's embedded `dst_vec` scores candidates in the same
-    * projection, (3) anti-joins the visited set so no candidate is ever
-    * scored twice, and (4) checkpoints the visited union (releasing the
-    * superseded round — the CC loop discipline). Per-query work is
-    * structurally ≤ beam · maxdeg per hop; the only corpus-sized costs
-    * are in the build.
-    *
-    * Returns `(q_id, n_id, rnk)` — [[cosineTopK]]'s shape, so
-    * [[recallAtK]] gates it against the exact ranking directly. */
-  def nswTopK(vectors: DataFrame, queries: DataFrame, k: Int,
-      m: Int = 6, beam: Int = 8, hops: Int = 3,
-      planes: Int = 8, numHubs: Int = 16, maxRegions: Int = 32,
-      maxBucketSize: Int = 4096): DataFrame = Checkpoints.scoped {
-    import org.apache.spark.sql.expressions.Window
-    require(k >= 1 && beam >= 1 && hops >= 0, "nswTopK: k/beam >= 1, hops >= 0")
-    // one hub collect serves both the entry scoring and the build
-    val hubs = collectHubs(vectors, numHubs)
-    val hubArr = centroidArr(hubs)
-    val edges = nswBuildGraphWith(vectors, hubs,
-      m, planes, maxRegions, maxBucketSize) // eager
-
-    val entry = queries
-      .withColumn("_vnorm", norm(col("vec")))
-      .withColumn("_sims", centroidSims(col("vec"), col("_vnorm"), hubArr))
-      .select(col("id").as("q_id"), col("vec").as("q_vec"),
-        explode(slice(rankedCentroids(col("_sims")), 1, beam)).as("_e"))
-      .select(col("q_id"), col("q_vec"),
-        col("_e").getField("cid").as("n_id"), col("_e").getField("sim").as("cos"))
-    var visited = Checkpoints.checkpoint(entry.withColumn("expanded", lit(false)))
-    val byQ = Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("n_id"))
-    for (_ <- 1 to hops) {
-      // best-first: expand the top-beam UNEXPANDED candidates — an
-      // expanded node re-entering the frontier would freeze the walk in
-      // its own clique (its neighbors are all visited, nothing fresh
-      // arrives); tracking expansion is what makes each hop monotone
-      // progress, exactly HNSW's ef-search pop-best-unexpanded rule
-      val frontier = visited.where(!col("expanded"))
-        .withColumn("_r", row_number().over(byQ)).where(col("_r") <= beam)
-        .select(col("q_id"), col("q_vec"), col("n_id"))
-      val cand = broadcast(frontier)
-        .join(edges, frontier("n_id") === edges("src"))
-        .select(col("q_id"), col("q_vec"), col("dst").as("n_id"), col("dst_vec"))
-        .dropDuplicates("q_id", "n_id")
-      val fresh = cand.join(visited.select(col("q_id"), col("n_id")),
-          Seq("q_id", "n_id"), "left_anti")
-        .select(col("q_id"), col("q_vec"), col("n_id"),
-          cosineSafe(col("q_vec"), col("dst_vec")).as("cos"),
-          lit(false).as("expanded"))
-      val marked = visited
-        .join(frontier.select(col("q_id"), col("n_id"), lit(true).as("_e")),
-          Seq("q_id", "n_id"), "left")
-        .withColumn("expanded", col("expanded") || coalesce(col("_e"), lit(false)))
-        .drop("_e")
-      val next = Checkpoints.checkpoint(marked.unionByName(fresh))
-      Checkpoints.free(visited)
-      visited = next
-    }
-    visited
-      .where(col("q_id") =!= col("n_id"))
-      .withColumn("rnk", row_number().over(byQ))
-      .where(col("rnk") <= k)
-      .select(col("q_id"), col("n_id"), col("rnk"))
-  }
-
   /** SemDedup-style semantic deduplication (Abbas et al., "SemDeDup: Data-
     * efficient learning at web-scale through semantic deduplication",
     * arXiv:2303.09540): embedding-cosine near-duplicate PAIRS

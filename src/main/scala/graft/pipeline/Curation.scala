@@ -237,138 +237,7 @@ object Curation {
       minAlphaBp: Int = 8000,
       numHashes: Int = 2,
       maxBucketSize: Int = 1000,
-      n: Int = 8): DataFrame = {
-    val mhCols = (0 until numHashes).map(i => s"mh$i")
-    curateIncrementalCore(
-      batch,
-      corpus.select(md5(textCol).as("_h")).distinct(),
-      Dedup.corpusBandKeys(
-        Dedup.withMinhashSignature(corpus, textCol, numHashes), Seq(mhCols)),
-      textCol, idCol, sourceCol, benchmark,
-      minDocs, minAlphaBp, numHashes, maxBucketSize, n)
-  }
-
-  /** Names of the persisted standing-corpus signature tables
-    * [[writeCorpusSigTables]] lands and the table-backed
-    * [[curateIncremental]] overload consumes. `numHashes` is part of the
-    * contract: the batch side must derive the SAME signature family the
-    * tables were written with (a mismatch would silently match nothing,
-    * so the overload takes it from here, never as a free parameter; the
-    * writer additionally STAMPS numHashes into the bands table's
-    * properties — [[SigFamilyProp]] — and the overload verifies the
-    * stamp, so a hand-built instance that lies about the family fails
-    * loudly). `buckets` rides along
-    * for the refresh path ([[graft.pipeline.NightlyIngest]]'s appends
-    * must match the written bucketing spec). */
-  final case class CorpusSigTables(
-      hashesTable: String, bandsTable: String, numHashes: Int,
-      buckets: Int = 32)
-
-  /** Persist the standing corpus's signature side as BUCKETED catalog
-    * tables — the nightly-ingest fast path for [[curateIncremental]].
-    * The per-call shape derives the corpus md5-distinct and band-key
-    * frames from the raw corpus EVERY night (two full corpus scans +
-    * their aggregation exchanges); these tables pay that once at corpus
-    * build/refresh time, and the nightly anti joins then read
-    * hash-partitioned parquet with NO Exchange and no re-derivation on
-    * the corpus side ([[graft.io.Bucketing]] — Dedup.scala's standing-
-    * corpus note). Refresh cadence is the caller's: the tables are a
-    * snapshot of the corpus at write time, exactly like the corpus
-    * frame the per-call shape would scan. */
-  def writeCorpusSigTables(
-      corpus: DataFrame, textCol: Column, tablePrefix: String,
-      numHashes: Int = 2, buckets: Int = 32): CorpusSigTables = {
-    require(tablePrefix.nonEmpty, "writeCorpusSigTables: empty tablePrefix")
-    val mhCols = (0 until numHashes).map(i => s"mh$i")
-    val t = CorpusSigTables(
-      s"${tablePrefix}_hashes", s"${tablePrefix}_bands", numHashes, buckets)
-    graft.io.Bucketing.writeBucketed(
-      corpus.select(md5(textCol).as("_h")).distinct(), t.hashesTable, "_h", buckets)
-    graft.io.Bucketing.writeBucketed(
-      Dedup.corpusBandKeys(
-        Dedup.withMinhashSignature(corpus, textCol, numHashes), Seq(mhCols)),
-      t.bandsTable, "_band", buckets)
-    // stamp the signature family INTO the table (not just the returned
-    // case class): a nightly job restarting from config re-constructs
-    // CorpusSigTables by hand, and a numHashes that disagrees with what
-    // the bands table was actually written with would make the band-key
-    // semi join silently match nothing (Dedup.dedupAgainstCorpusKeys'
-    // band-structure contract). The table-backed curateIncremental
-    // verifies this stamp before running.
-    corpus.sparkSession.sql(
-      s"ALTER TABLE ${t.bandsTable} SET TBLPROPERTIES " +
-        s"('$SigFamilyProp'='$numHashes')")
-    t
-  }
-
-  /** Table property carrying the `numHashes` a bands table was written
-    * with — the loud half of the [[CorpusSigTables]] contract. */
-  private[graft] val SigFamilyProp = "graft.sig.numHashes"
-
-  /** [[curateIncremental]] against persisted [[CorpusSigTables]] instead
-    * of the raw standing corpus — identical output by construction (the
-    * tables hold exactly the two frames the per-call shape derives;
-    * spec-asserted in CurationSpec), with the corpus legs' derivation
-    * cost moved out of the nightly path. */
-  def curateIncremental(
-      batch: DataFrame,
-      corpusTables: CorpusSigTables,
-      textCol: Column,
-      idCol: String,
-      sourceCol: String,
-      benchmark: DataFrame,
-      minDocs: Long,
-      minAlphaBp: Int,
-      maxBucketSize: Int,
-      n: Int): DataFrame = {
-    val spark = batch.sparkSession
-    // verify the caller's claimed signature family against the stamp the
-    // table writer left: a hand-built CorpusSigTables (config restart)
-    // whose numHashes disagrees with the written table would otherwise
-    // silently match nothing. A missing stamp is equally loud — every
-    // sanctioned writer stamps, so absence means the table was not
-    // written by writeCorpusSigTables (or predates the contract).
-    val stamped = spark.sql(s"SHOW TBLPROPERTIES ${corpusTables.bandsTable}")
-      .where(col("key") === SigFamilyProp)
-      .collect().headOption.map(_.getString(1))
-    stamped match {
-      case None => throw new IllegalArgumentException(
-        s"curateIncremental: ${corpusTables.bandsTable} carries no " +
-          s"'$SigFamilyProp' property — not written by " +
-          "writeCorpusSigTables (a bands table without a checkable " +
-          "signature family risks a silent no-op dedup); rewrite it")
-      case Some(v) => require(v == corpusTables.numHashes.toString,
-        s"curateIncremental: ${corpusTables.bandsTable} was written with " +
-          s"numHashes=$v but this CorpusSigTables claims " +
-          s"${corpusTables.numHashes} — the band keys would silently " +
-          "match nothing; use the written value or rebuild the tables")
-    }
-    curateIncrementalCore(
-      batch,
-      spark.table(corpusTables.hashesTable),
-      spark.table(corpusTables.bandsTable),
-      textCol, idCol, sourceCol, benchmark,
-      minDocs, minAlphaBp, corpusTables.numHashes, maxBucketSize, n)
-  }
-
-  /** Shared body of the two [[curateIncremental]] shapes: the corpus
-    * side arrives ALREADY reduced to its distinct content hashes
-    * (`_h`) and distinct tagged band keys (`_band`) — either derived
-    * in-plan from the raw corpus or read from persisted bucketed
-    * tables. */
-  private def curateIncrementalCore(
-      batch: DataFrame,
-      corpusHashes: DataFrame,
-      corpusBands: DataFrame,
-      textCol: Column,
-      idCol: String,
-      sourceCol: String,
-      benchmark: DataFrame,
-      minDocs: Long,
-      minAlphaBp: Int,
-      numHashes: Int,
-      maxBucketSize: Int,
-      n: Int): DataFrame = Checkpoints.scoped {
+      n: Int = 8): DataFrame = Checkpoints.scoped {
 
     // the `_h` exact-hash column and the mh0..mhN signature columns ride
     // the passthrough batch frame through stages 4-6 and are dropped
@@ -388,7 +257,7 @@ object Curation {
 
     // 4. exact against corpus: 32-byte hash anti join
     val freshExact = exactDeduped.withColumn("_h", md5(textCol))
-      .join(corpusHashes, Seq("_h"), "left_anti")
+      .join(corpus.select(md5(textCol).as("_h")).distinct(), Seq("_h"), "left_anti")
       .drop("_h")
 
     // 5. near-dup against corpus: one tagged band of all hashes.
@@ -400,8 +269,8 @@ object Curation {
     // PLANS round 18). One eager batch-sized checkpoint runs the corpus
     // legs exactly once.
     val sigNew = Dedup.withMinhashSignature(freshExact, textCol, numHashes)
-    val fresh = Checkpoints.checkpoint(
-      Dedup.dedupAgainstCorpusKeys(sigNew, corpusBands, idCol, Seq(mhCols)))
+    val fresh = Checkpoints.checkpoint(Dedup.dedupAgainstCorpus(sigNew,
+      Dedup.withMinhashSignature(corpus, textCol, numHashes), idCol, Seq(mhCols)))
     // the eager checkpoint above filled exactDeduped's cache — piiFree
     // (stage-3's double-consumed input) has no reader left
     Checkpoints.free(piiFree)

@@ -174,7 +174,7 @@ object ParquetToRdf {
       // contract) — it counts 0 and gets no manifest.
       val manifests = (Seq("schema.dgraph", "schema.indexed.dgraph") ++
           written.keys.toSeq.map(_ + ".rdf"))
-        .filter(d => dirExists(spark, s"$outBase/$d"))
+        .filter(d => ParquetIO.exists(spark, s"$outBase/$d"))
         .map(d => d -> graft.io.Manifest.writeForTextDir(spark, s"$outBase/$d"))
         .toMap
       datasets.map { case (name, _) =>
@@ -186,11 +186,6 @@ object ParquetToRdf {
     }
     println(metrics.summary) // the reference's operational perf gauge
     counts
-  }
-
-  private def dirExists(spark: SparkSession, dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p)
   }
 
   /** Wall-clock per pipeline phase — the stage-level perf gauge
@@ -212,91 +207,4 @@ object ParquetToRdf {
       .writePartitionedBy(Seq(col("dataset"), col("lang")), Seq.empty, Seq(col("value")))
       .mode(SaveMode.Overwrite)
       .text(path)
-}
-
-/** The NIGHTLY-INGEST composition — the standing-corpus consumer of the
-  * corpus-sig-table fast path ([[Curation.writeCorpusSigTables]] + the
-  * table-backed [[Curation.curateIncremental]]): build the corpus's
-  * signature tables ONCE, then run each night's batch against them,
-  * optionally folding the accepted survivors' signatures back in so
-  * tomorrow's batch also dedups against tonight's admissions.
-  *
-  * This is the shape that REALIZES the measured 1.5–1.85× nightly win
-  * (PLANS.md round-19/20 corpus-sig-table measurements): the per-call
-  * [[Curation.curateIncremental]] re-derives the corpus md5-distinct and
-  * band-key frames every night (two full corpus scans + their
-  * aggregation exchanges); here those legs are paid once at
-  * [[buildTables]] time, and every nightly anti join reads Exchange-free
-  * bucketed scans.
-  *
-  * Refresh cadence: [[runBatch]]'s `refreshTables` APPENDS the
-  * survivors' (batch-sized) signature rows to the bucketed tables —
-  * cheap, keeps the standing set current between rebuilds. Appended
-  * band keys are new by construction for survivors (they passed the
-  * band-key anti join), except under a capped oversized bucket, where a
-  * duplicate key only costs the semi join a row (the
-  * [[graft.ops.ext.Dedup.dedupAgainstCorpusKeys]] contract). Rebuild
-  * with [[buildTables]] (SaveMode.Overwrite) when the corpus itself is
-  * re-curated or compacted. */
-object NightlyIngest {
-
-  /** Pay the corpus legs once: persist the standing corpus's signature
-    * side as bucketed catalog tables (see
-    * [[Curation.writeCorpusSigTables]]). Also the REBUILD hook. */
-  def buildTables(
-      corpus: DataFrame, textCol: org.apache.spark.sql.Column,
-      tablePrefix: String, numHashes: Int = 2,
-      buckets: Int = 32): Curation.CorpusSigTables =
-    Curation.writeCorpusSigTables(corpus, textCol, tablePrefix, numHashes, buckets)
-
-  /** One night's run: curate `batch` against the standing tables
-    * (identical output to the per-call [[Curation.curateIncremental]]
-    * by construction — spec-held), then fold the accepted survivors'
-    * signatures into the tables when `refreshTables`. Returns the
-    * surviving batch rows (checkpoint-backed, the curate contract). */
-  def runBatch(
-      batch: DataFrame,
-      tables: Curation.CorpusSigTables,
-      textCol: org.apache.spark.sql.Column,
-      idCol: String, sourceCol: String,
-      benchmark: DataFrame,
-      minDocs: Long = 20, minAlphaBp: Int = 8000,
-      maxBucketSize: Int = 1000, n: Int = 8,
-      refreshTables: Boolean = true): DataFrame = {
-    val survivors = Curation.curateIncremental(batch, tables, textCol,
-      idCol, sourceCol, benchmark, minDocs, minAlphaBp, maxBucketSize, n)
-    // isEmpty on the checkpoint-backed survivors is a cheap short
-    // circuit: an all-duplicate night must not write empty append files
-    if (refreshTables && !survivors.isEmpty) {
-      val mhCols = (0 until tables.numHashes).map(i => s"mh$i")
-      graft.io.Bucketing.appendBucketed(
-        survivors.select(md5(textCol).as("_h")),
-        tables.hashesTable, "_h", tables.buckets)
-      graft.io.Bucketing.appendBucketed(
-        graft.ops.ext.Dedup.corpusBandKeys(
-          graft.ops.ext.Dedup.withMinhashSignature(
-            survivors, textCol, tables.numHashes), Seq(mhCols)),
-        tables.bandsTable, "_band", tables.buckets)
-    }
-    survivors
-  }
-
-  /** The composed multi-night shape: build the tables from the standing
-    * corpus, then run the batches in order. With `refreshTables` (the
-    * default), batch `i+1` dedups against corpus + accepted(1..i) — the
-    * continuously-fed pipeline's actual contract (an admitted document
-    * must shield tomorrow's recrawl of it). Returns per-batch survivor
-    * frames. */
-  def run(
-      corpus: DataFrame, batches: Seq[DataFrame],
-      textCol: org.apache.spark.sql.Column,
-      idCol: String, sourceCol: String,
-      benchmark: DataFrame, tablePrefix: String,
-      minDocs: Long = 20, minAlphaBp: Int = 8000,
-      numHashes: Int = 2, maxBucketSize: Int = 1000, n: Int = 8,
-      buckets: Int = 32, refreshTables: Boolean = true): Seq[DataFrame] = {
-    val tables = buildTables(corpus, textCol, tablePrefix, numHashes, buckets)
-    batches.map(b => runBatch(b, tables, textCol, idCol, sourceCol,
-      benchmark, minDocs, minAlphaBp, maxBucketSize, n, refreshTables))
-  }
 }

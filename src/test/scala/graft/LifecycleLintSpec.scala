@@ -6,10 +6,11 @@ import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Operators in `ops` (with `ops/ext`), `pipeline`, `multimodal` and `io`
-  * materialize only through [[graft.core.Checkpoints]]' scope, which owns
-  * every free: a raw `localCheckpoint`/`persist`/`cache()`, a hand-written
-  * `unpersist` or a lineage release there would bypass the single owner. */
+/** Operators in `ops` (with `ops/ext`), `pipeline`, `multimodal` and `io`,
+  * and the query builders in `SparkEntry`, materialize only through
+  * [[graft.core.Checkpoints]]' scope, which owns every free: a raw
+  * `localCheckpoint`/`persist`/`cache()`, a hand-written `unpersist` or a
+  * lineage release there would bypass the single owner. */
 class LifecycleLintSpec extends AnyFunSuite {
 
   private val Banned = Seq(
@@ -43,7 +44,8 @@ class LifecycleLintSpec extends AnyFunSuite {
   }
 
   test("ops/ext and pipeline materialize only through the Checkpoints scope") {
-    val h = hits(10, "src/main/scala/graft/ops", "src/main/scala/graft/pipeline")
+    val h = hits(10, "src/main/scala/graft/ops", "src/main/scala/graft/pipeline",
+      "src/main/scala/graft/SparkEntry.scala")
     assert(h.isEmpty, h.mkString("\n", "\n", ""))
   }
 

@@ -204,84 +204,6 @@ class CurationSpec extends SparkSpec {
     assert((sc.getPersistentRDDs.keySet -- before).isEmpty)
   }
 
-  test("curateIncremental against persisted corpus sig tables matches the per-call shape") {
-    val spark2 = spark
-    import spark2.implicits._
-    // the q40-style incremental fixture: one exact corpus dup, one
-    // near-dup of a corpus doc (same tokens reordered), one within-batch
-    // near-dup pair, one contaminated, one clean survivor
-    val corpus = Seq(
-      (100L, "alpha beta gamma delta epsilon zeta eta theta", "good"),
-      (101L, "iota kappa lambda mu nu xi omicron pi", "good")
-    ).toDF("doc_id", "text", "source")
-    val batch = Seq(
-      (1L, "alpha beta gamma delta epsilon zeta eta theta", "good"), // exact corpus dup
-      (2L, "theta eta zeta epsilon delta gamma beta alpha", "good"), // near corpus dup
-      (3L, "fresh words one two three four five six", "good"),
-      (4L, "six five four three two one words fresh", "good"),       // near dup of 3
-      (5L, "prefix the quick brown fox jumps over the lazy dog suffix", "good"),
-      (6L, "totally novel content nothing shared anywhere at all", "good")
-    ).toDF("doc_id", "text", "source")
-    val bench = Seq("the quick brown fox jumps over the lazy dog").toDF("text")
-    val expected = Curation.curateIncremental(batch, corpus, col("text"),
-        "doc_id", "source", bench, minDocs = 1, minAlphaBp = 5000,
-        numHashes = 2, maxBucketSize = 100, n = 8)
-      .select(col("doc_id")).as[Long].collect().sorted
-    // try/finally around everything that runs with the catalog tables
-    // in place: a failed assertion must not leak them into later suites
-    // (benign only while writeBucketed overwrites — don't rely on it)
-    val tables = Curation.writeCorpusSigTables(
-      corpus, col("text"), "curation_spec_corpus", numHashes = 2, buckets = 4)
-    try {
-      assert(tables.numHashes === 2)
-      val out = Curation.curateIncremental(batch, tables, col("text"),
-          "doc_id", "source", bench, minDocs = 1, minAlphaBp = 5000,
-          maxBucketSize = 100, n = 8)
-        .select(col("doc_id")).as[Long].collect().sorted
-      assert(out === expected)
-      assert(out === Array(3L, 6L))
-      // a hand-built CorpusSigTables whose numHashes disagrees with the
-      // stamp the writer left must fail LOUDLY (the silent-no-op guard),
-      // and a table that was never stamped must too
-      val lied = intercept[IllegalArgumentException] {
-        Curation.curateIncremental(batch, tables.copy(numHashes = 4),
-          col("text"), "doc_id", "source", bench, minDocs = 1,
-          minAlphaBp = 5000, maxBucketSize = 100, n = 8)
-      }
-      assert(lied.getMessage.contains("numHashes"))
-      val unstamped = intercept[IllegalArgumentException] {
-        Curation.curateIncremental(batch,
-          tables.copy(bandsTable = tables.hashesTable), col("text"),
-          "doc_id", "source", bench, minDocs = 1, minAlphaBp = 5000,
-          maxBucketSize = 100, n = 8)
-      }
-      assert(unstamped.getMessage.contains(Curation.SigFamilyProp))
-      // the nightly-read side: the bucketed band-key table enters the semi
-      // join ALREADY partitioned on _band, so the table-backed near-dup
-      // leg plans strictly fewer Exchanges than the per-call shape (which
-      // must derive + distinct + shuffle the corpus keys). Comparative
-      // assert with broadcast off so both plan as SMJ.
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-      try {
-        import graft.ops.ext.Dedup
-        val sigNew = Dedup.withMinhashSignature(batch, col("text"), 2)
-        val sigCorpus = Dedup.withMinhashSignature(corpus, col("text"), 2)
-        val bands = Seq(Seq("mh0", "mh1"))
-        def exchanges(df: org.apache.spark.sql.DataFrame): Int =
-          "Exchange".r.findAllIn(df.queryExecution.executedPlan.toString).length
-        val perCall = exchanges(
-          Dedup.dedupAgainstCorpus(sigNew, sigCorpus, "doc_id", bands))
-        val tableBacked = exchanges(Dedup.dedupAgainstCorpusKeys(
-          sigNew, spark.table(tables.bandsTable), "doc_id", bands))
-        assert(tableBacked < perCall,
-          s"bucketed corpus leg should drop Exchanges: table=$tableBacked perCall=$perCall")
-      } finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    } finally {
-      spark.sql("DROP TABLE IF EXISTS curation_spec_corpus_hashes")
-      spark.sql("DROP TABLE IF EXISTS curation_spec_corpus_bands")
-    }
-  }
-
   test("curate does not release caller-supplied checkpoint-backed inputs") {
     val spark2 = spark
     import spark2.implicits._
