@@ -81,13 +81,11 @@ object Bench {
     * in bench_stats.json). */
   def buildLine(mins: Seq[(String, Double)], runsPerQuery: Int,
                 failures: Int, sfDir: String): String = {
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
     val qs = mins.map { case (k, mn) => "\"" + shortKey(k) + "\":" + printedValue(mn) }
       .mkString("{", ",", "}")
     val total = mins.map(_._2).filter(_ >= 0).sum
     val sfShort = sfDir.split('/').filter(_.nonEmpty).lastOption.getOrElse(sfDir)
-    s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs_per_query":$runsPerQuery,"failures":$failures,"queries":$qs,"sf":"${esc(sfShort)}"}"""
+    s"""{"metric":"total","value":${f"$total%.3f"},"unit":"sec","runs_per_query":$runsPerQuery,"failures":$failures,"queries":$qs,"sf":${jsonString(sfShort)}}"""
   }
 
   /** Hard cap from the harness's ~2000-char tail window (with margin). */
@@ -96,23 +94,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // NOTE: the test tables are one file with ONE parquet row group
-      // each, and parquet only splits at row-group boundaries — so every
-      // scan (and all map-side work before the first Exchange) runs as a
-      // single task regardless of these settings. That is a local-bench
-      // artifact, deliberately NOT worked around with artificial
-      // repartition() in the queries: cluster inputs arrive as many
-      // files/row groups and parallelize naturally. The settings are kept
-      // for inputs that DO split (multi-row-group files).
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "1m")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = session(cpus)
 
     // Saturation-path test hook (round-11 verdict item 4), NEVER set by the
     // driver: SPARK_GRAFT_SYNTH_SLEEP_SECS=N injects a synthetic query
@@ -207,12 +189,10 @@ object Bench {
     // failures are -1.0 per query AND surfaced as an explicit count, so a
     // query that starts throwing can never read as a speedup
     val failures = results.count(_._2._1 < 0)
-    def esc(s: String): String =
-      s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"; case c => c.toString }
     val statsPath = java.nio.file.Paths.get("target", "bench_stats.json")
     java.nio.file.Files.createDirectories(statsPath.getParent)
     java.nio.file.Files.write(statsPath,
-      (s"""{"runs_per_query":$runsPerQuery,"sf":"${esc(sfDir)}",""" +
+      (s"""{"runs_per_query":$runsPerQuery,"sf":${jsonString(sfDir)},""" +
         s""""suite_steal_pct":${fmt(suiteSteal)},"stats":$st}""").getBytes("UTF-8"))
     // quiet Spark's shutdown logging so nothing lands after the JSON line
     // inside the harness's tail window
@@ -228,5 +208,44 @@ object Bench {
         "(drop a digit or shorten keys before adding more queries)")
     println(line)
     spark.stop()
+  }
+
+  /** A JSON string literal: backslash, quote, and ALL control chars
+    * (<0x20) escaped — a tab or newline in a path or in hand-written
+    * SQL would otherwise write a line the consumer's JSON parser rejects.
+    * Shared by the printed line, `bench_stats.json` and Verify's
+    * `oracle_sql.json`. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** The session Bench, Verify and Explain run on: `local[cpus]` with as
+    * many shuffle partitions, UTC timestamps, and small file splits.
+    *
+    * The test tables are one file with ONE parquet row group each, and
+    * parquet only splits at row-group boundaries — so every scan (and all
+    * map-side work before the first Exchange) runs as a single task
+    * regardless of the split settings. That is a local-bench artifact,
+    * deliberately NOT worked around with artificial repartition() in the
+    * queries: cluster inputs arrive as many files/row groups and
+    * parallelize naturally. The settings are kept for inputs that DO
+    * split (multi-row-group files). */
+  def session(cpus: String): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.files.maxPartitionBytes", "4m")
+      .config("spark.sql.files.openCostInBytes", "1m")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 }

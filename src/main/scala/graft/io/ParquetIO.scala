@@ -2,7 +2,7 @@ package graft.io
 
 import graft.core.Implicits._
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
@@ -71,9 +71,12 @@ object ParquetIO {
   }
 
   /** Write triples partitioned by lang, range-partitioned by `s`, sorted
-    * `s,p,o` within files. One shuffle; even file sizes under language skew. */
+    * `s,p,o` within files. One shuffle; even file sizes under language skew.
+    * Replaces `path` through [[Publish.replace]]: a failed rerun leaves the
+    * old output readable. */
   def writeTriples(df: DataFrame, path: String): Unit =
-    df.writePartitionedBy(Seq(col("lang")), Seq(col("s")), Seq(col("p"), col("o")))
-      .mode(SaveMode.Overwrite)
-      .parquet(path)
+    Publish.replace(df.sparkSession, path) { staging =>
+      df.writePartitionedBy(Seq(col("lang")), Seq(col("s")), Seq(col("p"), col("o")))
+        .parquet(staging)
+    }
 }

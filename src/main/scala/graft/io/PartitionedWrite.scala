@@ -8,7 +8,9 @@ import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Dataset, Row}
   * `Dataset.writePartitionedBy(partitionCols, moreFileCols, fileOrderCols,
   * partitions, projection)` the reference uses for every sink (reference:
   * DbpediaToParquetSparkApp.scala:85-95, PartitionSparkApp.scala:46-54,
-  * DbpediaDgraphSparkApp.scala:500-516). The expansion is exactly what the
+  * DbpediaDgraphSparkApp.scala:500-516), minus the explicit `partitions`
+  * count no graft sink sets: the range shuffle takes
+  * `spark.sql.shuffle.partitions`. The expansion is exactly what the
   * reference's PartitionSparkApp demonstrates by hand:
   *
   *   repartitionByRange(partitionCols ++ moreFileCols)   // shuffle #1
@@ -30,23 +32,18 @@ object PartitionedWrite {
       * @param moreFileCols   extra range-partitioning columns: rows sharing
       *                       (partitionCols ++ moreFileCols) land in one file
       * @param fileOrderCols  additional within-file ordering columns
-      * @param partitions     optional explicit shuffle partition count
       * @param projection     optional final projection (must retain partitionCols)
       */
     def writePartitionedBy(
         partitionCols: Seq[Column],
         moreFileCols: Seq[Column] = Seq.empty,
         fileOrderCols: Seq[Column] = Seq.empty,
-        partitions: Option[Int] = None,
         projection: Option[Seq[Column]] = None): DataFrameWriter[Row] = {
       require(partitionCols.nonEmpty, "partitionCols must not be empty")
       val df: DataFrame = ds.toDF()
       val rangeCols = partitionCols ++ moreFileCols
-      val repartitioned = partitions
-        .map(n => df.repartitionByRange(n, rangeCols: _*))
-        .getOrElse(df.repartitionByRange(rangeCols: _*))
-      val sorted =
-        repartitioned.sortWithinPartitions(partitionCols ++ moreFileCols ++ fileOrderCols: _*)
+      val sorted = df.repartitionByRange(rangeCols: _*)
+        .sortWithinPartitions(rangeCols ++ fileOrderCols: _*)
       val projected = projection.map(p => sorted.select(p: _*)).getOrElse(sorted)
       // partitionBy needs names: require the partition columns to be plain
       // attribute references (they are, at every reference call site).

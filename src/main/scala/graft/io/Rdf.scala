@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import PartitionedWrite._
@@ -47,13 +48,13 @@ object Rdf {
     * FS-renamed (a metadata-only move) to `<name>.rdf/lang=<code>`, files
     * sorted by `(p, s, o)` (ParquetIOSpec).
     *
-    * Publish is set-aside/restore: existing output is renamed aside until
-    * the new data is in place, so a failed job or rename leaves the old
-    * output readable (RdfFailureSpec). A dataset with no surviving rows
-    * gets no staging dir, and its existing output is deleted — a rerun
-    * never reads back a PREVIOUS run's files from the same path (the
-    * reference skips the write and would). Returns the read-back per
-    * dataset. */
+    * Each `dataset=` dir is published through [[Publish.publish]]: the
+    * old output is set aside until the new data is in place, so a failed
+    * job or rename leaves it readable (RdfFailureSpec, PublishSpec). A
+    * dataset with no surviving rows gets no staging dir, and its existing
+    * output is deleted — a rerun never reads back a PREVIOUS run's files
+    * from the same path (the reference skips the write and would).
+    * Returns the read-back per dataset. */
   def writeAll(
       named: Seq[(String, DataFrame)], outBase: String): Map[String, DataFrame] = {
     require(named.nonEmpty, "writeAll: no datasets given")
@@ -71,42 +72,18 @@ object Rdf {
       validPredicates(df).select(
         lit(name).as("dataset"), col("s"), col("p"), col("o"), col("lang"))
     }.reduce(_.unionByName(_))
-    val staging = new org.apache.hadoop.fs.Path(s"$outBase/.rdf_fused_staging")
+    val staging = new Path(s"$outBase/.rdf_fused_staging")
     val fs = staging.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    tagged.writePartitionedBy(
-        Seq(col("dataset"), col("lang")),
-        Seq(col("p"), col("s")),
-        Seq(col("o")),
-        None,
-        Some(lineColumns :+ col("dataset")))
-      .option("compression", "gzip")
-      .mode(SaveMode.Overwrite)
-      .text(staging.toString)
+    Publish.stage(fs, staging) {
+      tagged.writePartitionedBy(Seq(col("dataset"), col("lang")), Seq(col("p"), col("s")),
+          Seq(col("o")), Some(lineColumns :+ col("dataset")))
+        .option("compression", "gzip")
+        .text(staging.toString)
+    }
     val out = named.map { case (name, _) =>
-      val target = new org.apache.hadoop.fs.Path(s"$outBase/$name.rdf")
-      val src = new org.apache.hadoop.fs.Path(staging, s"dataset=$name")
-      // Pre-existing output is renamed ASIDE, not deleted, until the new
-      // data is in place: deleting first would destroy the old output AND
-      // strand the new one on a failed staging rename (a static
-      // SaveMode.Overwrite straight onto the target deletes it before the
-      // job runs, so a commit failure leaves no old output). rename reports
-      // several FS failure modes as `false`, not an exception — silently
-      // reading back an empty or stale dataset must not pass for success.
-      val aside = new org.apache.hadoop.fs.Path(s"$outBase/.rdf_old_$name")
-      if (fs.exists(aside)) fs.delete(aside, true) // remnant of a past crash
-      val hadOld = fs.exists(target)
-      if (hadOld)
-        require(fs.rename(target, aside), s"writeAll: set-aside $target -> $aside failed")
-      if (fs.exists(src) && !fs.rename(src, target)) {
-        // restore: leave the OLD output intact — and if the restore ITSELF
-        // fails, say where the only surviving copy is stranded so the data
-        // stays recoverable by hand instead of hidden behind a dot-path
-        val restored = !hadOld || fs.rename(aside, target)
-        throw new IllegalArgumentException(
-          s"writeAll: rename $src -> $target failed" +
-            (if (restored) "" else s"; restore also failed — old output stranded at $aside"))
-      }
-      if (hadOld) fs.delete(aside, true)
+      val target = new Path(s"$outBase/$name.rdf")
+      Publish.publish(fs, new Path(staging, s"dataset=$name"), target,
+        new Path(s"$outBase/.rdf_old_$name"))
       name -> read(spark, target.toString)
     }.toMap
     fs.delete(staging, true) // _SUCCESS + any empty remnants

@@ -1,6 +1,7 @@
 package graft.ops.ext
 
 import graft.core.Checkpoints
+import graft.core.IntCols.floorDiv
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -254,23 +255,22 @@ object TextStats {
     // n_lines and n_tokens are >= 1 by split's [""] quirk — the ppm
     // divisions can never hit zero; non-negative operands, so floorDiv
     // == truncation == DuckDB `//`
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val nLines = size(col("_glines")).cast("long")
     val nToks = size(col("_gtoks")).cast("long")
     df.withColumn("_glines", split(textCol, "\n"))
       .withColumn("_gtoks", tokens(textCol))
       .withColumn("n_lines", nLines)
       .withColumn("bullet_line_ppm",
-        idiv(size(filter(col("_glines"), l => l.rlike("^\\s*[-*•‣▪]")))
+        floorDiv(size(filter(col("_glines"), l => l.rlike("^\\s*[-*•‣▪]")))
           .cast("long") * 1000000L, nLines))
       .withColumn("ellipsis_line_ppm",
-        idiv(size(filter(col("_glines"), l => l.rlike("(\\.\\.\\.|…)\\r?\\z")))
+        floorDiv(size(filter(col("_glines"), l => l.rlike("(\\.\\.\\.|…)\\r?\\z")))
           .cast("long") * 1000000L, nLines))
       .withColumn("alpha_word_ppm",
-        idiv(size(filter(col("_gtoks"), w => w.rlike("[A-Za-z]")))
+        floorDiv(size(filter(col("_gtoks"), w => w.rlike("[A-Za-z]")))
           .cast("long") * 1000000L, nToks))
       .withColumn("symbol_word_ppm",
-        idiv(size(regexp_extract_all(textCol, lit("#|\\.\\.\\.|…"), lit(0)))
+        floorDiv(size(regexp_extract_all(textCol, lit("#|\\.\\.\\.|…"), lit(0)))
           .cast("long") * 1000000L, nToks))
       .withColumn("gopher_shape_pass",
         col("bullet_line_ppm") <= maxBulletPpm &&
@@ -325,9 +325,8 @@ object TextStats {
       transform(sequence(lit(0), size(toks) - n),
         i => concat_ws(" ", slice(toks, i + lit(1), lit(n)))))
       .when(textCol.isNotNull, array().cast("array<string>"))
-    // exact integer division for non-negative operands (no `div` Column
-    // function, and double `/` + cast mis-truncates near-exact quotients)
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
+    // floorDiv: exact integer division for non-negative operands (no `div`
+    // Column function, and double `/` + cast mis-truncates near-exact quotients)
     val zero = lit(0L)
     val rep = aggregate(
       array_sort(grams),
@@ -363,8 +362,8 @@ object TextStats {
           .otherwise(acc.getField("blen"))
         val tot = acc.getField("tot")
         struct(
-          when(tot > 0L, idiv(best * blen * 1000000L, tot)).otherwise(zero).as("top"),
-          when(tot > 0L, idiv(dup * 1000000L, tot)).otherwise(zero).as("dup"))
+          when(tot > 0L, floorDiv(best * blen * 1000000L, tot)).otherwise(zero).as("top"),
+          when(tot > 0L, floorDiv(dup * 1000000L, tot)).otherwise(zero).as("dup"))
       })
     val repCol = s"_ngrep$n"
     df.withColumn(repCol, rep)
@@ -1617,7 +1616,6 @@ object TextStats {
     *
     * Output, one row: `(n_docs, po_ppm, pe_ppm, kappa_ppm)`. */
   def cohenKappa(df: DataFrame, raterA: Column, raterB: Column): DataFrame = {
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
     val agg = df.agg(
       count(lit(1)).as("n"),
@@ -1625,15 +1623,15 @@ object TextStats {
       sum(when(raterA, 1L).otherwise(0L)).as("a1"),
       sum(when(raterB, 1L).otherwise(0L)).as("b1"))
     val m = agg.select(col("n"),
-      when(col("n") > 0, idiv(col("agree") * M, col("n"))).as("po_ppm"),
-      when(col("n") > 0, idiv(col("a1") * M, col("n"))).as("_pa"),
-      when(col("n") > 0, idiv(col("b1") * M, col("n"))).as("_pb"))
+      when(col("n") > 0, floorDiv(col("agree") * M, col("n"))).as("po_ppm"),
+      when(col("n") > 0, floorDiv(col("a1") * M, col("n"))).as("_pa"),
+      when(col("n") > 0, floorDiv(col("b1") * M, col("n"))).as("_pb"))
     m.select(col("n"), col("po_ppm"),
-        idiv(col("_pa") * col("_pb") + (lit(M) - col("_pa")) * (lit(M) - col("_pb")),
+        floorDiv(col("_pa") * col("_pb") + (lit(M) - col("_pa")) * (lit(M) - col("_pb")),
           lit(M)).as("pe_ppm"))
       .select(col("n").as("n_docs"), col("po_ppm"), col("pe_ppm"),
         when(col("pe_ppm") < M,
-          idiv((col("po_ppm") - col("pe_ppm")) * M, lit(M) - col("pe_ppm")))
+          floorDiv((col("po_ppm") - col("pe_ppm")) * M, lit(M) - col("pe_ppm")))
           .as("kappa_ppm"))
   }
 
@@ -1655,7 +1653,6 @@ object TextStats {
     * Output, one row: (n_docs, m_raters, po_ppm, pe_ppm, kappa_ppm). */
   def fleissKappa(df: DataFrame, raters: Seq[Column]): DataFrame = {
     require(raters.size >= 2, "fleissKappa: need at least 2 raters")
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
     val m = raters.size.toLong
     val x = raters.map(r => when(r, 1L).otherwise(0L)).reduce(_ + _)
@@ -1665,15 +1662,15 @@ object TextStats {
       sum(x * x + (lit(m) - x) * (lit(m) - x)).as("sq"))
     val p = agg.select(col("n"),
         when(col("n") > 0,
-          idiv((col("sq") - col("n") * m) * M, col("n") * (m * (m - 1)))).as("po_ppm"),
-        when(col("n") > 0, idiv(col("sx") * M, col("n") * m)).as("_pt"))
+          floorDiv((col("sq") - col("n") * m) * M, col("n") * (m * (m - 1)))).as("po_ppm"),
+        when(col("n") > 0, floorDiv(col("sx") * M, col("n") * m)).as("_pt"))
       .select(col("n"), col("po_ppm"),
-        idiv(col("_pt") * col("_pt") + (lit(M) - col("_pt")) * (lit(M) - col("_pt")),
+        floorDiv(col("_pt") * col("_pt") + (lit(M) - col("_pt")) * (lit(M) - col("_pt")),
           lit(M)).as("pe_ppm"))
     p.select(col("n").as("n_docs"), lit(m).as("m_raters"),
       col("po_ppm"), col("pe_ppm"),
       when(col("pe_ppm") < M,
-        idiv((col("po_ppm") - col("pe_ppm")) * M, lit(M) - col("pe_ppm")))
+        floorDiv((col("po_ppm") - col("pe_ppm")) * M, lit(M) - col("pe_ppm")))
         .as("kappa_ppm"))
   }
 
@@ -1709,7 +1706,6 @@ object TextStats {
     * Output, one row: (`n_pairable`, `do_ppm`, `de_ppm`, `alpha_ppm`). */
   def krippendorffAlpha(df: DataFrame, raters: Seq[Column]): DataFrame = {
     require(raters.size >= 2, "krippendorffAlpha: need at least 2 raters")
-    val idiv = graft.core.IntCols.floorDiv _
     val M = 1000000L
     val x = raters.map(r => when(r.isNotNull && r, 1L).otherwise(0L)).reduce(_ + _)
     val nn = raters.map(r => when(r.isNotNull, 1L).otherwise(0L)).reduce(_ + _)
@@ -1717,15 +1713,15 @@ object TextStats {
     val agg = items.agg(
       coalesce(sum(col("_n")), lit(0L)).as("n"),
       coalesce(sum(col("_x")), lit(0L)).as("t"),
-      coalesce(sum(idiv(lit(2L) * col("_x") * (col("_n") - col("_x")) * M,
+      coalesce(sum(floorDiv(lit(2L) * col("_x") * (col("_n") - col("_x")) * M,
         col("_n") - 1L)), lit(0L)).as("_st"))
     agg.select(col("n").as("n_pairable"),
-        when(col("n") > 0, idiv(col("_st"), col("n"))).as("do_ppm"),
+        when(col("n") > 0, floorDiv(col("_st"), col("n"))).as("do_ppm"),
         when(col("n") > 1,
-          idiv(idiv(lit(2L) * col("t") * M, col("n")) * (col("n") - col("t")),
+          floorDiv(floorDiv(lit(2L) * col("t") * M, col("n")) * (col("n") - col("t")),
             col("n") - 1L)).as("de_ppm"))
       .withColumn("alpha_ppm",
         when(col("de_ppm") > 0,
-          idiv((col("de_ppm") - col("do_ppm")) * M, col("de_ppm"))))
+          floorDiv((col("de_ppm") - col("do_ppm")) * M, col("de_ppm"))))
   }
 }

@@ -4,7 +4,7 @@ import graft.core.Checkpoints
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.io.Manifest
+import graft.io.{Manifest, Publish}
 import graft.ops.ext.{Packing, TextStats}
 
 /** The last mile of a training-data pipeline: turn a curated corpus into
@@ -24,7 +24,8 @@ import graft.ops.ext.{Packing, TextStats}
   *     form one shard, so a shard is a contiguous slice of the training
   *     stream and epoch ordering is just shard-id ordering;
   *  4. a `partitionBy(shard)` parquet write, rows sorted by position
-  *     within each shard, plus the manifest sidecar
+  *     within each shard, that replaces `outDir` through
+  *     [[graft.io.Publish.replace]], plus the manifest sidecar
   *     ([[Manifest.writeForParquetDirWith]]).
   *
   * Scale shape: document text crosses exactly two exchanges — the join
@@ -73,11 +74,13 @@ object Materialize {
         "id", "stratum", "n_tok", seqLen)
       .select(col("id").as("ord"), col("seq_first"), col("seq_last"),
         col("off_start"), col("n_seqs"))
-    withOrd.join(layout, Seq("ord"))
-      .withColumn("shard", expr(s"seq_first div ${seqsPerShard}L"))
-      .repartition(col("stratum"), col("shard"))
-      .sortWithinPartitions(col("stratum"), col("shard"), col("ord"))
-      .write.mode("overwrite").partitionBy("stratum", "shard").parquet(outDir)
+    Publish.replace(docs.sparkSession, outDir) { staging =>
+      withOrd.join(layout, Seq("ord"))
+        .withColumn("shard", expr(s"seq_first div ${seqsPerShard}L"))
+        .repartition(col("stratum"), col("shard"))
+        .sortWithinPartitions(col("stratum"), col("shard"), col("ord"))
+        .write.partitionBy("stratum", "shard").parquet(staging)
+    }
     // ONE scan of the written shards yields both the audit artifact and
     // the summary: the manifest's extra per-file columns carry the file's
     // partition values and token sum (a file lives in exactly one

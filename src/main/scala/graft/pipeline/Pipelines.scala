@@ -2,10 +2,10 @@ package graft.pipeline
 
 import graft.core.Checkpoints
 import graft.core.Implicits._
-import graft.io.{ParquetIO, Rdf, Ttl}
+import graft.io.{ParquetIO, Publish, Rdf, Ttl}
 import graft.io.PartitionedWrite._
 import graft.ops._
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Pipeline configuration (reference: DbpediaDgraphSparkApp.scala:42-63).
@@ -199,12 +199,13 @@ object ParquetToRdf {
   }
 
   /** Schema text sink: single sorted file per (dataset, lang) partition
-    * (reference :333-372). The relation is tiny — `coalesce(1)` is correct
-    * at any scale. */
-  private def writeSchema(lines: DataFrame, path: String): Unit =
-    lines
-      .coalesce(1)
-      .writePartitionedBy(Seq(col("dataset"), col("lang")), Seq.empty, Seq(col("value")))
-      .mode(SaveMode.Overwrite)
-      .text(path)
+    * (reference :333-372), replacing `path` through [[Publish.replace]].
+    * The relation is tiny — `coalesce(1)` is correct at any scale. */
+  private[graft] def writeSchema(lines: DataFrame, path: String): Unit =
+    Publish.replace(lines.sparkSession, path) { staging =>
+      lines
+        .coalesce(1)
+        .writePartitionedBy(Seq(col("dataset"), col("lang")), Seq.empty, Seq(col("value")))
+        .text(staging)
+    }
 }

@@ -1,6 +1,7 @@
 package graft.pipeline
 
 import graft.core.Checkpoints
+import graft.core.IntCols.floorDiv
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import graft.ops.ext.{Contamination, Dedup}
@@ -113,10 +114,9 @@ object Reports {
       binWidth: Long = 1L): DataFrame = Checkpoints.scoped {
     require(bins >= 2, s"ksDistance: bins must be >= 2, got $bins")
     require(binWidth >= 1, s"ksDistance: binWidth must be >= 1, got $binWidth")
-    // floor division, identical to the oracle's `//` (operands here are
+    // floorDiv is identical to the oracle's `//` (operands here are
     // non-negative, so truncation would agree too — pmod keeps the form
-    // uniform with the engine's other fixed-point math)
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
+    // uniform with the engine's other fixed-point math).
     // `counts` is referenced by the group census, the dense-grid join,
     // and BOTH pair-join sides — without materialization the corpus scan
     // (with the signal kernel) re-plans FOUR times. The table is bounded
@@ -134,7 +134,7 @@ object Reports {
       .where(valueCol.isNotNull)
       .select(groupCol.as("group"),
         greatest(lit(0L),
-          least(lit(bins - 1L), idiv(valueCol.cast("long"), lit(binWidth)))).as("bin"))
+          least(lit(bins - 1L), floorDiv(valueCol.cast("long"), lit(binWidth)))).as("bin"))
       .groupBy(col("group"), col("bin")).agg(count(lit(1)).as("c")))
     // dense (group x bin) grid: a missing bin still carries the running
     // CDF, and the pair join below needs every bin present on both sides
@@ -147,7 +147,7 @@ object Reports {
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val wAll = Window.partitionBy("group")
     val cdf = dense.select(col("group"), col("bin"),
-      idiv(sum(col("c")).over(wCum) * 1000000L, sum(col("c")).over(wAll))
+      floorDiv(sum(col("c")).over(wCum) * 1000000L, sum(col("c")).over(wAll))
         .as("cdf_ppm"))
     val a = cdf.select(col("group").as("group_a"), col("bin"), col("cdf_ppm").as("_pa"))
     val b = cdf.select(col("group").as("group_b"), col("bin"), col("cdf_ppm").as("_pb"))
@@ -176,7 +176,6 @@ object Reports {
       df: DataFrame, groupCol: Column, flagCol: Column,
       pseudoN: Long): DataFrame = Checkpoints.scoped {
     require(pseudoN >= 1, s"shrunkRates: pseudoN must be >= 1, got $pseudoN")
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
     // the <=groups-row table is read twice (rates + the pooled prior);
     // eagerly checkpoint it or BOTH references re-plan the corpus
@@ -188,7 +187,7 @@ object Reports {
     val global = per.agg(sum(col("n")).as("_gn"), sum(col("x")).as("_gx"))
     per.crossJoin(broadcast(global))
       .select(col("group"), col("n").as("n_docs"),
-        idiv(col("x") * M, col("n")).as("raw_ppm"),
+        floorDiv(col("x") * M, col("n")).as("raw_ppm"),
         shrunkPpm(col("x"), col("n"), col("_gx"), col("_gn"), pseudoN).as("shrunk_ppm"))
   }
 
@@ -196,9 +195,8 @@ object Reports {
     * gating column): `(x·1e6 + k·p0) div (n + k)` with `p0 = gx·1e6 div
     * gn`, all-BIGINT floor math on non-negative operands. */
   private def shrunkPpm(x: Column, n: Column, gx: Column, gn: Column, pseudoN: Long): Column = {
-    def idiv(a: Column, b: Column): Column = graft.core.IntCols.floorDiv(a, b)
     val M = 1000000L
-    idiv(x * M + lit(pseudoN) * idiv(gx * M, gn), n + lit(pseudoN))
+    floorDiv(x * M + lit(pseudoN) * floorDiv(gx * M, gn), n + lit(pseudoN))
   }
 
   /** Cross-source content-overlap matrix — the companion diagnostic to

@@ -73,4 +73,15 @@ class BenchLineSpec extends AnyFunSuite {
     // the failure sentinel must not leak into the printed total
     assert(line.contains("\"value\":124.684"), s"total wrong in: $line")
   }
+
+  test("a tab or newline in the sf dir still makes valid JSON; plain input prints unchanged") {
+    val json = new com.fasterxml.jackson.databind.ObjectMapper
+    for (sf <- Seq("/data/sf\t0.1", "/data/sf0.1\n", "/data/sf\u00010.1")) {
+      val line = Bench.buildLine(Seq("q01_agg" -> 1.0), 3, 0, sf)
+      assert(json.readTree(line).get("sf").asText() === sf.stripPrefix("/data/"))
+    }
+    assert(Bench.buildLine(Seq("q01_agg" -> 1.0), 3, 0, "/data/sf0.1") ===
+      """{"metric":"total","value":1.000,"unit":"sec","runs_per_query":3,"failures":0,""" +
+        """"queries":{"01":1.0},"sf":"sf0.1"}""")
+  }
 }

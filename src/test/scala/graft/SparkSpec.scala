@@ -2,17 +2,36 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (getOrCreate → one JVM-wide
-  * session, tests run fast). */
-trait SparkSpec extends AnyFunSuite {
+  * session, tests run fast). Each suite prints its wall time and the
+  * hypervisor steal% over it ([[graft.core.Steal]]), so a test-time
+  * comparison between two runs can be read against the contention each
+  * run saw. */
+trait SparkSpec extends AnyFunSuite with BeforeAndAfterAll {
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
     .config("spark.sql.shuffle.partitions", "2")
     .config("spark.ui.enabled", "false")
     .config("spark.sql.session.timeZone", "UTC")
     .getOrCreate()
+
+  private var suiteStart = 0L
+  private var suiteSteal: graft.core.Steal.Meter = _
+
+  override def beforeAll(): Unit = {
+    suiteStart = System.nanoTime()
+    suiteSteal = new graft.core.Steal.Meter
+    super.beforeAll()
+  }
+
+  override def afterAll(): Unit = {
+    try super.afterAll()
+    finally println(f"[suite] $suiteName%s wall_s=${(System.nanoTime() - suiteStart) / 1e9}%.1f " +
+      f"steal_pct=${suiteSteal.pct()}%.2f")
+  }
 
   /** The context's persistent RDD ids and the CacheManager's entry count:
     * what a call that throws must leave as it found them. */
